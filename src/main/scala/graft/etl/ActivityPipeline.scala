@@ -19,7 +19,11 @@ import graft.operators.{Interpolation, TriangularRolling}
   * activity_id — at 100 TB the job is one shuffle on activity_id,
   * reused by the spine join, interpolation windows, rolling windows and
   * the final nesting (Catalyst plans them over one sort where frames
-  * align). No driver-side loops.
+  * align). No driver-side loops, and no stage does more than linear
+  * work per activity: interpolation is a running `last` frame plus a
+  * frameless `lead(.., ignoreNulls)` per channel (no
+  * `unboundedFollowing` frame, which would be quadratic in activity
+  * length).
   *
   * Two semantic modes (SURVEY §1.4):
   *  - corrected (default): honest field mapping, per-window NaN

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** K1 — the sink side (reference main.py:130-181: append-only streaming
@@ -20,14 +20,23 @@ object ActivitySink {
     rows.withColumn("activity_date", to_date(from_unixtime(col("epoch"))))
       .write.mode("append").partitionBy("activity_date").parquet(path)
 
+  /** The loaded sink, or None when nothing has been loaded yet: a
+    * missing path or a directory holding no data files. Every other
+    * read failure (a corrupt file, a permission error) propagates —
+    * reading it as "no watermark" would silently re-ingest the user's
+    * whole history. */
+  def loaded(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch {
+      case e: AnalysisException
+          if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) => None
+    }
+
   /** S3: latest loaded epoch for one user, 0 when absent
     * (main.py:187-197). The user filter + any date bound prune at scan. */
-  def latestEpoch(spark: SparkSession, path: String, userId: Long): Long = {
-    val df =
-      try spark.read.parquet(path)
-      catch { case _: Exception => return 0L } // empty sink -> watermark 0
-    df.filter(col("user_id") === userId)
-      .agg(coalesce(max(col("epoch")), lit(0L)))
-      .collect()(0).getLong(0)
-  }
+  def latestEpoch(spark: SparkSession, path: String, userId: Long): Long =
+    loaded(spark, path).fold(0L)(
+      _.filter(col("user_id") === userId)
+        .agg(coalesce(max(col("epoch")), lit(0L)))
+        .collect()(0).getLong(0))
 }

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.StravaJsonSource
 
@@ -31,19 +32,10 @@ object StravaEtl {
     // stamped at ingest and survives legacyCompat, where the sink's
     // user_id is nulled (main.py:171) and a user_id watermark would
     // never match — re-ingesting everything on every run.
-    val watermarks =
-      try spark.read.parquet(sinkPath)
-        .groupBy("username").agg(max(col("epoch")).as("__wm"))
-      catch {
-        case _: Exception =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("username",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("__wm",
-                org.apache.spark.sql.types.LongType))))
-      }
+    val watermarks = ActivitySink.loaded(spark, sinkPath)
+      .map(_.groupBy("username").agg(max(col("epoch")).as("__wm")))
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](),
+        StructType.fromDDL("username STRING, __wm BIGINT")))
 
     // S4: incremental scan — only activities past each user's watermark
     val acts = StravaJsonSource.activities(spark, activitiesPath, nowEpoch.toDouble)

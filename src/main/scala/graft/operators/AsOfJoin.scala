@@ -78,9 +78,11 @@ object AsOfJoin {
     *
     * Same one-shuffle union discipline as [[asof]]: both TAGGED sides
     * sort once on (keys, ts, side, rightId); the backward candidate is
-    * a running `last(payload)` and the forward candidate a running
-    * `first(payload)` over the SAME sort (two frames, one Window sort
-    * — no second exchange, no inequality join). Deterministic
+    * a running `last(payload)` and the forward candidate
+    * `lead(payload, ignoreNulls)` over the SAME sort (one Window sort —
+    * no second exchange, no inequality join; both are linear per
+    * partition). Left rows carry a null payload, so for them the next
+    * non-null payload is the first right row after them. Deterministic
     * everywhere: ties between equal distances go to the BACKWARD
     * candidate; among right rows at one timestamp the backward pick is
     * the max `rightId`, the forward pick the min (the sort order's
@@ -122,14 +124,11 @@ object AsOfJoin {
         struct(valueCols.map { case (rc, out) => col(rc).as(out) } ++ Seq(
           col(rightTs).as("__rts"), col(rightId).as("__rid")): _*).as("__payload")): _*)
 
-    val order = Seq(col("__ts"), col("__side"), col("__srid"))
-    val wPrev = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    val prev = last(col("__payload"), ignoreNulls = true).over(wPrev)
-    val next = first(col("__payload"), ignoreNulls = true).over(wNext)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("__ts"), col("__side"), col("__srid"))
+    val prev = last(col("__payload"), ignoreNulls = true)
+      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val next = lead(col("__payload"), 1, null, ignoreNulls = true).over(w)
     val matched = l2.unionByName(r2)
       .withColumn("__prev", prev)
       .withColumn("__next", next)

@@ -14,13 +14,25 @@ import org.apache.spark.sql.functions._
   *  - leading nulls stay null;
   *  - trailing nulls are forward-filled with the last non-null value.
   *
-  * Implementation: two framed window passes per value column — running
-  * "last non-null at or before" and "first non-null at or after" — over
-  * ONE partitioning/ordering, so Catalyst plans a single shuffle + sort
-  * and evaluates all frames in the same Window operator chain. Linear
-  * per partition, no driver-side collection; at 100 TB the cost is one
-  * exchange on the partition keys, which any per-key ordered operator
-  * needs anyway.
+  * Implementation: per value column, the nearest non-null value (and
+  * its time) on each side, from two kinds of window function over ONE
+  * partitioning/ordering, so Catalyst plans a single exchange + sort and
+  * evaluates all of them in the same Window operator:
+  *
+  *  - the previous non-null value and its time: `last(.., ignoreNulls)`
+  *    over the running frame (unboundedPreceding..currentRow), which
+  *    Spark updates incrementally — O(1) per row;
+  *  - the next non-null value and its time: `lead(.., ignoreNulls)`, a
+  *    frameless offset function that Spark evaluates in one forward
+  *    pass — O(1) amortised per row. It is only read where the current
+  *    value is null, and there "first non-null strictly after" is the
+  *    same row as "first non-null at or after".
+  *
+  * So the cost is linear in the partition length (an
+  * `unboundedFollowing` frame here would be re-evaluated from every row
+  * to the partition end: quadratic in the series length). No
+  * driver-side collection; at 100 TB the cost is one exchange on the
+  * partition keys, which any per-key ordered operator needs anyway.
   */
 object Interpolation {
 
@@ -41,14 +53,13 @@ object Interpolation {
                   passthrough: Option[Column] = None): DataFrame = {
     val base = Window.partitionBy(partitionCols.map(col): _*).orderBy(col(orderCol))
     val before = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val after = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val t = col(orderCol).cast("double")
     val interpCols: Seq[Column] = valueCols.map { c =>
       val v = col(c).cast("double")
       val pv = last(v, ignoreNulls = true).over(before)
       val pt = last(when(v.isNotNull, t), ignoreNulls = true).over(before)
-      val nv = first(v, ignoreNulls = true).over(after)
-      val nt = first(when(v.isNotNull, t), ignoreNulls = true).over(after)
+      val nv = lead(v, 1, null, ignoreNulls = true).over(base)
+      val nt = lead(when(v.isNotNull, t), 1, null, ignoreNulls = true).over(base)
       val interp = when(v.isNotNull, v)
         .when(pv.isNull, lit(null).cast("double")) // leading nulls stay null
         .when(nv.isNull, pv)                       // trailing nulls: forward fill

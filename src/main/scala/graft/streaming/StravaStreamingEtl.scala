@@ -42,19 +42,14 @@ object StravaStreamingEtl {
           val rows = ActivityPipeline.process(acts, streams, nowEpoch, legacyCompat)
           // Idempotent append: drop ids already present in the sink,
           // reading only the date partitions this batch can touch.
-          // Sink absence is checked EXPLICITLY — a broad catch here
-          // would also swallow transient read failures and silently
-          // disable dedup during failure replay, exactly when
-          // duplicates are most likely; any other error fails the
+          // Only an absent sink skips dedup (ActivitySink.loaded) — a
+          // broad catch here would also swallow transient read failures
+          // and silently disable dedup during failure replay, exactly
+          // when duplicates are most likely; any other error fails the
           // batch and lets the stream's retry semantics handle it.
-          val sinkDir = new org.apache.hadoop.fs.Path(sinkPath)
-          val sinkExists = sinkDir
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(sinkDir)
-          val fresh = if (!sinkExists) rows else {
+          val fresh = ActivitySink.loaded(spark, sinkPath).fold(rows) { seenAll =>
             val b = rows.agg(min(col("epoch")).as("lo"), max(col("epoch")).as("hi"))
               .collect()(0)
-            val seenAll = spark.read.parquet(sinkPath)
             // null epoch bounds (no parseable timestamps in the batch):
             // fall back to the unpruned id scan — correctness over pruning
             val seen = (if (b.isNullAt(0) || b.isNullAt(1)) seenAll

@@ -82,4 +82,30 @@ class StravaEtlSpec extends AnyFunSuite {
     assert(second.count() == 0)
     assert(spark.read.parquet(sink).count() == 2)
   }
+
+  test("a corrupt sink fails the sync instead of re-ingesting; an empty one loads all") {
+    val base = Files.createTempDirectory("graft-etl-corrupt")
+    val actsPath = base.resolve("activities.jsonl").toString
+    val streamsPath = base.resolve("streams.jsonl").toString
+    Files.write(base.resolve("activities.jsonl"),
+      Seq(activityJson(1, 7, "2024-01-01T00:00:00Z"),
+        activityJson(2, 7, "2024-01-03T00:00:00Z")).mkString("\n").getBytes)
+    Files.write(base.resolve("streams.jsonl"),
+      Seq(streamJson(1), streamJson(2)).mkString("\n").getBytes)
+
+    // a directory without data files is a sink nothing was loaded into
+    val empty = Files.createDirectories(base.resolve("empty-sink")).toString
+    assert(ActivitySink.latestEpoch(spark, empty, 7L) == 0L)
+    assert(StravaEtl.addHistoryData(spark, actsPath, streamsPath, empty, nowEpoch).count() == 2)
+
+    // a sink whose only data file is unreadable must not read as
+    // "watermark 0" (a silent full re-ingest)
+    val sink = Files.createDirectories(base.resolve("sink"))
+    Files.write(sink.resolve("part-00000-corrupt.snappy.parquet"),
+      "not a parquet file".getBytes)
+    intercept[Exception](ActivitySink.latestEpoch(spark, sink.toString, 7L))
+    intercept[Exception](
+      StravaEtl.addHistoryData(spark, actsPath, streamsPath, sink.toString, nowEpoch))
+    assert(sink.toFile.list().toSeq == Seq("part-00000-corrupt.snappy.parquet"))
+  }
 }
