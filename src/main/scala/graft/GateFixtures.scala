@@ -18,7 +18,7 @@ object GateFixtures {
   /** DuckDB twin of the a5_rolling_full fast-kernel gate: direct
     * triangular dot product over a bounded self-join, exact-integer
     * channels, one double division per cell (matches the kernel's
-    * prefix-sum result bitwise because both sides are exact integers
+    * sliding-sum result bitwise because both sides are exact integers
     * until that division). */
   private[graft] def a5OracleSql: String = {
     val cells = for { ch <- Seq("vc", "pl", "em"); n <- Seq(20, 120, 1200) } yield {

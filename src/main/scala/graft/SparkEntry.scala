@@ -1437,12 +1437,12 @@ object SparkEntry {
              FROM r GROUP BY user_id ORDER BY user_id""")),
 
     // A3 at the production windows (main.py:85-89) through the O(1)
-    // prefix-sum kernel — the 100 TB path. Gate discipline: all three
-    // channels are INTEGER-valued (cents, length, modulus), so the
-    // kernel's running sums C and D are exact integers in doubles
-    // (|D| < 5e10 << 2^53: no cancellation), the weighted sum is an
-    // exact integer, and the single final division is the identical
-    // IEEE op in both engines — bit-parity without rounding.
+    // ring-buffer kernel (triangMeansFast) — the 100 TB path. Gate
+    // discipline: all three channels are INTEGER-valued (cents,
+    // length, modulus), so every sliding sum is an exact integer in
+    // doubles (far below 2^53), the weighted sum is exact, and the
+    // single final division is the identical IEEE op in both engines
+    // — bit-parity without rounding.
     // Partitioned by event_type (~1/5 of the table each) so the
     // 1200-row window actually fills at sf0.01, unlike per-user series.
     ("a5_rolling_full", (s, dir) => {
@@ -1451,7 +1451,7 @@ object SparkEntry {
         cents(col("value")).as("vc"),
         length(col("props")).cast("long").as("pl"),
         (col("event_id") % 97).as("em"))
-      val rolled = TriangularRolling.triangMeansKahan(
+      val rolled = TriangularRolling.triangMeansFast(
         base, Seq("event_type"), Seq("ts", "event_id"),
         Seq("vc", "pl", "em"), Seq(20, 120, 1200))
       val triCols = for { ch <- Seq("vc", "pl", "em"); n <- Seq(20, 120, 1200) }

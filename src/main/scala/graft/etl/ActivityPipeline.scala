@@ -123,9 +123,10 @@ object ActivityPipeline {
     * nesting AND the per-window rolling maxima come out of a single
     * groupBy(activity_id) pass — one shuffle, one consumer of the
     * upstream interpolation chain. The rolling columns (A3) were
-    * computed by the O(1)-per-row prefix-sum kernel on the way in; with
-    * windows up to 1200 rows the naive collect-the-frame kernel would
-    * do 1200x the work per row. */
+    * computed on the way in by the O(1)-per-row ring-buffer kernel
+    * (TriangularRolling.triangMeansFast), one Window operator for all
+    * 33 columns; with windows up to 1200 rows the collect-the-frame
+    * kernel would do 1200x the work per row. */
   private def maxAggsFor(legacy: Boolean, prefix: String): Seq[Column] = for {
     (ch, short) <- rollChannels
     i <- StravaSchemas.rollingWindows

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *   both:    A' = A − o + v,   B' = B − v + x
   *
   * O(1) per row, O(n) state, zero difference-of-prefix cancellation:
-  * unlike the prefix-sum kernel (whose C/D grow with the PARTITION and
+  * unlike a prefix-sum kernel (whose sums grow with the PARTITION and
   * cancel to window-sized results), every quantity here is window-
   * local. Each accumulation is Neumaier-compensated, so float drift
   * over a long partition stays at the ulp of the window magnitude; on

@@ -92,7 +92,8 @@ object Multimodal {
       * break value-exact comparisons; raster samples are the decoded
       * bytes as stored. 1-band images yield the sample itself; 3+
       * bands yield (r+g+b)/3 integer luma. None if the payload is not
-      * a decodable image. */
+      * a decodable image; fatal errors (out of memory, stack overflow,
+      * linkage) propagate instead of masquerading as a bad payload. */
     def decodeImage(b: Array[Byte]): Option[(Int, Int, Array[Int])] =
       try {
         val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
@@ -117,7 +118,7 @@ object Multimodal {
           }
           Some((w, h, luma))
         }
-      } catch { case _: Throwable => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Decoded-pixel perceptual hash (the REAL-codec twin of

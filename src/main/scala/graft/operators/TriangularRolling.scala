@@ -15,21 +15,21 @@ import org.apache.spark.sql.functions._
   *  - a null anywhere inside a full window poisons the result (weighted
   *    kernels do not skip NaNs).
   *
-  * Strategy: collect the frame into an array — nulls encoded as NaN so
-  * they survive `collect_list` (which drops nulls) AND poison the dot
-  * product, exactly the pandas behaviour — then fold a weighted dot
-  * product with codegen'd higher-order functions (`zip_with` +
-  * `aggregate`). No UDFs, no custom nodes; everything stays inside
-  * whole-stage codegen except the Window exchange itself.
+  * Two kernels with those semantics:
   *
-  * Scale: O(n) state per row with n <= 1200 in the reference; windows
-  * are per-activity/per-user partitions, so executor memory stays
-  * bounded and the only shuffle is the Window partitioning (shared by
-  * all 33 rolling columns — Catalyst evaluates every frame over one
-  * sort). If profiling ever shows the O(n) fold dominating, the scale
-  * path is a custom DeclarativeAggregate window function (running
-  * triangular sums via two cumulative passes); not needed at current
-  * benchmark scale.
+  *  - [[triangMean]] is the O(n)-per-row spec twin: it collects the
+  *    frame (nulls as NaN, so they survive `collect_list` and poison
+  *    the dot product) and folds the weighted sum with codegen'd
+  *    higher-order functions.
+  *  - [[triangMeanKahan]] / [[triangMeansFast]] are the production
+  *    kernel: the custom window aggregate
+  *    [[graft.functions.TriangRollingKahan]] over the running frame,
+  *    O(1) per row with a ring buffer and Neumaier-compensated sliding
+  *    sums, so its cost does not depend on the window length and its
+  *    error does not grow with the partition length.
+  *
+  * All (channel, window) columns over one window spec share one
+  * partition exchange, one sort and one Window operator.
   */
 object TriangularRolling {
 
@@ -46,8 +46,8 @@ object TriangularRolling {
   /** Triangular rolling mean of `value` over the trailing `n` rows of
     * window spec `w` (which must carry partitionBy + orderBy).
     *
-    * O(n) per row (collects the frame). Exact reference formulation —
-    * use [[triangMeansFast]] for large windows / many windows at once.
+    * O(n) per row (collects the frame). Exact reference formulation,
+    * kept as the spec twin; use [[triangMeansFast]] in pipelines.
     */
   def triangMean(value: Column, w: WindowSpec, n: Int): Column = {
     val frame = w.rowsBetween(-(n - 1), 0)
@@ -58,19 +58,14 @@ object TriangularRolling {
     when(size(arr) === n && !isnan(mean), mean)
   }
 
-  /** The round-11 kernel — O(1)/row AND exact-class: the trailing
-    * triangular mean as a custom window aggregate
-    * ([[graft.functions.TriangRollingKahan]]) over the RUNNING frame,
-    * whose state is a ring buffer of the last `n` values with
-    * Neumaier-compensated sliding sums. Same pinned pandas semantics
-    * as [[triangMean]] (null until `n` rows; NaN/null poisons while
-    * inside the window), bit-EQUAL to it on integer-valued inputs
-    * (every update exact below 2^53 — the a5 gate discipline) and
-    * ulp-class on floats with NO dependence on partition length
-    * (unlike the prefix-sum kernel's difference-of-cumsum
-    * cancellation, every running quantity here is window-local).
-    * All (channel, window) columns over the same `w` share ONE
-    * partition sort/exchange, like every other frame. */
+  /** O(1)-per-row trailing triangular mean: the custom window aggregate
+    * [[graft.functions.TriangRollingKahan]] over the running frame, whose
+    * state is a ring buffer of the last `n` values with
+    * Neumaier-compensated sliding sums. Same pinned pandas semantics as
+    * [[triangMean]]; bit-equal to it on integer-valued inputs (every
+    * update is exact below 2^53, the a5 gate discipline) and ulp-class
+    * on floats, independent of the partition length (every running
+    * quantity is window-local). */
   def triangMeanKahan(value: Column, w: WindowSpec, n: Int): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.functions.TriangRollingKahan(
@@ -78,87 +73,16 @@ object TriangularRolling {
       .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
   }
 
-  /** [[triangMeanKahan]] for every (channel, window) pair — the
-    * drop-in signature twin of [[triangMeansFast]], sharing one
-    * partition sort across all output columns. */
-  def triangMeansKahan(df: DataFrame, partitionCols: Seq[String],
-                       orderCols: Seq[String], channels: Seq[String],
-                       ns: Seq[Int], outPrefix: String = "tri"): DataFrame = {
-    val w = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val outCols = for { ch <- channels; n <- ns }
-      yield triangMeanKahan(col(ch), w, n).as(s"${outPrefix}_${ch}_$n")
-    df.select(df.columns.map(col).toSeq ++ outCols: _*)
-  }
-
-  /** O(1)-per-row triangular rolling means via prefix-sum decomposition
-    * — the 100 TB path for the reference's windows up to 1200 rows.
-    *
-    * A triangular weight is piecewise-linear in the row number, so the
-    * weighted window sum decomposes into differences of two RUNNING
-    * sums, C = cumsum(x) and D = cumsum(x * rn), evaluated at three
-    * frame boundaries (current row, ramp apex, window start) obtained
-    * with `lag`. Running frames are computed incrementally by Spark's
-    * window operator (O(1) amortized per row), unlike sliding frames
-    * which rescan the frame — so cost is independent of the window
-    * size, and ALL windows/channels share one partition sort.
-    *
-    * Numerics: differences of prefix sums can lose a few ulps to
-    * cancellation on very long partitions (|D| ~ x*rn^2/2); this is an
-    * analytics kernel, not the bit-parity oracle path ([[triangMean]]
-    * remains that).
-    *
-    * Returns `df` plus a column `s"${outPrefix}_${ch}_${n}"` for every
-    * (channel, window) pair, with pandas min_periods + null-poisoning
-    * semantics identical to [[triangMean]].
-    */
+  /** [[triangMeanKahan]] for every (channel, window) pair: returns
+    * `df` plus a column `s"${outPrefix}_${ch}_${n}"` for each, all
+    * evaluated by one Window operator over one partition sort. */
   def triangMeansFast(df: DataFrame, partitionCols: Seq[String],
                       orderCols: Seq[String], channels: Seq[String],
                       ns: Seq[Int], outPrefix: String = "tri"): DataFrame = {
     val w = Window.partitionBy(partitionCols.map(col): _*)
       .orderBy(orderCols.map(col): _*)
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // pass 1: row number + per-channel running sums
-    val rn = row_number().over(w).cast("double")
-    val pass1Cols = channels.flatMap { ch =>
-      val x = col(ch).cast("double")
-      Seq(
-        sum(coalesce(x, lit(0.0))).over(run).as(s"__c_$ch"),
-        sum(coalesce(x, lit(0.0)) * rn).over(run).as(s"__d_$ch"),
-        sum(when(x.isNull, 1L).otherwise(0L)).over(run).as(s"__nc_$ch"))
-    }
-    val staged = df.select(df.columns.map(col).toSeq ++ Seq(rn.as("__rn")) ++ pass1Cols: _*)
-
-    // pass 2: per (channel, window) O(1) combination of lagged prefixes
-    val outCols = for {
-      ch <- channels
-      n <- ns
-    } yield {
-      val m = (n + 1) / 2 // ramp length (odd: peak at m; even: m rising rows)
-      val c = col(s"__c_$ch"); val d = col(s"__d_$ch"); val nc = col(s"__nc_$ch")
-      def lag0(e: Column, j: Int) = coalesce(lag(e, j).over(w), lit(0.0))
-      def lagL(e: Column, j: Int) = coalesce(lag(e, j).over(w), lit(0L))
-      val rnT = col("__rn")
-      val sRn = rnT - n + 1 // window-start row number
-      // rising rows [s, s+m-1], falling rows [s+m, t]
-      val s0r = lag0(c, n - m) - lag0(c, n)
-      val s1r = lag0(d, n - m) - lag0(d, n)
-      val s0f = c - lag0(c, n - m)
-      val s1f = d - lag0(d, n - m)
-      val wsum = if (n % 2 == 1) {
-        // w(i) = (rn_i - s + 1) rising; (rn_t + 1 - rn_i) falling
-        (s1r + (lit(1) - sRn) * s0r) + (lit(-1) * s1f + (rnT + lit(1)) * s0f)
-      } else {
-        // w(i) = 2(rn_i - s) + 1 rising; 2n - 1 - 2(rn_i - s) falling
-        (lit(2) * s1r + (lit(1) - lit(2) * sRn) * s0r) +
-          (lit(-2) * s1f + (lit(2 * n - 1) + lit(2) * sRn) * s0f)
-      }
-      val nulls = nc - lagL(nc, n)
-      val mean = wsum / lit(weights(n).sum)
-      when(col("__rn") >= n && nulls === 0, mean).as(s"${outPrefix}_${ch}_$n")
-    }
-    staged.select(df.columns.map(col).toSeq ++ Seq(col("__rn")) ++ outCols: _*)
-      .drop("__rn")
+    val outCols = for { ch <- channels; n <- ns }
+      yield triangMeanKahan(col(ch), w, n).as(s"${outPrefix}_${ch}_$n")
+    df.select(df.columns.map(col).toSeq ++ outCols: _*)
   }
 }

@@ -69,7 +69,7 @@ object Profile {
         .agg(sum("r")).collect()(0).getDouble(0)
       v.toLong % 1000
     }
-    time("rolling triang w=1200, prefix-sum kernel") {
+    time("rolling triang w=1200, ring-buffer kernel") {
       val v = TriangularRolling.triangMeansFast(series, Seq("k"), Seq("t"),
         Seq("value"), Seq(1200))
         .agg(sum("tri_value_1200")).collect()(0).getDouble(0)

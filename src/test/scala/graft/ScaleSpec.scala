@@ -248,7 +248,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // final orderBy adds a range exchange + global sort; the window
     // block itself must contribute exactly one sort
     assert(sorts <= 2, s"a5 grew to $sorts sorts:\n$qe")
-    assert(!qe.contains("collect_list"), "a5 must use the prefix-sum kernel")
+    assert(!qe.contains("collect_list"), "a5 must use the O(1) ring-buffer kernel")
   }
 
   test("x15 production form: an HLL-only profile plans with NO Expand") {

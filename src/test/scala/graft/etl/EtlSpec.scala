@@ -108,6 +108,36 @@ class ActivityPipelineSpec extends AnyFunSuite {
       s"flagship ETL plan grew to $shuffles shuffle exchanges:\n$plan")
   }
 
+  test("pipeline plan: 33 rolling columns in ONE O(1) Window, no prefix-sum lags") {
+    // the 11 windows x 3 channels ride the ring-buffer window aggregate
+    // in one Window operator over the shared activity_id sort; a
+    // difference-of-prefix-sums kernel would add two Window operators
+    // and ~165 lag() expressions over its running sums. Counted on the
+    // plan tree: the plan string elides long expression lists.
+    import org.apache.spark.sql.catalyst.expressions.Lag
+    import org.apache.spark.sql.execution.window.WindowExec
+    for (dual <- Seq(false, true)) {
+      val windows = ActivityPipeline.process(activities(), streams(), nowEpoch,
+        dualMaxs = dual).queryExecution.sparkPlan.collect { case w: WindowExec => w }
+      val exprs = windows.flatMap(_.windowExpression)
+      val rolling = exprs.flatMap(_.collect {
+        case k: graft.functions.TriangRollingKahan => k })
+      assert(rolling.length == 33,
+        s"dualMaxs=$dual: ${rolling.length} triang_rolling_kahan columns")
+      assert(windows.count(_.windowExpression.exists(_.exists(
+        _.isInstanceOf[graft.functions.TriangRollingKahan]))) == 1,
+        s"dualMaxs=$dual: rolling columns split across Window operators")
+      val prefixLags = exprs.flatMap(_.collect {
+        case l: Lag if l.input.references.exists(a =>
+          Seq("__c_", "__d_", "__nc_").exists(a.name.startsWith)) => l })
+      assert(prefixLags.isEmpty,
+        s"dualMaxs=$dual: ${prefixLags.length} lags over prefix sums")
+      assert(windows.length <= 3,
+        s"dualMaxs=$dual: ${windows.length} Window operators:\n" +
+          windows.map(_.simpleString(200)).mkString("\n"))
+    }
+  }
+
   test("pipeline plan: ONE interpolation chain — spine explode appears once") {
     // The densify+interpolate subtree must have a single consumer: if the
     // nesting and rolling-maxima branches split before it, Catalyst

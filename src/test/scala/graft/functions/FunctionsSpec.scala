@@ -158,6 +158,54 @@ class MultimodalSpec extends AnyFunSuite {
     assert(Multimodal.ImageIoDecoder.decode("not an image".getBytes) == ((-1, -1, -1.0)))
   }
 
+  test("ImageIO decoder: a fatal codec error propagates, a bad payload is None") {
+    import javax.imageio.{ImageReadParam, ImageReader, ImageTypeSpecifier}
+    import javax.imageio.metadata.IIOMetadata
+    import javax.imageio.spi.{IIORegistry, ImageReaderSpi}
+    import javax.imageio.stream.ImageInputStream
+    import graft.multimodal.Multimodal
+    val magic = "FATALIMG".getBytes("US-ASCII")
+    // a codec plugin claiming payloads that start with `magic`, whose
+    // reader dies with a StackOverflowError (a fatal JVM error, not a
+    // decode failure)
+    class FatalReader(spi: ImageReaderSpi) extends ImageReader(spi) {
+      def getNumImages(allowSearch: Boolean): Int = 1
+      def getWidth(i: Int): Int = 1
+      def getHeight(i: Int): Int = 1
+      def getImageTypes(i: Int): java.util.Iterator[ImageTypeSpecifier] =
+        java.util.Collections.emptyIterator()
+      def getStreamMetadata(): IIOMetadata = null
+      def getImageMetadata(i: Int): IIOMetadata = null
+      def read(i: Int, p: ImageReadParam): java.awt.image.BufferedImage =
+        throw new StackOverflowError("codec recursion")
+    }
+    val spi = new ImageReaderSpi() {
+      inputTypes = Array(classOf[ImageInputStream])
+      def getDescription(l: java.util.Locale): String = "fatal test codec"
+      def createReaderInstance(ext: Object): ImageReader = new FatalReader(this)
+      def canDecodeInput(src: Object): Boolean = src match {
+        case in: ImageInputStream =>
+          val head = new Array[Byte](magic.length)
+          in.mark()
+          try in.read(head) == magic.length && head.sameElements(magic)
+          finally in.reset()
+        case _ => false
+      }
+    }
+    val registry = IIORegistry.getDefaultInstance
+    registry.registerServiceProvider(spi, classOf[ImageReaderSpi])
+    try {
+      intercept[StackOverflowError] {
+        Multimodal.ImageIoDecoder.decodeImage(magic ++ Array[Byte](1, 2, 3))
+      }
+      // ordinary decode failures stay the explicit None: no codec
+      // claims garbage, and a truncated PNG makes the PNG reader throw
+      assert(Multimodal.ImageIoDecoder.decodeImage("garbage".getBytes).isEmpty)
+      val png = graft.GateFixtures.syntheticPng(7L)
+      assert(Multimodal.ImageIoDecoder.decodeImage(png.take(40)).isEmpty)
+    } finally registry.deregisterServiceProvider(spi, classOf[ImageReaderSpi])
+  }
+
   test("decoded-pixel perceptual hashes are formula-exact; corrupt groups at -1") {
     import graft.multimodal.Multimodal
     val media = Seq(

@@ -88,7 +88,7 @@ class TriangularRollingSpec extends AnyFunSuite {
     val w = Window.partitionBy("k").orderBy("t")
     val slow = df.select(Seq(col("k"), col("t")) ++
       ns.map(n => TriangularRolling.triangMean(col("v"), w, n).as(s"slow_$n")): _*)
-    val fast = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
+    val fast = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
       Seq("v"), ns)
     val joined = slow.join(fast, Seq("k", "t")).orderBy("k", "t").collect()
     joined.foreach { r =>
@@ -121,7 +121,7 @@ class TriangularRollingSpec extends AnyFunSuite {
     val w = Window.partitionBy("k").orderBy("t")
     val slow = df.select(Seq(col("k"), col("t")) ++
       ns.map(n => TriangularRolling.triangMean(col("v"), w, n).as(s"slow_$n")): _*)
-    val fast = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
+    val fast = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
       Seq("v"), ns)
     val joined = slow.join(fast, Seq("k", "t")).orderBy("t").collect()
     joined.foreach { r =>
@@ -141,14 +141,14 @@ class TriangularRollingSpec extends AnyFunSuite {
 
   test("Kahan ring kernel: one window exchange/sort for all columns, no collect_list") {
     val df = (0L until 50L).map(i => (i % 2, i, i.toDouble)).toDF("k", "t", "v")
-    val plan = TriangularRolling.triangMeansKahan(df, Seq("k"), Seq("t"),
+    val plan = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
       Seq("v"), Seq(5, 10, 20)).queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
     assert("Sort \\[".r.findAllIn(plan).length === 1, plan)
     assert(!plan.contains("collect_list"), plan)
   }
 
-  test("prefix-sum fast kernel agrees with the exact kernel (incl. nulls, multiple windows)") {
+  test("Kahan ring kernel: agrees with the exact kernel on 2-decimal floats (incl. nulls, multiple windows)") {
     val rng = new scala.util.Random(42)
     val vals: Seq[Option[Double]] = (0 until 400).map { _ =>
       if (rng.nextDouble() < 0.07) None
@@ -171,6 +171,54 @@ class TriangularRollingSpec extends AnyFunSuite {
             assert(math.abs(r.getDouble(si) - r.getDouble(fi)) < 1e-8,
               s"n=$n k=${r.getLong(0)} t=${r.getLong(1)}: ${r.getDouble(si)} vs ${r.getDouble(fi)}")
           case other => fail(s"null mismatch n=$n t=${r.getLong(1)}: $other")
+        }
+      }
+    }
+  }
+
+  test("Kahan ring kernel: 90-minute float activity, all 11 windows within 1e-11 relative") {
+    // one 5,400-row partition (a 90-minute activity at 1 Hz) with
+    // heart-rate- and power-shaped channels at 2-3 decimals and a few
+    // nulls; every cell is checked against a driver-side fold in exact
+    // integer arithmetic. A difference-of-prefix-sums kernel loses
+    // ~1e-8 relative here to cancellation; the compensated sliding
+    // sums stay near 1e-15.
+    val rng = new scala.util.Random(5400)
+    val rows = 5400
+    val ns = Seq(1, 5, 10, 20, 30, 45, 60, 120, 300, 600, 1200)
+    // channel values in thousandths, so the fold below is exact
+    def channel(base: Int, amp: Int, scale: Int): IndexedSeq[Option[Long]] =
+      (0 until rows).map { i =>
+        if (rng.nextDouble() < 0.002) None
+        else {
+          val v = base * 1000 + (amp * 1000 * math.sin(i / 300.0)).toLong +
+            rng.nextInt(20000)
+          Some(v / scale * scale)
+        }
+      }
+    val hr = channel(140, 30, 10) // two decimals
+    val pw = channel(250, 150, 1) // three decimals
+    val df = (0 until rows).map(i =>
+      (0L, i.toLong, hr(i).map(_ / 1000.0), pw(i).map(_ / 1000.0)))
+      .toDF("k", "t", "hr", "pw")
+    val got = TriangularRolling.triangMeansFast(df, Seq("k"), Seq("t"),
+      Seq("hr", "pw"), ns).orderBy("t").collect()
+    for ((ch, xs) <- Seq("hr" -> hr, "pw" -> pw); n <- ns) {
+      val wts = TriangularRolling.weights(n).map(_.toLong)
+      val wsum = 1000.0 * wts.sum
+      got.zipWithIndex.foreach { case (r, t) =>
+        val window = if (t + 1 >= n) xs.slice(t + 1 - n, t + 1) else Nil
+        val exact =
+          if (window.isEmpty || window.contains(None)) None
+          else Some(window.flatten.zip(wts).map { case (x, w) => x * w }.sum / wsum)
+        val fi = r.fieldIndex(s"tri_${ch}_$n")
+        (exact, r.isNullAt(fi)) match {
+          case (None, true) =>
+          case (Some(e), false) =>
+            val g = r.getDouble(fi)
+            assert(math.abs(g - e) <= 1e-11 * math.max(1.0, math.abs(e)),
+              s"$ch n=$n t=$t: $g vs exact $e (|diff| ${math.abs(g - e)})")
+          case other => fail(s"null mismatch $ch n=$n t=$t: $other")
         }
       }
     }
