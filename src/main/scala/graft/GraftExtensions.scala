@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
-import graft.functions.{ArrayCountInSet, DotProduct, UnitVector}
+import graft.functions.{ArrayCountInSet, DotProduct, NearestCentroids, UnitVector}
 
 /** SQL-surface registration for the engine's custom Catalyst
   * expressions, so `spark.sql("SELECT dot_product(a, b) ...")` uses the
@@ -21,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.dotProductDescriptor)
     e.injectFunction(GraftExtensions.unitVectorDescriptor)
     e.injectFunction(GraftExtensions.arrayCountInSetDescriptor)
+    e.injectFunction(GraftExtensions.nearestCentroidsDescriptor)
     e.injectOptimizerRule(_ => graft.plans.KernelSubstitution)
     e.injectPlannerStrategy(_ => graft.plans.LocalTopKStrategy)
   }
@@ -50,6 +51,21 @@ object GraftExtensions {
     ArrayCountInSet(Cast(exprs.head, ArrayType(StringType)), markers)
   }
 
+  private def buildNearestCentroids(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 3 && exprs(2).foldable,
+      "nearest_centroids(unitVector, codebook, n) — n must be a literal")
+    NearestCentroids(
+      Cast(exprs(0), ArrayType(DoubleType)),
+      Cast(exprs(1), ArrayType(NearestCentroids.centroidType)),
+      exprs(2).eval(null).asInstanceOf[Number].intValue())
+  }
+
+  private[graft] val nearestCentroidsDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier("nearest_centroids"),
+    new ExpressionInfo(classOf[NearestCentroids].getName, "nearest_centroids"),
+    buildNearestCentroids)
+
   private[graft] val arrayCountInSetDescriptor
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("array_count_in_set"),
@@ -76,6 +92,8 @@ object GraftExtensions {
       "unit_vector", buildUnitVector, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "array_count_in_set", buildArrayCountInSet, "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "nearest_centroids", buildNearestCentroids, "scala_udf")
     // kernel substitution is idempotent and purely semantic-preserving,
     // but only add it once per session
     if (!spark.experimental.extraOptimizations.contains(graft.plans.KernelSubstitution)) {

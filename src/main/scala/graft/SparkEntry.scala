@@ -13363,12 +13363,6 @@ object SparkEntry {
     // store must hash-equal the one-shot batch table. Oracle IS
     // o29's (shared-oracle parity pin, the w28<-n10 discipline).
     ("w32_stream_token_supply", (s, dir) => withStateParts(s) {
-      val docs = t(s, dir, "documents")
-      val bounds = docs.agg(min(col("doc_id")).as("__mn"),
-        max(col("doc_id")).as("__mx"))
-      val bucketed = docs.crossJoin(broadcast(bounds))
-        .select(col("doc_id"), col("source"), col("text"),
-          expr("(doc_id - __mn) * 3 div (__mx - __mn + 1)").as("bucket"))
       // input batches staged, SHARED with w33 — identical seeding body
       // incl. the order stamps (stagedInputs scaladoc)
       val in = w32w33Inputs(s, dir)

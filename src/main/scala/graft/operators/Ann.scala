@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.Similarity
+import graft.functions.{NearestCentroids, Similarity, VectorSum}
 
 /** Approximate-nearest-neighbor search over an embedding column, as a
   * library: brute-force cosine top-k as the correctness baseline, and
@@ -301,68 +302,137 @@ object Ann {
       .select("qid", "rnk", "neighbor_id", "qcos_r")
   }
 
-  /** Learned k-means codebook by Lloyd iterations on unit vectors,
-    * fully deterministic and fully declarative (no collect): seeds are
-    * the unit vectors of the `k` lowest vec_ids (by rank), each round assigns
-    * every vector to its max-cosine centroid and re-averages per
-    * (cluster, dim). Centroid dims are rounded to 6 places per round —
-    * that makes the codebook REPRODUCIBLE across engines and summation
-    * orders (the oracle runs the identical unrolled rounds), the same
-    * reason a production pipeline snapshots its codebook rather than
-    * recomputing it ad hoc.
-    *
-    * Returns (cluster, pos, c) — long-form centroid dims. `iters` is
-    * small and fixed (codebook training is an offline step; at 100 TB
-    * you train on a sample and broadcast the codebook). */
-  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
-    val dims = embeddings
-      .select(col("vec_id"), Similarity.unit(col("embedding")).as("ue"))
-      .select(col("vec_id"), posexplode(col("ue")))
-      .withColumnRenamed("col", "v")
-    // seed codebook: the k lowest vec_ids BY RANK (deterministic,
-    // data-derived, and correct on any id space — filtering vec_id < k
-    // silently under-seeds a corpus whose ids don't start at 0). The
-    // rank window runs over k rows post-limit, not the corpus; the
-    // constant partition key marks that boundedness and keeps
-    // WindowExec's single-partition warning out of the logs.
-    val seedIds = embeddings.select(col("vec_id")).orderBy("vec_id").limit(k)
-      .withColumn("cluster",
-        (row_number().over(Window.partitionBy(lit(0)).orderBy("vec_id")) - 1)
-          .cast("long"))
-    var cent = dims.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("cluster"), col("pos"), round(col("v"), 6).as("c"))
-    for (_ <- 0 until iters) {
-      val scores = dims.join(cent, Seq("pos"))
-        .groupBy("vec_id", "cluster")
-        .agg(round(sum(col("v") * col("c")), 6).as("score"))
-      val wA = Window.partitionBy("vec_id")
-        .orderBy(col("score").desc, col("cluster"))
-      val assign = scores.withColumn("__r", row_number().over(wA))
-        .filter(col("__r") === 1).select("vec_id", "cluster")
-      cent = dims.join(assign, Seq("vec_id"))
-        .groupBy("cluster", "pos").agg(round(avg(col("v")), 6).as("c"))
+  /** Spark's `round(x, 6)` on a double: HALF_UP on `BigDecimal.valueOf`,
+    * NaN and infinities unchanged — the rounding every score and
+    * centroid dim in this file goes through. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** A trained codebook: (cluster id, centroid), ids ascending. */
+  private type Codebook = Seq[(Long, Array[Double])]
+
+  /** `m` codebooks as ONE row to broadcast: column `cb<s>` is codebook
+    * s as the `array<struct<cluster, c>>` [[NearestCentroids]] reads. */
+  private def codebookRow(spark: SparkSession, cbs: Seq[Codebook]): DataFrame = {
+    val row = Row.fromSeq(cbs.map(_.map { case (id, c) => Row(id, c.toSeq) }))
+    val schema = StructType(cbs.indices.map(s =>
+      StructField(s"cb$s", ArrayType(NearestCentroids.centroidType))))
+    spark.createDataFrame(java.util.List.of(row), schema)
+  }
+
+  /** A long-form (cluster, pos, c) codebook as the one-row `cb0` column
+    * [[NearestCentroids]] reads. The codebook is k·d rows — the size
+    * every caller broadcasts — so it is collected, not aggregated: no
+    * job when it is a local frame (as [[kmeansCentroids]] returns), one
+    * small read when it is persisted. Each cluster's positions must run
+    * 0..L-1 with non-null dims, as [[kmeansCentroids]] writes them. */
+  private def codebookOf(centroids: DataFrame): DataFrame = {
+    val rows = centroids
+      .select(col("cluster").cast("long"), col("pos").cast("int"), col("c").cast("double"))
+      .collect().toSeq.filterNot(_.isNullAt(0))
+    val cb = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (id, rs) =>
+      id -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
     }
-    cent
+    codebookRow(centroids.sparkSession, Seq(cb))
+  }
+
+  /** Lloyd k-means for `m` codebooks at once, one per unit-vector
+    * column `u0..u<m-1>` of `units` (vec_id, u0, ...). Every codebook is
+    * seeded from the unit vectors of the same `k` lowest vec_ids (by
+    * rank, so any id space seeds fully), so one seed read and one
+    * (subspace, cluster) aggregation per round serve all of them. A
+    * round broadcasts the codebooks as one row, assigns every vector
+    * with [[NearestCentroids]] (max `round(dot, 6)`, ties to the lowest
+    * cluster) and re-averages with [[VectorSum]]: each centroid dim is
+    * `round(sum / n, 6)`, the same operation as `round(avg(v), 6)`.
+    * Rounding makes the codebook reproducible across engines and
+    * summation orders (the oracle replays the same rounds).
+    *
+    * The corpus never shuffles: only the m·k partial sums do, and the
+    * k-row codebooks come back to the driver between rounds. A seed
+    * whose subvector is null or empty never becomes a cluster, and a
+    * cluster that loses every member vanishes. */
+  private def lloyd(units: DataFrame, m: Int, k: Int, iters: Int): Seq[Codebook] = {
+    val spark = units.sparkSession
+    val seeds = units.orderBy("vec_id").limit(k).collect().toSeq
+    var cbs: Seq[Codebook] = (0 until m).map { s =>
+      seeds.zipWithIndex.collect {
+        case (r, j) if !r.isNullAt(0) && !r.isNullAt(1 + s) &&
+            r.getSeq[Double](1 + s).nonEmpty =>
+          j.toLong -> r.getSeq[Double](1 + s).map(round6).toArray
+      }
+    }
+    for (_ <- 0 until iters) {
+      val sums = units.crossJoin(broadcast(codebookRow(spark, cbs)))
+        .select(explode(array((0 until m).map { s =>
+          struct(lit(s).as("s"),
+            get(NearestCentroids.nearest(col(s"u$s"), col(s"cb$s"), 1), lit(0))
+              .as("cluster"),
+            col(s"u$s").as("v"))
+        }: _*)).as("a"))
+        .filter(col("a.cluster").isNotNull)
+        .groupBy(col("a.s"), col("a.cluster"))
+        .agg(VectorSum.sum(col("a.v")))
+        .collect()
+      cbs = (0 until m).map { s =>
+        sums.toSeq.filter(_.getInt(0) == s).map { r =>
+          val vs = r.getStruct(2)
+          val sum = vs.getSeq[Double](0)
+          val n = vs.getSeq[Long](1)
+          r.getLong(1) -> sum.indices.map(i => round6(sum(i) / n(i).toDouble)).toArray
+        }.sortBy(_._1)
+      }
+    }
+    cbs
+  }
+
+  /** Learned k-means codebook by Lloyd iterations on unit vectors,
+    * fully deterministic: seeds are the unit vectors of the `k` lowest
+    * vec_ids (by rank), each round assigns every vector to its
+    * max-cosine centroid and re-averages each cluster's vectors
+    * element-wise ([[lloyd]]). Centroid dims are rounded to 6 places per
+    * round — that makes the codebook REPRODUCIBLE across engines and
+    * summation orders (the oracle runs the identical unrolled rounds),
+    * the same reason a production pipeline snapshots its codebook
+    * rather than recomputing it ad hoc.
+    *
+    * Training runs when this is called (one seed read, then one
+    * aggregation per round; the k-row codebook is collected between
+    * rounds). Returns (cluster, pos, c) — long-form centroid dims, the
+    * k-row codebook exploded at the end. `iters` is small and fixed
+    * (codebook training is an offline step; at 100 TB you train on a
+    * sample and broadcast the codebook). */
+  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
+    val units = embeddings
+      .select(col("vec_id"), Similarity.unit(col("embedding")).as("u0"))
+    val rows = for {
+      (cluster, c) <- lloyd(units, 1, k, iters).head
+      (x, pos) <- c.zipWithIndex
+    } yield Row(cluster, pos, x)
+    embeddings.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("cluster", LongType),
+        StructField("pos", IntegerType, nullable = false),
+        StructField("c", DoubleType))))
   }
 
   /** Inverted-file membership: each vector's single max-cosine
     * centroid against a long-form (cluster, pos, c) codebook — the
     * (vec_id, cluster) assignment [[ivfTopK]] builds internally,
     * exposed for cluster-scoped operators (semantic dedup). The
-    * codebook broadcasts; the corpus contributes one dim-explode
-    * partial aggregation and one per-vector argmax window. */
-  def clusterAssignment(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    val dims = embeddings
+    * codebook is read when this is called and broadcast as one row;
+    * each vector pays one [[NearestCentroids]] call in a projection —
+    * no explode, no shuffle of the corpus. Vectors with a null or empty
+    * embedding get no row; `cluster` keeps the codebook's type. */
+  def clusterAssignment(embeddings: DataFrame, centroids: DataFrame): DataFrame =
+    embeddings
       .select(col("vec_id"), Similarity.unit(col("embedding")).as("ue"))
-      .select(col("vec_id"), posexplode(col("ue")))
-      .withColumnRenamed("col", "v")
-    val scores = dims.join(broadcast(centroids), Seq("pos"))
-      .groupBy("vec_id", "cluster")
-      .agg(round(sum(col("v") * col("c")), 6).as("score"))
-    val wA = Window.partitionBy("vec_id").orderBy(col("score").desc, col("cluster"))
-    scores.withColumn("__r", row_number().over(wA))
-      .filter(col("__r") === 1).select("vec_id", "cluster")
-  }
+      .crossJoin(broadcast(codebookOf(centroids)))
+      .select(col("vec_id"),
+        get(NearestCentroids.nearest(col("ue"), col("cb0"), 1), lit(0))
+          .cast(centroids.schema("cluster").dataType).as("cluster"))
+      .filter(col("cluster").isNotNull)
 
   /** Cluster-purity evaluation: per cluster, the share of members
     * carrying the cluster's MAJORITY ground-truth label, in exact
@@ -407,8 +477,8 @@ object Ann {
     * the same contract that keeps d21's gram index append-only), so
     * stored membership rows pass through unchanged by construction and
     * the batch pays exactly one broadcast-codebook scoring pass
-    * ([[clusterAssignment]]: one dim-explode partial agg + one argmax
-    * window over batch rows only). At 100 TB the stored side is the
+    * ([[clusterAssignment]]: one nearest-centroid projection over batch
+    * rows only, no shuffle). At 100 TB the stored side is the
     * bucketed-by-centroid persisted storage [[ivfTopK]] probes — it is
     * never re-scored, re-shuffled, or even read beyond the union.
     * Result provably equals a from-scratch assignment of the union
@@ -422,9 +492,12 @@ object Ann {
   /** IVF-style ANN against a long-form (cluster, pos, c) codebook:
     * rank centroids per query by cosine, probe the top `nprobe`, exact
     * cosine re-rank only inside the probed partitions. Membership =
-    * max-cosine centroid per vector (the inverted file). At 100 TB the
-    * codebook is broadcast and the corpus is scanned once to build the
-    * file; queries touch nprobe/k of the data.
+    * max-cosine centroid per vector (the inverted file). One
+    * [[NearestCentroids]] call per vector gives both: its best cell
+    * (membership) and, for query rows, its `nprobe` best (the probes).
+    * At 100 TB the codebook is broadcast as one row and the corpus is
+    * scanned once to build the file, never shuffled; queries touch
+    * nprobe/k of the data.
     *
     * N26 — DELETIONS: `tombstones` (a vec_id table) is the index
     * lifecycle's third member next to insert (n10/n25/w28) and rebuild
@@ -438,23 +511,22 @@ object Ann {
   def ivfTopK(embeddings: DataFrame, centroids: DataFrame,
               queryPred: Column, k: Int, nprobe: Int,
               tombstones: Option[DataFrame] = None): DataFrame = {
-    val em = embeddings
+    require(nprobe >= 1, "nprobe must be >= 1")
+    // one kernel call per vector: its nprobe best cells, best first
+    val near = embeddings
       .select(col("vec_id"), Similarity.unit(col("embedding")).as("ue"))
-    val dims = em.select(col("vec_id"), posexplode(col("ue")))
-      .withColumnRenamed("col", "v")
-    val scores = dims.join(broadcast(centroids), Seq("pos"))
-      .groupBy("vec_id", "cluster")
-      .agg(round(sum(col("v") * col("c")), 6).as("score"))
-    val wA = Window.partitionBy("vec_id").orderBy(col("score").desc, col("cluster"))
-    val ranked = scores.withColumn("__r", row_number().over(wA))
+      .crossJoin(broadcast(codebookOf(centroids)))
+      .select(col("vec_id"), col("ue"),
+        NearestCentroids.nearest(col("ue"), col("cb0"), nprobe).as("near"))
     // inverted file: every vector lives in its single max-cosine cell
-    val member = ranked.filter(col("__r") === 1).select("vec_id", "cluster")
-    val probes = ranked.filter(queryPred && col("__r") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cluster"))
-    val q = em.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("ue").as("qu"))
-    val candAll = broadcast(probes.join(q, "qid"))
-      .join(em.join(member, Seq("vec_id")), Seq("cluster"))
+    val member = near
+      .select(col("vec_id"), col("ue"), get(col("near"), lit(0)).as("cluster"))
+      .filter(col("cluster").isNotNull)
+    // probes: only the query rows unfold their cells
+    val probes = near.filter(queryPred)
+      .select(col("vec_id").as("qid"), col("ue").as("qu"),
+        explode(col("near")).as("cluster"))
+    val candAll = broadcast(probes).join(member, Seq("cluster"))
       .filter(col("vec_id") =!= col("qid"))
     // soft delete: tombstoned ids leave the candidate stream here (a
     // query that is itself tombstoned is already absent — queryPred
@@ -469,46 +541,57 @@ object Ann {
   }
 
   /** Product-quantization top-k with ADC (asymmetric distance
-    * computation) — the FAISS-style MEMORY path: the corpus is stored
-    * as `m` small integer codes per vector (here m sub-codebooks of
-    * `k` centroids over contiguous `subDim`-wide slices), and scoring
-    * never touches the original floats. Per query, a lookup table of
-    * query-subvector × centroid dots (m×k entries, broadcast) is
-    * built once; a candidate's score is m table lookups summed. This
-    * is "spherical PQ": each subvector is unit-normalized and
-    * codebooks are trained by the same deterministic Lloyd rounds as
-    * [[kmeansCentroids]], so the codebooks — and hence the gate — are
+    * computation, Jégou et al., TPAMI 2011) — the FAISS-style MEMORY
+    * path: the corpus is stored as `m` small integer codes per vector
+    * (here m sub-codebooks of `k` centroids over contiguous
+    * `subDim`-wide slices), and scoring never touches the original
+    * floats. Per query, a lookup table of query-subvector × centroid
+    * dots (m×k entries) is built once; a candidate's score is m table
+    * lookups summed, `round(sum, 6)`. This is "spherical PQ": each
+    * subvector is unit-normalized and the m codebooks are trained
+    * together by the deterministic Lloyd rounds of [[kmeansCentroids]]
+    * ([[lloyd]]), so the codebooks — and hence the gate — are
     * reproducible across engines. Scores approximate full-vector
     * cosine (AnnRecallSpec pins recall vs the float baseline).
     *
+    * Plan: the codebooks broadcast as one row; one projection gives a
+    * vector its m codes ([[NearestCentroids]]) and a query its m
+    * tables; the query side broadcasts and each (query, vector) pair is
+    * scored in one expression — no union, no (query, vector)
+    * aggregation. A pair is scored over the subspaces where the vector
+    * has a code and the query a table entry, and dropped when there
+    * are none.
+    *
     * Scale: codes are m bytes/vector vs 4·dims float bytes (32× here)
     * — the difference between an in-memory corpus scan and not; the
-    * scan side joins two broadcast tables (codes→LUT), no shuffle of
-    * the corpus beyond the per-subspace encode aggregations. */
+    * corpus never shuffles (only the per-query top-k ranking does). */
   def pqTopK(embeddings: DataFrame, m: Int, subDim: Int, k: Int,
              iters: Int, queryPred: Column, topK: Int): DataFrame = {
-    val perSub = (0 until m).map { s =>
-      val sub = embeddings.select(col("vec_id"),
-        slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
-      val cb = kmeansCentroids(sub, k, iters)
-      val codes = clusterAssignment(sub, cb)
-        .select(col("vec_id"), col("cluster"))
-      // per-query LUT: dot of the unit query subvector with each centroid
-      val qdims = sub.filter(queryPred)
-        .select(col("vec_id").as("qid"), Similarity.unit(col("embedding")).as("qu"))
-        .select(col("qid"), posexplode(col("qu")))
-        .withColumnRenamed("col", "qv")
-      val lut = qdims.join(broadcast(cb), Seq("pos"))
-        .groupBy("qid", "cluster")
-        .agg(round(sum(col("qv") * col("c")), 6).as("part"))
-      codes.join(broadcast(lut), Seq("cluster"))
-        .select(col("qid"), col("vec_id"), col("part"))
-    }
-    val scored = perSub.reduce(_ unionByName _)
-      .groupBy("qid", "vec_id")
-      .agg(round(sum(col("part")), 6).as("score_r"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumnRenamed("vec_id", "neighbor_id")
+    val units = embeddings.select(col("vec_id") +: (0 until m).map(s =>
+      Similarity.unit(slice(col("embedding"), s * subDim + 1, subDim)).as(s"u$s")): _*)
+    // cluster ids renumbered to array positions (order-preserving, so
+    // ties still go to the lowest trained id): a code then indexes its
+    // query's LUT directly
+    val cbs = lloyd(units, m, k, iters)
+      .map(_.zipWithIndex.map { case ((_, c), i) => (i.toLong, c) })
+    val withCb = units.crossJoin(broadcast(codebookRow(embeddings.sparkSession, cbs)))
+    val codes = withCb.select(col("vec_id") +: (0 until m).map(s =>
+      get(NearestCentroids.nearest(col(s"u$s"), col(s"cb$s"), 1), lit(0))
+        .cast("int").as(s"code$s")): _*)
+    // per-query LUT: entry j = round(dot(query subvector, centroid j), 6),
+    // null where they share no position
+    val luts = withCb.filter(queryPred).select(col("vec_id").as("qid") +:
+      (0 until m).map { s =>
+        val u = col(s"u$s")
+        transform(col(s"cb$s"), e => when(size(u) > 0 && size(e.getField("c")) > 0,
+          round(Similarity.dot(u, e.getField("c")), 6))).as(s"lut$s")
+      }: _*)
+    val parts = (0 until m).map(s => get(col(s"lut$s"), col(s"code$s")))
+    val scored = broadcast(luts).join(codes, col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("neighbor_id"),
+        when(parts.map(_.isNotNull).reduce(_ || _),
+          round(parts.map(coalesce(_, lit(0.0))).reduce(_ + _), 6)).as("score_r"))
+      .filter(col("score_r").isNotNull)
     topKPerGroup(scored, Seq("qid"),
       Seq(col("score_r").desc, col("neighbor_id")), topK, "rnk")
       .select("qid", "rnk", "neighbor_id", "score_r")
@@ -743,9 +826,6 @@ object Ann {
     import spark.implicits._
     val adjB = index.adj
     val unitB = index.units
-    def round6(v: Double): Double =
-      java.math.BigDecimal.valueOf(v)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     q.select(col("qid").cast("long"), col("qu").cast("array<double>"))
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>

@@ -53,7 +53,7 @@ object Bfs {
     // SMALL-GRAPH LOCAL PATH (round 17 — ConnectedComponents'
     // localThreshold discipline applied to BFS): below the threshold,
     // collect the edge list and run the frontier expansion on the
-    // driver — 2 bounded jobs (count + collect) instead of
+    // driver — one bounded read ([[SizeProbe]]) instead of
     // 3 exchanges PER HOP (join + distinct + anti-join), which at a
     // 6-hop budget is ~18 tiny sequential AQE stages whose scheduling
     // dominates the actual work (n34 runs TWO such audits; receipts in
@@ -61,17 +61,12 @@ object Bfs {
     // minimal distance on both paths. Above the threshold the
     // distributed frontier loop below is unchanged — the seen set, not
     // the driver, remains the memory bound at scale.
-    // pinned BEFORE the size probe so the count and the collect (or
-    // the per-hop scans on the distributed path) read one cached copy
-    // instead of re-evaluating the caller's edge derivation per pass
-    val eNarrow =
-      if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        Checkpoints.pinLazy(edges.select(col("src"), col("dst")))
-      else edges.select(col("src"), col("dst"))
-    if (eNarrow.count() <= localThreshold) {
+    val narrow = edges.select(col("src"), col("dst"))
+    val local = SizeProbe.collectAtMost(narrow, localThreshold)
+    if (local.isDefined) {
       val adj = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[Long]]
-      eNarrow.collect().foreach { r =>
+      local.get.foreach { r =>
         adj.getOrElseUpdate(r.getLong(0),
           scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
       }
@@ -100,10 +95,14 @@ object Bfs {
           org.apache.spark.sql.types.StructField("dist",
             org.apache.spark.sql.types.LongType, nullable = false))))
     }
-    // the pinned edge list is scanned every hop on the distributed
-    // path (the weightedDistances round-10 fix, same cause); eNarrow
-    // is already cached by the size probe above
-    val e = eNarrow
+    // the edge list is scanned every hop on the distributed path, so
+    // it is pinned (the weightedDistances round-10 fix, same cause) —
+    // after the probe, which a lazy pin would turn into a full read.
+    // Already-persisted edges keep the caller's copy (no double pin).
+    val e =
+      if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        Checkpoints.pinLazy(narrow)
+      else narrow
     var dist = Checkpoints.pinLazy(
       sources.select(col("id")).distinct()
         .select(col("id"), lit(0L).as("dist")))
@@ -166,28 +165,18 @@ object Bfs {
                         rounds: Int,
                         localThreshold: Long = 1000000L): DataFrame = {
     require(rounds >= 0)
-    // the edge list is scanned once PER ROUND: pin it, or every round
-    // re-evaluates the caller's whole edge-derivation lineage (g53's
-    // orders-lineitem join ran 4x before round 10 — most of its wall).
-    // Already-persisted edges keep the caller's copy (no double pin).
-    // LAZY pins (round 16, hopDistances' rationale): rounds execute as
-    // one job at the consumer's action, each round's relaxed table
-    // cached at first materialization; there is no early exit here, so
-    // laziness costs nothing and removes `rounds` eager dispatches.
-    val e =
-      if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        Checkpoints.pinLazy(edges.select(col("src"), col("dst"), col("w")))
-      else edges.select(col("src"), col("dst"), col("w"))
+    val narrow = edges.select(col("src"), col("dst"), col("w"))
     // SMALL-GRAPH LOCAL PATH (round 17 — hopDistances' rationale):
-    // below the threshold, collect and run the fixed Bellman-Ford
-    // rounds on the driver — 2 bounded jobs instead of a join + a
-    // min-aggregation exchange PER ROUND. Identical output: after k
-    // rounds both paths hold the exact minimum cost over <= k-edge
-    // paths (BfsSpec pins parity).
-    if (e.count() <= localThreshold) {
+    // below the threshold, run the fixed Bellman-Ford rounds on the
+    // driver over the bounded size probe's rows — one read instead of
+    // a join + a min-aggregation exchange PER ROUND. Identical output:
+    // after k rounds both paths hold the exact minimum cost over
+    // <= k-edge paths (BfsSpec pins parity).
+    val local = SizeProbe.collectAtMost(narrow, localThreshold)
+    if (local.isDefined) {
       val adj = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-      e.collect().foreach { r =>
+      local.get.foreach { r =>
         adj.getOrElseUpdate(r.getLong(0),
           scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]) +=
           ((r.getLong(1), r.getLong(2)))
@@ -218,6 +207,20 @@ object Bfs {
           org.apache.spark.sql.types.StructField("dist",
             org.apache.spark.sql.types.LongType, nullable = false))))
     }
+    // the edge list is scanned once PER ROUND: pin it, or every round
+    // re-evaluates the caller's whole edge-derivation lineage (g53's
+    // orders-lineitem join ran 4x before round 10 — most of its wall).
+    // Pinned after the probe, which a lazy pin would turn into a full
+    // read. Already-persisted edges keep the caller's copy (no double
+    // pin). LAZY pins (round 16, hopDistances' rationale): rounds
+    // execute as one job at the consumer's action, each round's relaxed
+    // table cached at first materialization; there is no early exit
+    // here, so laziness costs nothing and removes `rounds` eager
+    // dispatches.
+    val e =
+      if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        Checkpoints.pinLazy(narrow)
+      else narrow
     var dist = Checkpoints.pinLazy(
       sources.select(col("id")).distinct()
         .select(col("id"), lit(0L).as("dist")))

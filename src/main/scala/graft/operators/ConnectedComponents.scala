@@ -37,17 +37,18 @@ object ConnectedComponents {
                  srcCol: String, dstCol: String,
                  localThreshold: Long = 1000000L): DataFrame = {
     val p = pairs.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).persist()
-    val n = p.count()
-    val out =
-      if (n <= localThreshold) {
-        val labels = unionFindLocal(p.collect()
-          .map(r => (r.getLong(0), r.getLong(1))))
+      col(dstCol).cast("long").as("dst"))
+    SizeProbe.collectAtMost(p, localThreshold) match {
+      case Some(rows) =>
+        val labels = unionFindLocal(rows.map(r => (r.getLong(0), r.getLong(1))))
         import spark.implicits._
         labels.toSeq.toDF("doc_id", "cluster")
-      } else labelPropagate(p)
-    p.unpersist()
-    out
+      case None =>
+        val cached = p.persist()
+        val out = labelPropagate(cached)
+        cached.unpersist()
+        out
+    }
   }
 
   /** INCREMENTAL update of a persisted cluster-label table: union a

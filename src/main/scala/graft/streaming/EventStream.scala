@@ -242,8 +242,9 @@ object EventStream {
     * arrival, w14's foreachBatch staging discipline): each micro-batch
     * of new vectors is assigned to its max-cosine centroid against the
     * FROZEN broadcast codebook ([[graft.operators.Ann
-    * .clusterAssignment]] — a static plan per batch, so the argmax
-    * window is legal) and APPENDED to the persisted membership store.
+    * .clusterAssignment]] — a static plan per batch, the argmax one
+    * kernel call per vector) and APPENDED to the persisted membership
+    * store.
     * Stored rows are never re-scored or rewritten logically
     * (append-only — retraining/rebalancing is n24's decision-gated
     * rebuild); at gate scale the versioned store rewrites the snapshot

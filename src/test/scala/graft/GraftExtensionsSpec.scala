@@ -39,6 +39,38 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(got == 3L)
   }
 
+  test("runtime registration exposes nearest_centroids to SQL, equal to the Column API") {
+    val spark = TestSpark.spark
+    import org.apache.spark.sql.functions._
+    GraftExtensions.register(spark)
+    // ties (clusters 1 and 3 are the same centroid), a short vector, a
+    // zero vector (NaN unit vector) and a null vector
+    spark.sql("""SELECT * FROM VALUES
+        (1L, array(1.0D, 0.0D, 0.0D)), (2L, array(0.6D, 0.8D, 0.0D)),
+        (3L, array(0.0D, 0.0D, 1.0D)), (4L, array(0.0D, 1.0D)),
+        (5L, array(0.0D, 0.0D, 0.0D)), (6L, CAST(NULL AS ARRAY<DOUBLE>))
+        AS t(id, e)""")
+      .select(col("id"), graft.functions.Similarity.unit(col("e")).as("u"))
+      .createOrReplaceTempView("nc_vecs")
+    spark.sql("""SELECT array(
+        named_struct('cluster', 3L, 'c', array(0.0D, 1.0D, 0.0D)),
+        named_struct('cluster', 1L, 'c', array(0.0D, 1.0D, 0.0D)),
+        named_struct('cluster', 2L, 'c', array(1.0D, 0.0D, 0.0D)),
+        named_struct('cluster', 0L, 'c', array(0.0D, 0.0D, 1.0D))) AS cb""")
+      .createOrReplaceTempView("nc_cb")
+    val sql = spark.sql("""SELECT id, nearest_centroids(u, cb, 2) AS near
+        FROM nc_vecs CROSS JOIN nc_cb ORDER BY id""")
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList)).toList
+    val api = spark.table("nc_vecs").crossJoin(spark.table("nc_cb"))
+      .select(col("id"), graft.functions.NearestCentroids.nearest(col("u"), col("cb"), 2))
+      .orderBy("id")
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList)).toList
+    assert(sql == api)
+    assert(sql == List(1L -> Some(List(2L, 0L)), 2L -> Some(List(1L, 3L)),
+      3L -> Some(List(0L, 1L)), 4L -> Some(List(1L, 3L)),
+      5L -> Some(List(0L, 1L)), 6L -> None))
+  }
+
   test("kernel substitution rewrites size(filter(x IN ...)) to the codegen kernel") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
@@ -69,6 +101,28 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(subbed == raw.orderBy("doc_id").as[(Long, Int)].collect().toSeq)
     assert(subbed == many.orderBy("doc_id").as[(Long, Int)].collect().toSeq)
     assert(subbed.exists(_._2 > 0), "fixture must contain marker tokens")
+  }
+
+  test("spark.sql.extensions injection path registers nearest_centroids") {
+    TestSpark.spark
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[2]")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val got = s2.sql("""SELECT nearest_centroids(array(0.6D, 0.8D),
+          array(named_struct('cluster', 7L, 'c', array(1.0D, 0.0D)),
+                named_struct('cluster', 4L, 'c', array(0.0D, 1.0D))), 1) AS near""")
+        .collect()(0).getSeq[Long](0)
+      assert(got == Seq(4L))
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
   }
 
   test("spark.sql.extensions injection path registers the function in a fresh session") {

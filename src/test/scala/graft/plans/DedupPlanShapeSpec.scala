@@ -92,10 +92,12 @@ class DedupPlanShapeSpec extends AnyFunSuite {
     // fixture), broadcast exchanges run as future jobs, and the
     // parquet schema-infer job fires only on the session's first read
     // of the path. The INVARIANT is which ACTIONS construction runs:
-    // the verified-pair count + the pair collect (ConnectedComponents'
-    // adaptive local dispatch — both collision-rate-sized), and
-    // NOTHING else beyond Spark-internal broadcast/scan machinery.
-    val allowed = Seq("ConnectedComponents", // the two CC actions
+    // the bounded size probe of ConnectedComponents' adaptive local
+    // dispatch (SizeProbe's take(t + 1), whose rows are the local
+    // input — collision-rate-sized; executeTake may split it into
+    // incremental jobs), and NOTHING else beyond Spark-internal
+    // broadcast/scan machinery.
+    val allowed = Seq("take at SizeProbe",   // the CC size probe
       "withThreadLocalCaptured",             // broadcast futures / AQE
       "CompletableFuture",
       "parquet at Tables")                   // first-read schema infer
@@ -107,18 +109,15 @@ class DedupPlanShapeSpec extends AnyFunSuite {
     val (frame, sites) =
       try jobCallsites(buildE6())
       finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-    // a job's stage list includes REUSED upstream stages, so the
-    // collect job also lists the count's stages — classify by the
-    // distinguishing marker
-    assert(sites.count(_.contains("collect at ConnectedComponents")) == 1,
-      s"expected exactly one CC pair-collect action:\n${sites.mkString("\n")}")
-    assert(sites.count(s => s.contains("count at ConnectedComponents") &&
-        !s.contains("collect at ConnectedComponents")) == 1,
-      s"expected exactly one CC pair-count action:\n${sites.mkString("\n")}")
+    assert(sites.exists(_.contains("take at SizeProbe")),
+      s"expected the CC size probe's bounded read:\n${sites.mkString("\n")}")
+    // no full count, and no second pass over the pairs
+    assert(!sites.exists(_.contains("at ConnectedComponents")),
+      s"CC ran an action besides the bounded probe:\n${sites.mkString("\n")}")
     val rogue = sites.filterNot(s => allowed.exists(s.contains))
     assert(rogue.isEmpty,
       s"unexpected eager action(s) in e6 construction:\n${rogue.mkString("\n")}")
-    // bounded: count + collect + <=3 broadcast builds + <=1 first-read
+    // bounded: the probe's reads + broadcast builds + <=1 first-read
     // schema infer — a job count past this means a new eager action
     // crept into the chain
     assert(sites.size <= 6,
