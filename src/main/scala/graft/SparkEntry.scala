@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, AsOfJoin, Behavior, DataQuality, Dedup, GraphStats, IntervalJoin, Intervals, LabelProp, Sampling, SeriesStats, Skyline, Ewma, GlobalRank, Interpolation, Retrieval, Sessionize, SkewSalt, TriangularRolling}
 import graft.functions.{Similarity, TextAnalysis, TextQuality}
+import graft.SessionArtifact.{Kind, rmTree}
 
 /** Driver contract (SURVEY.md §7). Every operator from SURVEY.md §2 —
   * and the LLM-data-pipeline extension — is exposed as a named query over
@@ -43,12 +44,6 @@ object SparkEntry {
   /** Exact integer cents from a 2-decimal double column. */
   private def cents(c: Column): Column = round(c * 100, 0).cast("long")
 
-  /** Recursive temp-dir delete shared by every roundtrip/staging gate
-    * (x9/x12/w20/...): one definition, so a future fix (symlinks,
-    * delete logging) lands once. */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete()
-  }
 
   /** Collect a BOUNDED gate result and rebind it as a driver-local
     * DataFrame so the gate's temp stores can be deleted in its finally
@@ -113,6 +108,12 @@ object SparkEntry {
     Option(d.listFiles).foreach(_.foreach(f =>
       f.setLastModified(1700000000000L + i * 60000L)))
   }
+
+  /** Write arrival batches `base/in/b0` .. `b<n-1>` of a staged
+    * fixture, one file each. */
+  private def writeBatches(base: String, n: Int)(batch: Int => DataFrame): Unit =
+    (0 until n).foreach(i => batch(i).coalesce(1).write.mode("overwrite")
+      .parquet(s"$base/in/b$i"))
 
   private def hourStr(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
@@ -361,71 +362,75 @@ object SparkEntry {
   }
 
 
+  /** Gate query predicate: the probe set is the 5 lowest vec_ids. */
+  private val annQueryPred: Column = col("vec_id") < 5
+
+  // ---- session artifacts (SessionArtifact): each store below is one
+  // declaration; clearCaches releases them all, and stageIndexes builds
+  // the ones declared staged, in declaration order ----
+
   /** The signature table is a MATERIALIZED INDEX of the corpus: one row
     * per doc, built once, read by every dedup stage (signatures,
     * banding, verification, clustering, keep-list). Memoized per
     * (session, corpus dir) + persisted, so five consumers share one
     * tokenize+hash pass — at 100 TB this is a written table, not a
     * recomputation per query. The LSH candidate-pair table is memoized
-    * the same way (d3/d5/d7/d8 all read it).
-    *
-    * Lifecycle: the corpus dir is assumed IMMUTABLE for the lifetime of
-    * an entry — a rewritten corpus requires [[clearCaches]] (as a
-    * production materialized index would require a rebuild). Verify and
-    * Bench call [[clearCaches]] before session stop, so no RDD stays
-    * pinned past a run (asserted in CacheLifecycleSpec). */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    sigCache.getOrElseUpdate((s, dir),
-      Dedup.minhashSignatures(t(s, dir, "documents")).persist())
+    * the same way (d3/d5/d7/d8 all read it). Built on demand, not
+    * staged. Verify and Bench call [[clearCaches]] before session
+    * stop, so no RDD stays pinned past a run (asserted in
+    * CacheLifecycleSpec). */
+  private val minhashSignatures =
+    SessionArtifact[String, DataFrame]("minhashSignatures", Kind.frame) {
+      (s, dir) => Dedup.minhashSignatures(t(s, dir, "documents")).persist()
+    }
 
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def lshPairsCached(s: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, dir),
-      Dedup.lshPairs(minhashSignatures(s, dir)).persist())
-
-  // d18's STORED-side index pair (round 17): the historical corpus's
-  // (doc_id % 4 != 0) minhash signature table and its cluster-label
-  // table — d18's own scaladoc names both "persisted index tables the
-  // incremental job reads" (the previous maintenance run's written
-  // output; n25/n34's stored-edges discipline). Staged per
-  // (session, dir) so the gate times exactly the incremental
-  // maintenance: batch minhash + incremental edges + touched-cluster
-  // re-derivation + anti-join pass-through.
-  private val storedClustersCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def storedClustersCached(s: SparkSession,
-                                   dir: String): (DataFrame, DataFrame) =
-    storedClustersCache.getOrElseUpdate((s, dir), {
-      val sigH = Dedup.minhashSignatures(
-        t(s, dir, "documents").filter(col("doc_id") % 4 =!= 0)).persist()
-      val stored = operators.ConnectedComponents.components(
-        s, Dedup.lshPairs(sigH), "doc_a", "doc_b").persist()
-      (sigH, stored)
-    })
+  private val lshPairsCached =
+    SessionArtifact[String, DataFrame]("lshPairs", Kind.frame) {
+      (s, dir) => Dedup.lshPairs(minhashSignatures(s, dir)).persist()
+    }
 
   // e6/e8 both consume the VERIFIED pair set (exact Jaccard >= 0.35 on
   // the LSH candidates) — memoized like the signature/pair indexes
   // (at 100 TB: a persisted table the chain writes once)
-  private val verifiedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def verifiedPairsCached(s: SparkSession, dir: String): DataFrame =
-    verifiedCache.getOrElseUpdate((s, dir),
-      Dedup.ngramJaccard(t(s, dir, "documents"), lshPairsCached(s, dir))
-        .filter(col("jaccard") >= 0.35)
-        .select("doc_a", "doc_b").persist())
+  private val verifiedPairsCached =
+    SessionArtifact[String, DataFrame]("verifiedPairs", Kind.frame) {
+      (s, dir) =>
+        Dedup.ngramJaccard(t(s, dir, "documents"), lshPairsCached(s, dir))
+          .filter(col("jaccard") >= 0.35)
+          .select("doc_a", "doc_b").persist()
+    }
 
-  /** Unpersist + drop every materialized index owned by `s`. */
+  // The kNN-GRAPH index (n23's phase 1) is a persisted table at 100 TB
+  // — built once, read by every search. The n23 batch gate and the w30
+  // streaming search twin pay the banded build + NN-descent ONCE per
+  // (session, corpus) and each gate times only its own bounded beam
+  // walk (round-13: the gate-time construction cost was the whole
+  // light tier's top wall).
+  private val graphEdgesCached = SessionArtifact.staged("graphEdges", Kind.frame) {
+    (s, dir) => Ann.knnGraphEdges(t(s, dir, "embeddings"), rpPlanes, 10).persist()
+  }
+
+  // The SERVING-side replica of the same index (adjacency + unit
+  // corpus broadcast per executor — Ann.LocalGraphIndex's scaladoc
+  // argues the regime): w30's at-arrival search and n31's sweep read
+  // it; built once per (session, corpus), exactly like the edge table
+  // it derives from.
+  private val localGraphIndexCached = SessionArtifact.staged("localGraphIndex",
+      Kind.broadcasts[Ann.LocalGraphIndex](i => Seq(i.adj, i.units))) {
+    (s, dir) => Ann.buildLocalGraphIndex(
+      t(s, dir, "embeddings").select(col("vec_id"),
+        graft.functions.Similarity.unit(col("embedding")).as("ue")),
+      graphEdgesCached(s, dir))
+  }
+
   // g41/g49/g51 all analyze the SAME symmetric customer-supplier trade
-  // graph, and g51 consumes g49's labels — memoized like the dedup
-  // indexes (at 100 TB: the edge list and the community assignment are
-  // persisted tables the graph jobs build once and share)
-  private val edgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def tradeEdgesCached(s: SparkSession, dir: String): DataFrame =
-    edgesCache.getOrElseUpdate((s, dir), {
+  // graph, and g51 consumes g49's labels (at 100 TB: the edge list and
+  // the community assignment are persisted tables the graph jobs build
+  // once and share). Staged: g27/g41/g49/g51/g59 read them, and g49's
+  // gate was paying the one-off label build on first touch — ~4 s of
+  // the light tier that is a WRITER's cost at 100 TB.
+  private val tradeEdgesCached = SessionArtifact.staged("tradeEdges", Kind.frame) {
+    (s, dir) =>
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       val l = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
@@ -435,43 +440,11 @@ object SparkEntry {
       cs.select(col("c").as("src"), col("p").as("dst"))
         .union(cs.select(col("p").as("src"), col("c").as("dst")))
         .persist()
-    })
+  }
 
-  private val lpaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def lpaLabelsCached(s: SparkSession, dir: String): DataFrame =
-    lpaCache.getOrElseUpdate((s, dir),
-      LabelProp.propagate(tradeEdgesCached(s, dir), 3).persist())
-
-  // The kNN-GRAPH index (n23's phase 1) is a persisted table at 100 TB
-  // — built once, read by every search. Memoized like the dedup
-  // signature index so the n23 batch gate and the w30 streaming search
-  // twin pay the banded build + NN-descent ONCE per (session, corpus)
-  // and each gate times only its own bounded beam walk (round-13: the
-  // gate-time construction cost was the whole light tier's top wall).
-  private val graphEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def graphEdgesCached(s: SparkSession, dir: String): DataFrame =
-    graphEdgesCache.getOrElseUpdate((s, dir),
-      Ann.knnGraphEdges(t(s, dir, "embeddings"), rpPlanes, 10).persist())
-
-  // The two SEGMENT indexes (even/odd halves, one NN-descent round)
-  // n35 merges — staged as the persisted tables they are in
-  // production (the round-13 discipline again: segments arrive
-  // PREBUILT from their own build jobs; the merge gate must time the
-  // stitch + audit + walk, not re-run two builds per call).
-  private val segEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (DataFrame, DataFrame)]
-  private def segEdgesCached(s: SparkSession,
-                             dir: String): (DataFrame, DataFrame) =
-    segEdgesCache.getOrElseUpdate((s, dir), {
-      val em = t(s, dir, "embeddings")
-      (Ann.knnGraphEdges(em.filter(col("vec_id") % 2 === 0), rpPlanes,
-          m = 10, refineRounds = 1).select("src", "dst").persist(),
-        Ann.knnGraphEdges(em.filter(col("vec_id") % 2 === 1), rpPlanes,
-          m = 10, refineRounds = 1).select("src", "dst").persist())
-    })
+  private val lpaLabelsCached = SessionArtifact.staged("lpaLabels", Kind.frame) {
+    (s, dir) => LabelProp.propagate(tradeEdgesCached(s, dir), 3).persist()
+  }
 
   // n25's STORED index half (the kNN graph over the accepted 3/4 of
   // the corpus) as a staged persisted table — round 16, the e18-seed
@@ -482,29 +455,84 @@ object SparkEntry {
   // times exactly the batch-ingest fold (incrementalGraphEdges) over
   // this staged input; the fold itself is deliberately NOT staged for
   // n25 (it IS what n25 measures).
-  private val storedEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def storedEdgesCached(s: SparkSession, dir: String): DataFrame =
-    storedEdgesCache.getOrElseUpdate((s, dir), {
-      val em = t(s, dir, "embeddings")
-      Ann.knnGraphEdges(em.filter(col("vec_id") % 4 =!= 0), rpPlanes, 10)
-        .persist()
-    })
+  private val storedEdgesCached =
+    SessionArtifact.staged("storedEdges", Kind.frame) {
+      (s, dir) =>
+        val em = t(s, dir, "embeddings")
+        Ann.knnGraphEdges(em.filter(col("vec_id") % 4 =!= 0), rpPlanes, 10)
+          .persist()
+    }
 
   // The INCREMENTAL edge table (n25's stored-build + batch-ingest
   // fold) as a persisted index for the n34 maintenance audit — n34
   // only READS the folded table, so it stages like every other index
   // (the round-13 discipline: the audit job must not be charged the
   // writer's one-off build).
-  private val incrEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def incrEdgesCached(s: SparkSession, dir: String): DataFrame =
-    incrEdgesCache.getOrElseUpdate((s, dir), {
+  private val incrEdgesCached = SessionArtifact.staged("incrEdges", Kind.frame) {
+    (s, dir) =>
       val em = t(s, dir, "embeddings")
       Ann.incrementalGraphEdges(storedEdgesCached(s, dir),
         em, col("vec_id") % 4 === 0, rpPlanes, 10)
         .select("src", "dst").persist()
-    })
+  }
+
+  // d18's STORED-side index pair (round 17): the historical corpus's
+  // (doc_id % 4 != 0) minhash signature table and its cluster-label
+  // table — d18's own scaladoc names both "persisted index tables the
+  // incremental job reads" (the previous maintenance run's written
+  // output; n25/n34's stored-edges discipline). Staged per
+  // (session, dir) so the gate times exactly the incremental
+  // maintenance: batch minhash + incremental edges + touched-cluster
+  // re-derivation + anti-join pass-through.
+  private val storedClustersCached =
+    SessionArtifact.staged("storedClusters", Kind.framePair) { (s, dir) =>
+      val sigH = Dedup.minhashSignatures(
+        t(s, dir, "documents").filter(col("doc_id") % 4 =!= 0)).persist()
+      val stored = operators.ConnectedComponents.components(
+        s, Dedup.lshPairs(sigH), "doc_a", "doc_b").persist()
+      (sigH, stored)
+    }
+
+  // The k-means CODEBOOKS as staged persisted model artifacts (round
+  // 16): w28's scaladoc already names the codebook "a persisted model
+  // artifact read by the seed AND every micro-batch", and in
+  // production BOTH codebooks (full-corpus, stored-3/4 "stale") are
+  // trained once and written — every IVF search / assignment /
+  // semantic-dedup job READS them. Nine gates re-ran the Lloyd chain
+  // per call; they now share one persisted copy per (session, dir).
+  // Deterministic: kmeansCentroids' init and iteration order are
+  // data-deterministic, so the staged frame is bit-identical to any
+  // per-call rebuild (oracle re-verified for every consumer after the
+  // swap).
+  private val codebooks = Seq("full", "stored").map { which =>
+    which -> SessionArtifact.staged(s"codebook/$which", Kind.frame) { (s, dir) =>
+      val em = t(s, dir, "embeddings")
+      val base = if (which == "full") em else em.filter(col("vec_id") % 4 =!= 0)
+      Ann.kmeansCentroids(base, 5, 2).persist()
+    }
+  }.toMap
+
+  private def codebookCached(s: SparkSession, dir: String,
+                             which: String): DataFrame =
+    codebooks.getOrElse(which,
+      // loud misuse failure (round-17 advice): a typo'd key would
+      // otherwise die at first materialization with a bare MatchError
+      sys.error(s"unknown codebook: '$which' " +
+        "(expected \"full\" or \"stored\")"))(s, dir)
+
+  // The two SEGMENT indexes (even/odd halves, one NN-descent round)
+  // n35 merges — staged as the persisted tables they are in
+  // production (the round-13 discipline again: segments arrive
+  // PREBUILT from their own build jobs; the merge gate must time the
+  // stitch + audit + walk, not re-run two builds per call).
+  private val segEdgesCached =
+    SessionArtifact.staged("segEdges", Kind.framePair) { (s, dir) =>
+      val em = t(s, dir, "embeddings")
+      (Ann.knnGraphEdges(em.filter(col("vec_id") % 2 === 0), rpPlanes,
+          m = 10, refineRounds = 1).select("src", "dst").persist(),
+        Ann.knnGraphEdges(em.filter(col("vec_id") % 2 === 1), rpPlanes,
+          m = 10, refineRounds = 1).select("src", "dst").persist())
+    }
 
   // The e18 SEED STORE (a 64-file fragmented snapshot of the document
   // digests) as a staged fixture: in production the fragmented store
@@ -514,207 +542,132 @@ object SparkEntry {
   // the suite's #1 standing light wall). Each gate call forks the
   // seed with a ZERO-COPY shallow clone (metadata-only, x20's
   // machinery — the seed is never consumed) and compacts the clone.
-  // Staged streaming INPUT-BATCH dirs (round 17, VERDICT item 2 —
-  // "repeated createTempDirectory + store seeding in w/x gates"): the
-  // e18-seed discipline applied to the streaming gates' arrival
-  // fixtures. The batch files under `in/b<i>` ARE the upstream
-  // writer's persisted output — production streams list a landing
-  // zone someone else wrote — so their one-off construction is the
-  // WRITER's cost and stages untimed, exactly like the kNN edge
-  // tables and the e18 seed store. The staged dir is READ-ONLY for
-  // consumers: each gate call still creates its own fresh checkpoint
-  // / store / sink dirs, so stream progress, store mutation and
-  // first-seen credit stay per-call; mtime batch-order stamps are
-  // preserved because the one seeding run is the same seeding body.
-  // Keyed by gate name so each gate's fixture shape stays its own;
-  // deleted per session by clearCaches.
-  private val batchInputCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-  private def stagedInputs(s: SparkSession, dir: String, gate: String)
-                          (seed: String => Unit): String =
-    batchInputCache.getOrElseUpdate((s, dir, gate), {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft-$gate-staged").toString
-      seed(tmp)
-      tmp
-    })
+  private val e18Seed = SessionArtifact.stagedDir("e18Seed") { (s, dir, tmp) =>
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), md5(col("text")).as("th"), col("n_chars"))
+    graft.sources.VersionedParquetStore.merge(s, s"$tmp/store",
+      docs.repartition(64), "doc_id")
+  }
+  private def e18SeedStore(s: SparkSession, dir: String): String =
+    e18Seed(s, dir) + "/store"
 
-  // ---- the named stagers (one per staged arrival fixture; gates call
-  // them on demand and stageIndexes pre-builds them untimed) ----
+  // Arrival fixtures note — the staged streaming INPUT-BATCH dirs
+  // (round 17, VERDICT item 2 — "repeated createTempDirectory + store
+  // seeding in w/x gates"): the e18-seed discipline applied to the
+  // streaming gates' arrival fixtures. The batch files under `in/b<i>`
+  // ARE the upstream writer's persisted output — production streams
+  // list a landing zone someone else wrote — so their one-off
+  // construction is the WRITER's cost and stages untimed, exactly like
+  // the kNN edge tables and the e18 seed store. The staged dir is
+  // READ-ONLY for consumers: each gate call still creates its own
+  // fresh checkpoint / store / sink dirs, so stream progress, store
+  // mutation and first-seen credit stay per-call; mtime batch-order
+  // stamps are preserved because the one seeding run is the same
+  // seeding body. One artifact per gate, so each gate's fixture shape
+  // stays its own.
 
-  private def w14Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w14") { tmp =>
-      val raw = t(s, dir, "events").select(col("user_id"), col("event_id"),
-        cents(col("value")).as("v_c"))
-      (0 to 3).foreach(i => raw.filter(col("event_id") % 4 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w14Inputs = SessionArtifact.stagedDir("w14Inputs") { (s, dir, tmp) =>
+    val raw = t(s, dir, "events").select(col("user_id"), col("event_id"),
+      cents(col("value")).as("v_c"))
+    writeBatches(tmp, 4)(i => raw.filter(col("event_id") % 4 === i))
+  }
 
-  private def w20Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w20") { tmp =>
-      val raw = t(s, dir, "events")
-        .select(col("event_type"), col("event_id"), cents(col("value")).as("v_c"))
-      (0 to 2).foreach(i => raw.filter(col("event_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w20Inputs = SessionArtifact.stagedDir("w20Inputs") { (s, dir, tmp) =>
+    val raw = t(s, dir, "events")
+      .select(col("event_type"), col("event_id"), cents(col("value")).as("v_c"))
+    writeBatches(tmp, 3)(i => raw.filter(col("event_id") % 3 === i))
+  }
 
-  private def w21Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w21") { tmp =>
-      val cur = t(s, dir, "events")
-        .select(col("event_type"), col("event_id"), cents(col("value")).as("v"))
-        .filter(col("event_id") % 2 === 1)
-        .withColumn("v", when(col("event_type") === "error", col("v") * 3)
-          .otherwise(col("v")))
-      (0 to 2).foreach(i => cur.filter(col("event_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w21Inputs = SessionArtifact.stagedDir("w21Inputs") { (s, dir, tmp) =>
+    val cur = t(s, dir, "events")
+      .select(col("event_type"), col("event_id"), cents(col("value")).as("v"))
+      .filter(col("event_id") % 2 === 1)
+      .withColumn("v", when(col("event_type") === "error", col("v") * 3)
+        .otherwise(col("v")))
+    writeBatches(tmp, 3)(i => cur.filter(col("event_id") % 3 === i))
+  }
 
-  private def w22Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w22") { tmp =>
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_quantity"), col("l_discount"), col("l_extendedprice"))
-      (0 to 2).foreach(i => li.filter(col("l_orderkey") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w22Inputs = SessionArtifact.stagedDir("w22Inputs") { (s, dir, tmp) =>
+    val li = t(s, dir, "lineitem").select(col("l_orderkey"),
+      col("l_quantity"), col("l_discount"), col("l_extendedprice"))
+    writeBatches(tmp, 3)(i => li.filter(col("l_orderkey") % 3 === i))
+  }
 
-  private def w23Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w23") { tmp =>
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("text"), col("n_chars"))
-      (0 to 2).foreach(i => docs.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w23Inputs = SessionArtifact.stagedDir("w23Inputs") { (s, dir, tmp) =>
+    val docs = t(s, dir, "documents")
+      .select(col("doc_id"), col("text"), col("n_chars"))
+    writeBatches(tmp, 3)(i => docs.filter(col("doc_id") % 3 === i))
+  }
 
-  private def w24Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w24") { tmp =>
-      val raw = t(s, dir, "events").select(col("user_id"), col("event_id"),
-        cents(col("value")).as("v_c"))
-      (0 to 2).foreach(i => raw.filter(col("event_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w24Inputs = SessionArtifact.stagedDir("w24Inputs") { (s, dir, tmp) =>
+    val raw = t(s, dir, "events").select(col("user_id"), col("event_id"),
+      cents(col("value")).as("v_c"))
+    writeBatches(tmp, 3)(i => raw.filter(col("event_id") % 3 === i))
+  }
 
-  private def w25w26Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w25w26") { tmp =>
+  private val w25w26Inputs =
+    SessionArtifact.stagedDir("w25w26Inputs") { (s, dir, tmp) =>
       val raw = t(s, dir, "events")
         .select(to_date(col("ts")).as("day"), col("event_id"),
           lit(1L).as("one"))
-      (0 to 2).foreach(i => raw.filter(col("event_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
+      writeBatches(tmp, 3)(i => raw.filter(col("event_id") % 3 === i))
     }
 
-  private def w27Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w27") { tmp =>
-      val raw = s.read.parquet(s"$dir/documents.parquet")
-      (0 to 2).foreach(i => raw.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w27Inputs = SessionArtifact.stagedDir("w27Inputs") { (s, dir, tmp) =>
+    val raw = s.read.parquet(s"$dir/documents.parquet")
+    writeBatches(tmp, 3)(i => raw.filter(col("doc_id") % 3 === i))
+  }
 
-  private def w29Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w29") { tmp =>
-      val media = GateFixtures.pngMedia(s, dir)
-      (0 to 2).foreach(i => media.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w28Inputs = SessionArtifact.stagedDir("w28Inputs") { (s, dir, tmp) =>
+    val batch = t(s, dir, "embeddings").filter(col("vec_id") % 4 === 0)
+    writeBatches(tmp, 3)(i => batch.filter(expr("(vec_id div 4) % 3") === i))
+  }
 
-  private def w28Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w28") { tmp =>
-      val batch = t(s, dir, "embeddings").filter(col("vec_id") % 4 === 0)
-      (0 to 2).foreach(i => batch
-        .filter(expr("(vec_id div 4) % 3") === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w29Inputs = SessionArtifact.stagedDir("w29Inputs") { (s, dir, tmp) =>
+    val media = GateFixtures.pngMedia(s, dir)
+    writeBatches(tmp, 3)(i => media.filter(col("doc_id") % 3 === i))
+  }
 
-  private def w30Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w30") { tmp =>
-      val queries = t(s, dir, "embeddings").filter(annQueryPred)
-      (0 to 2).foreach(i => queries
-        .filter(col("vec_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w30Inputs = SessionArtifact.stagedDir("w30Inputs") { (s, dir, tmp) =>
+    val queries = t(s, dir, "embeddings").filter(annQueryPred)
+    writeBatches(tmp, 3)(i => queries.filter(col("vec_id") % 3 === i))
+  }
 
-  private def w31Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w31") { tmp =>
-      val queries8 = t(s, dir, "embeddings").filter(annQueryPred)
-        .select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
-      (0 to 2).foreach(i => queries8
-        .filter(col("vec_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
+  private val w31Inputs = SessionArtifact.stagedDir("w31Inputs") { (s, dir, tmp) =>
+    val queries8 = t(s, dir, "embeddings").filter(annQueryPred)
+      .select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
+    writeBatches(tmp, 3)(i => queries8.filter(col("vec_id") % 3 === i))
+  }
 
-  private def w32w33Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w32w33") { tmp =>
+  private val w32w33Inputs =
+    SessionArtifact.stagedDir("w32w33Inputs") { (s, dir, tmp) =>
       val docs = t(s, dir, "documents")
       val bounds = docs.agg(min(col("doc_id")).as("__mn"),
         max(col("doc_id")).as("__mx"))
       val bucketed = docs.crossJoin(broadcast(bounds))
         .select(col("doc_id"), col("source"), col("text"),
           expr("(doc_id - __mn) * 3 div (__mx - __mn + 1)").as("bucket"))
-      (0 to 2).foreach { i =>
-        bucketed.filter(col("bucket") === i)
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i")
-        stampBatchOrder(tmp, i) // order-DEPENDENT gates: see helper
-      }
+      writeBatches(tmp, 3)(i => bucketed.filter(col("bucket") === i))
+      // order-DEPENDENT gates: see helper
+      (0 to 2).foreach(stampBatchOrder(tmp, _))
     }
 
-  private def w34Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w34") { tmp =>
-      val docs = t(s, dir, "documents")
-      val bounds = docs.agg(min(col("doc_id")).as("__mn"),
-        max(col("doc_id")).as("__mx"))
-      val rows = docs.crossJoin(broadcast(bounds))
-        .select(col("doc_id"), md5(col("text")).as("th"),
-          expr("(doc_id - __mn) div 500").as("bucket"),
-          expr("(doc_id - __mn) * 3 div (__mx - __mn + 1)").as("batch"))
-      (0 to 2).foreach { i =>
-        rows.filter(col("batch") === i).drop("batch")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i")
-        stampBatchOrder(tmp, i) // order-DEPENDENT gate: see helper
-      }
-    }
-
-  private def w36Inputs(s: SparkSession, dir: String): String =
-    stagedInputs(s, dir, "w36") { tmp =>
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      (0 to 2).foreach(i => docs.filter(col("doc_id") % 3 === i)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))
-    }
-
-  /** All staged arrival fixtures, for [[stageIndexes]]. */
-  private def stageStreamInputs(s: SparkSession, dir: String): Unit = {
-    w14Inputs(s, dir); w20Inputs(s, dir); w21Inputs(s, dir)
-    w22Inputs(s, dir); w23Inputs(s, dir); w24Inputs(s, dir)
-    w25w26Inputs(s, dir); w27Inputs(s, dir); w28Inputs(s, dir)
-    w29Inputs(s, dir); w30Inputs(s, dir); w31Inputs(s, dir)
-    w32w33Inputs(s, dir); w34Inputs(s, dir); w36Inputs(s, dir)
+  private val w34Inputs = SessionArtifact.stagedDir("w34Inputs") { (s, dir, tmp) =>
+    val docs = t(s, dir, "documents")
+    val bounds = docs.agg(min(col("doc_id")).as("__mn"),
+      max(col("doc_id")).as("__mx"))
+    val rows = docs.crossJoin(broadcast(bounds))
+      .select(col("doc_id"), md5(col("text")).as("th"),
+        expr("(doc_id - __mn) div 500").as("bucket"),
+        expr("(doc_id - __mn) * 3 div (__mx - __mn + 1)").as("batch"))
+    writeBatches(tmp, 3)(i => rows.filter(col("batch") === i).drop("batch"))
+    (0 to 2).foreach(stampBatchOrder(tmp, _)) // order-DEPENDENT gate: see helper
   }
 
-  private val e18SeedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def e18SeedStore(s: SparkSession, dir: String): String =
-    e18SeedCache.getOrElseUpdate((s, dir), {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_e18_seed").toString + "/store"
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("th"), col("n_chars"))
-      graft.sources.VersionedParquetStore.merge(s, root,
-        docs.repartition(64), "doc_id")
-      root
-    })
-
-  // The SERVING-side replica of the same index (adjacency + unit
-  // corpus broadcast per executor — Ann.LocalGraphIndex's scaladoc
-  // argues the regime): w30's at-arrival search and n31's sweep read
-  // it; built once per (session, corpus), exactly like the edge table
-  // it derives from.
-  private val localGraphIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Ann.LocalGraphIndex]
-  private def localGraphIndexCached(s: SparkSession,
-                                    dir: String): Ann.LocalGraphIndex =
-    localGraphIdxCache.getOrElseUpdate((s, dir),
-      Ann.buildLocalGraphIndex(
-        t(s, dir, "embeddings").select(col("vec_id"),
-          graft.functions.Similarity.unit(col("embedding")).as("ue")),
-        graphEdgesCached(s, dir)))
+  private val w36Inputs = SessionArtifact.stagedDir("w36Inputs") { (s, dir, tmp) =>
+    val docs = t(s, dir, "documents").select("doc_id", "text")
+    writeBatches(tmp, 3)(i => docs.filter(col("doc_id") % 3 === i))
+  }
 
   /** g61's dataflow, factored so [[stageIndexes]] can run it once
     * untimed: the unrolled integer join-aggregate stanzas are FRESH
@@ -735,34 +688,18 @@ object SparkEntry {
       .orderBy("node_id")
   }
 
-  /** Stage the persisted search-index tables UNTIMED — the
-    * HeavyData.ensure discipline applied to the light tier: at 100 TB
-    * the kNN-graph edge index is a WRITTEN table the search jobs read,
-    * so building it inside a timed gate charges the reader for the
-    * writer's one-off work (round-13: the build dominated n23's wall,
-    * the light tier's top entry). Bench's warm-up calls this before
-    * any timing; correctness paths (Verify) don't need to — the
-    * memoized build is bit-identical wherever it's paid. */
+  /** Stage the persisted search-index tables and arrival fixtures
+    * UNTIMED — every artifact declared `SessionArtifact.staged`, then
+    * the g61 pre-JIT warm-up. The HeavyData.ensure discipline applied
+    * to the light tier: at 100 TB the kNN-graph edge index is a
+    * WRITTEN table the search jobs read, so building it inside a timed
+    * gate charges the reader for the writer's one-off work (round-13:
+    * the build dominated n23's wall, the light tier's top entry).
+    * Bench's warm-up calls this before any timing; correctness paths
+    * (Verify) don't need to — the memoized build is bit-identical
+    * wherever it's paid. */
   def stageIndexes(s: SparkSession, dir: String): Unit = {
-    graphEdgesCached(s, dir).count()
-    localGraphIndexCached(s, dir)
-    // the trade graph and its community labels are the same kind of
-    // persisted multi-consumer artifact (g27/g41/g49/g51/g59 read
-    // them; g49's gate was paying the one-off label build on first
-    // touch — ~4 s of the light tier that is a WRITER's cost at
-    // 100 TB)
-    tradeEdgesCached(s, dir).count()
-    lpaLabelsCached(s, dir).count()
-    storedEdgesCached(s, dir).count()
-    incrEdgesCached(s, dir).count()
-    locally { val (a, b) = storedClustersCached(s, dir); a.count(); b.count() }
-    codebookCached(s, dir, "full").count()
-    codebookCached(s, dir, "stored").count()
-    locally { val (a, b) = segEdgesCached(s, dir); a.count(); b.count() }
-    e18SeedStore(s, dir)
-    // the streaming gates' arrival fixtures (stagedInputs scaladoc):
-    // batch files an upstream writer persisted — built once untimed
-    stageStreamInputs(s, dir)
+    SessionArtifact.stage(s, dir)
     // pre-JIT the personalized-PageRank kernel (g61): one untimed run
     // of the exact gate dataflow — no data is cached, only the
     // codegen/JIT state the timed gate would otherwise pay on first
@@ -776,79 +713,10 @@ object SparkEntry {
     ()
   }
 
-  def clearCaches(s: SparkSession): Unit = {
-    Seq(sigCache, pairsCache, verifiedCache, edgesCache, lpaCache,
-        graphEdgesCache, incrEdgesCache, storedEdgesCache).foreach { cache =>
-      cache.toSeq.filter(_._1._1 eq s).foreach { case (k, df) =>
-        df.unpersist(blocking = false)
-        cache.remove(k)
-      }
-    }
-    cbCache.toSeq.filter(_._1._1 eq s).foreach { case (k, df) =>
-      df.unpersist(blocking = false)
-      cbCache.remove(k)
-    }
-    segEdgesCache.toSeq.filter(_._1._1 eq s).foreach { case (k, (a, b)) =>
-      a.unpersist(blocking = false)
-      b.unpersist(blocking = false)
-      segEdgesCache.remove(k)
-    }
-    storedClustersCache.toSeq.filter(_._1._1 eq s).foreach { case (k, (a, b)) =>
-      a.unpersist(blocking = false)
-      b.unpersist(blocking = false)
-      storedClustersCache.remove(k)
-    }
-    localGraphIdxCache.toSeq.filter(_._1._1 eq s).foreach { case (k, idx) =>
-      idx.adj.destroy()
-      idx.units.destroy()
-      localGraphIdxCache.remove(k)
-    }
-    e18SeedCache.toSeq.filter(_._1._1 eq s).foreach { case (k, root) =>
-      rmTree(new java.io.File(root).getParentFile)
-      e18SeedCache.remove(k)
-    }
-    batchInputCache.toSeq.filter(_._1._1 eq s).foreach { case (k, root) =>
-      rmTree(new java.io.File(root))
-      batchInputCache.remove(k)
-    }
-    GlobalRank.clear(s)
-    operators.Compaction.clear(s)
-    operators.Checkpoints.clear(s)
-    Tables.clear(s)
-    graft.sources.VersionedParquetStore.clearSchemaCache(s)
-  }
-
-
-  /** Gate query predicate: the probe set is the 5 lowest vec_ids. */
-  private val annQueryPred: Column = col("vec_id") < 5
-
-  // The k-means CODEBOOKS as staged persisted model artifacts (round
-  // 16): w28's scaladoc already names the codebook "a persisted model
-  // artifact read by the seed AND every micro-batch", and in
-  // production BOTH codebooks (full-corpus, stored-3/4 "stale") are
-  // trained once and written — every IVF search / assignment /
-  // semantic-dedup job READS them. Nine gates re-ran the Lloyd chain
-  // per call; they now share one persisted copy per (session, dir),
-  // staged by stageIndexes, released by clearCaches. Deterministic:
-  // kmeansCentroids' init and iteration order are data-deterministic,
-  // so the staged frame is bit-identical to any per-call rebuild
-  // (oracle re-verified for every consumer after the swap).
-  private val cbCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private def codebookCached(s: SparkSession, dir: String,
-                             which: String): DataFrame =
-    cbCache.getOrElseUpdate((s, dir, which), {
-      val em = t(s, dir, "embeddings")
-      val base = which match {
-        case "full"   => em
-        case "stored" => em.filter(col("vec_id") % 4 =!= 0)
-        // loud misuse failure (round-17 advice): a typo'd key would
-        // otherwise die at first materialization with a bare MatchError
-        case other    => sys.error(s"unknown codebook: '$other' " +
-          "(expected \"full\" or \"stored\")")
-      }
-      Ann.kmeansCentroids(base, 5, 2).persist()
-    })
+  /** Release every session artifact `s` owns: unpersist its indexes
+    * and pins, destroy its broadcast indexes, delete its staged
+    * directories and drop its memoized schemas. */
+  def clearCaches(s: SparkSession): Unit = SessionArtifact.releaseAll(s)
 
   /** n20's dataflow, shared with the n22 policy gate: IVF search with
     * the STALE codebook (trained on the stored 3/4 split, frozen, the
@@ -4559,7 +4427,7 @@ object SparkEntry {
     // with w35 the store's CDC feed drives exactly this job.
     ("w36_stream_chunks", (s, dir) => withStateParts(s) {
       val docs = t(s, dir, "documents").select("doc_id", "text")
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w36Inputs(s, dir)
       val schema = s.read.parquet(s"$in/in/b0").schema
       val stream = s.readStream.schema(schema)
@@ -6552,7 +6420,7 @@ object SparkEntry {
     // g18's full rebuild, so the gate proves any micro-batch carve-up
     // commits the same snapshot as one batch.
     ("w14_stream_agg_maintenance", (s, dir) => withStateParts(s) {
-      // input batches staged (stagedInputs scaladoc): the four arrival
+      // input batches staged (arrival fixtures note): the four arrival
       // files are the upstream writer's persisted output; the gate
       // times the maintenance fold, store merges and snapshot commits
       val in = w14Inputs(s, dir)
@@ -8748,7 +8616,7 @@ object SparkEntry {
     // placement-independent — the property that lets one stored
     // sketch serve both the batch corpus and its live tail.
     ("w20_stream_quantile", (s, dir) => withStateParts(s) {
-      // input batches staged (stagedInputs scaladoc): the three arrival
+      // input batches staged (arrival fixtures note): the three arrival
       // files are the upstream writer's persisted output
       val in = w20Inputs(s, dir)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -9625,7 +9493,7 @@ object SparkEntry {
     // report must hash-equal the batch x14 wherever the micro-batches
     // split: the oracle IS x14's.
     ("w24_stream_skew", (s, dir) => withStateParts(s) {
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w24Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w24").toString
       val schema = s.read.parquet(s"$in/in/b0").schema
@@ -9687,7 +9555,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .select(col("event_type"), col("event_id"), cents(col("value")).as("v"))
       val ref = ev.filter(col("event_id") % 2 === 0)
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w21Inputs(s, dir)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
@@ -10034,7 +9902,7 @@ object SparkEntry {
         "li_quantity_le_45" -> (col("l_quantity") > 45),
         "li_discount_le_8pct" -> (col("l_discount") > 0.08),
         "li_price_positive" -> (col("l_extendedprice") <= 0))
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w22Inputs(s, dir)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
@@ -11050,7 +10918,7 @@ object SparkEntry {
     ("w23_stream_calibration", (s, dir) => withStateParts(s) {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("n_chars"))
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w23Inputs(s, dir)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
@@ -11513,7 +11381,7 @@ object SparkEntry {
     // live shift location without ever recounting history.
     ("w25_stream_changepoint", (s, dir) => withStateParts(s) {
       // input batches staged, SHARED with w26 — identical seeding body
-      // (stagedInputs scaladoc)
+      // (arrival fixtures note)
       val in = w25w26Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w25").toString
       val schema = s.read.parquet(s"$in/in/b0").schema
@@ -11668,7 +11536,7 @@ object SparkEntry {
     // quality/langid/entropy/script columns attached AT ARRIVAL, one
     // scan, zero exchanges, no state store at all.
     ("w27_stream_text_profile", (s, dir) => withStateParts(s) {
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w27Inputs(s, dir)
       val schema = s.read.parquet(s"$in/in/b0").schema
       val stream = s.readStream.schema(schema)
@@ -11704,7 +11572,7 @@ object SparkEntry {
     // m13's closed-form pixel replay, per doc (no grouping — the
     // dedup election stays m13's batch business).
     ("w29_stream_image_hash", (s, dir) => withStateParts(s) {
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w29Inputs(s, dir)
       val schema = s.read.parquet(s"$in/in/b0").schema
       val stream = s.readStream.schema(schema)
@@ -11761,7 +11629,7 @@ object SparkEntry {
       // Lloyd chain (the materialized-index rule)
       val cb = codebookCached(s, dir, "stored")
       // the ingest MUTATES the store, so its seed stays per-call; only
-      // the read-only arrival batches stage (stagedInputs scaladoc)
+      // the read-only arrival batches stage (arrival fixtures note)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w28").toString
       graft.sources.VersionedParquetStore.merge(s, s"$tmp/store",
         Ann.clusterAssignment(stored, cb), "vec_id",
@@ -11799,7 +11667,7 @@ object SparkEntry {
       val em = t(s, dir, "embeddings")
       val index = localGraphIndexCached(s, dir)
       val queries = em.filter(annQueryPred)
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w30Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w30").toString
       try {
@@ -12292,7 +12160,7 @@ object SparkEntry {
           .as("ue"))
       val queries8 = em.filter(annQueryPred)
         .select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
-      // input batches staged (stagedInputs scaladoc)
+      // input batches staged (arrival fixtures note)
       val in = w31Inputs(s, dir)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-w31").toString
@@ -13364,7 +13232,7 @@ object SparkEntry {
     // o29's (shared-oracle parity pin, the w28<-n10 discipline).
     ("w32_stream_token_supply", (s, dir) => withStateParts(s) {
       // input batches staged, SHARED with w33 — identical seeding body
-      // incl. the order stamps (stagedInputs scaladoc)
+      // incl. the order stamps (arrival fixtures note)
       val in = w32w33Inputs(s, dir)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-w32").toString
@@ -14088,15 +13956,8 @@ object SparkEntry {
     // would collapse to 1; both engines derive the class count from
     // the id arithmetic.
     ("w34_stream_append_compact", (s, dir) => withStateParts(s) {
-      val docs = t(s, dir, "documents")
-      val bounds = docs.agg(min(col("doc_id")).as("__mn"),
-        max(col("doc_id")).as("__mx"))
-      val rows = docs.crossJoin(broadcast(bounds))
-        .select(col("doc_id"), md5(col("text")).as("th"),
-          expr("(doc_id - __mn) div 500").as("bucket"),
-          expr("(doc_id - __mn) * 3 div (__mx - __mn + 1)").as("batch"))
-      // input batches staged incl. the order stamps (stagedInputs
-      // scaladoc)
+      // input batches staged incl. the order stamps (staged arrival
+      // fixtures note)
       val in = w34Inputs(s, dir)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-w34").toString

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md): one parquet
   * file per table under a scale-factor directory. Reads are plain
@@ -25,15 +25,12 @@ object Tables {
     * path-read fixtures. No DATA is cached — [[load]] still returns a
     * FRESH DataFrame per call (fresh attribute ids, so two loads of
     * one table keep self-joining exactly as two reads did), and every
-    * action still scans the parquet. Dropped per session by
-    * [[clear]]. */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), org.apache.spark.sql.types.StructType]
-
-  /** Release a session's memoized schemas (SparkEntry.clearCaches
-    * discipline — long test suites build many sessions). */
-  def clear(spark: SparkSession): Unit =
-    schemaCache.keys.filter(_._1 eq spark).foreach(schemaCache.remove)
+    * action still scans the parquet. A [[SessionArtifact]], dropped by
+    * `SparkEntry.clearCaches`. */
+  private val schemas = SessionArtifact[(String, String), StructType](
+      "tableSchema", SessionArtifact.Kind.metadata) { case (spark, (dir, name)) =>
+    spark.read.parquet(s"$dir/$name.parquet").schema
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(all.contains(name), s"unknown table: $name")
@@ -43,9 +40,7 @@ object Tables {
       // nanosAsLong must be set BEFORE the read for the NANOS encoding.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    val schema = schemaCache.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet").schema)
-    val df = spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+    val df = spark.read.schema(schemas(spark, (dir, name))).parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
 

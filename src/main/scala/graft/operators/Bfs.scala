@@ -112,7 +112,7 @@ object Bfs {
       // right for the repo's <= 6-hop callers, but the public API only
       // requires maxHops >= 0 — a generous budget on a shallow graph
       // would pay maxHops join/distinct/anti-join stages plus maxHops
-      // pinned RDDs held until Checkpoints.clear, with no way out.
+      // pinned RDDs held until clearCaches, with no way out.
       // Past EAGER_EXIT_HOPS the loop falls back to the eager form:
       // materialize the frontier (one driver action per hop from here
       // on) and STOP when it empties — the per-hop dispatch this trades

@@ -4,11 +4,14 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.SessionArtifact
+
 /** Registry for `localCheckpoint` RDDs created by iterative operators
   * ([[ConnectedComponents.labelPropagate]] rounds, [[Dedup
-  * .suffixDupSpans]] doubling rounds), so `SparkEntry.clearCaches` can
-  * release them with the same lifecycle as the persisted dedup
-  * indexes.
+  * .suffixDupSpans]] doubling rounds): each pin is a
+  * [[graft.SessionArtifact]] entry keyed by its RDD, so
+  * `SparkEntry.clearCaches` releases it with the same lifecycle as the
+  * persisted dedup indexes.
   *
   * Needed because `Dataset.unpersist` is a cache-manager call and a
   * localCheckpoint is an RDD-level persist — unpersisting the FRAME is
@@ -37,8 +40,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * small. */
 object Checkpoints {
 
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, RDD[_])]()
+  private val pins = SessionArtifact[RDD[_], RDD[_]]("checkpointPin",
+    SessionArtifact.Kind.rdd)((_, rdd) => rdd)
 
   /** Checkpoint `df` (eager) and register the backing RDD for
     * [[clear]]. With `spark.graft.checkpoint.reliable=true` and a
@@ -54,7 +57,7 @@ object Checkpoints {
     else {
       val c = df.localCheckpoint()
       c.queryExecution.logical match {
-        case lr: LogicalRDD => pinned.add((c.sparkSession, lr.rdd))
+        case lr: LogicalRDD => pins(c.sparkSession, lr.rdd)
         case _ => // unexpected plan shape: nothing to track, GC reclaims
       }
       c
@@ -90,7 +93,7 @@ object Checkpoints {
     else {
       val c = df.localCheckpoint(eager = false)
       c.queryExecution.logical match {
-        case lr: LogicalRDD => pinned.add((c.sparkSession, lr.rdd))
+        case lr: LogicalRDD => pins(c.sparkSession, lr.rdd)
         case _ => // unexpected plan shape: nothing to track, GC reclaims
       }
       c
@@ -107,32 +110,10 @@ object Checkpoints {
     * non-replayable, so a frame escaping the scope cannot be
     * collected again. */
   def scope[T](s: SparkSession)(body: => T): T = {
-    val before =
-      java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[RDD[_], java.lang.Boolean]())
-    pinned.forEach(p => if (p._1 eq s) { before.add(p._2); () })
-    try body
-    finally {
-      val it = pinned.iterator()
-      while (it.hasNext) {
-        val (owner, rdd) = it.next()
-        if ((owner eq s) && !before.contains(rdd)) {
-          rdd.unpersist(blocking = false)
-          it.remove()
-        }
-      }
-    }
+    val before = pins.keys(s).toSet
+    try body finally pins.release(s, rdd => !before(rdd))
   }
 
   /** Unpersist every checkpoint RDD registered on behalf of `s`. */
-  def clear(s: SparkSession): Unit = {
-    val it = pinned.iterator()
-    while (it.hasNext) {
-      val (owner, rdd) = it.next()
-      if (owner eq s) {
-        rdd.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
+  def clear(s: SparkSession): Unit = pins.release(s)
 }

@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
+
+import graft.SessionArtifact
 
 /** Small-files compaction PLANNING — the maintenance job every
   * long-lived 100 TB table needs: ingest (streaming sinks, incremental
@@ -30,35 +33,23 @@ import org.apache.spark.storage.StorageLevel
   * scalar), broadcasts the prefix offsets, and emits the running total
   * partition-locally with no further shuffle. The sorted manifest is
   * persisted so the subtotal pass and the emit pass share one range
-  * exchange; [[clear]] releases the pins (SparkEntry.clearCaches
-  * calls it, the [[GlobalRank.clear]] lifecycle contract).
+  * exchange; the pin is a [[graft.SessionArtifact]] entry that
+  * `SparkEntry.clearCaches` releases ([[GlobalRank]]'s lifecycle).
   */
 object Compaction {
 
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  /** Memoized prefix-summed results, keyed by (session, canonicalized
-    * input PLAN OBJECT, sort + value + output spec) — GlobalRank's
-    * contract: a bench best-of-2 or a retried job reuses ONE pinned
-    * sorted copy instead of accumulating duplicates. Memo lifetime is
-    * until [[clear]]: file-source plans canonicalize by ROOT PATH (not
-    * file listing), so a manifest path whose FILES change mid-session
-    * must clear() before re-planning or it reads the stale sums —
-    * the same contract GlobalRank's memo carries. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String), DataFrame]
-
-  /** Unpersist every sorted manifest pinned on behalf of `s`. */
-  def clear(s: SparkSession): Unit = {
-    val it = pinned.iterator()
-    while (it.hasNext) {
-      val (sess, df) = it.next()
-      if (sess eq s) { df.unpersist(); it.remove() }
-    }
-    memo.keys.filter(_._1 eq s).foreach(memo.remove)
-  }
+  /** Memoized (prefix-summed result, pinned sorted manifest), keyed
+    * by (canonicalized input PLAN OBJECT, sort + value + output spec)
+    * per session — GlobalRank's contract: a bench best-of-2 or a
+    * retried job reuses ONE pinned sorted copy, and two racing first
+    * calls build it once. Memo lifetime is until
+    * `SparkEntry.clearCaches`: file-source plans canonicalize by ROOT
+    * PATH (not file listing), so a manifest path whose FILES change
+    * mid-session must be released before re-planning or it reads the
+    * stale sums. */
+  private val prefixSums = SessionArtifact.memo[(LogicalPlan, String),
+    (DataFrame, DataFrame)]("prefixSum",
+    SessionArtifact.Kind.frames(p => Seq(p._2)))
 
   /** `df` + `outCol` = the EXCLUSIVE global running total of
     * `valueCol` (long) in `sortCols` order — row i carries the sum of
@@ -68,29 +59,25 @@ object Compaction {
       sortCols: Seq[Column], valueCol: String): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
-    val memoKey = (spark, df.queryExecution.logical.canonicalized,
-      sortCols.mkString(",") + "|" + valueCol + "|" + outCol + "|" + parts)
-    // synchronized: TrieMap.getOrElseUpdate may run the thunk twice
-    // under a race and discard one result — here the loser would stay
-    // PERSISTED and pinned with no consumer
-    memo.synchronized {
-      memo.getOrElseUpdate(memoKey,
-        computePrefixSum(df, outCol, sortCols, valueCol, parts))
-    }
+    prefixSums.getOrElseUpdate(spark, (df.queryExecution.logical.canonicalized,
+        sortCols.mkString(",") + "|" + valueCol + "|" + outCol + "|" + parts))(
+      computePrefixSum(df, outCol, sortCols, valueCol, parts))._1
   }
 
+  /** (prefix-summed result, the persisted sorted manifest it reads). */
   private def computePrefixSum(df: DataFrame, outCol: String,
-      sortCols: Seq[Column], valueCol: String, parts: Int): DataFrame = {
+      sortCols: Seq[Column], valueCol: String, parts: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.add((spark, sorted))
 
     // one row per partition: (pid, byte subtotal) — bounded scalars
-    val sums = sorted.groupBy(spark_partition_id().as("pid"))
+    // (a failed pass unpins here: the copy is not registered yet)
+    val sums = try sorted.groupBy(spark_partition_id().as("pid"))
       .agg(sum(col(valueCol)).as("s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    catch { case e: Throwable => sorted.unpersist(); throw e }
     val offsets = new Array[Long](parts)
     var acc = 0L
     for (p <- 0 until parts) {
@@ -113,7 +100,7 @@ object Compaction {
         out
       }
     }
-    spark.createDataFrame(summed, outSchema)
+    (spark.createDataFrame(summed, outSchema), sorted)
   }
 
   /** The compaction plan: one row per output bucket —

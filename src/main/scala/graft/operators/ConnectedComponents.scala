@@ -169,7 +169,8 @@ object ConnectedComponents {
       // per round (minLabels appears twice in the jump join) — plan
       // growth, not data, is what kills long iterative loops. Pinned
       // via Checkpoints: Dataset.unpersist would be a silent no-op on
-      // a checkpoint RDD, so release goes through clearCaches.
+      // a checkpoint RDD, so the pin is a session artifact that
+      // SparkEntry.clearCaches releases.
       val next = Checkpoints.pin(minLabels
         .join(minLabels.select(col("doc_id").as("__c"), col("cluster").as("__cc")),
           col("cluster") === col("__c"), "left")

@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
+
+import graft.SessionArtifact
 
 /** Global total-order ranking WITHOUT the single-partition window.
   *
@@ -27,8 +30,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * The sorted input is persisted (MEMORY_AND_DISK) so steps 2 and 4
   * share one sort instead of re-shuffling the corpus twice; the handle
-  * is registered for [[clear]], which SparkEntry.clearCaches invokes —
-  * same lifecycle contract as the dedup signature index.
+  * is a [[graft.SessionArtifact]] entry, released by [[clear]] or
+  * `SparkEntry.clearCaches` — the dedup signature index's lifecycle.
   *
   * Determinism: like ROW_NUMBER over a non-unique ORDER BY, ties take
   * arbitrary order — callers wanting reproducible output must include a
@@ -36,38 +39,25 @@ import org.apache.spark.storage.StorageLevel
   */
 object GlobalRank {
 
-  /** Sorted inputs pinned by [[withGlobalRank]], per session. */
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  /** Memoized ranked results, keyed by (session, canonicalized input
-    * PLAN OBJECT, sort + partitioning + column name) — repeated
-    * identical calls (a bench best-of-3, a retried job) reuse ONE
-    * pinned sorted copy instead of accumulating duplicates, the same
-    * contract as the dedup signature index. The plan object itself is
-    * the key (Catalyst plans are case classes — deep structural
-    * equality, LocalRelation data included), NOT its toString/hashCode:
-    * toString elides large local data and a hashCode composite can
-    * collide, either of which would hand a cached ranking to a
-    * DIFFERENT input. Memo lifetime is until [[clear]]: file-source
-    * plans canonicalize by ROOT PATH (not file listing), so a path
-    * whose files change mid-session must clear() before re-ranking. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String), DataFrame]
+  /** Memoized (ranked result, pinned sorted input), keyed by
+    * (canonicalized input PLAN OBJECT, sort + partitioning + column
+    * name) per session — repeated identical calls (a bench best-of-3,
+    * a retried job) reuse ONE pinned sorted copy instead of
+    * accumulating duplicates, and two racing first calls build it
+    * once. The plan object itself is the key (Catalyst plans are case
+    * classes — deep structural equality, LocalRelation data
+    * included), NOT its toString/hashCode: toString elides large local
+    * data and a hashCode composite can collide, either of which would
+    * hand a cached ranking to a DIFFERENT input. Memo lifetime is
+    * until [[clear]] or `SparkEntry.clearCaches`: file-source plans
+    * canonicalize by ROOT PATH (not file listing), so a path whose
+    * files change mid-session must clear() before re-ranking. */
+  private val ranks = SessionArtifact.memo[(LogicalPlan, String),
+    (DataFrame, DataFrame)]("globalRank",
+    SessionArtifact.Kind.frames(p => Seq(p._2)))
 
   /** Unpersist every sorted input pinned on behalf of `s`. */
-  def clear(s: SparkSession): Unit = {
-    val it = pinned.iterator()
-    while (it.hasNext) {
-      val (owner, df) = it.next()
-      if (owner eq s) {
-        df.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-    memo.keys.filter(_._1 eq s).foreach(memo.remove)
-  }
+  def clear(s: SparkSession): Unit = ranks.release(s)
 
   /** `df` plus a 1-based global row number `rankCol` under the total
     * order `sortCols`. `numPartitions` defaults to the session's
@@ -81,23 +71,25 @@ object GlobalRank {
     // equality — covers LocalRelation data exactly); only the sort
     // expressions ride along as strings, and those print fully
     val canon = df.queryExecution.logical.canonicalized
-    val memoKey = (spark, canon,
-      sortCols.mkString(",") + "|" + parts + "|" + rankCol)
-    memo.getOrElseUpdate(memoKey, computeRank(df, rankCol, sortCols, parts))
+    ranks.getOrElseUpdate(spark,
+        (canon, sortCols.mkString(",") + "|" + parts + "|" + rankCol))(
+      computeRank(df, rankCol, sortCols, parts))._1
   }
 
+  /** (ranked result, the persisted sorted input it reads). */
   private def computeRank(df: DataFrame, rankCol: String,
-      sortCols: Seq[Column], parts: Int): DataFrame = {
+      sortCols: Seq[Column], parts: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.add((spark, sorted))
 
     // one row per partition: (pid, count) — empty partitions are absent
-    val counts = sorted.groupBy(spark_partition_id().as("pid"))
+    // (a failed pass unpins here: the copy is not registered yet)
+    val counts = try sorted.groupBy(spark_partition_id().as("pid"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    catch { case e: Throwable => sorted.unpersist(); throw e }
     val offsets = new Array[Long](parts)
     var acc = 0L
     for (p <- 0 until parts) {
@@ -124,6 +116,6 @@ object GlobalRank {
         Row.fromSeq(r.toSeq :+ (off + i))
       }
     }
-    spark.createDataFrame(ranked, outSchema)
+    (spark.createDataFrame(ranked, outSchema), sorted)
   }
 }

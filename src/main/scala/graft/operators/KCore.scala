@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * node set (broadcast once survivors shrink below the threshold;
   * AQE decides) + one partial-aggregated degree count — never a
   * pairwise or matrix form. Lineage is truncated per round
-  * (localCheckpoint, ConnectedComponents' discipline: in iterative
+  * ([[Checkpoints.pin]], ConnectedComponents' discipline: in iterative
   * loops the PLAN, not the data, grows without bound). Rounds needed
   * = core number's cascade depth, typically O(log n) on real graphs;
   * the budget is explicit, like Bfs's hop budget.
@@ -42,7 +42,7 @@ object KCore {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
     val e = edges.select(col("src"), col("dst"))
-    val nodes = e.select(col("src").as("id")).distinct().localCheckpoint()
+    val nodes = Checkpoints.pin(e.select(col("src").as("id")).distinct())
     var surv = nodes
     // early exit at the fixpoint: survivors shrink monotonically, so
     // an unchanged COUNT means an unchanged SET and every remaining
@@ -58,8 +58,8 @@ object KCore {
         .join(surv.select(col("id").as("src")), Seq("src"))
         .join(surv.select(col("id").as("dst")), Seq("dst"))
         .groupBy("src").agg(count(lit(1)).as("deg"))
-      surv = deg.filter(col("deg") >= k).select(col("src").as("id"))
-        .localCheckpoint()
+      surv = Checkpoints.pin(
+        deg.filter(col("deg") >= k).select(col("src").as("id")))
       val n = surv.count()
       converged = n == prevCount
       prevCount = n

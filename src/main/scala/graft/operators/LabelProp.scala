@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * label table (shuffle on node id both sides — the labels table is
   * node-sized, the join is the edge scan), one
   * (node, label)-grouped count that partial-aggregates, and one
-  * per-node argmax. Lineage truncates per round (localCheckpoint,
+  * per-node argmax. Lineage truncates per round ([[Checkpoints.pin]],
   * the iterative-loop discipline: the PLAN would otherwise grow
   * without bound). Rounds is an explicit budget like Bfs's hops;
   * real graphs settle in a handful.
@@ -42,7 +42,7 @@ object LabelProp {
   def propagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val e = edges.select(col("src"), col("dst"))
-    val nodes = e.select(col("src").as("id")).distinct().localCheckpoint()
+    val nodes = Checkpoints.pin(e.select(col("src").as("id")).distinct())
     var labels = nodes.select(col("id"), col("id").as("label"))
     var r = 0
     while (r < rounds) {
@@ -53,10 +53,9 @@ object LabelProp {
       val counts = neighborVotes.unionByName(selfVotes)
         .groupBy(col("id"), col("label"))
         .agg(count(lit(1)).as("__n"))
-      labels = counts.groupBy("id")
+      labels = Checkpoints.pin(counts.groupBy("id")
         .agg(max_by(col("label"),
-          struct(col("__n"), (-col("label")).as("__t"))).as("label"))
-        .localCheckpoint()
+          struct(col("__n"), (-col("label")).as("__t"))).as("label")))
       r += 1
     }
     labels.select(col("id").as("node_id"), col("label")).orderBy("node_id")

@@ -63,14 +63,11 @@ object VersionedParquetStore {
     * inferred once per session and later reads supply the schema
     * explicitly (per-file missing columns still null-pad — explicit
     * schema is how mergeSchema behaves post-inference). No DATA is
-    * cached and every read still scans the files. Dropped per session
-    * by [[clearSchemaCache]] (wired into SparkEntry.clearCaches). */
-  private val snapSchemaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
-
-  def clearSchemaCache(spark: SparkSession): Unit =
-    snapSchemaCache.keys.filter(_._1 eq spark)
-      .foreach(snapSchemaCache.remove)
+    * cached and every read still scans the files. A
+    * [[graft.SessionArtifact]], dropped by `SparkEntry.clearCaches`. */
+  private val snapSchemas = graft.SessionArtifact.memo[String,
+    org.apache.spark.sql.types.StructType]("snapshotSchema",
+    graft.SessionArtifact.Kind.metadata)
 
   /** mergeSchema parquet read of immutable snapshot dirs with the
     * inference memoized (scaladoc above). The FIRST read of a target
@@ -84,9 +81,8 @@ object VersionedParquetStore {
   private def readParquetCached(spark: SparkSession,
                                 basePath: Option[String],
                                 dirs: Seq[String]): DataFrame = {
-    val key = (spark,
-      basePath.getOrElse("") + "|" + dirs.sorted.mkString("|"))
-    snapSchemaCache.get(key) match {
+    val key = basePath.getOrElse("") + "|" + dirs.sorted.mkString("|")
+    snapSchemas.get(spark, key) match {
       case Some(schema) =>
         val r = spark.read.schema(schema)
         basePath.fold(r)(b => r.option("basePath", b)).parquet(dirs: _*)
@@ -94,7 +90,7 @@ object VersionedParquetStore {
         val r = spark.read.option("mergeSchema", "true")
         val df = basePath.fold(r)(b => r.option("basePath", b))
           .parquet(dirs: _*)
-        snapSchemaCache.put(key, df.schema)
+        snapSchemas.getOrElseUpdate(spark, key)(df.schema)
         df
     }
   }

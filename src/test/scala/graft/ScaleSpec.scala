@@ -217,6 +217,55 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(SparkEntry.queries("d3_lsh_pairs")(spark, "/root/testdata/sf0.001").count() > 0)
     SparkEntry.clearCaches(spark)
   }
+
+  test("staging policy: the staged artifacts, in staging order") {
+    SparkEntry.clearCaches(spark) // declares SparkEntry's artifacts
+    assert(SessionArtifact.stagedNames === Seq(
+      "graphEdges", "localGraphIndex", "tradeEdges", "lpaLabels",
+      "storedEdges", "incrEdges", "storedClusters", "codebook/full",
+      "codebook/stored", "segEdges", "e18Seed",
+      "w14Inputs", "w20Inputs", "w21Inputs", "w22Inputs", "w23Inputs",
+      "w24Inputs", "w25w26Inputs", "w27Inputs", "w28Inputs", "w29Inputs",
+      "w30Inputs", "w31Inputs", "w32w33Inputs", "w34Inputs", "w36Inputs"))
+  }
+
+  test("stageIndexes + d3 + g61, then clearCaches: no pin, dir or entry survives") {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.stageIndexes(spark, dir)
+    SparkEntry.queries("d3_lsh_pairs")(spark, dir).count()
+    SparkEntry.queries("g61_personalized_pagerank")(spark, dir).count()
+    // directory-kind values are the only String ones: 15 arrival
+    // fixtures plus the e18 seed store
+    val dirs = SessionArtifact.held(spark).collect { case (_, p: String) => p }
+    assert(dirs.size === 16)
+    assert(dirs.forall(new java.io.File(_).isDirectory))
+    SparkEntry.clearCaches(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "clearCaches must leave no pinned RDDs")
+    assert(dirs.filter(new java.io.File(_).exists).isEmpty,
+      "clearCaches must delete every staged directory")
+    assert(SessionArtifact.held(spark).isEmpty,
+      "clearCaches must leave no registry entry for the session")
+  }
+
+  test("a staging seed that throws leaves no temp directory behind") {
+    // an empty corpus dir: each stager's first table read throws after
+    // its temp directory exists
+    SparkEntry.clearCaches(spark) // the session exists before the listing
+    val empty = java.nio.file.Files.createTempDirectory("empty-corpus").toFile
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs = Option(tmp.list).map(_.toSet).getOrElse(Set.empty)
+      .filter(_.startsWith("graft"))
+    val before = graftDirs
+    for (g <- Seq("w14_stream_agg_maintenance", "e18_compaction_apply"))
+      intercept[Throwable] {
+        SparkEntry.queries(g)(spark, empty.getPath).count()
+      }
+    empty.delete()
+    assert((graftDirs -- before).isEmpty,
+      s"orphaned staging dirs: ${graftDirs -- before}")
+    SparkEntry.clearCaches(spark)
+  }
 }
 
 class PlanShapeSpec extends AnyFunSuite {

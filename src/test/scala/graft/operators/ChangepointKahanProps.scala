@@ -6,15 +6,16 @@ import org.scalacheck.Test.Parameters
 
 import graft.TestSpark
 
-/** Property invariants for the round-11 additions: the greedy
-  * binary-segmentation family (single-series driver rounds, grouped
-  * in-row expression), the Theil-Sen coarsen escape hatch, and the
+/** Property invariants for greedy changepoints, Theil-Sen coarsening
+  * and the Kahan rolling kernel: the greedy binary-segmentation family
+  * (single-series driver rounds, grouped in-row expression), the
+  * Theil-Sen coarsen escape hatch, and the
   * Kahan ring-buffer rolling kernel — each checked against an
   * independent driver-side replay over RANDOM inputs (the gates pin
   * one corpus; these pin the semantics). Integer paths compare with
   * equality — on int64 inputs the Kahan kernel is BIT-equal to the
   * exact fold, and the greedy recursion is exact int64 end to end. */
-object Round11Props extends Properties("round11") {
+object ChangepointKahanProps extends Properties("changepointKahan") {
 
   override def overrideParameters(p: Parameters): Parameters =
     p.withMinSuccessfulTests(10)

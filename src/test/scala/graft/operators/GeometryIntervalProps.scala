@@ -6,11 +6,11 @@ import org.scalacheck.Test.Parameters
 
 import graft.TestSpark
 
-/** Property invariants for the round-9 session-3 operators beyond
-  * their closed-form specs: interval-union bounds and permutation
-  * invariance, skyline anti-chain/coverage laws, and priority-sample
-  * monotonicity in the weights. */
-object Session3Props extends Properties("session3") {
+/** Property invariants for the interval, skyline and priority-sample
+  * operators beyond their closed-form specs: interval-union bounds and
+  * permutation invariance, skyline anti-chain/coverage laws, and
+  * priority-sample monotonicity in the weights. */
+object GeometryIntervalProps extends Properties("geometryInterval") {
 
   override def overrideParameters(p: Parameters): Parameters =
     p.withMinSuccessfulTests(10)

@@ -123,9 +123,8 @@ class PcaSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding").coalesce(1)
     val got = Pca.covariance(wide, "embedding", d).collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getDouble(2)).toMap
-    // the ONE reference definition of the explode-structs form (shared
-    // with the GramianWidthReceipt measurement tool)
-    val ref = graft.tools.GramianWidthReceipt.explodeCovariance(wide, d)
+    // the ONE reference definition of the explode-structs form
+    val ref = ExplodeCovariance.explodeCovariance(wide, d)
       .collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getDouble(2)).toMap
     assert(got.size === d * (d + 1) / 2 && ref.size === got.size)

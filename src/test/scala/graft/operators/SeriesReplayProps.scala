@@ -6,13 +6,13 @@ import org.scalacheck.Test.Parameters
 
 import graft.TestSpark
 
-/** Property invariants for the round-10 series family: changepoint
+/** Property invariants for the series family: changepoint
   * (single and grouped), grouped Theil-Sen, dominant period, and the
   * waterfill share reduction — each checked against an independent
   * driver-side integer replay over RANDOM inputs (the gates pin one
   * corpus; these pin the semantics). All arithmetic is exact int64 on
   * both sides, so every comparison is equality, never tolerance. */
-object Round10Props extends Properties("round10") {
+object SeriesReplayProps extends Properties("seriesReplay") {
 
   override def overrideParameters(p: Parameters): Parameters =
     p.withMinSuccessfulTests(10)
