@@ -3973,10 +3973,10 @@ object SparkEntry {
     // exact n-gram Jaccard VERIFICATION over the LSH candidate pairs —
     // the scale-correct composition: quadratic set comparison runs only
     // on candidates surfaced by banding (d3), never on all pairs.
-    // The candidate pairs table is tiny relative to the corpus but
-    // feeds THREE consumers (candidate docs + both sides of the verify
-    // join) — the memoized persisted pairs table means the
-    // minhash/banding chain runs once, not three times.
+    // Each pair is joined to both texts and compared by one
+    // ngram_overlap call (Dedup.ngramJaccard); the pairs table is
+    // memoized and persisted because d3/d7/d8 and the e-chain read it
+    // too, so the minhash/banding chain runs once per session.
     ("d5_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccard(t(s, dir, "documents"), lshPairsCached(s, dir))
         .orderBy("doc_a", "doc_b"),

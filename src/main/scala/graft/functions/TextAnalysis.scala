@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for the LLM-data-pipeline extension:
-  * tokenization, shingling (word and character n-grams), stopword /
-  * quality features, and language-ID marker scoring. All pure Column
+  * tokenization, word shingling, stopword / quality features, and
+  * language-ID marker scoring. All pure Column
   * expressions (codegen'd, no UDFs) so they compose into distributed
   * scans without breaking whole-stage codegen.
   */
@@ -23,13 +23,6 @@ object TextAnalysis {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(WordGrams(Bridge.expression(ws), k))
   }
-
-  /** Character k-grams as an array, in document order. */
-  def charShingles(text: Column, k: Int): Column =
-    when(length(text) >= k,
-      transform(sequence(lit(1), length(text) - (k - 1)),
-        i => text.substr(i, lit(k))))
-      .otherwise(array().cast("array<string>"))
 
   /** OVERLAPPING context windows (the pretraining/RAG chunker: window
     * `w` tokens, stride `s` < w, so consecutive windows share w-s

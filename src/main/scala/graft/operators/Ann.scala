@@ -979,7 +979,11 @@ object Ann {
         scoreEdges(em, cand.unionByName(hop2).distinct()), m))
     }
     (1 to refineRounds).foldLeft(
-      Checkpoints.pin(topMEdges(scoreEdges(em, cand), m)))((g, _) => refine(g))
+      Checkpoints.pin(topMEdges(scoreEdges(em, cand), m))) { (g, _) =>
+      val next = refine(g)
+      Checkpoints.unpin(g) // superseded once the next round is materialized
+      next
+    }
   }
 
   /** N25: INCREMENTAL kNN-graph maintenance — the graph index's member

@@ -114,6 +114,22 @@ object Checkpoints {
     try body finally pins.release(s, rdd => !before(rdd))
   }
 
+  /** Release the checkpoint RDD registered for `df`, a frame [[pin]]
+    * returned, once nothing will read it again: an iterative loop calls
+    * it on round r as soon as round r + 1 is materialized, so a loop
+    * holds only the rounds its result reads instead of every round
+    * until [[clear]]. (`Dataset.unpersist` cannot do this: it is a
+    * no-op on a checkpointed frame.) A frame that was not pinned here —
+    * a reliable checkpoint, or any other plan — is left alone.
+    *
+    * Not for [[pinLazy]] frames: nothing of a lazy chain is computed
+    * until the consumer's action, which reads every pinned round, so
+    * those pins (Bfs's rounds) must live until that action has run. */
+  def unpin(df: DataFrame): Unit = df.queryExecution.logical match {
+    case lr: LogicalRDD => pins.release(df.sparkSession, _ eq lr.rdd)
+    case _ =>
+  }
+
   /** Unpersist every checkpoint RDD registered on behalf of `s`. */
   def clear(s: SparkSession): Unit = pins.release(s)
 }

@@ -169,8 +169,8 @@ object ConnectedComponents {
       // per round (minLabels appears twice in the jump join) — plan
       // growth, not data, is what kills long iterative loops. Pinned
       // via Checkpoints: Dataset.unpersist would be a silent no-op on
-      // a checkpoint RDD, so the pin is a session artifact that
-      // SparkEntry.clearCaches releases.
+      // a checkpoint RDD, so the pin is a session artifact, released
+      // through Checkpoints.unpin once the next round is materialized.
       val next = Checkpoints.pin(minLabels
         .join(minLabels.select(col("doc_id").as("__c"), col("cluster").as("__cc")),
           col("cluster") === col("__c"), "left")
@@ -178,17 +178,24 @@ object ConnectedComponents {
           least(col("cluster"), coalesce(col("__cc"), col("cluster"))).as("cluster")))
       changed = next.join(labels.withColumnRenamed("cluster", "old"), "doc_id")
         .filter(col("cluster") =!= col("old")).count()
-      labels.unpersist()
+      release(labels)
       labels = next
       iters += 1
     }
     edges.unpersist()
     if (changed > 0) {
-      labels.unpersist()
+      release(labels)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds — " +
           "refusing to return partial cluster labels")
     }
     labels
+  }
+
+  /** Drops a round's labels: the cached first round or a pinned later
+    * one (each call is a no-op on the other kind). */
+  private def release(labels: DataFrame): Unit = {
+    labels.unpersist()
+    Checkpoints.unpin(labels)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Similarity, TextAnalysis}
+import graft.functions.{NgramOverlap, Similarity, TextAnalysis}
 
 /** Document deduplication as a library: the FineWeb/CCNet-shaped chain
   *
@@ -853,28 +853,30 @@ object Dedup {
   }
 
   /** D5: exact char-n-gram Jaccard VERIFICATION over candidate pairs —
-    * the scale-correct composition: the quadratic set comparison runs
-    * only on pairs surfaced by banding, never all-pairs, and gram sets
-    * are materialized ONLY for candidate docs. */
+    * the scale-correct composition: the set comparison runs only on
+    * pairs surfaced by banding, never all-pairs. Each pair is joined to
+    * both texts (`pairs ⋈ docs on doc_a ⋈ docs on doc_b`) and one
+    * [[NgramOverlap]] call per pair walks each text once, building its
+    * distinct gram set in one linear pass; no gram array is
+    * materialized or shuffled. `jaccard = inter / (|A| + |B| - inter)`
+    * as a double, `union` being that denominator: two gramless texts
+    * divide 0 by 0 (null with ANSI off, DIVIDE_BY_ZERO with it on).
+    *
+    * The kernel's struct goes through `inline(array(..))`, a Generate:
+    * a caller's `jaccard` filter cannot be pushed below it, so the
+    * kernel runs once per pair. Behind a plain Project the optimizer
+    * would inline the kernel into the pushed-down join condition once
+    * per struct field, and again into the projection. */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, n: Int = 5): DataFrame = {
-    val candDocs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // NOT pinned, by measurement: the gram-set frame feeds both sides
-    // of the verify join, but the two evaluations run in parallel
-    // broadcast/subquery futures on cores the single chain leaves idle
-    // — pinning it (tried round 7) cost MORE wall (9.4 vs 7.3 s warm at
-    // 10x) because the materialization serializes what the recompute
-    // overlaps.
-    val grams = docs.join(broadcast(candDocs), Seq("doc_id"))
-      .select(col("doc_id"),
-        array_distinct(TextAnalysis.charShingles(col("text"), n)).as("grams"))
+    def text(side: String) =
+      docs.select(col("doc_id").as(s"doc_$side"), col("text").as(s"__t$side"))
     pairs
-      .join(grams.select(col("doc_id").as("doc_a"), col("grams").as("ga")), Seq("doc_a"))
-      .join(grams.select(col("doc_id").as("doc_b"), col("grams").as("gb")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (size(col("ga")).cast("long") + size(col("gb")).cast("long") - col("inter")))
-      .select("doc_a", "doc_b", "jaccard")
+      .join(text("a"), Seq("doc_a"))
+      .join(text("b"), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        inline(array(NgramOverlap.overlap(col("__ta"), col("__tb"), n))))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") / col("union")).as("jaccard"))
   }
 
   /** D6: embedding near-duplicate pairs — cosine >= `threshold` within

@@ -58,8 +58,12 @@ object KCore {
         .join(surv.select(col("id").as("src")), Seq("src"))
         .join(surv.select(col("id").as("dst")), Seq("dst"))
         .groupBy("src").agg(count(lit(1)).as("deg"))
-      surv = Checkpoints.pin(
+      val next = Checkpoints.pin(
         deg.filter(col("deg") >= k).select(col("src").as("id")))
+      // round r is superseded once r + 1 is materialized; `nodes` (the
+      // first round) stays pinned because the result reads it
+      if (surv ne nodes) Checkpoints.unpin(surv)
+      surv = next
       val n = surv.count()
       converged = n == prevCount
       prevCount = n

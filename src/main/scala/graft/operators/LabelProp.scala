@@ -44,6 +44,7 @@ object LabelProp {
     val e = edges.select(col("src"), col("dst"))
     val nodes = Checkpoints.pin(e.select(col("src").as("id")).distinct())
     var labels = nodes.select(col("id"), col("id").as("label"))
+    var held = nodes // the pinned frame the current labels read
     var r = 0
     while (r < rounds) {
       val neighborVotes = e
@@ -56,6 +57,9 @@ object LabelProp {
       labels = Checkpoints.pin(counts.groupBy("id")
         .agg(max_by(col("label"),
           struct(col("__n"), (-col("label")).as("__t"))).as("label")))
+      // the previous round is superseded once this one is materialized
+      Checkpoints.unpin(held)
+      held = labels
       r += 1
     }
     labels.select(col("id").as("node_id"), col("label")).orderBy("node_id")

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The quiet-band ledger (round-15 item 6): parse tolerance, the
   * 2x-min quiet filter (a firing sits 4-25x over band and must NOT
   * widen the published band), and the per-run cpu/minflt alignment. */
-class BenchLedgerSpec extends AnyFunSuite {
+class BenchLedgerSpec extends AnyFunSuite with TempDirs {
 
   private def tmpLedger(lines: String*): String = {
-    val f = java.nio.file.Files.createTempFile("graft-ledger", ".jsonl")
+    val f = tempDir("graft-ledger").resolve("ledger.jsonl")
     java.nio.file.Files.write(f,
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     f.toString

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver artifact's "heavy" summary move to the FRONT of their tier,
   * so a 900 s driver budget covers the full roster over at most two
   * rounds. Pure-function tests — no Spark session. */
-class BenchRotationSpec extends AnyFunSuite {
+class BenchRotationSpec extends AnyFunSuite with TempDirs {
 
   test("rotateUnmeasuredFirst: unmeasured lead, order stable in both halves") {
     val tier = Seq("a", "b", "c", "d", "e")
@@ -19,7 +19,7 @@ class BenchRotationSpec extends AnyFunSuite {
   }
 
   test("lastMeasuredHeavy: parses the LATEST artifact's parsed-summary heavy keys") {
-    val dir = Files.createTempDirectory("bench_rotation").toFile
+    val dir = tempDir("bench_rotation").toFile
     // r9: an older artifact that must be ignored
     Files.write(Paths.get(dir.getPath, "BENCH_r9.json"),
       """{"parsed": {"heavy": {"old_one": 1.0}}}""".getBytes)
@@ -49,7 +49,7 @@ class BenchRotationSpec extends AnyFunSuite {
   }
 
   test("everMeasuredHeavy: union over ALL artifacts, not just the latest") {
-    val dir = Files.createTempDirectory("bench_rotation_ever").toFile
+    val dir = tempDir("bench_rotation_ever").toFile
     Files.write(Paths.get(dir.getPath, "BENCH_r9.json"),
       """{"parsed": {"heavy": {"old_one": 1.0}}}""".getBytes)
     Files.write(Paths.get(dir.getPath, "BENCH_r10.json"),
@@ -59,7 +59,7 @@ class BenchRotationSpec extends AnyFunSuite {
   }
 
   test("lastMeasuredHeavy: no artifacts / unreadable dir -> empty (order stands)") {
-    val empty = Files.createTempDirectory("bench_rotation_empty").toFile
+    val empty = tempDir("bench_rotation_empty").toFile
     assert(Bench.lastMeasuredHeavy(empty.getPath) === Set.empty[String])
     assert(Bench.lastMeasuredHeavy("/nonexistent/nowhere") ===
       Set.empty[String])

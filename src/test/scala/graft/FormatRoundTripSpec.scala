@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (backslash-escape) config produces a DIFFERENT byte stream on disk
   * than the RFC one — i.e. the option the gate sets is load-bearing.
   */
-class FormatRoundTripSpec extends AnyFunSuite {
+class FormatRoundTripSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -21,7 +21,7 @@ class FormatRoundTripSpec extends AnyFunSuite {
 
   test("RFC-4180 CSV config round-trips adversarial text byte-exactly") {
     val df = Seq((1L, gnarly)).toDF("id", "text")
-    val dir = Files.createTempDirectory("graft-csvrt").toString
+    val dir = tempDir("graft-csvrt").toString
     df.write.mode("overwrite").option("header", "true")
       .option("escape", "\"").csv(dir)
     val back = spark.read.schema(df.schema).option("header", "true")
@@ -31,8 +31,8 @@ class FormatRoundTripSpec extends AnyFunSuite {
 
   test("the escape option is load-bearing: default config writes different bytes") {
     val df = Seq((1L, gnarly)).toDF("id", "text")
-    val rfc = Files.createTempDirectory("graft-rfc").toString
-    val dflt = Files.createTempDirectory("graft-dflt").toString
+    val rfc = tempDir("graft-rfc").toString
+    val dflt = tempDir("graft-dflt").toString
     df.write.mode("overwrite").option("header", "true")
       .option("escape", "\"").csv(rfc)
     df.write.mode("overwrite").option("header", "true").csv(dflt)

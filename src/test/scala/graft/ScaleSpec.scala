@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.ActivitySink
 import graft.operators.SkewSalt
 
-class ActivitySinkSpec extends AnyFunSuite {
+class ActivitySinkSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("append-mode date-partitioned sink + watermark scan (K1/S3)") {
-    val dir = Files.createTempDirectory("graft-sink").toString + "/activities"
+    val dir = tempDir("graft-sink").toString + "/activities"
     assert(ActivitySink.latestEpoch(spark, dir, 7L) == 0L) // empty sink
 
     val batch1 = Seq((1L, 7L, 1704412800L), (2L, 7L, 1704499200L))
@@ -448,7 +448,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 }
 
-class StatefulStreamSpec extends AnyFunSuite {
+class StatefulStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -457,7 +457,7 @@ class StatefulStreamSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "ts", "user_id", "event_type", "value").limit(200)
     val doubled = batch.union(batch) // every event twice
-    val dir = Files.createTempDirectory("graft-dedup").toString
+    val dir = tempDir("graft-dedup").toString
     doubled.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
@@ -472,7 +472,7 @@ class StatefulStreamSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState emits milestone rows at count thresholds") {
     import graft.streaming.EventStream
-    val dir = Files.createTempDirectory("graft-ms").toString
+    val dir = tempDir("graft-ms").toString
     val batch = (1 to 250).map(i => (7L, i.toDouble)) ++ (1 to 90).map(i => (8L, i.toDouble))
     batch.toDF("user_id", "value").write.mode("overwrite").parquet(dir)
 
@@ -493,7 +493,7 @@ class StatefulStreamSpec extends AnyFunSuite {
     import graft.streaming.EventStream
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft-state").toString
+    val dir = tempDir("graft-state").toString
     batch.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(batch.schema).parquet(dir)

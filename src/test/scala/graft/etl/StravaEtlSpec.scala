@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** End-to-end E1/E2 entry points: incremental sync is watermark-driven
   * and idempotent. */
-class StravaEtlSpec extends AnyFunSuite {
+class StravaEtlSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val nowEpoch = 1704500000L
@@ -20,7 +20,7 @@ class StravaEtlSpec extends AnyFunSuite {
     s"""{"activity_id": $id, "time": [0, 1, 3], "heartrate": [100.0, 110.0, 130.0], "watts": [200.0, 210.0, 230.0], "velocity_smooth": [5.0, 6.0, 8.0], "latlng": [[1.0,2.0],[1.1,2.1],[1.3,2.3]], "distance": [0.0, 5.0, 15.0], "altitude": [10.0, 11.0, 13.0], "cadence": [80.0, 81.0, 83.0], "temp": [20.0, 20.0, 20.0], "grade_smooth": [0.0, 0.1, 0.3], "moving": [true, true, true]}"""
 
   test("add_history_data is incremental and idempotent; point sync bypasses the watermark") {
-    val base = Files.createTempDirectory("graft-etl")
+    val base = tempDir("graft-etl")
     val actsPath = base.resolve("activities.jsonl").toString
     val streamsPath = base.resolve("streams.jsonl").toString
     val sink = base.resolve("sink").toString
@@ -59,7 +59,7 @@ class StravaEtlSpec extends AnyFunSuite {
   }
 
   test("legacyCompat sync is still incremental: the username watermark survives user_id=null") {
-    val base = Files.createTempDirectory("graft-etl-legacy")
+    val base = tempDir("graft-etl-legacy")
     val actsPath = base.resolve("activities.jsonl").toString
     val streamsPath = base.resolve("streams.jsonl").toString
     val sink = base.resolve("sink").toString
@@ -84,7 +84,7 @@ class StravaEtlSpec extends AnyFunSuite {
   }
 
   test("a corrupt sink fails the sync instead of re-ingesting; an empty one loads all") {
-    val base = Files.createTempDirectory("graft-etl-corrupt")
+    val base = tempDir("graft-etl-corrupt")
     val actsPath = base.resolve("activities.jsonl").toString
     val streamsPath = base.resolve("streams.jsonl").toString
     Files.write(base.resolve("activities.jsonl"),

@@ -46,11 +46,12 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got.isEmpty)
   }
 
-  test("char shingles") {
-    val df = Seq("abcdef").toDF("text")
-    val got = df.select(TextAnalysis.charShingles(col("text"), 5))
-      .as[Seq[String]].collect()(0)
-    assert(got == Seq("abcde", "bcdef"))
+  test("char 5-grams of abcdef are abcde and bcdef (ngram_overlap)") {
+    val df = Seq(("abcdef", "abcdef"), ("abcdef", "abcde"), ("abcdef", "bcdef"))
+      .toDF("a", "b")
+    val got = df.select(NgramOverlap.overlap(col("a"), col("b"), 5).as("o"))
+      .select("o.inter", "o.union").as[(Long, Long)].collect().toSeq
+    assert(got == Seq((2L, 2L), (1L, 2L), (1L, 2L)))
   }
 
   test("codegen WordGrams equals the HOF spelling on the corpus") {

@@ -1,11 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 
 /** The IVF STORAGE claim made concrete: SCALE.md says "embeddings at
   * 100 TB should be stored partitioned by centroid id so probes prune
@@ -13,7 +11,7 @@ import graft.{Tables, TestSpark}
   * proves a probe's scan actually prunes (PartitionFilters in the scan,
   * non-probed partitions never read) while returning exactly the
   * in-memory probe's rows. */
-class AnnStorageSpec extends AnyFunSuite {
+class AnnStorageSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("centroid-partitioned embedding store prunes probe scans at the file level") {
@@ -21,7 +19,7 @@ class AnnStorageSpec extends AnyFunSuite {
     val centroids = Ann.kmeansCentroids(em, 4, 2)
     val assigned = em.join(
       Ann.clusterAssignment(em, centroids), Seq("vec_id"))
-    val store = Files.createTempDirectory("graft-ivf").toString
+    val store = tempDir("graft-ivf").toString
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(store)
 
     // the inverted file landed as one directory per centroid cell

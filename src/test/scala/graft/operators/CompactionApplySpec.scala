@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.sources.VersionedParquetStore
 
 /** Compaction EXECUTION (applyPlan) pinned on the three claims the
@@ -14,7 +14,7 @@ import graft.sources.VersionedParquetStore
   * the snapshot write and the pointer swap leaves the pointer, and
   * every reader, on the OLD snapshot (the orphaned directory is
   * garbage, never visible). */
-class CompactionApplySpec extends AnyFunSuite {
+class CompactionApplySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -23,8 +23,7 @@ class CompactionApplySpec extends AnyFunSuite {
     (0L until 200L).map(i => (i, 37L + (i * 31L) % 211L, s"payload-$i"))
 
   private def freshStore(): String = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-capply").toString + "/store"
+    val root = tempDir("graft-capply").toString + "/store"
     // deliberately fragmented seed snapshot: 8 small files
     VersionedParquetStore.merge(spark, root,
       rows.toDF("id", "bytes", "payload").repartition(8), "id")

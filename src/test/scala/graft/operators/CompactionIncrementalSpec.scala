@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.sources.VersionedParquetStore
 
 /** Incremental compaction (applyPlanIncremental) pinned on the claims
@@ -16,7 +16,7 @@ import graft.sources.VersionedParquetStore
   * write and swap leaves readers on the old snapshot); (5) vacuum
   * exempts snapshot dirs referenced by a survivor's manifest, and
   * collects them once nothing references them. */
-class CompactionIncrementalSpec extends AnyFunSuite {
+class CompactionIncrementalSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -36,8 +36,7 @@ class CompactionIncrementalSpec extends AnyFunSuite {
     * every other bucket already at plan (one file). Returns the store
     * root and the seed snapshot version. */
   private def freshStore(): (String, String) = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cinc").toString + "/store"
+    val root = tempDir("graft-cinc").toString + "/store"
     val df = planned.toDF("id", "bytes", "payload", "bucket")
     VersionedParquetStore.commitSnapshot(spark, root, None, path => {
       df.filter(col("bucket") === 0).repartition(4)
@@ -129,8 +128,7 @@ class CompactionIncrementalSpec extends AnyFunSuite {
     // (mergeSchema + allowMissingColumns, mirroring readSnapshot), not
     // throw and leave the store permanently uncompactable (round-14
     // advice, medium).
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-cinc-evo").toString + "/store"
+    val root = tempDir("graft-cinc-evo").toString + "/store"
     val seed = Seq((1L, "a", 0L), (2L, "b", 0L))
       .toDF("id", "payload", "bucket")
     VersionedParquetStore.commitSnapshot(spark, root, None, path =>

@@ -29,7 +29,7 @@ class GlobalRankSpec extends AnyFunSuite {
     // TASK partition ids are offset by the first leg's partition count.
     // The original TaskContext-based offset lookup read past the
     // offsets array here (observed via Dedup.sortedNeighborPairs ->
-    // ngramJaccard's doc_a/doc_b union); the rdd-partition-index
+    // the doc_a/doc_b union ngramJaccard once built); the rdd-partition-index
     // formulation must keep every rank correct on BOTH legs.
     val df = (1 to 400).map(i => ((i * 31) % 97, i.toLong)).toDF("score", "id")
     val ranked = GlobalRank.withGlobalRank(

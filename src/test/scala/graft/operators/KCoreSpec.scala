@@ -92,4 +92,28 @@ class KCoreSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("repeated g41_kcore calls each leave the same two pins, whatever the rounds") {
+    // Each call's result reads two pinned frames: the first round (every
+    // node) and the final survivors. Superseded rounds are released as
+    // soon as the next one is materialized, so what a call leaves does
+    // not grow with the rounds it ran.
+    val dir = "/root/testdata/sf0.001"
+    def persistent = spark.sparkContext.getPersistentRDDs.size
+    def g41(): Unit = { graft.SparkEntry.queries("g41_kcore")(spark, dir).collect(); () }
+    try {
+      g41() // builds the session's trade-edge index
+      val left = (1 to 3).map { _ =>
+        val before = persistent
+        g41()
+        persistent - before
+      }
+      assert(left == Seq(2, 2, 2), s"persistent RDDs left per g41 call: $left")
+      // P9 at k=2 peels one layer per round: four rounds, still two pins
+      val before = persistent
+      val path9 = (1L to 8L).map(i => i -> (i + 1))
+      assert(run(path9, 2, 4).count(_._2._1) == 1)
+      assert(persistent - before == 2)
+    } finally graft.SparkEntry.clearCaches(spark)
+  }
 }

@@ -37,6 +37,17 @@ class LabelPropSpec extends AnyFunSuite {
     lab
   }
 
+  test("a call leaves one pin, whatever the rounds") {
+    // superseded rounds are released once the next one is materialized;
+    // the result reads only the last round's pin
+    def persistent = spark.sparkContext.getPersistentRDDs.size
+    try {
+      val before = persistent
+      run(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 1L), 4)
+      assert(persistent - before == 1)
+    } finally Checkpoints.clear(spark)
+  }
+
   test("two disjoint triangles: each keeps its own min-label community") {
     val es = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 5L, 5L -> 6L, 6L -> 4L)
     val got = run(es, 3)

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** The runtime bloom join must be invisible in the answer (exact join
   * semantics) and visible in the plan (the fact side is filtered
   * before the join). */
-class RuntimeFilterSpec extends AnyFunSuite {
+class RuntimeFilterSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -42,7 +42,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   test("the bloom probe reaches the fact side BELOW the join in the plan") {
     // parquet-backed fact so the probe survives as a real pre-join
     // Filter (a LocalRelation would be constant-folded away)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rf").toString
+    val dir = tempDir("graft-rf").toString
     fact.write.mode("overwrite").parquet(dir)
     val factP = spark.read.parquet(dir)
     val plan = RuntimeFilter.bloomPrunedJoin(factP, dim, "fk", "dk")

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Changefeed (x22) pinned on its contract: the feed between two
   * versions is exactly the appended rows, served from post-cursor
@@ -11,12 +11,12 @@ import graft.TestSpark
   * multiple appends; and the REFUSAL half — a rewrite (materialize /
   * full-rewrite commit) between the cursors makes file arithmetic
   * lie, so the feed must throw rather than re-emit the table. */
-class ChangefeedSpec extends AnyFunSuite {
+class ChangefeedSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshTmp() =
-    java.nio.file.Files.createTempDirectory("graft-cf").toString
+    tempDir("graft-cf").toString
 
   private def batch(ids: Range) =
     ids.map(i => (i.toLong, i.toLong % 3, s"p$i"))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Shallow clone (x20) pinned on its contract: the clone's first
   * snapshot is METADATA ONLY (one manifest, zero data files) yet reads
@@ -11,12 +11,12 @@ import graft.TestSpark
   * are flattened when the source itself carries a manifest; and the
   * documented cross-root hazard is REAL — a vacuum on the source
   * cannot see the clone's references and collects the shared files. */
-class CloneSpec extends AnyFunSuite {
+class CloneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshTmp() =
-    java.nio.file.Files.createTempDirectory("graft-clone").toString
+    tempDir("graft-clone").toString
 
   private def seed(root: String, ids: Range): Unit =
     VersionedParquetStore.commitSnapshot(spark, root, None,

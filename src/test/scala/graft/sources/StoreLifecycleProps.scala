@@ -45,71 +45,73 @@ object StoreLifecycleProps extends Properties("store-lifecycle") {
 
   property("any append/compact/vacuum/clone interleaving preserves " +
     "contents and readability") = forAll(genOps) { ops =>
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-lifecycle").toString
-    var root = s"$tmp/r0"
-    var rootSeq = 0
-    var nextId = 0L
-    var model = Map.empty[Long, (Long, String)]
+    val tmpDir = java.nio.file.Files.createTempDirectory("graft-lifecycle").toFile
+    val tmp = tmpDir.toString
+    try {
+      var root = s"$tmp/r0"
+      var rootSeq = 0
+      var nextId = 0L
+      var model = Map.empty[Long, (Long, String)]
 
-    def appendRows(n: Int): Unit = {
-      val rows = (0 until n).map { _ =>
-        val id = nextId; nextId += 1
-        id -> (id % 3, s"p$id")
-      }
-      model ++= rows
-      val df = rows.map { case (id, (b, p)) => (id, b, p) }
-        .toDF("id", "bucket", "payload")
-      if (VersionedParquetStore.currentVersion(spark, root).isEmpty)
-        VersionedParquetStore.commitSnapshot(spark, root, None,
-          path => df.write.mode("errorifexists")
-            .partitionBy("bucket").parquet(path))
-      else
-        VersionedParquetStore.appendPartitioned(spark, root, df, "bucket")
-    }
-
-    def contents(): Map[Long, (Long, String)] =
-      VersionedParquetStore.read(spark, root) match {
-        case None => Map.empty
-        case Some(df) => df
-          // partition-dir values read back as INT — normalize
-          .select(col("id"), col("bucket").cast("long"), col("payload"))
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+      def appendRows(n: Int): Unit = {
+        val rows = (0 until n).map { _ =>
+          val id = nextId; nextId += 1
+          id -> (id % 3, s"p$id")
+        }
+        model ++= rows
+        val df = rows.map { case (id, (b, p)) => (id, b, p) }
+          .toDF("id", "bucket", "payload")
+        if (VersionedParquetStore.currentVersion(spark, root).isEmpty)
+          VersionedParquetStore.commitSnapshot(spark, root, None,
+            path => df.write.mode("errorifexists")
+              .partitionBy("bucket").parquet(path))
+        else
+          VersionedParquetStore.appendPartitioned(spark, root, df, "bucket")
       }
 
-    appendRows(3) // every sequence starts on a live partitioned store
-    val ok = (contents() == model) && ops.forall { op =>
-      op match {
-        case Append(n) => appendRows(n)
-        case Compact(maxFiles) =>
-          graft.operators.Compaction
-            .applyPlanIncremental(spark, root, maxFiles)
-          ()
-        case Vacuum(keep) =>
-          // only ever the CURRENT root: vacuuming an abandoned source
-          // root under a live clone is the documented hazard, not a
-          // legal maintenance move (CloneSpec pins that it really
-          // tears) — the model test exercises the legal surface
-          VersionedParquetStore.vacuum(spark, root, keep)
-          ()
-        case Clone =>
-          rootSeq += 1
-          val next = s"$tmp/r$rootSeq"
-          VersionedParquetStore.shallowClone(spark, root, next)
-          root = next
+      def contents(): Map[Long, (Long, String)] =
+        VersionedParquetStore.read(spark, root) match {
+          case None => Map.empty
+          case Some(df) => df
+            // partition-dir values read back as INT — normalize
+            .select(col("id"), col("bucket").cast("long"), col("payload"))
+            .collect()
+            .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+        }
+
+      appendRows(3) // every sequence starts on a live partitioned store
+      val ok = (contents() == model) && ops.forall { op =>
+        op match {
+          case Append(n) => appendRows(n)
+          case Compact(maxFiles) =>
+            graft.operators.Compaction
+              .applyPlanIncremental(spark, root, maxFiles)
+            ()
+          case Vacuum(keep) =>
+            // only ever the CURRENT root: vacuuming an abandoned source
+            // root under a live clone is the documented hazard, not a
+            // legal maintenance move (CloneSpec pins that it really
+            // tears) — the model test exercises the legal surface
+            VersionedParquetStore.vacuum(spark, root, keep)
+            ()
+          case Clone =>
+            rootSeq += 1
+            val next = s"$tmp/r$rootSeq"
+            VersionedParquetStore.shallowClone(spark, root, next)
+            root = next
+        }
+        contents() == model
       }
-      contents() == model
-    }
-    // terminal deep check: a materialize at the end always succeeds
-    // and preserves contents with zero cross-root references left
-    VersionedParquetStore.materialize(spark, root, "bucket")
-    val matOk = contents() == model && {
-      val back = VersionedParquetStore.read(spark, root).get
-        .withColumn("__f", input_file_name())
-        .select("__f").as[String].collect()
-      back.forall(_.contains(s"/r$rootSeq/"))
-    }
-    ok && matOk
+      // terminal deep check: a materialize at the end always succeeds
+      // and preserves contents with zero cross-root references left
+      VersionedParquetStore.materialize(spark, root, "bucket")
+      val matOk = contents() == model && {
+        val back = VersionedParquetStore.read(spark, root).get
+          .withColumn("__f", input_file_name())
+          .select("__f").as[String].collect()
+        back.forall(_.contains(s"/r$rootSeq/"))
+      }
+      ok && matOk
+    } finally graft.SessionArtifact.rmTree(tmpDir)
   }
 }

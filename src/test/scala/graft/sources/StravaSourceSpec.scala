@@ -5,16 +5,16 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.etl.CleanActivities
 import graft.sources.v2.StravaActivitySource
 
-class StravaJsonSourceSpec extends AnyFunSuite {
+class StravaJsonSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("strava-fix")
+    val dir = tempDir("strava-fix")
     val acts = Seq(
       """{"id": 1, "name": "A", "type": "Ride", "start_date": "2024-01-01T00:00:00Z", "athlete": {"id": 7}, "total_elevation_gain": 1.0, "distance": 10.0, "moving_time": 60, "elapsed_time": 60, "commute": false}""",
       """{"id": 2, "name": "B", "type": "Ride", "start_date": "2024-01-10T00:00:00Z", "athlete": {"id": 7}, "total_elevation_gain": 2.0, "distance": 20.0, "moving_time": 60, "elapsed_time": 60, "commute": false}""")
@@ -33,7 +33,7 @@ class StravaJsonSourceSpec extends AnyFunSuite {
   }
 
   test("stream channel-dict pivots to long form with null padding (S6/R1)") {
-    val dir = Files.createTempDirectory("strava-streams")
+    val dir = tempDir("strava-streams")
     val doc =
       """{"activity_id": 1, "time": [0, 1, 2], "heartrate": [100.0, 110.0, 120.0],
          "latlng": [[1.0, 2.0], [1.1, 2.1], [1.2, 2.2]], "watts": [10.0, 20.0, 30.0]}"""
@@ -48,12 +48,12 @@ class StravaJsonSourceSpec extends AnyFunSuite {
   }
 }
 
-class StravaSourceV2Spec extends AnyFunSuite {
+class StravaSourceV2Spec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def writeFixture(n: Int): String = {
-    val dir = Files.createTempDirectory("strava-v2")
+    val dir = tempDir("strava-v2")
     val lines = (1 to n).map { i =>
       val day = f"${(i % 27) + 1}%02d"
       s"""{"id": $i, "name": "A$i", "type": "Ride", "start_date": "2024-01-${day}T00:00:00Z", "athlete": {"id": 7}, "total_elevation_gain": 1.0, "distance": 10.0, "moving_time": 60, "elapsed_time": 60, "commute": false}"""
@@ -83,7 +83,7 @@ class StravaSourceV2Spec extends AnyFunSuite {
   }
 
   test("DSv2 write: staged two-phase commit round-trips, appends, truncates") {
-    val dir = Files.createTempDirectory("strava-v2-write").toString
+    val dir = tempDir("strava-v2-write").toString
     def doc(i: Int) =
       s"""{"id": $i, "start_date": "2024-02-0${(i % 9) + 1}T00:00:00Z"}"""
     def df(ids: Range) = ids.map { i =>
@@ -111,7 +111,7 @@ class StravaSourceV2Spec extends AnyFunSuite {
   }
 
   test("DSv2 write: a failed job aborts cleanly — destination untouched") {
-    val dir = Files.createTempDirectory("strava-v2-abort").toString
+    val dir = tempDir("strava-v2-abort").toString
     Seq((1L, """{"id": 1, "start_date": "2024-02-01T00:00:00Z"}"""))
       .toDF("epoch", "json")
       .write.format(classOf[StravaActivitySource].getName)

@@ -2,14 +2,14 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Snapshot expiry (VersionedParquetStore.vacuum, the x17 gate)
   * pinned on its safety claims: the pointer target survives
   * unconditionally (even keep = 1 on a long history), content through
   * the pointer is untouched, exactly the aged-out directories are
   * deleted, and keep < 1 is refused. */
-class VacuumSpec extends AnyFunSuite {
+class VacuumSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -20,8 +20,7 @@ class VacuumSpec extends AnyFunSuite {
       .map(_.getName).sorted.toSeq
 
   test("expiry keeps the pointer target and the newest window; content intact") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-vacuum").toString
+    val tmp = tempDir("graft-vacuum").toString
     val root = s"$tmp/store"
     (1 to 4).foreach { i =>
       VersionedParquetStore.merge(spark, root,
@@ -42,8 +41,7 @@ class VacuumSpec extends AnyFunSuite {
   }
 
   test("keep < 1 is refused; empty root is a no-op") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-vacuum2").toString
+    val tmp = tempDir("graft-vacuum2").toString
     intercept[IllegalArgumentException] {
       VersionedParquetStore.vacuum(spark, s"$tmp/store", keep = 0)
     }

@@ -1,18 +1,16 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
-class VersionedParquetStoreSpec extends AnyFunSuite {
+class VersionedParquetStoreSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshRoot() =
-    Files.createTempDirectory("graft-vstore").toString + "/users"
+    tempDir("graft-vstore").toString + "/users"
 
   test("merge commits last-write-wins snapshots; readers see whole versions") {
     val root = freshRoot()

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 
 /** EventStream.anomalySteps pinned on its core claim: the streaming
   * integer-state fold produces bit-identical flags to the batch
@@ -14,7 +12,7 @@ import graft.{Tables, TestSpark}
   * — the exact (n, sum, sum-of-squares) state makes the equality
   * exact, not approximate, so this compares per-event flags, not
   * aggregates. */
-class AnomalyStreamSpec extends AnyFunSuite {
+class AnomalyStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("streaming anomaly flags == batch cumulative stats across micro-batches") {
@@ -22,7 +20,7 @@ class AnomalyStreamSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_type"), unix_micros(col("ts")).as("us"),
         col("event_id"), round(col("value") * 100, 0).cast("long").as("v_c"))
-    val tmp = Files.createTempDirectory("graft-w17-spec").toString
+    val tmp = tempDir("graft-w17-spec").toString
     // time-ordered carve-up: per-type order preserved across batches,
     // every type straddles all three files, so warm-up counts and
     // running sums must genuinely carry across micro-batch boundaries

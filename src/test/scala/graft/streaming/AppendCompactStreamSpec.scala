@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.sources.VersionedParquetStore
 
 /** Streaming append + in-stream compaction (w34) pinned on its
@@ -14,7 +14,7 @@ import graft.sources.VersionedParquetStore
   * fragmented — their final file lives in a compaction snapshot, not
   * the append's; (3) replaying a batch is a structural no-op (empty
   * anti-join delta → no commit at all). */
-class AppendCompactStreamSpec extends AnyFunSuite {
+class AppendCompactStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -22,8 +22,7 @@ class AppendCompactStreamSpec extends AnyFunSuite {
     "v-[0-9]+-[0-9a-f]+".r.findFirstIn(path).getOrElse(path)
 
   test("append by reference, compact selectively, absorb replays") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-w34-spec").toString
+    val tmp = tempDir("graft-w34-spec").toString
     val root = s"$tmp/store"
     // batch 1: buckets 0 (ids 0-4) and 1 (ids 5-9)
     val b1 = (0L until 10L).map(i => (i, s"t$i", i / 5)).toDF("doc_id", "th", "bucket")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GateFixtures, Tables, TestSpark}
+import graft.{GateFixtures, Tables, TempDirs, TestSpark}
 import graft.functions.Similarity
 import graft.operators.Ann
 import graft.sources.VersionedParquetStore
@@ -17,7 +17,7 @@ import graft.sources.VersionedParquetStore
   * re-merging a batch's hits leaves the store bit-identical, because
   * search is a pure function of the frozen index and dropDuplicates
   * on (qid, rnk) is exact, never a choice. */
-class GraphSearchStreamSpec extends AnyFunSuite {
+class GraphSearchStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
@@ -32,7 +32,7 @@ class GraphSearchStreamSpec extends AnyFunSuite {
   test("per-batch streamed search equals the one-shot search of all queries") {
     val edges = Ann.knnGraphEdges(em, GateFixtures.rpPlanes, 10)
     val index = Ann.buildLocalGraphIndex(unitEm, edges)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-w30-spec").toString
+    val tmp = tempDir("graft-w30-spec").toString
     val queries = em.filter(col("vec_id") < 5)
     (0 to 1).foreach(i => queries.filter(col("vec_id") % 2 === i)
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i"))

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
-class StravaStreamingEtlSpec extends AnyFunSuite {
+class StravaStreamingEtlSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val nowEpoch = 1704500000L
@@ -18,7 +18,7 @@ class StravaStreamingEtlSpec extends AnyFunSuite {
     s"""{"activity_id": $id, "time": [0, 1, 3], "heartrate": [100.0, 110.0, 130.0], "watts": [200.0, 210.0, 230.0], "velocity_smooth": [5.0, 6.0, 8.0], "latlng": [[1.0,2.0],[1.1,2.1],[1.3,2.3]], "distance": [0.0, 5.0, 15.0], "altitude": [10.0, 11.0, 13.0], "cadence": [80.0, 81.0, 83.0], "temp": [20.0, 20.0, 20.0], "grade_smooth": [0.0, 0.1, 0.3], "moving": [true, true, true]}"""
 
   test("streaming E1: new feed files flow through the pipeline into the sink") {
-    val base = Files.createTempDirectory("graft-setl")
+    val base = tempDir("graft-setl")
     val feed = base.resolve("feed"); Files.createDirectories(feed)
     val streamsPath = base.resolve("streams.jsonl").toString
     val sink = base.resolve("sink").toString

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GateFixtures, Tables, TestSpark}
+import graft.{GateFixtures, Tables, TempDirs, TestSpark}
 import graft.functions.Similarity
 import graft.operators.Ann
 import graft.sources.VersionedParquetStore
@@ -16,7 +16,7 @@ import graft.sources.VersionedParquetStore
   * append is IDEMPOTENT under at-least-once replay — re-merging a
   * batch's scores leaves the store bit-identical because nDCG is a
   * pure function of (query, corpus, gold). */
-class StreamRetrievalEvalSpec extends AnyFunSuite {
+class StreamRetrievalEvalSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
@@ -59,8 +59,7 @@ class StreamRetrievalEvalSpec extends AnyFunSuite {
   }
 
   test("replayed batch is absorbed: store bit-identical after re-merge") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-w31-replay").toString
+    val tmp = tempDir("graft-w31-replay").toString
     val queries8 = em.filter(col("vec_id") < 5)
       .select(col("vec_id"), slice(col("embedding"), 1, 8).as("embedding"))
     queries8.coalesce(1).write.parquet(s"$tmp/in/b0")

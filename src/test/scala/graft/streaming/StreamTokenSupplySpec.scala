@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import graft.operators.Dedup
 import graft.sources.VersionedParquetStore
 
@@ -15,7 +15,7 @@ import graft.sources.VersionedParquetStore
   * batch against the existing stores leaves the supply
   * bit-identical even though the replayed delta itself differs (its
   * digests are now all indexed). */
-class StreamTokenSupplySpec extends AnyFunSuite {
+class StreamTokenSupplySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
@@ -31,8 +31,7 @@ class StreamTokenSupplySpec extends AnyFunSuite {
 
   test("streamed supply equals the batch table; replay is absorbed") {
     val docs = Tables.load(spark, dir, "documents")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-w32-spec").toString
+    val tmp = tempDir("graft-w32-spec").toString
     docs.select(col("doc_id"), col("source"), col("text"),
         lit(0L).as("bucket"))
       .coalesce(1).write.parquet(s"$tmp/in/b0")

@@ -1,21 +1,19 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 
 /** Drives the streaming transforms with a file source + memory sink and
   * checks they agree with the equivalent batch computation. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def stagedEvents(): (String, org.apache.spark.sql.DataFrame) = {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     batch.write.mode("overwrite").parquet(dir)
     (dir, batch)
   }
@@ -106,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming scrub plan matches the batch index probe (w12)") {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val dir = Files.createTempDirectory("graft-scrub").toString
+    val dir = tempDir("graft-scrub").toString
     batch.write.mode("overwrite").parquet(dir)
     val gramIndex = graft.operators.Dedup
       .wordShingles(batch.filter(col("doc_id") % 4 =!= 0), 12)
@@ -196,7 +194,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
-    val tmp = Files.createTempDirectory("graft-w15-spec").toString
+    val tmp = tempDir("graft-w15-spec").toString
     // TIME-ordered carve-up (day terciles): per-user order is
     // preserved across batches — the operator's ordered-ingest
     // contract — while most users straddle all three batches, so the
@@ -240,7 +238,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
-    val tmp = Files.createTempDirectory("graft-w16-spec").toString
+    val tmp = tempDir("graft-w16-spec").toString
     Seq((1, 10), (11, 20), (21, 31)).zipWithIndex.foreach { case ((lo, hi), i) =>
       batch.filter(dayofmonth(timestamp_micros(col("us"))).between(lo, hi))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in/b$i")
@@ -275,7 +273,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100, 0).cast("long").as("v_c"))
-    val tmp = Files.createTempDirectory("graft-w14-spec").toString
+    val tmp = tempDir("graft-w14-spec").toString
     // three uneven staged files -> three micro-batches; user overlap
     // across batches exercises the touched-key merge path every commit
     (0 to 2).foreach(i => batch.filter(col("event_id") % 3 === i)

@@ -1,17 +1,15 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 
 /** EventStream.tokenBudgetStream pinned on its cross-batch claim: the
   * per-source consumed-token state carries across micro-batches, so
   * admission decisions equal the batch window over arrival order NO
   * MATTER where the stream splits — per-doc equality, not aggregate. */
-class TokenBudgetStreamSpec extends AnyFunSuite {
+class TokenBudgetStreamSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("streaming admission == batch arrival-order window across micro-batches") {
@@ -19,7 +17,7 @@ class TokenBudgetStreamSpec extends AnyFunSuite {
     val batch = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("source"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
-    val tmp = Files.createTempDirectory("graft-w19-spec").toString
+    val tmp = tempDir("graft-w19-spec").toString
     // doc_id terciles: arrival order preserved, every source straddles
     // batches, so the budget must genuinely bind ACROSS a boundary
     val ids = batch.select(max(col("doc_id"))).collect()(0).getLong(0)
