@@ -6425,16 +6425,18 @@ object SparkEntry {
       // times the maintenance fold, store merges and snapshot commits
       val in = w14Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w14").toString
-      val schema = s.read.parquet(s"$in/in/b0").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$in/in/*")
-      val q = graft.streaming.EventStream.maintainAggSnapshot(
-        stream, s"$tmp/store", s"$tmp/ckpt", "user_id", "v_c")
-      q.awaitTermination()
-      graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
-        .orderBy("user_id")
+      try {
+        val schema = s.read.parquet(s"$in/in/b0").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$in/in/*")
+        val q = graft.streaming.EventStream.maintainAggSnapshot(
+          stream, s"$tmp/store", s"$tmp/ckpt", "user_id", "v_c")
+        q.awaitTermination()
+        materialized(s, graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
+          .orderBy("user_id"))
+      } finally rmTree(new java.io.File(tmp))
     },
       Some("""SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS sum_c,
@@ -9496,17 +9498,20 @@ object SparkEntry {
       // input batches staged (arrival fixtures note)
       val in = w24Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w24").toString
-      val schema = s.read.parquet(s"$in/in/b0").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$in/in/*")
-      val q = graft.streaming.EventStream.maintainAggSnapshot(
-        stream, s"$tmp/store", s"$tmp/ckpt", "user_id", "v_c")
-      q.awaitTermination()
-      val sizes = graft.sources.VersionedParquetStore.read(s, s"$tmp/store")
-        .get.select(col("user_id"), col("n").as("n_rows"))
-      SkewSalt.skewAuditFromSizes(sizes, Seq("user_id"), 10).orderBy("rank")
+      try {
+        val schema = s.read.parquet(s"$in/in/b0").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$in/in/*")
+        val q = graft.streaming.EventStream.maintainAggSnapshot(
+          stream, s"$tmp/store", s"$tmp/ckpt", "user_id", "v_c")
+        q.awaitTermination()
+        val sizes = graft.sources.VersionedParquetStore.read(s, s"$tmp/store")
+          .get.select(col("user_id"), col("n").as("n_rows"))
+        materialized(s,
+          SkewSalt.skewAuditFromSizes(sizes, Seq("user_id"), 10).orderBy("rank"))
+      } finally rmTree(new java.io.File(tmp))
     },
       Some(skewAuditOracleSql)),
 
@@ -11384,17 +11389,19 @@ object SparkEntry {
       // (arrival fixtures note)
       val in = w25w26Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w25").toString
-      val schema = s.read.parquet(s"$in/in/b0").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$in/in/*")
-      val q = graft.streaming.EventStream.maintainAggSnapshot(
-        stream, s"$tmp/store", s"$tmp/ckpt", "day", "one")
-      q.awaitTermination()
-      changepointDailyTail(
-        graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
-          .select(col("day"), col("n").as("x")))
+      try {
+        val schema = s.read.parquet(s"$in/in/b0").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$in/in/*")
+        val q = graft.streaming.EventStream.maintainAggSnapshot(
+          stream, s"$tmp/store", s"$tmp/ckpt", "day", "one")
+        q.awaitTermination()
+        materialized(s, changepointDailyTail(
+          graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
+            .select(col("day"), col("n").as("x"))))
+      } finally rmTree(new java.io.File(tmp))
     },
       Some(changepointOracleSql)),
 
@@ -11513,17 +11520,19 @@ object SparkEntry {
       // input batches staged, SHARED with w25 — identical seeding body
       val in = w25w26Inputs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w26").toString
-      val schema = s.read.parquet(s"$in/in/b0").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$in/in/*")
-      val q = graft.streaming.EventStream.maintainAggSnapshot(
-        stream, s"$tmp/store", s"$tmp/ckpt", "day", "one")
-      q.awaitTermination()
-      changepointsDailyTail(
-        graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
-          .select(col("day"), col("n").as("x")))
+      try {
+        val schema = s.read.parquet(s"$in/in/b0").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$in/in/*")
+        val q = graft.streaming.EventStream.maintainAggSnapshot(
+          stream, s"$tmp/store", s"$tmp/ckpt", "day", "one")
+        q.awaitTermination()
+        materialized(s, changepointsDailyTail(
+          graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
+            .select(col("day"), col("n").as("x"))))
+      } finally rmTree(new java.io.File(tmp))
     },
       Some(changepointsOracleSql)),
 
@@ -11631,20 +11640,22 @@ object SparkEntry {
       // the ingest MUTATES the store, so its seed stays per-call; only
       // the read-only arrival batches stage (arrival fixtures note)
       val tmp = java.nio.file.Files.createTempDirectory("graft-w28").toString
-      graft.sources.VersionedParquetStore.merge(s, s"$tmp/store",
-        Ann.clusterAssignment(stored, cb), "vec_id",
-        combine = (cur, d) => cur.unionByName(d))
-      val in = w28Inputs(s, dir)
-      val schema = s.read.parquet(s"$in/in/b0").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"$in/in/*")
-      val q = graft.streaming.EventStream.maintainMembershipStore(
-        stream, cb, s"$tmp/store", s"$tmp/ckpt")
-      q.awaitTermination()
-      graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
-        .orderBy("vec_id")
+      try {
+        graft.sources.VersionedParquetStore.merge(s, s"$tmp/store",
+          Ann.clusterAssignment(stored, cb), "vec_id",
+          combine = (cur, d) => cur.unionByName(d))
+        val in = w28Inputs(s, dir)
+        val schema = s.read.parquet(s"$in/in/b0").schema
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(s"$in/in/*")
+        val q = graft.streaming.EventStream.maintainMembershipStore(
+          stream, cb, s"$tmp/store", s"$tmp/ckpt")
+        q.awaitTermination()
+        materialized(s, graft.sources.VersionedParquetStore.read(s, s"$tmp/store").get
+          .orderBy("vec_id"))
+      } finally rmTree(new java.io.File(tmp))
     },
       Some(s"""WITH ${GateFixtures.kmeansMemberCtesTrainedOn("vec_id % 4 <> 0")}
            SELECT vec_id, cluster FROM member ORDER BY vec_id""")),

@@ -4,26 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Interpolation, TriangularRolling}
+import graft.functions.ActivityPass
 
 /** The reference's E1 dataflow (main.py:19-181) as ONE declarative
   * Spark job over all users/activities at once, instead of a
   * one-activity-at-a-time Python loop:
   *
-  *   streams(long form) -> dense second spine (R2) -> LEFT JOIN (R3)
-  *   -> linear interpolation (R4) -> latlng stringify (P6)
-  *   -> 11x3 triangular rolling maxima (A3/A4) -> negative-to-null (P8)
-  *   -> nested row assembly (R6/R7) + timestamp clamp (P4)
+  *   streams(long form) -> tag R5 bypass -> latlng stringify (P6)
+  *   -> groupBy(activity_id) + collect_list(sample)
+  *   -> ActivityPass, one walk per activity: dense second spine
+  *      (R2/R3) -> linear interpolation (R4) -> 11x3 triangular rolling
+  *      maxima (A3/A4) -> negative-to-null (P8) -> nested streams (R6)
+  *   -> row assembly (R7) + timestamp clamp (P4)
   *
-  * Every per-activity stage is a window/groupBy partitioned by
-  * activity_id — at 100 TB the job is one shuffle on activity_id,
-  * reused by the spine join, interpolation windows, rolling windows and
-  * the final nesting (Catalyst plans them over one sort where frames
-  * align). No driver-side loops, and no stage does more than linear
-  * work per activity: interpolation is a running `last` frame plus a
-  * frameless `lead(.., ignoreNulls)` per channel (no
-  * `unboundedFollowing` frame, which would be quadratic in activity
-  * length).
+  * The per-activity work is one shuffle on activity_id and then one
+  * in-row expression per activity ([[graft.functions.ActivityPass]]),
+  * linear in the activity's dense length: no window operator, no
+  * Generate, no driver-side loop. The window-chain stages
+  * [[tagStreams]], [[densify]], [[graft.operators.Interpolation]] and
+  * [[graft.operators.TriangularRolling]] remain the library operators
+  * that the a3/a4/a5/r3 gates, the ActivityPass equivalence spec and
+  * the benchmark's traced layers run.
   *
   * Two semantic modes (SURVEY §1.4):
   *  - corrected (default): honest field mapping, per-window NaN
@@ -40,6 +41,10 @@ object ActivityPipeline {
   private val rollChannels = Seq(
     ("heartrate", "hr"), ("watts", "power"), ("velocity_smooth", "speed"))
 
+  /** The interpolated channels in sink order (main.py:71). */
+  private val nestChannels =
+    StravaSchemas.includeList.filter(StravaSchemas.numericChannels.contains)
+
   /** @param activities cleaned activity records (CleanActivities.clean)
     * @param streams    long-form samples (StravaSchemas.streamSample)
     * @param nowEpoch   injected clock for the clamp + timenow fields
@@ -51,34 +56,37 @@ object ActivityPipeline {
     */
   def process(activities: DataFrame, streams: DataFrame, nowEpoch: Long,
               legacyCompat: Boolean = false,
-              dualMaxs: Boolean = false): DataFrame = {
-    val tagged = tagStreams(activities, streams)
+              dualMaxs: Boolean = false): DataFrame =
+    assemble(activities, nested(tagStreams(activities, streams),
+      legacyCompat, dualMaxs), nowEpoch, legacyCompat, dualMaxs)
 
-    // A3: the rolling columns ride the SAME frame that feeds nesting,
-    // and the whole chain (densify -> interpolate -> rolling -> nest)
-    // is ONE dataflow with a single consumer at every step — Catalyst
-    // recomputes nothing, and every window/groupBy shares the one
-    // activity_id exchange. Bypass activities keep raw values
-    // (interpolation passthrough) and are masked out of the maxima.
-    val densified = densify(tagged)
-    val interp = Interpolation.interpolate(densified,
-      Seq("activity_id"), "time_key", StravaSchemas.numericChannels,
-      passthrough = Some(col("__bypass")))
-      .withColumn("time_new", col("time_key"))
-    val withRolls = TriangularRolling.triangMeansFast(
-      interp, Seq("activity_id"), Seq("time_new"),
-      rollChannels.map(_._1), StravaSchemas.rollingWindows)
-    val samples = withRolls.withColumn("latlng_str", latlngString(col("latlng")))
-
-    assemble(activities, nestAndMax(samples, legacyCompat, dualMaxs),
-      nowEpoch, legacyCompat, dualMaxs)
+  /** R2-R7 for every activity of `tagged` (see [[tagStreams]]):
+    * activity_id, the nested `streams` array and the `max_*` columns
+    * (plus `maxleg_*` under dualMaxs) from one
+    * [[graft.functions.ActivityPass]] call per activity. The P6 latlng
+    * string is a Spark projection on the sample rows, so its
+    * double-to-string cast is Spark's. */
+  private[graft] def nested(tagged: DataFrame, legacyCompat: Boolean,
+                            dualMaxs: Boolean): DataFrame = {
+    val sample = struct(col("time").cast("long").as("time_new") +:
+      nestChannels.map(c => col(c).cast("double").as(c)) :+
+      latlngString(col("latlng")).as("latlng"): _*)
+    val sets = if (dualMaxs) Seq(false, true) else Seq(legacyCompat)
+    val names = maxColNames("max_") ++ (if (dualMaxs) maxColNames("maxleg_") else Nil)
+    val pass = ActivityPass.of(col("__samples"), col("__bypass"),
+      rollChannels.map { case (ch, _) => nestChannels.indexOf(ch) },
+      StravaSchemas.rollingWindows, sets)
+    tagged.groupBy("activity_id")
+      .agg(collect_list(sample).as("__samples"), max("__bypass").as("__bypass"))
+      .select(col("activity_id"), pass.as("__pass"))
+      .select(col("activity_id") +: col("__pass.streams").as("streams") +:
+        names.zipWithIndex.map { case (n, i) => col("__pass.maxima")(i).as(n) }: _*)
   }
 
   /** Streams joined to activity meta with the R5 bypass as a per-row
     * flag instead of a filter-split + union: splitting evaluated the
     * joined stream corpus once per branch — at 100 TB that is scanning
-    * the biggest input twice. (private[graft] so the stage profiler
-    * drives the REAL stages instead of drifting copies.) */
+    * the biggest input twice. */
   private[graft] def tagStreams(activities: DataFrame, streams: DataFrame): DataFrame =
     streams.join(activities.select(col("activity_id"), col("elapsed_time")),
         Seq("activity_id"))
@@ -92,7 +100,10 @@ object ActivityPipeline {
     * gap rows, exactly the rows the old dense-spine LEFT JOIN
     * produced. One window over the activity_id exchange replaces a
     * groupBy + explode + shuffle join, and the stream corpus is
-    * evaluated ONCE. Bypass rows (R5) emit only themselves. */
+    * evaluated ONCE. Bypass rows (R5) emit only themselves.
+    * `process` densifies inside [[graft.functions.ActivityPass]]; this
+    * window form stays as the reference the ActivityPass equivalence
+    * spec compares against and as a layer the benchmark traces. */
   private[graft] def densify(tagged: DataFrame): DataFrame = {
     val w = Window.partitionBy("activity_id").orderBy("time")
     val prev = lag(col("time"), 1).over(w)
@@ -119,63 +130,6 @@ object ActivityPipeline {
       element_at(latlng, 1).cast("string"), lit(", "),
       element_at(latlng, 2).cast("string"), lit("]")))
 
-  /** R6 + A4 + P8 in ONE aggregation: the ordered array-of-structs
-    * nesting AND the per-window rolling maxima come out of a single
-    * groupBy(activity_id) pass — one shuffle, one consumer of the
-    * upstream interpolation chain. The rolling columns (A3) were
-    * computed on the way in by the O(1)-per-row ring-buffer kernel
-    * (TriangularRolling.triangMeansFast), one Window operator for all
-    * 33 columns; with windows up to 1200 rows the collect-the-frame
-    * kernel would do 1200x the work per row. */
-  private def maxAggsFor(legacy: Boolean, prefix: String): Seq[Column] = for {
-    (ch, short) <- rollChannels
-    i <- StravaSchemas.rollingWindows
-  } yield {
-    // R5: bypass activities never get rolling maxima — their tri
-    // columns are masked out, so max() aggregates nothing -> null.
-    val m = max(when(!col("__bypass"), col(s"tri_${ch}_$i")))
-    val base = if (legacy) {
-      // pandas drops a column from rolling entirely once replace()
-      // turned it to object dtype (any null) -> null for all windows.
-      val poisoned = max(when(col(ch).isNull, 1).otherwise(0)) === 1
-      when(poisoned, lit(null).cast("double")).otherwise(m)
-    } else m
-    // P8 (main.py:109-117): negative maxima -> null.
-    when(base >= 0, base).as(s"$prefix${short}_$i")
-  }
-
-  private def nestAndMax(samples: DataFrame, legacyCompat: Boolean,
-                         dualMaxs: Boolean): DataFrame = {
-    val sortKey = struct(col("time_new"), struct(
-      col("watts"), col("cadence"), col("heartrate"), col("altitude"),
-      col("temp"), col("velocity_smooth"), col("grade_smooth"),
-      col("distance"), col("latlng_str")).as("v"))
-
-    // dual mode rides BOTH variants on the one groupBy — aggregates are
-    // per-group state, so the extra set costs arithmetic, not a pass.
-    val maxAggs =
-      if (dualMaxs) maxAggsFor(legacy = false, "max_") ++
-        maxAggsFor(legacy = true, "maxleg_")
-      else maxAggsFor(legacyCompat, "max_")
-
-    samples.groupBy("activity_id")
-      .agg(array_sort(collect_list(sortKey)).as("__sorted"), maxAggs: _*)
-      .select(Seq(col("activity_id"),
-        transform(col("__sorted"), x => struct(
-          x.getField("v").getField("watts").as("watts"),
-          x.getField("v").getField("cadence").as("cadence"),
-          x.getField("v").getField("heartrate").as("heartrate"),
-          x.getField("v").getField("altitude").as("altitude"),
-          x.getField("v").getField("temp").as("temp"),
-          x.getField("v").getField("velocity_smooth").as("velocity_smooth"),
-          x.getField("v").getField("grade_smooth").as("grade_smooth"),
-          x.getField("v").getField("distance").as("distance"),
-          x.getField("v").getField("latlng_str").as("latlng"),
-          x.getField("time_new").as("time_new"))).as("streams")) ++
-        (maxColNames("max_") ++
-          (if (dualMaxs) maxColNames("maxleg_") else Nil)).map(col): _*)
-  }
-
   private def maxColNames(prefix: String): Seq[String] = for {
     (_, short) <- rollChannels
     i <- StravaSchemas.rollingWindows
@@ -183,9 +137,9 @@ object ActivityPipeline {
 
   /** Row assembly (main.py:142-178) incl. the 5-year clamp (P4) and the
     * legacy quirk projection. */
-  private def assemble(activities: DataFrame, nestedMaxs: DataFrame,
-                       nowEpoch: Long, legacyCompat: Boolean,
-                       dualMaxs: Boolean = false): DataFrame = {
+  private[graft] def assemble(activities: DataFrame, nestedMaxs: DataFrame,
+                              nowEpoch: Long, legacyCompat: Boolean,
+                              dualMaxs: Boolean = false): DataFrame = {
     val fiveYears = 157680000L
     val clamped = when(lit(nowEpoch) - col("epoch") > fiveYears,
       date_format(from_unixtime(lit(nowEpoch - fiveYears + 86400)),

@@ -8,9 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Sliding-window state for [[TriangRollingKahan]]: a ring buffer of
-  * the last `n` values plus Neumaier-compensated running sums of the
-  * three sliding pieces —
+/** The one trailing triangular rolling mean: [[push]] slides a value
+  * in, [[mean]] reads the window. The window aggregate
+  * [[TriangRollingKahan]] and the per-activity ETL kernel
+  * [[ActivityPass]] both run it, so their rolling columns agree bit for
+  * bit. State: a ring buffer of the last `n` values plus
+  * Neumaier-compensated running sums of the three sliding pieces —
   *
   *   W = the triangular-WEIGHTED window sum,
   *   A = the plain sum of the window's RISING half (positions 1..m),
@@ -47,6 +50,79 @@ final class TriangKahanState(val n: Int) {
   var w = 0.0; var wc = 0.0
   var a = 0.0; var ac = 0.0
   var b = 0.0; var bc = 0.0
+
+  private lazy val weightSum: Double =
+    graft.operators.TriangularRolling.weights(n).sum
+
+  /** Neumaier compensated add of `x` into sum `which` (0 = W, 1 = A,
+    * 2 = B) and its compensation. */
+  @inline private def kadd(which: Int, x: Double): Unit = {
+    val (sv, cv) = which match {
+      case 0 => (w, wc); case 1 => (a, ac); case _ => (b, bc)
+    }
+    val t = sv + x
+    val nc = cv + (if (math.abs(sv) >= math.abs(x)) (sv - t) + x
+                   else (x - t) + sv)
+    which match {
+      case 0 => w = t; wc = nc
+      case 1 => a = t; ac = nc
+      case _ => b = t; bc = nc
+    }
+  }
+
+  /** NaN-sanitized value: poisoned entries ride the nan counter, not
+    * the sums (a NaN inside W could never be subtracted back out). */
+  @inline private def san(x: Double): Double = if (x.isNaN) 0.0 else x
+
+  /** Slides the next row's value into the window; null enters as NaN. */
+  def push(x: Double): Unit = {
+    val slot = (count % n).toInt // overwrites the leaver once full
+    if (count >= n) {
+      // previous window = positions 1..n; position p sits at ring
+      // slot (count - n + p - 1) % n; the leaver (p=1) is `slot`.
+      val o = ring(slot)
+      // old position m+1 — the value crossing from falling to rising
+      // as the window slides; at n=1 (m+1 > n) the arrival itself
+      // enters the rising part directly
+      val v = if (m < n) ring(((count - n + m) % n).toInt) else x
+      val oS = san(o); val vS = san(v); val xS = san(x)
+      val aVal = a + ac
+      val bVal = b + bc
+      if (n % 2 == 1) { // W' = W - A + B + x
+        kadd(0, -aVal); kadd(0, bVal); kadd(0, xS)
+      } else { // W' = W + o - 2A + 2B - 2v + x
+        kadd(0, oS); kadd(0, -2.0 * aVal); kadd(0, 2.0 * bVal)
+        kadd(0, -2.0 * vS); kadd(0, xS)
+      }
+      kadd(1, -oS); kadd(1, vS) // A' = A - o + v
+      kadd(2, -vS); kadd(2, xS) // B' = B - v + x
+      if (o.isNaN) nanIn -= 1
+      if (x.isNaN) nanIn += 1
+      ring(slot) = x
+      count += 1
+    } else {
+      if (x.isNaN) nanIn += 1
+      ring(slot) = x
+      count += 1
+      if (count == n) { // first full window: one exact O(n) pass
+        w = 0.0; wc = 0.0; a = 0.0; ac = 0.0; b = 0.0; bc = 0.0
+        val wts = graft.operators.TriangularRolling.weights(n)
+        var p = 1
+        while (p <= n) {
+          val value = san(ring(p - 1)) // count==n: position p = slot p-1
+          kadd(0, value * wts(p - 1))
+          if (p <= m) kadd(1, value) else kadd(2, value)
+          p += 1
+        }
+      }
+    }
+  }
+
+  /** The triangular mean of the current window; NaN stands for null
+    * (fewer than `n` rows so far, or a NaN/null inside the window). */
+  def mean: Double =
+    if (count < n || nanIn > 0) Double.NaN
+    else (w + wc) / weightSum
 }
 
 /** Trailing triangular-weighted rolling MEAN over the last `n` rows as
@@ -71,74 +147,12 @@ case class TriangRollingKahan(
 
   require(n >= 1, s"window must be >= 1 (got $n)")
 
-  private val weightSum: Double =
-    graft.operators.TriangularRolling.weights(n).sum
-
   override def createAggregationBuffer(): TriangKahanState =
     new TriangKahanState(n)
 
-  /** Neumaier compensated add of `x` into (s._1 = sum, s._2 = comp). */
-  @inline private def kadd(s: TriangKahanState, which: Int, x: Double): Unit = {
-    val (sv, cv) = which match {
-      case 0 => (s.w, s.wc); case 1 => (s.a, s.ac); case _ => (s.b, s.bc)
-    }
-    val t = sv + x
-    val nc = cv + (if (math.abs(sv) >= math.abs(x)) (sv - t) + x
-                   else (x - t) + sv)
-    which match {
-      case 0 => s.w = t; s.wc = nc
-      case 1 => s.a = t; s.ac = nc
-      case _ => s.b = t; s.bc = nc
-    }
-  }
-
-  /** NaN-sanitized value: poisoned entries ride the nan counter, not
-    * the sums (a NaN inside W could never be subtracted back out). */
-  @inline private def san(x: Double): Double = if (x.isNaN) 0.0 else x
-
   override def update(s: TriangKahanState, input: InternalRow): TriangKahanState = {
     val raw = child.eval(input)
-    val x = if (raw == null) Double.NaN else raw.asInstanceOf[Double]
-    val slot = (s.count % n).toInt // overwrites the leaver once full
-    if (s.count >= n) {
-      // previous window = positions 1..n; position p sits at ring
-      // slot (count - n + p - 1) % n; the leaver (p=1) is `slot`.
-      val o = s.ring(slot)
-      // old position m+1 — the value crossing from falling to rising
-      // as the window slides; at n=1 (m+1 > n) the arrival itself
-      // enters the rising part directly
-      val v = if (s.m < n) s.ring(((s.count - n + s.m) % n).toInt) else x
-      val oS = san(o); val vS = san(v); val xS = san(x)
-      val aVal = s.a + s.ac
-      val bVal = s.b + s.bc
-      if (n % 2 == 1) { // W' = W - A + B + x
-        kadd(s, 0, -aVal); kadd(s, 0, bVal); kadd(s, 0, xS)
-      } else { // W' = W + o - 2A + 2B - 2v + x
-        kadd(s, 0, oS); kadd(s, 0, -2.0 * aVal); kadd(s, 0, 2.0 * bVal)
-        kadd(s, 0, -2.0 * vS); kadd(s, 0, xS)
-      }
-      kadd(s, 1, -oS); kadd(s, 1, vS) // A' = A - o + v
-      kadd(s, 2, -vS); kadd(s, 2, xS) // B' = B - v + x
-      if (o.isNaN) s.nanIn -= 1
-      if (x.isNaN) s.nanIn += 1
-      s.ring(slot) = x
-      s.count += 1
-    } else {
-      if (x.isNaN) s.nanIn += 1
-      s.ring(slot) = x
-      s.count += 1
-      if (s.count == n) { // first full window: one exact O(n) pass
-        s.w = 0.0; s.wc = 0.0; s.a = 0.0; s.ac = 0.0; s.b = 0.0; s.bc = 0.0
-        val wts = graft.operators.TriangularRolling.weights(n)
-        var p = 1
-        while (p <= n) {
-          val value = san(s.ring(p - 1)) // count==n: position p = slot p-1
-          kadd(s, 0, value * wts(p - 1))
-          if (p <= s.m) kadd(s, 1, value) else kadd(s, 2, value)
-          p += 1
-        }
-      }
-    }
+    s.push(if (raw == null) Double.NaN else raw.asInstanceOf[Double])
     s
   }
 
@@ -150,12 +164,10 @@ case class TriangRollingKahan(
         "has no partial-aggregation merge; use it over an ordered " +
         "running frame")
 
-  override def eval(s: TriangKahanState): Any =
-    if (s.count < n || s.nanIn > 0) null
-    else {
-      val mean = (s.w + s.wc) / weightSum
-      if (mean.isNaN) null else mean
-    }
+  override def eval(s: TriangKahanState): Any = {
+    val mean = s.mean
+    if (mean.isNaN) null else mean
+  }
 
   override def serialize(s: TriangKahanState): Array[Byte] = {
     val bos = new ByteArrayOutputStream()

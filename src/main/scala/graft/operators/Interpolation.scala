@@ -33,6 +33,11 @@ import org.apache.spark.sql.functions._
   * to the partition end: quadratic in the series length). No
   * driver-side collection; at 100 TB the cost is one exchange on the
   * partition keys, which any per-key ordered operator needs anyway.
+  *
+  * The ETL pipeline interpolates inside
+  * [[graft.functions.ActivityPass]] with the same expression; this
+  * operator serves the r3 gate and other callers, and is the reference
+  * the ActivityPass equivalence spec compares against.
   */
 object Interpolation {
 

@@ -30,6 +30,11 @@ import org.apache.spark.sql.functions._
   *
   * All (channel, window) columns over one window spec share one
   * partition exchange, one sort and one Window operator.
+  *
+  * The ETL pipeline rolls inside [[graft.functions.ActivityPass]],
+  * which runs the same [[graft.functions.TriangKahanState]]; these
+  * operators serve the a3/a4/a5 gates and are the reference the
+  * ActivityPass equivalence spec compares against.
   */
 object TriangularRolling {
 

@@ -16,6 +16,10 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The error Spark's `/` raises on a zero divisor under ANSI mode. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** The analyzed logical plan behind a DataFrame. */
   def plan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

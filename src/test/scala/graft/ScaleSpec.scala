@@ -266,6 +266,20 @@ class CacheLifecycleSpec extends AnyFunSuite {
       s"orphaned staging dirs: ${graftDirs -- before}")
     SparkEntry.clearCaches(spark)
   }
+
+  test("store gates w14/w24/w25/w26/w28 delete their per-call directory") {
+    SparkEntry.clearCaches(spark) // the session exists before the listing
+    val dir = "/root/testdata/sf0.001"
+    val gates = Seq("w14_stream_agg_maintenance", "w24_stream_skew",
+      "w25_stream_changepoint", "w26_stream_changepoints", "w28_stream_ann_ingest")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def gateDirs = Option(tmp.list).map(_.toSet).getOrElse(Set.empty)
+      .filter(n => Seq("w14", "w24", "w25", "w26", "w28").exists(g => n.startsWith(s"graft-$g")))
+    val before = gateDirs
+    gates.foreach(g => assert(SparkEntry.queries(g)(spark, dir).collect().nonEmpty, g))
+    SparkEntry.clearCaches(spark) // releases the staged arrival batches
+    assert((gateDirs -- before).isEmpty, s"left behind: ${gateDirs -- before}")
+  }
 }
 
 class PlanShapeSpec extends AnyFunSuite {

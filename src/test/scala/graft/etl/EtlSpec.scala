@@ -108,64 +108,68 @@ class ActivityPipelineSpec extends AnyFunSuite {
       s"flagship ETL plan grew to $shuffles shuffle exchanges:\n$plan")
   }
 
-  test("pipeline plan: 33 rolling columns in ONE O(1) Window, no prefix-sum lags") {
-    // the 11 windows x 3 channels ride the ring-buffer window aggregate
-    // in one Window operator over the shared activity_id sort; a
-    // difference-of-prefix-sums kernel would add two Window operators
-    // and ~165 lag() expressions over its running sums. Counted on the
-    // plan tree: the plan string elides long expression lists.
-    import org.apache.spark.sql.catalyst.expressions.Lag
+  private val modes = Seq(
+    (false, false, Seq(false)), (true, false, Seq(true)), (false, true, Seq(false, true)))
+
+  private def planOf(legacy: Boolean, dual: Boolean) =
+    ActivityPipeline.process(activities(), streams(), nowEpoch,
+      legacyCompat = legacy, dualMaxs = dual).queryExecution
+
+  test("pipeline plan: no Window and no Generate") {
+    // densify, interpolate, the 33 rolling maxima and the nesting run
+    // inside the in-row ActivityPass over each activity's collected
+    // samples: a WindowExec or a Generate here means a stage went back
+    // to the window chain (three Window operators and a spine explode).
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.window.WindowExec
-    for (dual <- Seq(false, true)) {
-      val windows = ActivityPipeline.process(activities(), streams(), nowEpoch,
-        dualMaxs = dual).queryExecution.sparkPlan.collect { case w: WindowExec => w }
-      val exprs = windows.flatMap(_.windowExpression)
-      val rolling = exprs.flatMap(_.collect {
-        case k: graft.functions.TriangRollingKahan => k })
-      assert(rolling.length == 33,
-        s"dualMaxs=$dual: ${rolling.length} triang_rolling_kahan columns")
-      assert(windows.count(_.windowExpression.exists(_.exists(
-        _.isInstanceOf[graft.functions.TriangRollingKahan]))) == 1,
-        s"dualMaxs=$dual: rolling columns split across Window operators")
-      val prefixLags = exprs.flatMap(_.collect {
-        case l: Lag if l.input.references.exists(a =>
-          Seq("__c_", "__d_", "__nc_").exists(a.name.startsWith)) => l })
-      assert(prefixLags.isEmpty,
-        s"dualMaxs=$dual: ${prefixLags.length} lags over prefix sums")
-      assert(windows.length <= 3,
-        s"dualMaxs=$dual: ${windows.length} Window operators:\n" +
-          windows.map(_.simpleString(200)).mkString("\n"))
+    for ((legacy, dual, _) <- modes) {
+      val qe = planOf(legacy, dual)
+      val mode = s"legacyCompat=$legacy dualMaxs=$dual"
+      assert(qe.sparkPlan.collect { case w: WindowExec => w }.isEmpty,
+        s"$mode: Window operator in the pipeline:\n${qe.sparkPlan}")
+      assert(qe.sparkPlan.collect { case g: GenerateExec => g }.isEmpty &&
+        qe.optimizedPlan.collect { case g: Generate => g }.isEmpty,
+        s"$mode: Generate in the pipeline:\n${qe.sparkPlan}")
     }
   }
 
-  test("pipeline plan: ONE interpolation chain — spine explode appears once") {
-    // The densify+interpolate subtree must have a single consumer: if the
-    // nesting and rolling-maxima branches split before it, Catalyst
-    // recomputes the whole chain per branch and the flagship stage
-    // doubles at scale. The spine `explode(sequence(...))` is the
-    // cheapest unique marker of that subtree in the plan.
-    val plan = ActivityPipeline.process(activities(), streams(), nowEpoch)
-      .queryExecution.optimizedPlan
-    val generates = plan.collect {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+  test("pipeline plan: ONE ActivityPass, both maxima sets") {
+    // one kernel call on the activity_id aggregate carries every maxima
+    // set: a second call (CollapseProject inlining it into each of the
+    // 67 output columns, or one call per set) would redo the whole
+    // per-activity pass. Counted on the plan tree: the plan string
+    // elides long expression lists.
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.functions.ActivityPass
+    for ((legacy, dual, sets) <- modes) {
+      val plan = planOf(legacy, dual).sparkPlan
+      val mode = s"legacyCompat=$legacy dualMaxs=$dual"
+      val passes = plan.flatMap(_.expressions.flatMap(_.collect {
+        case p: ActivityPass => p }))
+      assert(passes.length == 1,
+        s"$mode: ${passes.length} activity_pass calls:\n$plan")
+      assert(passes.head.legacySets == sets, s"$mode: ${passes.head.legacySets}")
+      // per activity: on the activity_id aggregate or directly above it
+      val host = plan.find(_.expressions.exists(_.exists(_.isInstanceOf[ActivityPass]))).get
+      val agg = (host +: host.children).collectFirst { case a: BaseAggregateExec => a }
+      assert(agg.exists(_.groupingExpressions.map(_.name) == Seq("activity_id")),
+        s"$mode: activity_pass is not evaluated per activity:\n$plan")
     }
-    assert(generates.length == 1,
-      s"spine explode duplicated ${generates.length}x — interpolation subtree has >1 consumer")
   }
 
   test("dualMaxs: one pipeline pass, legacy array == legacyCompat run") {
     val dual = ActivityPipeline.process(activities(), streams(), nowEpoch,
       dualMaxs = true)
     // the extra aggregate set must not cost a pass: still ONE hash
-    // exchange and ONE spine explode (same pins as the flagship plan)
+    // exchange and ONE ActivityPass call (same pins as the flagship plan)
     val plan = dual.queryExecution.executedPlan.toString
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(shuffles == 1, s"dualMaxs grew to $shuffles exchanges:\n$plan")
-    val generates = dual.queryExecution.optimizedPlan.collect {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-    }
-    assert(generates.length == 1,
-      s"dualMaxs duplicated the spine explode ${generates.length}x")
+    val passes = dual.queryExecution.sparkPlan.flatMap(_.expressions.flatMap(
+      _.collect { case p: graft.functions.ActivityPass => p }))
+    assert(passes.length == 1,
+      s"dualMaxs split into ${passes.length} activity_pass calls")
     // and maxs_legacy must be bit-identical to a legacyCompat run's maxs
     val legacyRef = ActivityPipeline
       .process(activities(), streams(), nowEpoch, legacyCompat = true)
