@@ -388,11 +388,24 @@ object Bench {
     neverEver ++ rotateUnmeasuredFirst(rest, latest)
   }
 
+  /** The session every timed main measures in (Bench, its
+    * [[tools.HeavyRunner]] forks and [[tools.OneQuery]]):
+    * `local[SPARK_GRAFT_CPUS]` (default 32), 32 shuffle partitions, AQE
+    * on, UTC, no UI. */
+  def timedSession(appName: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
     val loadStart = loadAvg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val heavyCopies = sys.env.getOrElse("SPARK_GRAFT_HEAVY", "10").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "900").toDouble
     // HEAVY RESERVE (round 11): the round-10 driver artifact measured
@@ -419,14 +432,7 @@ object Bench {
     val lightBudgetSec = math.max(budgetSec - heavyReserveSec, budgetSec * 0.3)
     def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
     def remainingSec: Double = budgetSec - elapsedSec
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = timedSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     val failed = scala.collection.mutable.ListBuffer[String]()

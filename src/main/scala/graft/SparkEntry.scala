@@ -14323,16 +14323,4 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.collect { case (name, _, Some(sql)) => name -> sql }.toMap +
       ("e1_pipeline_nested" -> e1OracleSql)
-
-  /** Headline queries for Bench (a representative cross-section). */
-  val benchNames: Seq[String] = Seq(
-    "q01_pricing_summary", "s3_watermark", "r3_spine_join", "r4_interpolate",
-    "a3_rolling_triang", "r6_nest_series", "j1_join_revenue", "j4_asof_join",
-    "w1_sessionize", "d2_minhash_sig", "d3_lsh_pairs", "n1_ann_topk",
-    "t1_text_stats", "t4_fingerprint",
-    // round-5 representatives: the composed dedup job, the broadcast-
-    // sketch prefilter, the mergeable-sketch family, and the
-    // custom-physical top-k
-    "e6_dedup_pipeline", "d17_bloom_decontaminate", "g15_cms_counts",
-    "n9_ann_topk_local")
 }

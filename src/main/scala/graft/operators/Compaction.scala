@@ -184,24 +184,14 @@ object Compaction {
   }
 
   /** The pre-write exchange for the dynamic-partition snapshot writes,
-    * width governed by `spark.graft.compaction.writeParts`:
-    * "session" (default) pins the session's shuffle parallelism,
-    * "bare" leaves a bare `repartition(col)` (AQE's advisory then
-    * coalesces the exchange — the measured serialized-writer shape:
-    * 363 buckets folded into ONE task at sf0.1), and an integer pins
-    * that count. The knob exists so the width choice is A/B-able
-    * under identical load (round-17 quiet receipts in
-    * OPTIMIZATION_r17.md §e18); one file per bucket holds for ANY
-    * width because hash partitioning sends a bucket wholly to one
-    * task. */
+    * pinned to the session's shuffle parallelism: a bare
+    * `repartition(col)` lets AQE's advisory coalesce the exchange, which
+    * folded 363 buckets into ONE writer task at sf0.1. Hash partitioning
+    * sends a bucket wholly to one task, so every width still writes one
+    * file per bucket. */
   private def writeParted(spark: SparkSession,
                           df: DataFrame): DataFrame =
-    spark.conf.get("spark.graft.compaction.writeParts", "session") match {
-      case "session" => df.repartition(
-        spark.sessionState.conf.numShufflePartitions, col("bucket"))
-      case "bare" => df.repartition(col("bucket"))
-      case n => df.repartition(n.toInt, col("bucket"))
-    }
+    df.repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
 
   /** INCREMENTAL compaction — [[applyPlan]]'s action made SELECTIVE
     * (the d15/n10/n25 decision→action incrementality applied to the

@@ -39,7 +39,8 @@ import graft.{HeavyData, SparkEntry, Tables}
   * sampled at run START and END is the in-artifact adjudicator for an
   * anomalous wall: a ctxt-switch delta that scales with the cpu-second
   * tail says contended cores inflated cpu-time, a flat delta says the
-  * work itself grew (escalate to SPARK_GRAFT_EXPLAIN).
+  * work itself grew (escalate to [[OneQuery]]'s stage receipts and
+  * final plan).
   */
 object HeavyRunner {
 
@@ -139,7 +140,7 @@ object HeavyRunner {
           em, graft.operators.Ann.kmeansCentroids(sample, 25, 2), 0.4)
           .orderBy("drop_id")
       }
-      case "d12_substring_runs" if !sys.env.get("SPARK_GRAFT_D12_FULL").contains("1") =>
+      case "d12_substring_runs" =>
         // Half the saturated corpus (the first ~K/2 key-offset copies).
         // d12 is the honest pair-verify worst case — cost grows with
         // the SQUARE of each near-duplicate cluster's size, so at the
@@ -147,8 +148,8 @@ object HeavyRunner {
         // (BENCH_r07: 1669 cpu-s, run 2 shed) measuring a shape whose
         // production answer is d19/d20. At 5x the clusters halve and
         // the pair work quarters — still far above the sf0.1 overhead
-        // floor, still a plan-regression detector. The full corpus
-        // stays reachable for receipts via SPARK_GRAFT_D12_FULL=1.
+        // floor, still a plan-regression detector. The full corpus is
+        // timed by `OneQuery d12_substring_runs <heavyDir>`.
         (s, dir) => {
           import org.apache.spark.sql.functions.{col, max}
           val docs = Tables.load(s, dir, "documents")
@@ -415,69 +416,11 @@ object HeavyRunner {
     (bytes, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Per-stage receipt collector, installed only when
-    * `SPARK_GRAFT_STAGE_METRICS=1`: accumulates each completed stage's
-    * aggregate task metrics and prints the top stages by run time
-    * after every measured run. This is the receipt that separates the
-    * three ways a run can inflate — spill (execution-memory pressure:
-    * `spill` MB > 0), shuffle volume growth (`shR`/`shW` MB), and GC
-    * drag (`cpu` ≪ `run`) — without attaching a profiler to a fork.
-    * Stderr, never stdout: Bench parses stdout lines. */
-  private final class StageReceipts extends org.apache.spark.scheduler.SparkListener {
-    case class S(id: Int, name: String, runMs: Long, cpuMs: Long,
-                 spillMb: Long, shReadMb: Long, shWriteMb: Long, tasks: Int,
-                 maxTaskMs: Long)
-    private val buf = new scala.collection.mutable.ArrayBuffer[S]
-    // per-stage max single-task run time: an inflated stage with
-    // maxTask ~= stageRun/1 is one pathological task (skew / stuck
-    // thread); maxTask ~= stageRun/tasks is uniform slowdown (JIT,
-    // memory contention). stageInfo.taskMetrics only aggregates.
-    private val maxTask = new scala.collection.mutable.HashMap[Int, Long]
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (te.taskMetrics != null) maxTask.synchronized {
-        val r = te.taskMetrics.executorRunTime
-        if (r > maxTask.getOrElse(te.stageId, 0L)) maxTask(te.stageId) = r
-      }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val m = i.taskMetrics
-      val mx = maxTask.synchronized(maxTask.getOrElse(i.stageId, 0L))
-      buf.synchronized { buf += S(i.stageId,
-        i.name.takeWhile(_ != '\n').take(60),
-        m.executorRunTime, m.executorCpuTime / 1000000L,
-        (m.memoryBytesSpilled + m.diskBytesSpilled) >> 20,
-        m.shuffleReadMetrics.totalBytesRead >> 20,
-        m.shuffleWriteMetrics.bytesWritten >> 20, i.numTasks, mx) }
-    }
-    /** Discard stages accumulated outside a timed run (warmup,
-      * clearCaches) so each drain covers exactly one run. Listener-bus
-      * delivery is async, so this is a receipt, not an audit. */
-    def reset(): Unit = {
-      buf.synchronized(buf.clear())
-      maxTask.synchronized(maxTask.clear())
-    }
-
-    /** Print top stages since the last drain, then reset. */
-    def drain(tag: String, top: Int = 6): Unit = buf.synchronized {
-      buf.sortBy(-_.runMs).take(top).foreach { s =>
-        System.err.println(f"[stages $tag] id=${s.id}%-4d run=${s.runMs / 1e3}%7.1fs " +
-          f"cpu=${s.cpuMs / 1e3}%7.1fs spill=${s.spillMb}%5d MB " +
-          f"shR=${s.shReadMb}%5d MB shW=${s.shWriteMb}%5d MB " +
-          f"tasks=${s.tasks}%3d maxTask=${s.maxTaskMs / 1e3}%6.1fs ${s.name}")
-      }
-      buf.clear()
-      maxTask.synchronized(maxTask.clear())
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: HeavyRunner <dir> <n> <query>...")
     val dir = args(0)
     val n = args(1).toInt
     val queries = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Absolute wall-clock deadline (epoch millis) handed down by Bench:
     // queries not STARTED by the deadline are skipped (loud, listed),
     // and a query's runs 2..n are dropped once it passes. An explicit
@@ -496,22 +439,8 @@ object HeavyRunner {
     // 2-12 s on every first timed run of a JIT-heavy member.
     val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
       .filter(d => new java.io.File(d).isDirectory)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-heavy")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.timedSession("graft-heavy")
     spark.sparkContext.setLogLevel("ERROR")
-
-    val receipts =
-      if (sys.env.get("SPARK_GRAFT_STAGE_METRICS").contains("1")) {
-        val r = new StageReceipts
-        spark.sparkContext.addSparkListener(r)
-        Some(r)
-      } else None
 
     // run-1 walls observed so far in THIS fork (ms) — feeds repeatRoom
     val run1Walls = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -563,16 +492,6 @@ object HeavyRunner {
                 "the timed run below measures the cold chain")
           }
         }
-        // SPARK_GRAFT_EXPLAIN=1: dump the heavy-scale physical plan to
-        // stderr before timing — the round-12 tool for the e6 plan-flip
-        // investigation (run 6 measured 216 s / 3627 self-cpu-s against
-        // a [22.5, 2.1] / 400-cpu-s normal mode on identical code+data;
-        // a cache-state-dependent join-strategy flip is the hypothesis
-        // and only the flipped run's plan can confirm it).
-        if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-          try System.err.println(s"[plan $q]\n" +
-            fn(spark, dir).queryExecution.executedPlan.toString.take(8000))
-          catch { case scala.util.control.NonFatal(_) => }
         // A query that throws must still leave a NAMED line on stdout —
         // a data-drift failure in the heavy tier has to be visible in
         // the bench artifact, not just interleaved stderr (round 6: six
@@ -638,7 +557,6 @@ object HeavyRunner {
             // heavy runs (d17: 9 -> 17 -> 158 s same-code same-data).
             System.gc()
             Thread.sleep(200)
-            receipts.foreach(_.reset())
             spark.sparkContext.setJobGroup(s"$q-run$i", q,
               interruptOnCancel = true)
             // `done` closes the capper race (round-11 advice): a timed
@@ -703,7 +621,6 @@ object HeavyRunner {
               firstWallMs = (wall * 1000).toLong
               run1Walls += wall * 1000
             }
-            receipts.foreach(_.drain(s"$q run$i"))
             val x1 = invCtxtSwitches
             // -1 is the 'unavailable' sentinel on either sample — a
             // raw delta would mix it into a nonsense count (or read as

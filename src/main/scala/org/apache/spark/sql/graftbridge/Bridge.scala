@@ -23,6 +23,12 @@ object Bridge {
   /** The analyzed logical plan behind a DataFrame. */
   def plan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** Block until every listener has seen every event posted so far
+    * (`waitUntilEmpty` is `private[spark]`), so a listener's counts
+    * cover each job and stage that already ended. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Wrap a logical plan (possibly containing custom nodes) back into
     * a DataFrame — runs the analyzer, so unresolved expressions inside
     * custom nodes resolve like any built-in operator's. */
