@@ -465,6 +465,509 @@ object GateFixtures {
                  FROM kept a JOIN kept b ON a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
   }
 
+  /** Oracle twin of [[Dedup.clusters]]' label propagation over an
+    * edge CTE/table `pairs(doc_a, doc_b)`: CTEs `edges` (both
+    * directions) and the RECURSIVE `reach(doc_id, lbl)` — every label
+    * that reaches a doc; its cluster is `MIN(lbl)`. */
+  private[graft] def oracleReachCtes(pairs: String): String =
+    s"""edges AS (SELECT doc_a src, doc_b dst FROM $pairs
+                     UNION SELECT doc_b, doc_a FROM $pairs),
+           reach(doc_id, lbl) AS (
+             SELECT DISTINCT src, src FROM edges
+             UNION
+             SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id)"""
+
+  /** Shared oracle CTE chain (e21/o33): the curation funnel's stages
+    * over the documents corpus — minhash clusters `cl`, dedup `keep`
+    * (cluster label survives), 6-gram decontamination against the
+    * doc_id % 7 = 0 benchmark (`clean`), the t-quality >= 0.5 cut
+    * (`qual`), and the cluster-grouped "lf" split hash `vv(v)`
+    * (Sampling.groupSplit's 12-bit bucket). `withSource` carries the
+    * source column through k2/hh/vv (e21 allocates per source). */
+  private[graft] def curationFunnelCtes(withSource: Boolean): String = {
+    val src = if (withSource) "source, " else ""
+    val qSrc = if (withSource) "q.source, " else ""
+    s"""$oracleSigCtes, $oraclePairCtes,
+           ${oracleReachCtes("pairs")},
+           cl AS (SELECT doc_id, MIN(lbl) AS cluster FROM reach
+             GROUP BY doc_id),
+           keep AS (SELECT d.* FROM documents d
+             WHERE d.doc_id NOT IN
+               (SELECT doc_id FROM cl WHERE doc_id <> cluster)),
+           bw AS (SELECT doc_id, string_split(text, ' ') w FROM documents
+             WHERE doc_id % 7 = 0),
+           bsh AS (SELECT DISTINCT
+               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4],
+                 w[i+5]) for i in generate_series(1, len(w) - 5)]) sh
+             FROM bw),
+           tw AS (SELECT doc_id, string_split(text, ' ') w FROM keep
+             WHERE doc_id % 7 <> 0),
+           tsh AS (SELECT DISTINCT doc_id,
+               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4],
+                 w[i+5]) for i in generate_series(1, len(w) - 5)]) sh
+             FROM tw),
+           flag AS (SELECT DISTINCT t.doc_id FROM tsh t JOIN bsh b
+             USING (sh)),
+           clean AS (SELECT k.* FROM keep k WHERE k.doc_id % 7 <> 0
+             AND k.doc_id NOT IN (SELECT doc_id FROM flag)),
+           qw AS (SELECT doc_id, source, text, string_split(text, ' ') w
+             FROM clean),
+           qual AS (SELECT doc_id, source, text FROM qw
+             WHERE LEAST(CAST(1.0 AS DOUBLE), CAST(len(w) AS DOUBLE) / 100.0) * 0.5
+               + (CAST(len(list_distinct(w)) AS DOUBLE) / len(w)) * 0.3
+               + (CAST(len(list_filter(w, x -> list_contains(
+                   ['the','a','of','and','to','in'], x))) AS DOUBLE)
+                  / len(w)) * 0.2 >= 0.5),
+           k2 AS (SELECT q.doc_id, ${qSrc}q.text,
+               COALESCE(cl.cluster, q.doc_id) grp
+             FROM qual q LEFT JOIN cl USING (doc_id)),
+           hh AS (SELECT doc_id, ${src}text,
+               md5('lf|' || CAST(grp AS VARCHAR)) h FROM k2),
+           vv AS (SELECT doc_id, ${src}text,
+             (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 256
+             + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 16
+             + (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) AS v
+             FROM hh)"""
+  }
+
+  /** Oracle of n2/n13's label-IVF probe (SparkEntry.labelIvfTopK);
+    * `neighborPred` is an extra `AND ...` on the candidate join
+    * (n13's filter) or empty. */
+  private[graft] def labelIvfOracleSql(neighborPred: String): String = {
+    val extra = if (neighborPred.isEmpty) "" else s" $neighborPred"
+    s"""WITH dims AS (SELECT label, vec_id, UNNEST(embedding::DOUBLE[]) v,
+                          generate_subscripts(embedding, 1) i FROM embeddings),
+           cent AS (SELECT label, i, ROUND(AVG(v), 6) c FROM dims GROUP BY 1, 2),
+           qdims AS (SELECT vec_id qid, i, v FROM dims WHERE vec_id < 5),
+           qcent AS (SELECT qid, label,
+                     ROUND(SUM(v * c) / (sqrt(SUM(v * v)) * sqrt(SUM(c * c))), 6) ccos
+                     FROM qdims JOIN cent ON qdims.i = cent.i GROUP BY 1, 2),
+           probed AS (SELECT qid, label FROM
+                      (SELECT qid, label,
+                       ROW_NUMBER() OVER (PARTITION BY qid ORDER BY ccos DESC, label) lrnk
+                       FROM qcent) WHERE lrnk <= 2),
+           u AS (SELECT vec_id, label,
+                 list_transform(embedding::DOUBLE[],
+                   x -> x / sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))) ue
+                 FROM embeddings),
+           q AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
+           cand AS (SELECT p.qid, e.vec_id neighbor_id,
+                    ROUND(list_dot_product(q.qu, e.ue), 6) cos_r
+                    FROM probed p JOIN q ON p.qid = q.qid
+                    JOIN u e ON e.label = p.label AND e.vec_id <> p.qid$extra),
+           r AS (SELECT qid, neighbor_id, cos_r,
+                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC, neighbor_id) rnk
+                 FROM cand)
+           SELECT qid, rnk, neighbor_id, cos_r FROM r WHERE rnk <= 5
+           ORDER BY qid, rnk"""
+  }
+
+  /** Exact full-dim ranking of the 5 ANN queries (vec_id < 5) over
+    * the unit table `u` ([[oracleUnitCte]]): CTEs `bq`, `bs`,
+    * `br(qid, nid, rnk)` — the oracle of Ann.bruteForceTopK. */
+  private[graft] val oracleBruteRankCtes: String =
+    s"""bq AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
+           bs AS (SELECT qid, u.vec_id nid,
+             ROUND(list_dot_product(qu, u.ue), 6) cos_r
+             FROM bq, u WHERE u.vec_id <> qid),
+           br AS (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid
+             ORDER BY cos_r DESC, nid) rnk FROM bs)"""
+
+  /** [[oracleBruteRankCtes]] plus the exact top-5 `ex(qid, nid)` —
+    * the gold set of every recall eval. */
+  private[graft] val oracleExactTop5Ctes: String =
+    s"""$oracleBruteRankCtes,
+           ex AS (SELECT qid, nid FROM br WHERE rnk <= 5)"""
+
+  /** The 8-dim Matryoshka truncation's ranking (n27's lowest rung):
+    * CTEs `u8`, `q8`, `s8`, `r8(qid, nid, rnk)`. */
+  private[graft] val oracleTrunc8RankCtes: String =
+    s"""u8 AS (SELECT vec_id,
+             list_transform(sub, x -> x / sqrt(list_dot_product(sub, sub))) ue
+             FROM (SELECT vec_id, list_slice(embedding::DOUBLE[], 1, 8) sub
+                   FROM embeddings)),
+           q8 AS (SELECT vec_id qid, ue qu FROM u8 WHERE vec_id < 5),
+           s8 AS (SELECT qid, u8.vec_id nid,
+             ROUND(list_dot_product(qu, u8.ue), 6) cos_r
+             FROM q8, u8 WHERE u8.vec_id <> qid),
+           r8 AS (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid
+             ORDER BY cos_r DESC, nid) rnk FROM s8)"""
+
+  /** Per-query hits `h(qid, n_hits)` of an approximate top-5
+    * `ap(qid, neighbor_id)` against the exact `ex`. */
+  private[graft] val oracleHitsCte: String =
+    s"""h AS (SELECT ap.qid, COUNT(*) n_hits FROM ap
+             JOIN ex ON ap.qid = ex.qid AND ap.neighbor_id = ex.nid
+             GROUP BY 1)"""
+
+  /** Oracle tail of Ann.recallAtK(k = 5) over `ap` and `ex`: per
+    * query n_approx, n_hits and recall_ppm (n16/n20). */
+  private[graft] val oracleRecallAt5Sql: String =
+    s"""$oracleHitsCte,
+           na AS (SELECT qid, COUNT(*) n_approx FROM ap GROUP BY 1)
+           SELECT e.qid,
+             COALESCE(na.n_approx, CAST(0 AS BIGINT)) n_approx,
+             COALESCE(h.n_hits, CAST(0 AS BIGINT)) n_hits,
+             COALESCE(h.n_hits, CAST(0 AS BIGINT)) * 1000000 // 5 AS recall_ppm
+           FROM (SELECT DISTINCT qid FROM ex) e
+           LEFT JOIN na ON na.qid = e.qid LEFT JOIN h ON h.qid = e.qid
+           ORDER BY e.qid"""
+
+  /** Fleet recall over `h`/`ex`: per-query `recall(qid, rp)` and the
+    * one-row `agg(n_queries, avg_recall_ppm)` (n22/n24). */
+  private[graft] def oracleRecallAggCtes(agg: String): String =
+    s"""recall AS (SELECT e.qid,
+             COALESCE(h.n_hits, CAST(0 AS BIGINT)) * 1000000 // 5 rp
+             FROM (SELECT DISTINCT qid FROM ex) e
+             LEFT JOIN h ON h.qid = e.qid),
+           $agg AS (SELECT CAST(COUNT(*) AS BIGINT) n_queries,
+             CAST(SUM(rp) // COUNT(*) AS BIGINT) avg_recall_ppm
+             FROM recall)"""
+
+  /** The stale-codebook IVF top-5 (n20's approx side, shared by
+    * n22/n24): codebook trained on the stored split vec_id % 4 <> 0,
+    * 2 probes per query, `ap(qid, neighbor_id)`. */
+  private[graft] lazy val staleIvfApproxCtes: String =
+    s"""${kmeansMemberCtesTrainedOn("vec_id % 4 <> 0")},
+           probes AS (SELECT vec_id qid, cluster FROM rk
+             WHERE vec_id < 5 AND r <= 2),
+           q AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
+           cand AS (SELECT p.qid, e.vec_id neighbor_id,
+                    ROUND(list_dot_product(q.qu, e.ue), 6) cos_r
+                    FROM probes p JOIN q ON q.qid = p.qid
+                    JOIN member m ON m.cluster = p.cluster
+                    JOIN u e ON e.vec_id = m.vec_id AND e.vec_id <> p.qid),
+           rr AS (SELECT qid, neighbor_id,
+                 ROW_NUMBER() OVER (PARTITION BY qid
+                   ORDER BY cos_r DESC, neighbor_id) rnk FROM cand),
+           ap AS (SELECT qid, neighbor_id FROM rr WHERE rnk <= 5)"""
+
+  /** The hashed linear quality classifier's per-token weights (t19,
+    * t33, w23 — oracle of TextQuality.hashedLinearScore): CTEs `tok`
+    * and `wgt(doc_id, w)`, w the first 16 bits of md5('qc|' || token)
+    * shifted to be signed. */
+  private[graft] val qualityWeightCtes: String =
+    s"""tok AS (SELECT doc_id,
+               md5('qc|' || UNNEST(string_split(text, ' '))) h FROM documents),
+             wgt AS (SELECT doc_id,
+               (instr('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096
+               + (instr('0123456789abcdef', substr(h, 2, 1)) - 1) * 256
+               + (instr('0123456789abcdef', substr(h, 3, 1)) - 1) * 16
+               + (instr('0123456789abcdef', substr(h, 4, 1)) - 1) - 32768 AS w
+               FROM tok)"""
+
+  /** LabelProp.propagate's oracle (g49/g51): the bipartite trade
+    * graph `e(src, dst)` (customers even, suppliers odd ids) and 3
+    * unrolled self-inclusive rounds `c{i}`/`l{i}` — labels `l3(id,
+    * lbl)`, ties to (max count, min label). */
+  private[graft] val lpaOracleCtes: String = {
+    def round(i: Int) =
+      s"""c$i AS (SELECT x.id, x.lbl, COUNT(*) n FROM (
+            SELECT e.dst id, l.lbl FROM e
+            JOIN l${i - 1} l ON l.id = e.src
+            UNION ALL SELECT id, lbl FROM l${i - 1}) x
+          GROUP BY 1, 2),
+         l$i AS (SELECT id, lbl FROM (SELECT id, lbl,
+            ROW_NUMBER() OVER (PARTITION BY id
+              ORDER BY n DESC, lbl) r FROM c$i) WHERE r = 1)"""
+    s"""cs AS (SELECT DISTINCT o_custkey*2 AS c, l_suppkey*2+1 AS p
+                 FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+           e AS (SELECT c src, p dst FROM cs UNION ALL SELECT p src, c dst FROM cs),
+           n AS (SELECT DISTINCT src id FROM e),
+           l0 AS (SELECT id, id lbl FROM n),
+           ${round(1)}, ${round(2)}, ${round(3)}"""
+  }
+
+  /** Dedup.substringScrub's span cover over removable 12-gram starts
+    * `rem(doc_id, pos)` (d20/d21/d35): consecutive starts form islands
+    * `isl`, each covering st .. st + len - 1; `cov(doc_id, pos)` is
+    * every removed token position. */
+  private[graft] val scrubCoverCtes: String =
+    s"""i AS (SELECT doc_id, pos, pos - ROW_NUMBER() OVER
+               (PARTITION BY doc_id ORDER BY pos) grp FROM rem),
+             isl AS (SELECT doc_id, MIN(pos) st, COUNT(*) + 11 len
+               FROM i GROUP BY doc_id, grp),
+             cov AS (SELECT DISTINCT doc_id,
+               UNNEST(generate_series(st, st + len - 1)) pos FROM isl)"""
+
+  /** Tokens `tk(doc_id, pos, w)` joined to the cover: `j(..., rm)`. */
+  private[graft] val scrubJoinCte: String =
+    s"""j AS (SELECT tk.doc_id, tk.pos, tk.w, cov.pos IS NOT NULL rm
+               FROM tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.pos = cov.pos)"""
+
+  /** Per doc: removed-token count and the md5 of the reassembled
+    * text (d20/d21's gate columns). */
+  private[graft] val scrubbedMd5Select: String =
+    s"""SELECT doc_id,
+               CAST(SUM(CASE WHEN rm THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+               md5(COALESCE(string_agg(CASE WHEN NOT rm THEN w END, ' '
+                 ORDER BY pos), '')) AS cleaned_md5
+             FROM j GROUP BY doc_id ORDER BY doc_id"""
+
+  /** The d20 exact-substring scrub over a corpus CTE/table
+    * `corpus(doc_id, text)` (d20 over documents, d35 over its
+    * boilerplate-injected `aug`): the corpus-first occurrence of
+    * every 12-gram is kept, later ones are `rem`; ends in
+    * [[scrubJoinCte]]'s `j`. */
+  private[graft] def scrubCtesOver(corpus: String): String =
+    s"""w AS (SELECT doc_id, string_split(text, ' ') w FROM $corpus),
+             t0 AS (SELECT doc_id, UNNEST([struct_pack(p := i - 1, t := w[i])
+                 for i in generate_series(1, len(w))]) s FROM w),
+             tk AS (SELECT doc_id, s.p pos, s.t w FROM t0),
+             g AS (SELECT doc_id, UNNEST([struct_pack(p := i - 1,
+                 gr := array_to_string(w[i : i+11], ' '))
+                 for i in generate_series(1, len(w) - 11)]) s FROM w),
+             e AS (SELECT doc_id, s.p pos, s.gr gram FROM g),
+             r AS (SELECT doc_id, pos, ROW_NUMBER() OVER
+               (PARTITION BY gram ORDER BY doc_id, pos) rk FROM e),
+             rem AS (SELECT doc_id, pos FROM r WHERE rk >= 2),
+             $scrubCoverCtes,
+             $scrubJoinCte"""
+
+  /** The epoch weights of Sampling.epochAllocation(.., 4 epochs,
+    * 900000 ppm decay) as a UNION ALL of (epoch, w_ppm) rows. */
+  private[graft] val epochWeightRows: String =
+    Seq(1000000L, 900000L, 810000L, 729000L).zipWithIndex.map { case (w, i) =>
+      if (i == 0) s"SELECT CAST(1 AS BIGINT) epoch, CAST($w AS BIGINT) w_ppm"
+      else s"SELECT ${i + 1}, $w"
+    }.mkString(" UNION ALL ")
+
+  /** Oracle of Sampling.epochAllocation(s, 6, 10, 4, 900000) (o28/o30)
+    * over a per-source token table `s(source, tokens)`: epochs are
+    * taken greedily in (epoch, tokens desc, source) order while the
+    * cumulative cost stays within 6/10 of the total. */
+  private[graft] val epochAllocationSql: String =
+    s"""tot AS (SELECT CAST(SUM(tokens) AS BIGINT) t FROM s),
+             e AS ($epochWeightRows),
+             un AS (SELECT source, epoch, tokens, w_ppm,
+               CAST(t * 6 // 10 AS BIGINT) budget FROM s, e, tot),
+             cw AS (SELECT *, CAST(SUM(tokens) OVER (
+                 ORDER BY epoch, tokens DESC, source) AS BIGINT) cum_cost
+               FROM un)
+             SELECT source, epoch, tokens, w_ppm, cum_cost,
+               CAST(CASE WHEN cum_cost <= budget THEN 1 ELSE 0 END
+                    AS BIGINT) taken,
+               CAST(CASE WHEN cum_cost <= budget
+                    THEN tokens * w_ppm // 1000000 ELSE 0 END
+                    AS BIGINT) eff_tokens
+             FROM cw ORDER BY epoch, tokens DESC, source"""
+
+  /** First-seen-wins exact dedup by md5(text) (o29/w32/o30):
+    * `j(source, ntok, kept)`, kept = 1 on each hash's min doc_id. */
+  private[graft] val tokenSupplyCtes: String =
+    s"""d AS (SELECT doc_id, source,
+               CAST(len(string_split(text, ' ')) AS BIGINT) ntok,
+               md5(text) h FROM documents),
+             k AS (SELECT h, MIN(doc_id) keep FROM d GROUP BY 1),
+             j AS (SELECT d.source, d.ntok,
+               CASE WHEN d.doc_id = k.keep THEN CAST(1 AS BIGINT)
+                    ELSE CAST(0 AS BIGINT) END kept
+               FROM d JOIN k ON d.h = k.h)"""
+
+  /** Oracle of e15's reciprocal-rank fusion (shared with e19): the
+    * BM25 list `bmr` ([[bm25OracleCtes]]), the dense top list `hdr`
+    * over the doc_id % 97 = 0 queries, and the fused ranking
+    * `hfr(query_id, doc_id, n_lists, fused_nano, rnk)`. */
+  private[graft] lazy val hybridRrfCtes: String =
+    s"""$bm25OracleCtes,
+             $oracleUnitCte,
+             hqv AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id % 97 = 0),
+             hsd AS (SELECT qid, u.vec_id nid,
+                     ROUND(list_dot_product(qu, u.ue), 6) cos_r
+                     FROM hqv, u WHERE u.vec_id <> qid),
+             hdr AS (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid
+                     ORDER BY cos_r DESC, nid) rnk FROM hsd),
+             hu AS (SELECT query_id, doc_id, rnk FROM bmr WHERE rnk <= 10
+                    UNION ALL
+                    SELECT qid, nid, rnk FROM hdr WHERE rnk <= 10),
+             hf AS (SELECT query_id, doc_id, COUNT(*) n_lists,
+                      CAST(SUM(1000000000 // (60 + rnk)) AS BIGINT) fused_nano
+                    FROM hu GROUP BY 1, 2),
+             hfr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                     ORDER BY fused_nano DESC, doc_id) rnk FROM hf)"""
+
+  /** Oracle of the verified dedup clusters (e6/e8/e12): LSH
+    * candidates ([[oraclePairCtes]]) verified by char-5-gram Jaccard
+    * >= 0.35 into `vp(doc_a, doc_b)`, then connected components
+    * `cl(doc_id, cluster)` (min member id). */
+  private[graft] lazy val verifiedClusterCtes: String =
+    s"""$oracleSigCtes, $oraclePairCtes,
+           g AS (SELECT doc_id,
+                 list_distinct([substr(text, i, 5) for i in generate_series(1, len(text)-4)]) grams
+                 FROM documents),
+           vp AS (SELECT p.doc_a, p.doc_b FROM pairs p
+                  JOIN g ga ON p.doc_a = ga.doc_id
+                  JOIN g gb ON p.doc_b = gb.doc_id
+                  WHERE CAST(len(list_filter(ga.grams, x -> list_contains(gb.grams, x))) AS DOUBLE)
+                    / (len(ga.grams) + len(gb.grams)
+                       - len(list_filter(ga.grams, x -> list_contains(gb.grams, x)))) >= 0.35),
+           ${oracleReachCtes("vp")},
+           cl AS (SELECT doc_id, MIN(lbl) AS cluster FROM reach GROUP BY doc_id)"""
+
+  /** The first 32 bits of the md5 hex column `h` as an integer (the
+    * oracle twin of SparkEntry's `hex32` checksum term). */
+  private[graft] val oracleHex32: String = (0 until 8).map(c =>
+    s"(strpos('0123456789abcdef', substr(h, ${c + 1}, 1)) - 1) * ${1L << (4 * (7 - c))}")
+    .mkString(" + ")
+
+  /** Oracle of the compaction plan + content checksum (e18/e20):
+    * `nb(n)` = the number of `bucketBytes` buckets the doc_id-ordered
+    * n_chars prefix sums span, and `agg(n_rows, checksum)` = the sum
+    * of [[oracleHex32]] over md5(doc_id | n_chars | md5(text)). */
+  private[graft] def compactionOracleCtes(bucketBytes: Long): String =
+    s"""m AS (SELECT doc_id, CAST(n_chars AS BIGINT) bytes
+             FROM documents),
+           c AS (SELECT doc_id, bytes,
+             CAST(COALESCE(SUM(bytes) OVER (ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS BIGINT) cum
+             FROM m),
+           nb AS (SELECT CAST(COUNT(DISTINCT cum // $bucketBytes) AS BIGINT) n
+             FROM c),
+           r AS (SELECT md5(CAST(doc_id AS VARCHAR) || '|' ||
+               CAST(n_chars AS VARCHAR) || '|' || md5(text)) h
+             FROM documents),
+           agg AS (SELECT CAST(COUNT(*) AS BIGINT) n_rows,
+             CAST(SUM($oracleHex32) AS BIGINT) checksum FROM r)"""
+
+  /** Closed-form pixel replay of the 16-bit perceptual hash over the
+    * synthetic PNG fixture ([[syntheticPng]]; m7/m11/m14/m15): 16
+    * sampled cells `v`, bit i set when 16 * cell >= the cell sum;
+    * `b(doc_id, phash)`. */
+  private[graft] val imagePhashCtes: String =
+    s"""g AS (SELECT doc_id, CAST(8 + doc_id % 5 AS INT) w,
+               CAST(8 + doc_id % 3 AS INT) h FROM documents),
+             c AS (SELECT doc_id, w, h,
+               UNNEST([i for i in generate_series(0, 15)]) i FROM g),
+             v AS (SELECT doc_id, i,
+               (doc_id + 11*(((w*h)*i//16) % w) + 17*(((w*h)*i//16) // w)) % 256 cell
+               FROM c),
+             sm AS (SELECT doc_id, SUM(cell) st FROM v GROUP BY doc_id),
+             b AS (SELECT v.doc_id,
+               CAST(SUM(CASE WHEN 16*cell >= st
+                 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) phash
+               FROM v JOIN sm ON v.doc_id = sm.doc_id GROUP BY v.doc_id)"""
+
+  /** Closed-form replay of the 64-bit difference hash (m13/w29): 8x8
+    * horizontal gradient bits of the fixture's pixel formula as an
+    * unsigned HUGEINT `s(doc_id, hs)`; [[signedDhash]] folds it into a
+    * signed BIGINT. */
+  private[graft] val imageDhashCtes: String =
+    s"""g AS (SELECT doc_id, CAST(8 + doc_id % 5 AS BIGINT) w,
+               CAST(8 + doc_id % 3 AS BIGINT) h FROM documents),
+             rs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) r),
+             cs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) c),
+             cells AS (SELECT doc_id, r, c,
+               (doc_id + 11*((w*c)//9) + 17*((h*r)//8)) % 256 AS v0,
+               (doc_id + 11*((w*(c+1))//9) + 17*((h*r)//8)) % 256 AS v1
+               FROM g, rs, cs),
+             s AS (SELECT doc_id,
+               SUM(CASE WHEN v0 < v1
+                 THEN CAST(1 AS HUGEINT) << CAST(r*8+c AS INT)
+                 ELSE CAST(0 AS HUGEINT) END) AS hs
+               FROM cells GROUP BY doc_id)"""
+
+  /** `hs` as the two's-complement BIGINT `dhash`. */
+  private[graft] val signedDhash: String =
+    s"""CAST(CASE WHEN hs >= CAST(9223372036854775808 AS HUGEINT)
+                 THEN hs - CAST(18446744073709551616 AS HUGEINT)
+                 ELSE hs END AS BIGINT) AS dhash"""
+
+  /** The 16-cell average hash (m4, and m17/e22 per keyframe): the
+    * keyframe cells `c0..c15` sampled from a frame table `(doc_id,
+    * text, f)` (select list), the cell sum, and the hash — bit i set
+    * where 16 * c_i >= the sum `s`. */
+  private[graft] val keyframeCells: String = (0 until 16).map(i =>
+    s"ascii(substr(text, CAST(f*100 + ${100 * i / 16} + 1 AS INT), 1)) c$i")
+    .mkString(", ")
+  private[graft] val avgHashCellSum: String =
+    (0 until 16).map(i => s"c$i").mkString(" + ")
+  private[graft] val avgHashBits: String = (0 until 16).map(i =>
+    s"(CASE WHEN 16 * c$i >= s THEN CAST(${1L << i} AS BIGINT) ELSE 0 END)")
+    .mkString(" + ")
+
+  /** Per-doc script-class counts (TextQuality.scriptProfile's oracle,
+    * t34/t35): CTE `name(doc_id, n_latin, n_digit, n_cyrillic, n_cjk,
+    * n_other)` over a code-point table `codepoints(doc_id, cp)`. */
+  private[graft] def scriptCountsCte(name: String, codepoints: String): String =
+    s"""$name AS (SELECT doc_id,
+             CAST(SUM(CASE WHEN (cp BETWEEN 65 AND 90)
+               OR (cp BETWEEN 97 AND 122) THEN 1 ELSE 0 END) AS BIGINT) n_latin,
+             CAST(SUM(CASE WHEN cp BETWEEN 48 AND 57
+               THEN 1 ELSE 0 END) AS BIGINT) n_digit,
+             CAST(SUM(CASE WHEN cp BETWEEN 1024 AND 1279
+               THEN 1 ELSE 0 END) AS BIGINT) n_cyrillic,
+             CAST(SUM(CASE WHEN cp BETWEEN 19968 AND 40959
+               THEN 1 ELSE 0 END) AS BIGINT) n_cjk,
+             CAST(SUM(CASE WHEN NOT ((cp BETWEEN 65 AND 90)
+               OR (cp BETWEEN 97 AND 122) OR (cp BETWEEN 48 AND 57)
+               OR (cp BETWEEN 1024 AND 1279)
+               OR (cp BETWEEN 19968 AND 40959))
+               THEN 1 ELSE 0 END) AS BIGINT) n_other
+             FROM $codepoints GROUP BY 1)"""
+
+  /** ADC scores of Ann.pqTopK(m = 2, subDim = 32, k = 16) (n8/n11):
+    * both sub-codebooks' LUT parts summed per (query, vector) into
+    * `scq(qid, neighbor_id, score_r)`. */
+  private[graft] lazy val pqAdcScoreCtes: String =
+    s"""${pqSubspaceCtes(0, 32, 16)},
+           ${pqSubspaceCtes(1, 32, 16)},
+           parts AS (
+             SELECT l.qid, m.vec_id, l.part
+             FROM member0 m JOIN lut0 l ON l.cluster = m.cluster
+             UNION ALL
+             SELECT l.qid, m.vec_id, l.part
+             FROM member1 m JOIN lut1 l ON l.cluster = m.cluster),
+           scq AS (SELECT qid, vec_id neighbor_id, ROUND(SUM(part), 6) score_r
+                  FROM parts WHERE vec_id <> qid GROUP BY 1, 2)"""
+
+  /** Pairwise precision/recall in exact ppm over a TP/FP/FN flag
+    * table `j<sfx>(tpf, fpf, fnf)`: CTEs `m<sfx>` and
+    * `r<sfx>(tp, fp, fn, precision_ppm, recall_ppm)` (d33/d34/m14). */
+  private[graft] def prPpmCtes(sfx: String): String =
+    s"""m$sfx AS (SELECT CAST(SUM(tpf) AS BIGINT) tp,
+               CAST(SUM(fpf) AS BIGINT) fp, CAST(SUM(fnf) AS BIGINT) fn
+               FROM j$sfx),
+             r$sfx AS (SELECT tp, fp, fn,
+               CASE WHEN tp + fp = 0 THEN CAST(0 AS BIGINT)
+                 ELSE CAST(tp * 1000000 // (tp + fp) AS BIGINT)
+                 END precision_ppm,
+               CASE WHEN tp + fn = 0 THEN CAST(0 AS BIGINT)
+                 ELSE CAST(tp * 1000000 // (tp + fn) AS BIGINT)
+                 END recall_ppm
+               FROM m$sfx)"""
+
+  /** F1 in exact ppm over [[prPpmCtes]]' precision/recall columns. */
+  private[graft] val f1PpmCol: String =
+    """CASE WHEN precision_ppm + recall_ppm = 0 THEN CAST(0 AS BIGINT)
+                 ELSE CAST(2 * precision_ppm * recall_ppm
+                           // (precision_ppm + recall_ppm) AS BIGINT)
+                 END f1_ppm"""
+
+  /** Water-filling cap at 9/10 of the total supply over a per-source
+    * table `s(source, supply)` (Sampling's budget cap): ranked
+    * sources `r`, budget `b(n, bgt)` and the one-row cap `c(cap)`;
+    * [[waterfillAlloc]] is each source's allocation. */
+  private[graft] val waterfillCapCtes: String =
+    s"""t AS (SELECT CAST(COUNT(*) AS BIGINT) n,
+               CAST(SUM(supply) AS BIGINT) tot FROM s),
+             b AS (SELECT n, CAST(tot * 9 // 10 AS BIGINT) bgt FROM t),
+             r AS (SELECT source, supply,
+               CAST(ROW_NUMBER() OVER (ORDER BY supply, source) AS BIGINT) i,
+               CAST(SUM(supply) OVER (ORDER BY supply, source) AS BIGINT) p
+               FROM s),
+             f AS (SELECT r.*, b.n, b.bgt FROM r, b
+               WHERE r.p + (b.n - r.i) * r.supply > b.bgt),
+             c AS (SELECT CAST((bgt - (p - supply)) // (n - i + 1) AS BIGINT)
+                 cap
+               FROM f ORDER BY i LIMIT 1)"""
+
+  /** A source's water-filled allocation (no cap: its whole supply). */
+  private[graft] val waterfillAlloc: String =
+    """CASE WHEN (SELECT cap FROM c) IS NULL THEN r.supply
+                 ELSE GREATEST(0, LEAST(r.supply, (SELECT cap FROM c)))
+               END"""
+
   /** Shared oracle CTE chain (t30/e15): rational-idf BM25 over the
     * documents corpus — the identical integer arithmetic as
     * Retrieval.bm25TopK (k1=6/5, b=3/4, both sides scaled by
