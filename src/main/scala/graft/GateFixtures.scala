@@ -562,6 +562,18 @@ object GateFixtures {
            ORDER BY qid, rnk"""
   }
 
+  /** Exact full-dim top-k of the 5 ANN queries (vec_id < 5) over the
+    * unit table `u`: CTEs `q`, `s` and `r(qid, neighbor_id, cos_r,
+    * rnk)` (n1/n9 and m5). */
+  private[graft] val oracleExactRankCtes: String =
+    """q AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
+           s AS (SELECT qid, u.vec_id neighbor_id,
+             ROUND(list_dot_product(qu, u.ue), 6) cos_r
+             FROM q, u WHERE u.vec_id <> qid),
+           r AS (SELECT qid, neighbor_id, cos_r,
+             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC, neighbor_id) rnk
+             FROM s)"""
+
   /** Exact full-dim ranking of the 5 ANN queries (vec_id < 5) over
     * the unit table `u` ([[oracleUnitCte]]): CTEs `bq`, `bs`,
     * `br(qid, nid, rnk)` — the oracle of Ann.bruteForceTopK. */
@@ -641,6 +653,158 @@ object GateFixtures {
                  ROW_NUMBER() OVER (PARTITION BY qid
                    ORDER BY cos_r DESC, neighbor_id) rnk FROM cand),
            ap AS (SELECT qid, neighbor_id FROM rr WHERE rnk <= 5)"""
+
+  /** Each event's 30-minute-gap session with its type (g37/g46):
+    * CTEs `l`, `f` and `sid(user_id, event_type, session_id)`. */
+  private[graft] val oracleTypedSessionCtes: String =
+    """l AS (SELECT user_id, ts, event_type,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts) prev FROM events),
+           f AS (SELECT user_id, ts, event_type, CASE WHEN prev IS NULL
+             OR epoch_ms(ts) - epoch_ms(prev) > 1800000 THEN 1 ELSE 0 END is_new
+             FROM l),
+           sid AS (SELECT user_id, event_type,
+             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) session_id
+             FROM f)"""
+
+  /** Each document's distinct word 8-grams (d11/d12/d13/d28/d31/e9):
+    * CTEs `w(doc_id, w)` and `name(doc_id, sh)`. */
+  private[graft] def oracleWord8GramCtes(name: String): String =
+    s"""w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
+           $name AS (SELECT DISTINCT doc_id,
+             UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
+                     for i in generate_series(1, len(w) - 7)]) sh
+             FROM w)"""
+
+  /** Each document's distinct word 3-gram set (d23/d24): CTEs `w`,
+    * `g(doc_id, gs)`, `tk(doc_id, sh)` and `sz(doc_id, n)`. */
+  private[graft] val oracleWord3GramSetCtes: String =
+    """w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
+           g AS (SELECT doc_id, list_distinct([array_to_string(w[i : i+2], ' ')
+                 for i in generate_series(1, len(w) - 2)]) gs
+                 FROM w WHERE len(w) >= 3),
+           tk AS (SELECT doc_id, UNNEST(gs) sh FROM g),
+           sz AS (SELECT doc_id, len(gs) n FROM g)"""
+
+  /** Corpus bigram counts and each document's familiarity sums
+    * (e7/t17): CTEs `w`, `bi(doc_id, sh)`, `c(sh, c)`, `tot(total)` and
+    * `d(doc_id, sum_c, n_bigrams)`. */
+  private[graft] val oracleBigramCountCtes: String =
+    """w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
+           bi AS (SELECT doc_id,
+             UNNEST([concat_ws(' ', w[i], w[i+1]) for i in generate_series(1, len(w)-1)]) sh
+             FROM w),
+           c AS (SELECT sh, COUNT(*) c FROM bi GROUP BY 1),
+           tot AS (SELECT CAST(SUM(c) AS BIGINT) total FROM c),
+           d AS (SELECT doc_id, CAST(SUM(c.c) AS BIGINT) sum_c, COUNT(*) n_bigrams
+                 FROM bi JOIN c USING (sh) GROUP BY 1)"""
+
+  /** TextQuality.textStats' columns over a word list `w` and its
+    * `text` (t1/t35). */
+  private[graft] val oracleTextStatsCols: String =
+    """CAST(len(w) AS BIGINT) AS n_words,
+           CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct_words,
+           CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS ttr,
+           CAST(len(text) - (len(w) - 1) AS DOUBLE) / len(w) AS avg_word_len,
+           CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w) AS stop_ratio,
+           LEAST(CAST(1.0 AS DOUBLE), CAST(len(w) AS DOUBLE) / 100.0) * 0.5
+             + (CAST(len(list_distinct(w)) AS DOUBLE) / len(w)) * 0.3
+             + (CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w)) * 0.2 AS quality"""
+
+  /** The supplier co-order graph (suppliers sharing an order, lines
+    * with quantity >= 45) and its triangles (g19/g60): CTEs `li`,
+    * `e(lo, hi)` and `tr(a, b, c)`. */
+  private[graft] val oracleSupplierTriangleCtes: String =
+    """li AS (SELECT l_orderkey, l_suppkey FROM lineitem
+             WHERE l_quantity >= 45),
+           e AS (SELECT DISTINCT a.l_suppkey lo, b.l_suppkey hi
+             FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
+               AND a.l_suppkey < b.l_suppkey),
+           tr AS (SELECT e1.lo a, e1.hi b, e2.hi c
+             FROM e e1 JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
+             JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi)"""
+
+  /** First and second moments of the first 8 embedding dims
+    * (n14/n15): CTEs `d(vec_id, i, j, p)`, `m2(i, j, m2)` (j >= i) and
+    * `mm(pos, m)`. */
+  private[graft] val oracleEmbedMomentCtes: String =
+    """d AS (SELECT e.vec_id, s.i, t.j,
+             CAST(e.embedding[s.i + 1] AS DOUBLE)
+               * CAST(e.embedding[t.j + 1] AS DOUBLE) p
+             FROM embeddings e, generate_series(0, 7) s(i),
+                  generate_series(0, 7) t(j)
+             WHERE t.j >= s.i),
+           m2 AS (SELECT i, j, AVG(p) m2 FROM d GROUP BY 1, 2),
+           mm AS (SELECT s.i AS pos,
+             AVG(CAST(e.embedding[s.i + 1] AS DOUBLE)) m
+             FROM embeddings e, generate_series(0, 7) s(i) GROUP BY 1)"""
+
+  /** Each user's hourly spine over `ev(user_id, h, ...)` (r3/r4/e1):
+    * CTEs `bounds` and `spine(user_id, h)`. */
+  private[graft] val oracleHourSpineCtes: String =
+    """bounds AS (SELECT user_id, MIN(h) h0, MAX(h) h1 FROM ev GROUP BY 1),
+           spine AS (SELECT user_id, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) h FROM bounds)"""
+
+  /** The spine left-joined to `ev(user_id, h, v)` — `j(<jCols>, t, v)`,
+    * t the hour in epoch millis — and `w`, each row with the previous
+    * (`pv`, `pt`) and next (`nv`, `nt`) non-null value and its t. */
+  private[graft] def oracleHourInterpCtes(jCols: String): String =
+    s"""$oracleHourSpineCtes,
+           j AS (SELECT $jCols, CAST(epoch_ms(s.h) AS DOUBLE) t, e.v
+                 FROM spine s LEFT JOIN ev e ON s.user_id = e.user_id AND s.h = e.h),
+           w AS (SELECT *,
+             last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pv,
+             last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pt,
+             first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
+               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nv,
+             first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
+               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nt
+             FROM j)"""
+
+  /** Linear interpolation of `v` over `w`'s neighbours (r4/e1, the
+    * oracle of Interpolation.interpolate): the value itself, else null before the first
+    * value, the last value after the final one, the line between. */
+  private[graft] val oracleInterpCase: String =
+    """CASE WHEN v IS NOT NULL THEN v
+             WHEN pv IS NULL THEN NULL
+             WHEN nv IS NULL THEN pv
+             ELSE pv + (nv - pv) * (t - pt) / (nt - pt) END"""
+
+  /** One additive Holt-Winters step (a8/a21; alpha 0.5, beta 0.25,
+    * gamma 0.25, period 3) of recursive state `r(l, b, s0, s1, s2)` on event
+    * `e(rn, value)`: the new (level, trend, season) SQL. */
+  private[graft] val oracleHoltWintersStep: (String, String, String) = {
+    val sPrev = "CASE (e.rn - 1) % 3 WHEN 0 THEN r.s0 WHEN 1 THEN r.s1 ELSE r.s2 END"
+    val newL = s"0.5 * (e.value - ($sPrev)) + 0.5 * (r.l + r.b)"
+    val newB = s"0.25 * (($newL) - r.l) + 0.75 * r.b"
+    val newS = s"0.25 * (e.value - ($newL)) + 0.75 * ($sPrev)"
+    (newL, newB, newS)
+  }
+
+  /** Each user's first view, first click after it and first purchase
+    * after that (g23/g44): CTEs `v(user_id, s0)`, `c(user_id, s1)` and
+    * `p(user_id, s2)`. */
+  private[graft] val oracleFunnelStageCtes: String =
+    """v AS (SELECT user_id, MIN(ts) s0 FROM events
+             WHERE event_type = 'view' GROUP BY 1),
+           c AS (SELECT e.user_id, MIN(e.ts) s1 FROM events e
+             JOIN v ON e.user_id = v.user_id
+             WHERE e.event_type = 'click' AND e.ts > v.s0 GROUP BY 1),
+           p AS (SELECT e.user_id, MIN(e.ts) s2 FROM events e
+             JOIN c ON e.user_id = c.user_id
+             WHERE e.event_type = 'purchase' AND e.ts > c.s1 GROUP BY 1)"""
+
+  /** Round `i` of the integer PageRank replay (g17/t34; damping 0.85,
+    * base 150000 micros) over `e(src, dst)`, out-degrees `deg(src, d)`,
+    * nodes `n(id)` and the previous round `r{i-1}(id, r)`. */
+  private[graft] def oraclePageRankRound(i: Int): String =
+    s"""c$i AS (SELECT e.dst, CAST(SUM(r${i - 1}.r // deg.d) AS BIGINT) s
+              FROM e JOIN deg USING (src) JOIN r${i - 1} ON r${i - 1}.id = e.src
+              GROUP BY e.dst),
+           r$i AS (SELECT id, CAST(150000 + (85 * COALESCE(c$i.s, 0)) // 100 AS BIGINT) r
+              FROM n LEFT JOIN c$i ON c$i.dst = n.id)"""
 
   /** The hashed linear quality classifier's per-token weights (t19,
     * t33, w23 — oracle of TextQuality.hashedLinearScore): CTEs `tok`

@@ -36,14 +36,19 @@ object SparkEntry {
     compactionOracleCtes, curationFunnelCtes, e3Activities, e3OracleSql,
     e3Streams, e4OracleSql, epochAllocationSql, epochWeightRows, f1PpmCol,
     hybridRrfCtes, imageDhashCtes, imagePhashCtes, keyframeCells,
-    kmeansMemberCtes, labelIvfOracleSql, lpaOracleCtes, oracleBruteRankCtes,
-    oracleExactTop5Ctes, oracleHex32, oracleHitsCte, oraclePairCtes,
-    oracleReachCtes, oracleRecallAggCtes, oracleRecallAt5Sql, oracleSigCtes,
-    oracleSimhash60Cte, oracleSimhashCte, oracleTrunc8RankCtes, oracleUnitCte,
-    pqAdcScoreCtes, pqSubspaceCtes, prPpmCtes, qualityWeightCtes, rpPlanes,
-    scriptCountsCte, scrubbedMd5Select, scrubCoverCtes, scrubCtesOver,
-    scrubJoinCte, signedDhash, staleIvfApproxCtes, tokenSupplyCtes,
-    verifiedClusterCtes, waterfillAlloc, waterfillCapCtes}
+    kmeansMemberCtes, labelIvfOracleSql, lpaOracleCtes, oracleBigramCountCtes,
+    oracleBruteRankCtes, oracleEmbedMomentCtes, oracleExactRankCtes,
+    oracleExactTop5Ctes, oracleFunnelStageCtes, oracleHex32, oracleHitsCte,
+    oracleHoltWintersStep, oracleHourInterpCtes, oracleHourSpineCtes,
+    oracleInterpCase, oraclePageRankRound, oraclePairCtes, oracleReachCtes,
+    oracleRecallAggCtes, oracleRecallAt5Sql, oracleSigCtes, oracleSimhash60Cte,
+    oracleSimhashCte, oracleSupplierTriangleCtes, oracleTextStatsCols,
+    oracleTrunc8RankCtes, oracleTypedSessionCtes, oracleUnitCte,
+    oracleWord3GramSetCtes, oracleWord8GramCtes, pqAdcScoreCtes, pqSubspaceCtes,
+    prPpmCtes, qualityWeightCtes, rpPlanes, scriptCountsCte, scrubbedMd5Select,
+    scrubCoverCtes, scrubCtesOver, scrubJoinCte, signedDhash,
+    staleIvfApproxCtes, tokenSupplyCtes, verifiedClusterCtes, waterfillAlloc,
+    waterfillCapCtes}
 
   // ---------- shared helpers ----------
 
@@ -137,6 +142,28 @@ object SparkEntry {
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet")
       .parquet(s"$in/in/*")
+
+  /** The fixture's events.parquet as a streaming source. The file
+    * source lists a DIRECTORY and events.parquet is a single file in
+    * the fixture dirs, so this streams the parent with a name filter (a
+    * production layout would stream the table dir). */
+  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.normalizeTs(
+      s.readStream.schema(s.read.parquet(s"$dir/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(dir))
+  }
+
+  /** [[eventsStream]] as the typed (user, micros, id, type) rows the
+    * EventStream state machines consume. */
+  private def typedEvents(s: SparkSession, dir: String)
+      : Dataset[graft.streaming.EventStream.TypedEvent] = {
+    import s.implicits._
+    eventsStream(s, dir).select(col("user_id"), unix_micros(col("ts")).as("us"),
+      col("event_id"), col("event_type"))
+      .as[graft.streaming.EventStream.TypedEvent]
+  }
 
   /** Run a streaming gate to completion: `df` into a uniquely named
     * memory sink under an AvailableNow trigger, then `post` over the
@@ -895,31 +922,15 @@ object SparkEntry {
     * (w27): the profile is a stateless per-row projection, so stream
     * == batch exactly (the w12/w25 shared-oracle discipline). */
   private lazy val t35OracleSql: String = {
-
-        val marks = langMarkers.map { case (l, ms) =>
-          l -> s"len(list_filter(w, x -> list_contains([${ms.map(m => s"'$m'").mkString(",")}], x)))"
-        }
-        val scoreCols = marks.map { case (l, e) => s"CAST($e AS BIGINT) AS s_$l" }.mkString(", ")
-        val chain = marks.init.map { case (l, e) =>
-          val others = marks.filter(_._1 != l).map(_._2)
-          s"WHEN ${others.map(o => s"$e >= $o").mkString(" AND ")} THEN '$l'"
-        }.mkString(" ")
-        val sCols = marks.map { case (l, _) => s"p2.s_$l" }.mkString(", ")
+        val sCols = langMarkers.map { case (l, _) => s"p2.s_$l" }.mkString(", ")
         s"""WITH base AS (SELECT doc_id, lang, text, string_split(text, ' ') w
                FROM documents),
            p1 AS (SELECT doc_id,
-             CAST(len(w) AS BIGINT) AS n_words,
-             CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct_words,
-             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS ttr,
-             CAST(len(text) - (len(w) - 1) AS DOUBLE) / len(w) AS avg_word_len,
-             CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w) AS stop_ratio,
-             LEAST(CAST(1.0 AS DOUBLE), CAST(len(w) AS DOUBLE) / 100.0) * 0.5
-               + (CAST(len(list_distinct(w)) AS DOUBLE) / len(w)) * 0.3
-               + (CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w)) * 0.2 AS quality
+             $oracleTextStatsCols
              FROM base),
-           p2 AS (SELECT doc_id, $scoreCols,
-             CASE $chain ELSE '${langMarkers.last._1}' END AS pred_lang,
-             (CASE $chain ELSE '${langMarkers.last._1}' END) = lang AS matches_label
+           p2 AS (SELECT doc_id, $langScoreCols,
+             $langPredSql AS pred_lang,
+             ($langPredSql) = lang AS matches_label
              FROM base),
            ptok AS (SELECT doc_id, md5('qc|' || UNNEST(w)) h FROM base),
            pwgt AS (SELECT doc_id,
@@ -993,6 +1004,27 @@ object SparkEntry {
 
   private val stopwords = TextQuality.defaultStopwords
   private val langMarkers: Seq[(String, Seq[String])] = TextQuality.defaultLangMarkers
+
+  /** Per language of [[langMarkers]], the oracle SQL count of its
+    * marker tokens in a word list `w`. */
+  private lazy val langMarkCounts: Seq[(String, String)] = langMarkers.map { case (l, ms) =>
+    l -> s"len(list_filter(w, x -> list_contains([${ms.map(m => s"'$m'").mkString(",")}], x)))"
+  }
+
+  /** TextQuality.langId's score columns `s_<lang>` as oracle SQL. */
+  private lazy val langScoreCols: String =
+    langMarkCounts.map { case (l, e) => s"CAST($e AS BIGINT) AS s_$l" }.mkString(", ")
+
+  /** TextQuality.langPredict as one oracle SQL `CASE` over `w`: the
+    * language with the most markers, ties to the earlier language, the
+    * last language when no other wins. */
+  private lazy val langPredSql: String = {
+    val chain = langMarkCounts.init.map { case (l, e) =>
+      val others = langMarkCounts.filter(_._1 != l).map(_._2)
+      s"WHEN ${others.map(o => s"$e >= $o").mkString(" AND ")} THEN '$l'"
+    }.mkString(" ")
+    s"CASE $chain ELSE '${langMarkers.last._1}' END"
+  }
 
   /** Shared by g40 (batch) and w21 (streaming twin): the PSI replay
     * over LogHistogram k=3 buckets with the deterministic ×3 error-
@@ -1264,8 +1296,9 @@ object SparkEntry {
              CAST(MAX(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS max_c
              FROM events GROUP BY user_id ORDER BY user_id"""
 
-  /** o29 (batch) and w32 (stream): first-seen-wins token supply. */
-  private val tokenSupplyOracleSql =
+  /** o29 (batch), w32 (stream) and w33 (`extra` adds its snapshot
+    * count): first-seen-wins token supply. */
+  private def tokenSupplyOracleSql(extra: String = "") =
     s"""WITH $tokenSupplyCtes,
            a AS (SELECT source, CAST(COUNT(*) AS BIGINT) raw_docs,
              CAST(SUM(ntok) AS BIGINT) raw_tokens,
@@ -1274,19 +1307,13 @@ object SparkEntry {
              FROM j GROUP BY 1)
            SELECT source, raw_docs, raw_tokens, kept_docs, kept_tokens,
              CAST((raw_tokens - kept_tokens) * 1000000 // raw_tokens
-               AS BIGINT) dup_token_ppm
+               AS BIGINT) dup_token_ppm$extra
            FROM a ORDER BY source"""
 
   /** n1 (distributed) and n9 (local): exact cosine top-k. */
   private val annTopkOracleSql =
     s"""WITH $oracleUnitCte,
-             q AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
-             s AS (SELECT qid, u.vec_id neighbor_id,
-                   ROUND(list_dot_product(qu, u.ue), 6) cos_r
-                   FROM q, u WHERE u.vec_id <> qid),
-             r AS (SELECT qid, neighbor_id, cos_r,
-                   ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC, neighbor_id) rnk
-                   FROM s)
+             $oracleExactRankCtes
              SELECT qid, rnk, neighbor_id, cos_r FROM r WHERE rnk <= 5
              ORDER BY qid, rnk"""
 
@@ -1476,12 +1503,11 @@ object SparkEntry {
           coalesce(col("c"), lit(0L)).as("value_c"))
         .orderBy("user_id", "hour_str")
     },
-      Some("""WITH ev AS (SELECT user_id, date_trunc('hour', ts) h, value FROM events),
+      Some(s"""WITH ev AS (SELECT user_id, date_trunc('hour', ts) h, value FROM events),
              hourly AS (SELECT user_id, h, COUNT(*) n,
                         CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) c
                         FROM ev GROUP BY 1, 2),
-             bounds AS (SELECT user_id, MIN(h) h0, MAX(h) h1 FROM ev GROUP BY 1),
-             spine AS (SELECT user_id, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) h FROM bounds)
+             $oracleHourSpineCtes
              SELECT s.user_id, strftime(s.h, '%Y-%m-%d %H:%M:%S') AS hour_str,
                     COALESCE(hh.n, 0) AS n_events, COALESCE(hh.c, 0) AS value_c
              FROM spine s LEFT JOIN hourly hh ON s.user_id = hh.user_id AND s.h = hh.h
@@ -1535,28 +1561,12 @@ object SparkEntry {
           col("v").as("value_interp_c"))
         .orderBy("user_id", "hour_str")
     },
-      Some("""WITH ev AS (SELECT user_id, date_trunc('hour', ts) h,
+      Some(s"""WITH ev AS (SELECT user_id, date_trunc('hour', ts) h,
                           CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS DOUBLE) / COUNT(*) v
                           FROM events GROUP BY 1, 2),
-             bounds AS (SELECT user_id, MIN(h) h0, MAX(h) h1 FROM ev GROUP BY 1),
-             spine AS (SELECT user_id, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) h FROM bounds),
-             j AS (SELECT s.user_id, s.h, CAST(epoch_ms(s.h) AS DOUBLE) t, e.v
-                   FROM spine s LEFT JOIN ev e ON s.user_id = e.user_id AND s.h = e.h),
-             w AS (SELECT *,
-               last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pv,
-               last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pt,
-               first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nv,
-               first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nt
-               FROM j)
+             ${oracleHourInterpCtes("s.user_id, s.h")}
              SELECT user_id, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour_str,
-               CASE WHEN v IS NOT NULL THEN v
-                    WHEN pv IS NULL THEN NULL
-                    WHEN nv IS NULL THEN pv
-                    ELSE pv + (nv - pv) * (t - pt) / (nt - pt) END AS value_interp_c
+               $oracleInterpCase AS value_interp_c
              FROM w ORDER BY user_id, hour_str""")),
 
     // A3: triangular-weighted rolling mean (windows 5 and 10).
@@ -1689,10 +1699,7 @@ object SparkEntry {
         .select(col("event_id"), col("level"), col("trend"), col("season"))
         .orderBy("event_id"),
       Some {
-        val sPrev = "CASE (e.rn - 1) % 3 WHEN 0 THEN r.s0 WHEN 1 THEN r.s1 ELSE r.s2 END"
-        val newL = s"0.5 * (e.value - ($sPrev)) + 0.5 * (r.l + r.b)"
-        val newB = s"0.25 * (($newL) - r.l) + 0.75 * r.b"
-        val newS = s"0.25 * (e.value - ($newL)) + 0.75 * ($sPrev)"
+        val (newL, newB, newS) = oracleHoltWintersStep
         s"""WITH RECURSIVE e AS (SELECT event_id, user_id, value,
               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) rn
               FROM events),
@@ -1729,10 +1736,7 @@ object SparkEntry {
         0.5, 0.25, 0.25, 3)
         .orderBy("user_id"),
       Some {
-        val sPrev = "CASE (e.rn - 1) % 3 WHEN 0 THEN r.s0 WHEN 1 THEN r.s1 ELSE r.s2 END"
-        val newL = s"0.5 * (e.value - ($sPrev)) + 0.5 * (r.l + r.b)"
-        val newB = s"0.25 * (($newL) - r.l) + 0.75 * r.b"
-        val newS = s"0.25 * (e.value - ($newL)) + 0.75 * ($sPrev)"
+        val (newL, newB, newS) = oracleHoltWintersStep
         s"""WITH RECURSIVE e AS (SELECT event_id, user_id, value,
               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) rn
               FROM events),
@@ -2610,16 +2614,7 @@ object SparkEntry {
     // the final hour. This pins stream==batch parity with a HASH gate,
     // not just a spec.
     ("w5_stream_tumbling", (s, dir) => withStateParts(s) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      // the streaming file source lists a DIRECTORY; events.parquet is a
-      // single file in the fixture dirs, so stream the parent with a
-      // name filter (a production layout would stream the table dir).
-      val stream0 = s.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val stream = Tables.normalizeTs(stream0)
-      val agg = stream
+      val agg = eventsStream(s, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
       drainToMemory(s, agg, "complete")(_
@@ -2659,7 +2654,6 @@ object SparkEntry {
     // watermark only bounds buffered state), so it hash-gates against
     // the batch range join the oracle runs.
     ("w7_stream_interval_join", (s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // A stream-stream join keeps FOUR state stores per shuffle
       // partition; at the gate fixture's cardinality 32 partitions is
       // pure per-batch commit overhead (128 store instances). Size the
@@ -2668,15 +2662,8 @@ object SparkEntry {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      def reader() = {
-        val st = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-        Tables.normalizeTs(st)
-      }
-      val clicks = reader().filter(col("event_type") === "click")
-      val purchases = reader().filter(col("event_type") === "purchase")
+      val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
+      val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
       drainToMemory(s, graft.streaming.EventStream.clickPurchaseJoin(clicks,
         purchases), "append")(_.orderBy("user_id", "click_id", "buy_id"))
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -2706,12 +2693,7 @@ object SparkEntry {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      def reader() = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val batch = Tables.normalizeTs(raw)
+      val batch = Tables.normalizeTs(s.read.parquet(s"$dir/events.parquet"))
       def maxTs(tpe: String) = batch.filter(col("event_type") === tpe)
         .agg(max(col("ts"))).head().getTimestamp(0)
       val floor = Seq(maxTs("click"), maxTs("purchase")).min
@@ -2722,8 +2704,8 @@ object SparkEntry {
       // flip the gate. Timestamp.from/toInstant round-trip the micros.
       val cutoff = java.sql.Timestamp.from(
         floor.toInstant.minus(java.time.Duration.ofHours(2)))
-      val clicks = reader().filter(col("event_type") === "click")
-      val purchases = reader().filter(col("event_type") === "purchase")
+      val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
+      val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
       drainToMemory(s, graft.streaming.EventStream.clickPurchaseLeftJoin(
         clicks, purchases), "append")(_
         .filter(col("click_ts") <= lit(cutoff))
@@ -2805,18 +2787,12 @@ object SparkEntry {
     // run, so the result hash-matches the batch oracle (w4's SQL) with
     // no watermark withholding.
     ("w8_stream_session", (s, dir) => withStateParts(s) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // w7's state-store sizing rationale: the session-window merging
       // store per partition is commit overhead at fixture cardinality
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream0 = s.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val stream = Tables.normalizeTs(stream0)
-      val agg = stream
+      val agg = eventsStream(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
       // the collect is session-count-sized, bounded
@@ -2880,13 +2856,7 @@ object SparkEntry {
     // (window, partition) in the store, rollups by merge, never a
     // rescan — the streaming twin of g13's union discipline.
     ("w10_stream_sketch", (s, dir) => withStateParts(s) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream0 = s.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-      val stream = Tables.normalizeTs(stream0)
-      val agg = stream.groupBy(to_date(col("ts")).as("day"))
+      val agg = eventsStream(s, dir).groupBy(to_date(col("ts")).as("day"))
         .agg(graft.functions.CountMin.build(col("user_id"), 4, 64).as("sk"))
       val keys = s.range(0, 10).toDF("key")
       drainToMemory(s, agg, "complete")(_.join(keys)
@@ -3820,19 +3790,12 @@ object SparkEntry {
         .orderBy("shard", "doc_id", "seq_id")
     },
       Some {
-        val marks = langMarkers.map { case (l, ms) =>
-          l -> s"len(list_filter(w, x -> list_contains([${ms.map(m => s"'$m'").mkString(",")}], x)))"
-        }
-        val chain = marks.init.map { case (l, e) =>
-          val others = marks.filter(_._1 != l).map(_._2)
-          s"WHEN ${others.map(o => s"$e >= $o").mkString(" AND ")} THEN '$l'"
-        }.mkString(" ")
         s"""WITH f AS (SELECT doc_id, text, string_split(text, ' ') w FROM documents),
            q AS (SELECT doc_id, text, w FROM f
                  WHERE len(w) >= 40
                    AND CAST(len(list_distinct(w)) AS DOUBLE) / len(w) >= 0.5),
            l AS (SELECT doc_id, text,
-                 CASE $chain ELSE '${langMarkers.last._1}' END AS pred_lang FROM q),
+                 $langPredSql AS pred_lang FROM q),
            h AS (SELECT doc_id, text, pred_lang,
                  md5('e5|' || CAST(doc_id AS VARCHAR)) hh,
                  CASE pred_lang WHEN 'de' THEN 2000 WHEN 'en' THEN 500
@@ -3910,14 +3873,7 @@ object SparkEntry {
         .select(col("doc_id"), col("bucket"), col("familiarity_ppm"))
         .orderBy("doc_id")
     },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             bi AS (SELECT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1]) for i in generate_series(1, len(w)-1)]) sh
-               FROM w),
-             c AS (SELECT sh, COUNT(*) c FROM bi GROUP BY 1),
-             tot AS (SELECT CAST(SUM(c) AS BIGINT) total FROM c),
-             d AS (SELECT doc_id, CAST(SUM(c.c) AS BIGINT) sum_c, COUNT(*) n_bigrams
-                   FROM bi JOIN c USING (sh) GROUP BY 1),
+      Some(s"""WITH $oracleBigramCountCtes,
              f AS (SELECT doc_id, sum_c * 1000000 // (n_bigrams * total) AS familiarity_ppm
                    FROM d, tot),
              b AS (SELECT doc_id, familiarity_ppm,
@@ -4164,11 +4120,7 @@ object SparkEntry {
     // salted docs in the heavy tier are exactly what this flags.
     ("d11_crossdoc_grams", (s, dir) =>
       Dedup.crossDocGrams(t(s, dir, "documents"), 8, 2L).orderBy("doc_id"),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             sh AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+      Some(s"""WITH ${oracleWord8GramCtes("sh")},
              gdf AS (SELECT sh, COUNT(*) gram_df FROM sh GROUP BY sh)
              SELECT s.doc_id, COUNT(*) AS n_grams,
                CAST(SUM(CASE WHEN g.gram_df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams,
@@ -4185,11 +4137,7 @@ object SparkEntry {
     ("d12_substring_runs", (s, dir) =>
       Dedup.longestCommonRuns(t(s, dir, "documents"), 8, 12, 100)
         .orderBy("doc_a", "doc_b"),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             an AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+      Some(s"""WITH ${oracleWord8GramCtes("an")},
              kept AS (SELECT doc_id, sh FROM
                (SELECT *, COUNT(*) OVER (PARTITION BY sh) n FROM an) WHERE n <= 100),
              pairs AS (SELECT DISTINCT a.doc_id doc_a, b.doc_id doc_b
@@ -4338,11 +4286,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 0), 8)
         .orderBy("doc_id")
     },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             sh AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+      Some(s"""WITH ${oracleWord8GramCtes("sh")},
              b AS (SELECT sh, doc_id bid FROM sh WHERE doc_id % 5 = 0),
              t AS (SELECT doc_id, sh FROM sh WHERE doc_id % 5 <> 0)
              SELECT t.doc_id, COUNT(DISTINCT t.sh) AS n_overlap_grams,
@@ -5138,15 +5082,8 @@ object SparkEntry {
     // 0.37875 at n_words = 32).
     ("t1_text_stats", (s, dir) =>
       TextQuality.textStats(t(s, dir, "documents"), stopwords).orderBy("doc_id"),
-      Some("""SELECT doc_id,
-             CAST(len(w) AS BIGINT) AS n_words,
-             CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct_words,
-             CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS ttr,
-             CAST(len(text) - (len(w) - 1) AS DOUBLE) / len(w) AS avg_word_len,
-             CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w) AS stop_ratio,
-             LEAST(CAST(1.0 AS DOUBLE), CAST(len(w) AS DOUBLE) / 100.0) * 0.5
-                   + (CAST(len(list_distinct(w)) AS DOUBLE) / len(w)) * 0.3
-                   + (CAST(len(list_filter(w, x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE) / len(w)) * 0.2 AS quality
+      Some(s"""SELECT doc_id,
+             $oracleTextStatsCols
              FROM (SELECT doc_id, text, string_split(text, ' ') w FROM documents)
              ORDER BY doc_id""")),
 
@@ -5154,17 +5091,9 @@ object SparkEntry {
     ("t2_langid", (s, dir) =>
       TextQuality.langId(t(s, dir, "documents"), langMarkers).orderBy("doc_id"),
       Some {
-        val marks = langMarkers.map { case (l, ms) =>
-          l -> s"len(list_filter(w, x -> list_contains([${ms.map(m => s"'$m'").mkString(",")}], x)))"
-        }
-        val scoreCols = marks.map { case (l, e) => s"CAST($e AS BIGINT) AS s_$l" }.mkString(", ")
-        val chain = marks.init.map { case (l, e) =>
-          val others = marks.filter(_._1 != l).map(_._2)
-          s"WHEN ${others.map(o => s"$e >= $o").mkString(" AND ")} THEN '$l'"
-        }.mkString(" ")
-        s"""SELECT doc_id, $scoreCols,
-           CASE $chain ELSE '${langMarkers.last._1}' END AS pred_lang,
-           (CASE $chain ELSE '${langMarkers.last._1}' END) = lang AS matches_label
+        s"""SELECT doc_id, $langScoreCols,
+           $langPredSql AS pred_lang,
+           ($langPredSql) = lang AS matches_label
            FROM (SELECT doc_id, lang, string_split(text, ' ') w FROM documents)
            ORDER BY doc_id"""
       }),
@@ -5263,14 +5192,7 @@ object SparkEntry {
     // doc's bigrams, in ppm. Exact bigints until one floor division.
     ("t17_bigram_familiarity", (s, dir) =>
       TextQuality.bigramFamiliarity(t(s, dir, "documents")).orderBy("doc_id"),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             bi AS (SELECT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1]) for i in generate_series(1, len(w)-1)]) sh
-               FROM w),
-             c AS (SELECT sh, COUNT(*) c FROM bi GROUP BY 1),
-             tot AS (SELECT CAST(SUM(c) AS BIGINT) total FROM c),
-             d AS (SELECT doc_id, CAST(SUM(c.c) AS BIGINT) sum_c, COUNT(*) n_bigrams
-                   FROM bi JOIN c USING (sh) GROUP BY 1)
+      Some(s"""WITH $oracleBigramCountCtes
              SELECT doc_id, n_bigrams,
                sum_c * 1000000 // (n_bigrams * total) AS familiarity_ppm
              FROM d, tot ORDER BY doc_id""")),
@@ -5397,14 +5319,7 @@ object SparkEntry {
       TextQuality.langConfusion(t(s, dir, "documents"), langMarkers)
         .orderBy("lang", "pred_lang"),
       Some {
-        val marks = langMarkers.map { case (l, ms) =>
-          l -> s"len(list_filter(w, x -> list_contains([${ms.map(m => s"'$m'").mkString(",")}], x)))"
-        }
-        val chain = marks.init.map { case (l, e) =>
-          val others = marks.filter(_._1 != l).map(_._2)
-          s"WHEN ${others.map(o => s"$e >= $o").mkString(" AND ")} THEN '$l'"
-        }.mkString(" ")
-        s"""SELECT lang, CASE $chain ELSE '${langMarkers.last._1}' END AS pred_lang,
+        s"""SELECT lang, $langPredSql AS pred_lang,
            COUNT(*) AS n_docs
            FROM (SELECT lang, string_split(text, ' ') w FROM documents)
            GROUP BY lang, pred_lang ORDER BY lang, pred_lang"""
@@ -5584,13 +5499,7 @@ object SparkEntry {
         s"""WITH f AS (SELECT doc_id vec_id, [$cells] e FROM documents),
            u AS (SELECT vec_id,
                  list_transform(e, x -> x / sqrt(list_dot_product(e, e))) ue FROM f),
-           q AS (SELECT vec_id qid, ue qu FROM u WHERE vec_id < 5),
-           s AS (SELECT qid, u.vec_id neighbor_id,
-                 ROUND(list_dot_product(qu, u.ue), 6) cos_r
-                 FROM q, u WHERE u.vec_id <> qid),
-           r AS (SELECT qid, neighbor_id, cos_r,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC, neighbor_id) rnk
-                 FROM s)
+           $oracleExactRankCtes
            SELECT qid, rnk, neighbor_id, cos_r FROM r WHERE rnk <= 3
            ORDER BY qid, rnk"""
       }),
@@ -5871,19 +5780,13 @@ object SparkEntry {
         .select(col("id").as("node_id"), col("rank_micros"))
         .orderBy("node_id"),
       Some {
-        def round(i: Int) =
-          s"""c$i AS (SELECT e.dst, CAST(SUM(r${i - 1}.r // deg.d) AS BIGINT) s
-                FROM e JOIN deg USING (src) JOIN r${i - 1} ON r${i - 1}.id = e.src
-                GROUP BY e.dst),
-             r$i AS (SELECT id, CAST(150000 + (85 * COALESCE(c$i.s, 0)) // 100 AS BIGINT) r
-                FROM n LEFT JOIN c$i ON c$i.dst = n.id)"""
         s"""WITH cs AS (SELECT DISTINCT o_custkey*2 AS c, l_suppkey*2+1 AS p
                  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
            e AS (SELECT c src, p dst FROM cs UNION ALL SELECT p src, c dst FROM cs),
            n AS (SELECT DISTINCT src id FROM e),
            deg AS (SELECT src, COUNT(*) d FROM e GROUP BY src),
            r0 AS (SELECT id, CAST(1000000 AS BIGINT) r FROM n),
-           ${round(1)}, ${round(2)}, ${round(3)}
+           ${(1 to 3).map(oraclePageRankRound).mkString(", ")}
            SELECT id AS node_id, r AS rank_micros FROM r3 ORDER BY node_id"""
       }),
 
@@ -5984,13 +5887,7 @@ object SparkEntry {
     // latest-per-key snapshot. max_by with a (ts, event_id) struct key
     // makes the tiebreak deterministic under any arrival order.
     ("w13_stream_latest", (s, dir) => withStateParts(s) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      drainToMemory(s, graft.streaming.EventStream.latestPerUser(stream),
+      drainToMemory(s, graft.streaming.EventStream.latestPerUser(eventsStream(s, dir)),
         "complete")(_.orderBy("user_id"))
     },
       Some("""SELECT user_id, event_id AS last_event_id,
@@ -6036,14 +5933,7 @@ object SparkEntry {
         .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
       operators.Triangles.perNode(edges).orderBy("node_id")
     },
-      Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-               WHERE l_quantity >= 45),
-             e AS (SELECT DISTINCT a.l_suppkey lo, b.l_suppkey hi
-               FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey),
-             tr AS (SELECT e1.lo a, e1.hi b, e2.hi c
-               FROM e e1 JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
-               JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi),
+      Some(s"""WITH $oracleSupplierTriangleCtes,
              x AS (SELECT UNNEST([a, b, c]) node_id FROM tr)
              SELECT node_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
              FROM x GROUP BY node_id ORDER BY node_id""")),
@@ -6058,12 +5948,7 @@ object SparkEntry {
     ("d23_setsim_join", (s, dir) =>
       operators.SetSimJoin.jaccardSelfJoin(t(s, dir, "documents"), 3, 1, 2)
         .orderBy("doc_a", "doc_b"),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             g AS (SELECT doc_id, list_distinct([array_to_string(w[i : i+2], ' ')
-                   for i in generate_series(1, len(w) - 2)]) gs
-                   FROM w WHERE len(w) >= 3),
-             tk AS (SELECT doc_id, UNNEST(gs) sh FROM g),
-             sz AS (SELECT doc_id, len(gs) n FROM g),
+      Some(s"""WITH $oracleWord3GramSetCtes,
              ins AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) i
                      FROM tk a JOIN tk b ON a.sh = b.sh AND a.doc_id < b.doc_id
                      GROUP BY 1, 2),
@@ -6645,14 +6530,7 @@ object SparkEntry {
           unix_millis(col("stage_1_ts")).as("click_ms"),
           unix_millis(col("stage_2_ts")).as("purchase_ms"))
         .orderBy("user_id"),
-      Some("""WITH v AS (SELECT user_id, MIN(ts) s0 FROM events
-               WHERE event_type = 'view' GROUP BY 1),
-             c AS (SELECT e.user_id, MIN(e.ts) s1 FROM events e
-               JOIN v ON e.user_id = v.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.s0 GROUP BY 1),
-             p AS (SELECT e.user_id, MIN(e.ts) s2 FROM events e
-               JOIN c ON e.user_id = c.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.s1 GROUP BY 1)
+      Some(s"""WITH $oracleFunnelStageCtes
              SELECT u.user_id, epoch_ms(v.s0) AS view_ms,
                epoch_ms(c.s1) AS click_ms, epoch_ms(p.s2) AS purchase_ms
              FROM (SELECT DISTINCT user_id FROM events) u
@@ -6750,17 +6628,13 @@ object SparkEntry {
         .select("rn", "doc_id", "source", "n_tok")
         .orderBy("rn")
     },
-      Some("""WITH tr0 AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
+      Some(s"""WITH tr0 AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
              tr AS (SELECT * FROM tr0 UNION ALL
                SELECT doc_id + 100000, text, lang, source, n_chars
                FROM tr0 WHERE doc_id % 11 = 1),
              keep AS (SELECT MIN(doc_id) doc_id FROM tr GROUP BY md5(text)),
              dd AS (SELECT tr.* FROM tr JOIN keep USING (doc_id)),
-             w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             shAll AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+             ${oracleWord8GramCtes("shAll")},
              bsh AS (SELECT DISTINCT sh FROM shAll WHERE doc_id % 5 = 0),
              cont AS (SELECT DISTINCT s.doc_id FROM shAll s JOIN bsh USING (sh)
                WHERE s.doc_id % 5 <> 0),
@@ -6976,12 +6850,7 @@ object SparkEntry {
     ("d24_containment_join", (s, dir) =>
       operators.SetSimJoin.containmentSelfJoin(t(s, dir, "documents"), 3, 6, 10)
         .orderBy("doc_a", "doc_b"),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             g AS (SELECT doc_id, list_distinct([array_to_string(w[i : i+2], ' ')
-                   for i in generate_series(1, len(w) - 2)]) gs
-                   FROM w WHERE len(w) >= 3),
-             tk AS (SELECT doc_id, UNNEST(gs) sh FROM g),
-             sz AS (SELECT doc_id, len(gs) n FROM g),
+      Some(s"""WITH $oracleWord3GramSetCtes,
              ins AS (SELECT a.doc_id da, b.doc_id db, COUNT(*) i
                      FROM tk a JOIN tk b ON a.sh = b.sh AND a.doc_id <> b.doc_id
                      GROUP BY 1, 2)
@@ -6997,16 +6866,7 @@ object SparkEntry {
     // one tuple per user carries the last event across micro-batches,
     // steps aggregate to the identical matrix (the oracle is g25's).
     ("w15_stream_transitions", (s, dir) => withStateParts(s) {
-      import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val typed = stream.select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("event_type"))
-        .as[graft.streaming.EventStream.TypedEvent]
+      val typed = typedEvents(s, dir)
       drainToMemory(s, graft.streaming.EventStream.transitionSteps(typed),
           "append") { sink =>
         val steps = sink
@@ -7026,16 +6886,7 @@ object SparkEntry {
     // against g26's recursive-CTE oracle — stream == batch for the
     // operator the declarative layer can't express at all.
     ("w16_stream_capped_sessions", (s, dir) => withStateParts(s) {
-      import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val typed = stream.select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("event_type"))
-        .as[graft.streaming.EventStream.TypedEvent]
+      val typed = typedEvents(s, dir)
       drainToMemory(s, graft.streaming.EventStream
         .cappedSessionStream(typed, 86400, 172800), "append")(_
         .groupBy("user_id", "session_id")
@@ -7294,16 +7145,7 @@ object SparkEntry {
       operators.Pca.covariance(t(s, dir, "embeddings"), "embedding", 8)
         .select(col("i"), col("j"), round(col("cov"), 6).as("cov"))
         .orderBy("i", "j"),
-      Some("""WITH d AS (SELECT e.vec_id, s.i, t.j,
-               CAST(e.embedding[s.i + 1] AS DOUBLE)
-                 * CAST(e.embedding[t.j + 1] AS DOUBLE) p
-               FROM embeddings e, generate_series(0, 7) s(i),
-                    generate_series(0, 7) t(j)
-               WHERE t.j >= s.i),
-             m2 AS (SELECT i, j, AVG(p) m2 FROM d GROUP BY 1, 2),
-             mm AS (SELECT s.i AS pos,
-               AVG(CAST(e.embedding[s.i + 1] AS DOUBLE)) m
-               FROM embeddings e, generate_series(0, 7) s(i) GROUP BY 1)
+      Some(s"""WITH $oracleEmbedMomentCtes
              SELECT m2.i, m2.j, ROUND(m2.m2 - a.m * b.m, 6) AS cov
              FROM m2 JOIN mm a ON m2.i = a.pos JOIN mm b ON m2.j = b.pos
              ORDER BY i, j""")),
@@ -7344,13 +7186,7 @@ object SparkEntry {
     // formulation no matter where micro-batch boundaries fall.
     ("w17_stream_anomaly", (s, dir) => withStateParts(s) {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val typed = stream.select(col("event_type"),
+      val typed = eventsStream(s, dir).select(col("event_type"),
         unix_micros(col("ts")).as("us"), col("event_id"),
         cents(col("value")).as("v_c"))
         .as[graft.streaming.EventStream.ValuedEvent]
@@ -7571,16 +7407,7 @@ object SparkEntry {
       operators.Pca.project(t(s, dir, "embeddings"), "vec_id", "embedding", 8)
         .select(col("vec_id"), round(col("score"), 4).as("score"))
         .orderBy("vec_id"),
-      Some("""WITH RECURSIVE d AS (SELECT e.vec_id, s.i, t.j,
-               CAST(e.embedding[s.i + 1] AS DOUBLE)
-                 * CAST(e.embedding[t.j + 1] AS DOUBLE) p
-               FROM embeddings e, generate_series(0, 7) s(i),
-                    generate_series(0, 7) t(j)
-               WHERE t.j >= s.i),
-             m2 AS (SELECT i, j, AVG(p) m2 FROM d GROUP BY 1, 2),
-             mm AS (SELECT s.i AS pos,
-               AVG(CAST(e.embedding[s.i + 1] AS DOUBLE)) m
-               FROM embeddings e, generate_series(0, 7) s(i) GROUP BY 1),
+      Some(s"""WITH RECURSIVE $oracleEmbedMomentCtes,
              cv AS (SELECT m2.i, m2.j, m2.m2 - a.m * b.m AS cov
                FROM m2 JOIN mm a ON m2.i = a.pos JOIN mm b ON m2.j = b.pos),
              fc AS (SELECT i, j, cov FROM cv
@@ -7851,13 +7678,7 @@ object SparkEntry {
         .select(col("user_id").as("u"), unix_micros(col("ts")).as("s_us"),
           coalesce(unix_micros(col("__vt")), lit(Long.MaxValue)).as("e_us"),
           col("event_type").as("state"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val facts = stream.filter(col("event_type") === "purchase")
+      val facts = eventsStream(s, dir).filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       val joined = facts.join(broadcast(changes),
         facts("user_id") === changes("u") &&
@@ -8569,11 +8390,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 0), 8)
         .orderBy("doc_id")
     },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             sh AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+      Some(s"""WITH ${oracleWord8GramCtes("sh")},
              b AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 5 = 0),
              tr AS (SELECT doc_id, sh.sh,
                CASE WHEN b.sh IS NOT NULL THEN 1 ELSE 0 END hit
@@ -8849,15 +8666,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_sessions"))
         .orderBy("type_a", "type_b")
     },
-      Some("""WITH l AS (SELECT user_id, ts, event_type,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) prev FROM events),
-             f AS (SELECT user_id, ts, event_type, CASE WHEN prev IS NULL
-               OR epoch_ms(ts) - epoch_ms(prev) > 1800000 THEN 1 ELSE 0 END is_new
-               FROM l),
-             sid AS (SELECT user_id, event_type,
-               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) session_id
-               FROM f),
+      Some(s"""WITH $oracleTypedSessionCtes,
              ta AS (SELECT user_id, session_id,
                list_sort(list_distinct(list(event_type))) tarr
                FROM sid GROUP BY 1, 2),
@@ -9575,14 +9384,7 @@ object SparkEntry {
         .agg(functions.LogHistogram.sketch(col("ms"), 5).as("sk"))
       sketchQuantiles(sk, "transition")
     },
-      Some("""WITH v AS (SELECT user_id, MIN(ts) s0 FROM events
-               WHERE event_type = 'view' GROUP BY 1),
-             c AS (SELECT e.user_id, MIN(e.ts) s1 FROM events e
-               JOIN v ON e.user_id = v.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.s0 GROUP BY 1),
-             p AS (SELECT e.user_id, MIN(e.ts) s2 FROM events e
-               JOIN c ON e.user_id = c.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.s1 GROUP BY 1),
+      Some(s"""WITH $oracleFunnelStageCtes,
              lat AS (
                SELECT 'view_to_click' transition,
                  epoch_ms(c.s1) - epoch_ms(v.s0) ms
@@ -9649,11 +9451,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 =!= 0), 8)
         .orderBy("doc_id")
     },
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents),
-             sh AS (SELECT DISTINCT doc_id,
-               UNNEST([concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4], w[i+5], w[i+6], w[i+7])
-                       for i in generate_series(1, len(w) - 7)]) sh
-               FROM w),
+      Some(s"""WITH ${oracleWord8GramCtes("sh")},
              b AS (SELECT doc_id, sh FROM sh WHERE doc_id % 5 = 0),
              tg AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 5 <> 0),
              ov AS (SELECT b.doc_id, COUNT(*) n_overlap FROM b
@@ -9797,15 +9595,7 @@ object SparkEntry {
           "event_type")
         .orderBy("antecedent", "consequent")
     },
-      Some("""WITH l AS (SELECT user_id, ts, event_type,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) prev FROM events),
-             f AS (SELECT user_id, ts, event_type, CASE WHEN prev IS NULL
-               OR epoch_ms(ts) - epoch_ms(prev) > 1800000 THEN 1 ELSE 0 END is_new
-               FROM l),
-             sid AS (SELECT user_id, event_type,
-               SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) session_id
-               FROM f),
+      Some(s"""WITH $oracleTypedSessionCtes,
              b AS (SELECT DISTINCT user_id, session_id, event_type FROM sid),
              nb AS (SELECT COUNT(*) n FROM
                (SELECT DISTINCT user_id, session_id FROM b)),
@@ -10053,12 +9843,6 @@ object SparkEntry {
     ("t34_textrank", (s, dir) =>
       operators.Retrieval.textRank(t(s, dir, "documents"), "text", 3),
       Some {
-        def round(i: Int) =
-          s"""c$i AS (SELECT e.dst, CAST(SUM(r${i - 1}.r // deg.d) AS BIGINT) s
-                FROM e JOIN deg USING (src) JOIN r${i - 1} ON r${i - 1}.id = e.src
-                GROUP BY e.dst),
-             r$i AS (SELECT id, CAST(150000 + (85 * COALESCE(c$i.s, 0)) // 100 AS BIGINT) r
-                FROM n LEFT JOIN c$i ON c$i.dst = n.id)"""
         s"""WITH w AS (SELECT string_split(text, ' ') ws FROM documents),
            ix AS (SELECT ws,
                  UNNEST([i for i in generate_series(1, len(ws) - 1)]) i
@@ -10071,7 +9855,7 @@ object SparkEntry {
            n AS (SELECT DISTINCT src id FROM e),
            deg AS (SELECT src, COUNT(*) d FROM e GROUP BY src),
            r0 AS (SELECT id, CAST(1000000 AS BIGINT) r FROM n),
-           ${round(1)}, ${round(2)}, ${round(3)}
+           ${(1 to 3).map(oraclePageRankRound).mkString(", ")}
            SELECT id AS word, r AS rank_micros FROM r3
            ORDER BY r DESC, id LIMIT 20"""
       }),
@@ -12225,7 +12009,7 @@ object SparkEntry {
     // exchange + one source aggregate; the corpus is scanned once.
     ("o29_dedup_token_supply", (s, dir) =>
       Dedup.dedupTokenSupply(t(s, dir, "documents")).orderBy("source"),
-      Some(tokenSupplyOracleSql)),
+      Some(tokenSupplyOracleSql())),
 
     // STREAMING dedup-aware token supply (EventStream
     // .maintainTokenSupply — o29's incremental twin, the d15/n10/w28
@@ -12239,7 +12023,7 @@ object SparkEntry {
     ("w32_stream_token_supply", (s, dir) => withStateParts(s) {
       streamTokenSupply(s, dir, "w32", vacuumKeep = None)
     },
-      Some(tokenSupplyOracleSql)),
+      Some(tokenSupplyOracleSql())),
 
     // FRESH-supply epoch allocation (o29 ∘ o28 — the composition the
     // two tables exist FOR): the allocator budgets over post-dedup
@@ -12793,17 +12577,8 @@ object SparkEntry {
     ("w33_stream_expiry_ingest", (s, dir) => withStateParts(s) {
       streamTokenSupply(s, dir, "w33", vacuumKeep = Some(2))
     },
-      Some(s"""WITH $tokenSupplyCtes,
-           a AS (SELECT source, CAST(COUNT(*) AS BIGINT) raw_docs,
-             CAST(SUM(ntok) AS BIGINT) raw_tokens,
-             CAST(SUM(kept) AS BIGINT) kept_docs,
-             CAST(SUM(ntok * kept) AS BIGINT) kept_tokens
-             FROM j GROUP BY 1)
-           SELECT source, raw_docs, raw_tokens, kept_docs, kept_tokens,
-             CAST((raw_tokens - kept_tokens) * 1000000 // raw_tokens
-               AS BIGINT) dup_token_ppm,
-             CAST(2 AS BIGINT) n_snapshots
-           FROM a ORDER BY source""")),
+      Some(tokenSupplyOracleSql(""",
+             CAST(2 AS BIGINT) n_snapshots"""))),
 
     // STREAMING APPEND + IN-STREAM COMPACTION (EventStream
     // .appendCompactStore over VersionedParquetStore.appendPartitioned
@@ -12879,14 +12654,7 @@ object SparkEntry {
         .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
       GraphStats.clusteringCoefficient(edges)
     },
-      Some("""WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem
-               WHERE l_quantity >= 45),
-             e AS (SELECT DISTINCT a.l_suppkey lo, b.l_suppkey hi
-               FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_suppkey < b.l_suppkey),
-             tr AS (SELECT e1.lo a, e1.hi b, e2.hi c
-               FROM e e1 JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
-               JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi),
+      Some(s"""WITH $oracleSupplierTriangleCtes,
              tt AS (SELECT CAST(COUNT(*) AS BIGINT) triangles FROM tr),
              dg AS (SELECT id, CAST(COUNT(*) AS BIGINT) d FROM
                (SELECT lo id FROM e UNION ALL SELECT hi FROM e)
@@ -13089,28 +12857,12 @@ object SparkEntry {
   /** DuckDB oracle for e1: the r4 interpolation CTE chain feeding the
     * a3 triangular self-join, aggregated per user. */
   private val e1OracleSql: String =
-    """WITH ev AS (SELECT user_id, date_trunc('hour', ts) h,
+    s"""WITH ev AS (SELECT user_id, date_trunc('hour', ts) h,
                    CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS DOUBLE) / COUNT(*) v
                    FROM events GROUP BY 1, 2),
-      bounds AS (SELECT user_id, MIN(h) h0, MAX(h) h1 FROM ev GROUP BY 1),
-      spine AS (SELECT user_id, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) h FROM bounds),
-      j AS (SELECT s.user_id, CAST(epoch_ms(s.h) AS DOUBLE) t, e.v
-            FROM spine s LEFT JOIN ev e ON s.user_id = e.user_id AND s.h = e.h),
-      w AS (SELECT *,
-        last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pv,
-        last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) pt,
-        first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nv,
-        first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY t
-          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) nt
-        FROM j),
+      ${oracleHourInterpCtes("s.user_id")},
       i AS (SELECT user_id, t,
-        CASE WHEN v IS NOT NULL THEN v
-             WHEN pv IS NULL THEN NULL
-             WHEN nv IS NULL THEN pv
-             ELSE pv + (nv - pv) * (t - pt) / (nt - pt) END v,
+        $oracleInterpCase v,
         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY t) rn
         FROM w),
       r AS (SELECT t.user_id, t.rn, MAX(t.t) tt, MAX(t.v) v,

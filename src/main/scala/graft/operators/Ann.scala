@@ -935,9 +935,7 @@ object Ann {
         struct(lit(0).as("band"), expr(s"bucket div $half").as("bv")),
         struct(lit(1).as("band"), expr(s"bucket % $half").as("bv")))).as("bk"))
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-    bands
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("band", "bv")))
-      .filter(col("__n") <= maxBucket).drop("__n")
+    Dedup.capBuckets(bands, maxBucket, "band", "bv")
   }
 
   /** Exact-cosine edge weights for a candidate (src, dst) set. */

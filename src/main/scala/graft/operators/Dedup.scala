@@ -223,9 +223,7 @@ object Dedup {
         "candidate completeness proof and the gram-island run recovery " +
         "only cover runs of at least anchorK tokens")
     val anchors = wordShingles(docs, anchorK).distinct()
-    val kept = anchors
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("sh")))
-      .filter(col("__n") <= maxBucket).drop("__n")
+    val kept = capBuckets(anchors, maxBucket, "sh")
     // NOT pinned, by measurement: the pair set feeds both the
     // candidate-doc projection and the match-point join, but both
     // references live in ONE plan, where ReusedExchange already
@@ -660,20 +658,33 @@ object Dedup {
     sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
+  /** The degenerate-bucket guard: drops every row of a bucket (rows
+    * sharing `keys`) that holds more than `maxBucket` rows, so a
+    * boilerplate bucket cannot go quadratic in the self-join after it.
+    * The count is a window over `keys` — the same hash partitioning
+    * that join needs, so the guard adds no exchange. */
+  private[operators] def capBuckets(df: DataFrame, maxBucket: Int,
+                                    keys: String*): DataFrame =
+    df.withColumn("__n",
+        count(lit(1)).over(Window.partitionBy(keys.head, keys.tail: _*)))
+      .filter(col("__n") <= maxBucket).drop("__n")
+
+  /** One row per (doc_id, bkey) of the signature table: 4 bands of 2
+    * signature slots, each keyed by the md5 of its band index and
+    * values. */
+  private def bandKeys(sig: DataFrame): DataFrame = {
+    val bandCols = (0 until 4).map(b =>
+      md5(concat(lit(s"b$b|"), col(s"sig${2 * b}"), col(s"sig${2 * b + 1}"))))
+    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
+  }
+
   /** D3: LSH candidate pairs (doc_a < doc_b) from the signature table
     * via 4-band x 2-row banding, with the degenerate-bucket guard: a
     * too-common band key (boilerplate / near-empty content hashing
     * alike) would emit |bucket|² pairs, so buckets over `maxBucket`
-    * docs are dropped before the self-join. The bucket count is a
-    * window over bkey — the same hash partitioning the self-join
-    * needs, so the guard adds no exchange. */
+    * docs are dropped before the self-join ([[capBuckets]]). */
   def lshPairs(sig: DataFrame, maxBucket: Int = 100): DataFrame = {
-    val bandCols = (0 until 4).map(b =>
-      md5(concat(lit(s"b$b|"), col(s"sig${2 * b}"), col(s"sig${2 * b + 1}"))))
-    val bands = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
-    val kept = bands
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("bkey")))
-      .filter(col("__n") <= maxBucket).drop("__n")
+    val kept = capBuckets(bandKeys(sig), maxBucket, "bkey")
     kept.as("a").join(kept.as("b"), Seq("bkey"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -695,15 +706,8 @@ object Dedup {
     * buckets its own band keys hash to. */
   def incrementalDedup(indexSig: DataFrame, newDocs: DataFrame,
                        maxBucket: Int = 100): DataFrame = {
-    def bands(sig: DataFrame) = {
-      val bandCols = (0 until 4).map(b =>
-        md5(concat(lit(s"b$b|"), col(s"sig${2 * b}"), col(s"sig${2 * b + 1}"))))
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
-    }
-    val idxBands = bands(indexSig)
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy("bkey")))
-      .filter(col("__n") <= maxBucket).drop("__n")
-    bands(minhashSignatures(newDocs))
+    val idxBands = capBuckets(bandKeys(indexSig), maxBucket, "bkey")
+    bandKeys(minhashSignatures(newDocs))
       .withColumnRenamed("doc_id", "new_doc")
       .join(idxBands, Seq("bkey"))
       .filter(col("new_doc") =!= col("doc_id"))
@@ -726,15 +730,8 @@ object Dedup {
     * persisted signature table. */
   def incrementalEdges(indexSig: DataFrame, newSig: DataFrame,
                        maxBucket: Int = 100): DataFrame = {
-    def bands(sig: DataFrame) = {
-      val bandCols = (0 until 4).map(b =>
-        md5(concat(lit(s"b$b|"), col(s"sig${2 * b}"), col(s"sig${2 * b + 1}"))))
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
-        .withColumn("__n", count(lit(1)).over(Window.partitionBy("bkey")))
-        .filter(col("__n") <= maxBucket).drop("__n")
-    }
-    val idx = bands(indexSig)
-    val nw = bands(newSig)
+    val idx = capBuckets(bandKeys(indexSig), maxBucket, "bkey")
+    val nw = capBuckets(bandKeys(newSig), maxBucket, "bkey")
     val cross = nw.select(col("doc_id").as("doc_a"), col("bkey"))
       .join(idx.select(col("doc_id").as("doc_b"), col("bkey")), Seq("bkey"))
       .select("doc_a", "doc_b")
@@ -746,21 +743,7 @@ object Dedup {
 
   /** D4: 16-bit SimHash fingerprints from token hashes — linear
     * bit-sum aggregation, no pairwise work. */
-  def simhash16(docs: DataFrame): DataFrame = {
-    val tok = docs
-      .select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("w"))
-      .withColumn("h", md5(col("w")))
-    val bitSums = (0 until 16).map { j =>
-      val ci = j / 4 + 1; val bi = j % 4
-      val v = (expr(s"instr('0123456789abcdef', substr(h, $ci, 1))") - 1).cast("int")
-      val bit = (floor(v / lit(1 << bi)).cast("long") % 2).cast("int")
-      sum(when(bit === 1, 1).otherwise(-1)).as(s"s$j")
-    }
-    val sums = tok.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-    sums.select(col("doc_id"),
-      (0 until 16).map(j => when(col(s"s$j") >= 0, lit(1L << j)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash16"))
-  }
+  def simhash16(docs: DataFrame): DataFrame = simhash(docs, 16)
 
   /** 60-bit SimHash fingerprints — [[simhash16]] widened to 15 md5 hex
     * digits (60 +-1 bit votes per token). 16 bits is the right size
@@ -773,11 +756,16 @@ object Dedup {
     * of 10^18 values, so only genuinely similar token multisets
     * collide. 60 = 4 x 15 keeps the positive-long range (no sign-bit
     * special case) and bands evenly. */
-  def simhash60(docs: DataFrame): DataFrame = {
+  def simhash60(docs: DataFrame): DataFrame = simhash(docs, 60)
+
+  /** `bits`-bit SimHash (bits <= 60): one +-1 vote per token for each
+    * of the first `bits` bits of its md5, a bit set where the votes sum
+    * to >= 0. Output column `simhash<bits>`. */
+  private def simhash(docs: DataFrame, bits: Int): DataFrame = {
     val tok = docs
       .select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("w"))
       .withColumn("h", md5(col("w")))
-    val bitSums = (0 until 60).map { j =>
+    val bitSums = (0 until bits).map { j =>
       val ci = j / 4 + 1; val bi = j % 4
       val v = (expr(s"instr('0123456789abcdef', substr(h, $ci, 1))") - 1).cast("int")
       val bit = (floor(v / lit(1 << bi)).cast("long") % 2).cast("int")
@@ -785,8 +773,8 @@ object Dedup {
     }
     val sums = tok.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
     sums.select(col("doc_id"),
-      (0 until 60).map(j => when(col(s"s$j") >= 0, lit(1L << j)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash60"))
+      (0 until bits).map(j => when(col(s"s$j") >= 0, lit(1L << j)).otherwise(lit(0L)))
+        .reduce(_ + _).as(s"simhash$bits"))
   }
 
   /** D25: SimHash near-dup JOIN — all doc pairs within a Hamming
@@ -943,8 +931,7 @@ object Dedup {
         lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
     val b = em.select(col("vec_id"), col("ue"), sig.as("bucket"))
-    val kept = b.withColumn("__n", count(lit(1)).over(Window.partitionBy("bucket")))
-      .filter(col("__n") <= maxBucket).drop("__n")
+    val kept = capBuckets(b, maxBucket, "bucket")
     kept.as("a").join(kept.as("b"),
       col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
