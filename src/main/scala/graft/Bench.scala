@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+
+import graft.tools.HeavyRunner.HeavyResult
 
 /** Benchmark main: times every registered query at the scale-factor dir
   * given by SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE final JSON
@@ -18,9 +22,8 @@ import org.apache.spark.sql.SparkSession
   * Work not STARTED by the deadline is skipped and listed in the final
   * JSON's "skipped" field — an explicit partial result beats a timeout
   * that yields nothing. The forked heavy tier gets the same absolute
-  * deadline (SPARK_GRAFT_HEAVY_DEADLINE_MS) plus a hard kill at
-  * deadline+grace, so one pathological query cannot eat the harness
-  * budget.
+  * deadline plus a hard kill at deadline + [[GraceSec]], so one
+  * pathological query cannot eat the harness budget.
   *
   * A warm-up pass (table counts + one full query) runs before any
   * timing so JIT/codegen/classloader costs are not attributed to the
@@ -40,9 +43,9 @@ import org.apache.spark.sql.SparkSession
   * as a regression (it mooted the round-7/8/9 driver artifacts).
   *
   * HEAVY RESERVE (round 11): the light tier runs against its OWN
-  * budget (total minus SPARK_GRAFT_HEAVY_RESERVE, default 430 s when
-  * the heavy tier is on). Round 13: the light tier is COVERAGE-FIRST
-  * — pass A times every gate once (light_n == registry size, the
+  * budget (total minus [[HeavyReserveSec]] when the heavy tier is
+  * on). Round 13: the light tier is COVERAGE-FIRST — pass A times
+  * every gate once (light_n == registry size, the
   * completeness invariant the round-12 driver run broke by shedding
   * x7/x8/x9), pass B spends whatever light budget remains on
   * best-of-2 repeats, cheapest first — so under co-tenant load the
@@ -57,15 +60,28 @@ import org.apache.spark.sql.SparkSession
   * plan that recomputes a subtree or joins before filtering is
   * invisible; at ~10x it costs seconds — track these numbers
   * round-over-round. Heavy queries run in FRESH forked JVMs
-  * ([[tools.HeavyRunner]]) — in-session numbers inherited the main
-  * loop's heap/JIT state and were irreproducible (18/56/101 s spreads
-  * for identical code) — but in TWO forks, not one per query: round 5's
-  * 21 single-query forks burned ~5-7 minutes of pure JVM/session
-  * startup and blew the harness budget. Fork 1 = plan-regression
-  * canaries, fork 2 = the saturated-corpus worst cases, so budget
-  * exhaustion sheds the worst cases before the canaries. Disable with
-  * SPARK_GRAFT_HEAVY=0; SPARK_GRAFT_HEAVY_N timed runs per query
-  * (default 2).
+  * ([[tools.HeavyRunner]], started with this JVM's own options and
+  * classpath) — in-session numbers inherited the main loop's heap/JIT
+  * state and were irreproducible (18/56/101 s spreads for identical
+  * code) — but in TWO forks, not one per query: round 5's 21
+  * single-query forks burned ~5-7 minutes of pure JVM/session startup
+  * and blew the harness budget. Fork 1 = plan-regression canaries,
+  * fork 2 = the saturated-corpus worst cases, so budget exhaustion
+  * sheds the worst cases before the canaries; [[HeavyRuns]] timed runs
+  * per query.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR (light-tier scale dir, default the
+  * sf0.1 test data), SPARK_GRAFT_CPUS (local[N], default 32),
+  * SPARK_GRAFT_HEAVY (key-offset copies for the heavy tier, default
+  * 10; 0 or 1 disables it), SPARK_GRAFT_BENCH_BUDGET (seconds, default
+  * 900), SPARK_GRAFT_HEAVY_DIR (heavy tables, default
+  * /tmp/graft_heavy_x<copies>), SPARK_GRAFT_LEDGER (quiet-band ledger,
+  * default BENCH_LEDGER.jsonl).
+  *
+  * The penultimate stdout line is the detail record
+  * `{"metric":"detail",...}` with keys queries, tail_reruns, heavy_gc,
+  * heavy_runs, heavy_gc_runs, heavy_cpu_runs, heavy_quiet_band,
+  * light_quiet_band and heavy_warm.
   */
 object Bench {
 
@@ -77,7 +93,7 @@ object Bench {
     * (w4), the dedup signature chain (d2/d3/d14), ANN brute force and
     * its custom-physical twin (n1/n9), k-means/PQ ANN (n5/n8), bigram
     * familiarity (t17). */
-  private val heavyCanaries = Seq(
+  private[graft] val heavyCanaries = Seq(
     "q01_pricing_summary", "e3_pipeline_streams", "e4_legacy_poisoning",
     "q02_min_cost_supplier", "q03_shipping", "q07_volume_shipping",
     "q18_large_orders", "w4_session_window", "d2_minhash_sig",
@@ -97,7 +113,7 @@ object Bench {
     * receipts in BENCH_NOTES round 6: d17 ~16/9 s, d16 ~11/8, e6
     * ~21/1.5, d5 ~74/20, d12 ~113/147) so a budget cut drops the
     * single most expensive measurement, not four cheap ones. */
-  private val heavyWorstCases = Seq(
+  private[graft] val heavyWorstCases = Seq(
     // CHEAPEST FIRST by the round-8 driver-style receipts (e6 1.3,
     // d19 2.2, d21 3.1, d20 5.3, d12-at-5x ~7, d16 10.9, d17 11.9,
     // d5 ~18 s) so a budget cut drops the single most expensive
@@ -106,6 +122,36 @@ object Bench {
     "e6_dedup_pipeline", "d19_suffix_dedup", "d21_scrub_incremental",
     "d20_substring_scrub", "d12_substring_runs", "d16_semantic_dedup",
     "d17_bloom_decontaminate", "d5_ngram_jaccard")
+
+  /** Timed runs per heavy member in the two main forks. */
+  private val HeavyRuns = 2
+
+  /** Seconds the light tier leaves to the heavy forks. Both forks (2x
+    * JVM+session ~30 s, first-touch ~20 s, 25 warm passes ~60 s, 25
+    * single warm-class runs ~250 s) fit in ~400 s on a quiet box; 460
+    * (round 13) admits the 337-gate pass A (~440 s quiet) in the light
+    * budget exactly, so pass B yields its seconds to the forks —
+    * repeats are the cheapest precision to shed. */
+  private val HeavyReserveSec = 460.0
+
+  /** Hang insurance past a fork's deadline before the watchdog kills
+    * it. The worst observed overrun is 17 s (round 7); 120 s still
+    * covers a hung Spark job by 7x. */
+  private val GraceSec = 120.0
+
+  /** Seconds fork 1's deadline always leaves to fork 2 (round 14): the
+    * full 8-member worst-case roster measures 119 s quiet end to end;
+    * without the sub-reserve a long light tier plus a full canary fork
+    * left fork 2 too little time to launch (0/8 worst cases, twice). */
+  private val Fork2ReserveSec = 150.0
+
+  /** The reclaim fork's smaller hang insurance (round 13): it covers
+    * the worst observed overrun (17 s) while leaving most of the main
+    * forks' undrawn grace spendable on shed members. */
+  private val ReclaimGraceSec = 30.0
+
+  /** Light walls at or above this get tail reruns. */
+  private val RerunMinSec = 3.0
 
   /** 1-minute system load average — recorded at launch and per tier
     * in the artifact itself: the co-tenant discriminator that rounds
@@ -177,16 +223,15 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => Set.empty }
 
   /** Per-member QUIET BANDS from the official-run ledger (round-15
-    * verdict item 6): every heavy fork appends its per-run cpu/minflt
+    * verdict item 6): every heavy fork appends its per-run wall/cpu
     * series to BENCH_LEDGER.jsonl, and each artifact's detail line
     * republishes min/max over the accumulated QUIET samples (cpu
     * within 2x the member's historical minimum — the firing class
     * sits 4-25x above band, so the filter separates cleanly). A
     * future firing is then adjudicated by SUBTRACTION against the
-    * artifact itself instead of session archaeology (e6's 1.7-3.2M
-    * minflt band made its run-5 firing readable on sight; this makes
-    * that reading mechanical). Seeded with the round-14 BENCH_NOTES
-    * receipts, ONE ledger line per documented fork.
+    * artifact itself instead of session archaeology. Seeded with the
+    * round-14 BENCH_NOTES receipts, ONE ledger line per documented
+    * fork; older lines also carry a minflt series, which is ignored.
     *
     * Bands are RUN-1 bands: only the FIRST sample of each ledger
     * line's series counts. Run 1 is the cold run where firings occur;
@@ -197,13 +242,11 @@ object Bench {
     * 139-157 cpu-s — exactly BENCH_NOTES' run-1/run-2 band split).
     * Best-effort everywhere: a missing/corrupt ledger only omits the
     * bands. */
-  private[graft] def ledgerSamples(path: String)
-      : Map[String, (Seq[Double], Seq[Double])] = {
+  private[graft] def ledgerSamples(path: String): Map[String, Seq[Double]] = {
     val f = new java.io.File(path)
     if (!f.isFile) return Map.empty
     import org.json4s._
-    val acc = scala.collection.mutable
-      .Map[String, (Vector[Double], Vector[Double])]()
+    val acc = scala.collection.mutable.Map[String, Vector[Double]]()
     try {
       val src = scala.io.Source.fromFile(f)
       val lines = try src.getLines().toList finally src.close()
@@ -211,19 +254,16 @@ object Bench {
         try {
           org.json4s.jackson.JsonMethods.parse(line) \ "heavy" match {
             case JObject(fields) => fields.foreach { case (name, v) =>
-              def nums(k: String): Vector[Double] = v \ k match {
-                case JArray(xs) => xs.collect {
+              val run1 = v \ "cpu" match {
+                case JArray(xs) => xs.take(1).collect {
                   case JDouble(d) => d
                   case JInt(i)    => i.toDouble
                   case JLong(l)   => l.toDouble
-                }.toVector
-                case _ => Vector.empty
+                }
+                case _ => Nil
               }
-              val (c0, m0) = acc.getOrElse(name,
-                (Vector.empty[Double], Vector.empty[Double]))
               // run-1 only: the head of each series (see scaladoc)
-              acc(name) = (c0 ++ nums("cpu").take(1),
-                m0 ++ nums("minflt").take(1))
+              acc(name) = acc.getOrElse(name, Vector.empty) ++ run1
             }
             case _ =>
           }
@@ -233,12 +273,6 @@ object Bench {
     acc.toMap
   }
 
-  /** min/max over the quiet samples per member, as the detail-line
-    * JSON fragment: {"name":{"cpu":[lo,hi],"minflt":[lo,hi],"n":k}}.
-    * cpu and minflt series are per-run aligned when complete; the
-    * quiet filter keys on cpu (the inflation signal) and carries the
-    * same run's minflt when alignment holds, all minflt samples
-    * otherwise. */
   /** Locale-pinned numeric formatting for everything written into the
     * ledger and the artifact's quiet-band fragment: the `f""`
     * interpolator uses the JVM default locale, and a comma-decimal
@@ -246,27 +280,16 @@ object Bench {
     * skips — the bands would quietly disappear. */
   private def num1(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
-  private def num0(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.0f", Double.box(x))
 
-  private[graft] def quietBandsJson(
-      samples: Map[String, (Seq[Double], Seq[Double])]): String = {
-    val entries = samples.toSeq.sortBy(_._1).flatMap { case (name, (c, m)) =>
+  /** min/max over the quiet run-1 cpu samples per member, as the
+    * detail-line JSON fragment: {"name":{"cpu":[lo,hi],"n":k}}. */
+  private[graft] def quietBandsJson(samples: Map[String, Seq[Double]]): String = {
+    val entries = samples.toSeq.sortBy(_._1).flatMap { case (name, c) =>
       if (c.isEmpty) None
       else {
-        val minC = c.min
-        val quietIdx = c.indices.filter(i => c(i) <= 2.0 * minC)
-        val qc = quietIdx.map(c)
-        // minflt only publishes when per-run aligned with cpu: on
-        // misalignment the unfiltered series would include exactly the
-        // firing-run samples the band exists to adjudicate.
-        val qm = if (m.length == c.length) quietIdx.map(m) else Seq.empty
-        val mPart =
-          if (qm.nonEmpty)
-            s""","minflt":[${num0(qm.min)},${num0(qm.max)}]"""
-          else ""
-        Some(s""""$name":{"cpu":[${num1(qc.min)},${num1(qc.max)}]""" +
-          s"""$mPart,"n":${qc.size}}""")
+        val qc = c.filter(_ <= 2.0 * c.min)
+        Some(s""""$name":{"cpu":[${num1(qc.min)},${num1(qc.max)}],""" +
+          s""""n":${qc.size}}""")
       }
     }
     entries.mkString("{", ",", "}")
@@ -279,15 +302,14 @@ object Bench {
     * the way the heavy tier's now are) — to the ledger (one JSON line
     * per official-shape run). Best-effort: failure to write only
     * loses future band samples. */
-  private def appendLedger(path: String,
-      rows: Seq[(String, Seq[Double], Seq[Double], Seq[Double])],
-      lightTop: Seq[(String, Double)] = Seq.empty): Unit =
+  private def appendLedger(path: String, rows: Seq[HeavyResult],
+      lightTop: Seq[(String, Double)]): Unit =
     if (rows.nonEmpty || lightTop.nonEmpty) try {
       def arr(xs: Seq[Double]) =
         xs.map(num1).mkString("[", ",", "]")
-      val body = rows.map { case (n, w, c, m) =>
-        s""""$n":{"wall":${arr(w)},"cpu":${arr(c)},"minflt":${arr(m)}}"""
-      }.mkString(",")
+      val body = rows.map(h =>
+        s""""${h.name}":{"wall":${arr(h.walls)},"cpu":${arr(h.cpus)}}"""
+      ).mkString(",")
       val lightBody = lightTop.map { case (n, w) =>
         s""""$n":${num1(w)}"""
       }.mkString(",")
@@ -357,9 +379,9 @@ object Bench {
     * the firing class sits 4-25x), so an un-amplified roster keeps
     * its cheapest-first receipts order untouched. */
   private[graft] def frontWidestSpread(tier: Seq[String],
-      samples: Map[String, (Seq[Double], Seq[Double])]): Seq[String] = {
+      samples: Map[String, Seq[Double]]): Seq[String] = {
     val spreads = tier.flatMap { q =>
-      samples.get(q).map(_._1).filter(c => c.nonEmpty && c.min > 0)
+      samples.get(q).filter(c => c.nonEmpty && c.min > 0)
         .map(c => q -> c.max / c.min)
     }
     spreads.sortBy(-_._2).headOption.filter(_._2 >= 4.0) match {
@@ -408,27 +430,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val heavyCopies = sys.env.getOrElse("SPARK_GRAFT_HEAVY", "10").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "900").toDouble
+    val ledgerPath = sys.env.getOrElse("SPARK_GRAFT_LEDGER", "BENCH_LEDGER.jsonl")
     // HEAVY RESERVE (round 11): the round-10 driver artifact measured
     // 3/25 heavy members because a loadavg-5.5 light tier ate the
-    // budget the forks needed — the light tier now yields. Quiet-box
-    // receipts: both forks (2x JVM+session ~30 s, first-touch ~20 s,
-    // 25 warm passes ~60 s, 25 single warm-class runs ~250 s) fit in
-    // ~400 s, so the default reserve is 430 s and the light tier's own
-    // budget is what remains (floored at 30% of the total so a tiny
-    // budget still produces a light record). Degradation order under
-    // load: light repeats drop first (pace guard), then light tail
-    // queries shed — each light value has four rounds of receipt
-    // history while a shed heavy member has none, which is why the
-    // forks now outrank light precision.
-    // 430 -> 460 (round 13): the 337-gate pass A costs ~440 s quiet
-    // (receipt: run 2, 439.7 s at launch load 1.5), so a 430 reserve
-    // let pass B spend ~30 s on repeats while fork 2 shed six
-    // worst-case members. At 460 the light budget (~440) admits pass
-    // A exactly and pass B yields its seconds to the forks — repeats
-    // are the cheapest precision to shed (the tail-rerun loop after
-    // the forks still revisits outliers when time remains).
-    val heavyReserveSec = sys.env.getOrElse("SPARK_GRAFT_HEAVY_RESERVE",
-      if (heavyCopies > 1) "460" else "0").toDouble
+    // budget the forks needed — the light tier now yields, its own
+    // budget floored at 30% of the total so a tiny budget still
+    // produces a light record. Degradation order under load: light
+    // repeats drop first (pace guard), then light tail queries shed.
+    val heavyReserveSec = if (heavyCopies > 1) HeavyReserveSec else 0.0
     val lightBudgetSec = math.max(budgetSec - heavyReserveSec, budgetSec * 0.3)
     def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
     def remainingSec: Double = budgetSec - elapsedSec
@@ -516,40 +525,10 @@ object Bench {
     // overruns the deadline by more than the grace period (a single
     // run cannot be interrupted politely once a Spark job is in
     // flight). ----
-    case class HeavyResult(name: String, walls: Seq[Double], gcs: Seq[Double],
-                           loads: Seq[Double], cpus: Seq[Double],
-                           ios: Seq[Double], warm: Seq[Double],
-                           loadStarts: Seq[Double], ctxts: Seq[Double],
-                           cachedMb: Seq[Double], majflts: Seq[Double],
-                           memAvailMb: Seq[Double], minflts: Seq[Double])
     // members whose run 1 was cancelled at the per-run cap — recorded
     // separately from budget skips so the artifact distinguishes "over
     // budget, never started" from "started and pathological"
     val capped = scala.collection.mutable.ListBuffer[String]()
-    val heavyN = sys.env.getOrElse("SPARK_GRAFT_HEAVY_N", "2").toInt
-    // 150 -> 120 (round 11): the worst observed fork overrun past its
-    // deadline is 17 s (round 7); 120 s still covers a hung Spark job
-    // by 7x and hands the freed 30 s to the forks.
-    val graceSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_GRACE", "120").toDouble
-    // FORK-2 SUB-RESERVE (round 11): runs 3-4 of the official shape
-    // showed the failure mode the per-tier split alone cannot fix —
-    // a long light tier plus a full canary fork leaves fork 2 with
-    // < 60 s and it never LAUNCHES (0/8 worst cases, twice). Capping
-    // fork 1's deadline so fork 2 always inherits at least this many
-    // seconds converts that into fork 1 shedding its rotation-TAIL
-    // (exactly the members the latest driver artifact already
-    // measured) while fork 2 measures ~5 bare members at quiet walls.
-    // 120 -> 150 (round 14): the round-13 driver run gave fork 2 its
-    // 120 s and it measured exactly d5+e6, shedding the six mid-tier
-    // d-heavies AGAIN (fourth round running for some). The full
-    // 8-member fork-2 roster measures 119 s quiet end-to-end
-    // (round-14 receipt: boot + firstTouch + 2 runs each, the six
-    // cold members 5.0-9.6 s run 1) — 150 covers that with boot
-    // margin under moderate load, and the 30 s comes out of fork 1's
-    // rotation TAIL, every member of which has an official r13
-    // number and reclaim-pass coverage.
-    val fork2ReserveSec =
-      sys.env.getOrElse("SPARK_GRAFT_FORK2_RESERVE", "150").toDouble
 
     // The grace period and the final print are RESERVED INSIDE the
     // budget: forks get budget - grace - 15 s, the watchdog kills at
@@ -557,26 +536,28 @@ object Bench {
     // to cleanup + the final JSON. Round 7 elapsed 917.1 s against a
     // 900 s budget because grace was added AFTER the deadline — one
     // driver-side timeout away from truncating the artifact.
-    def remainingForkSec: Double = remainingSec - graceSec - 15.0
+    def remainingForkSec: Double = remainingSec - GraceSec - 15.0
 
-    def runHeavyFork(heavyDir: String, cp: String, javaBin: String,
-                     queries: Seq[String], nRuns: Int,
+    // The fork is this JVM again: same java binary, same JVM options
+    // (add-opens, heap, system properties) and same classpath, in
+    // every launch mode (sbt's forked run or a hand-run java).
+    val forkCmd =
+      Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+        java.lang.management.ManagementFactory.getRuntimeMXBean
+          .getInputArguments.asScala ++
+        Seq("-cp", sys.props("java.class.path"), "graft.tools.HeavyRunner")
+
+    /** One HeavyRunner fork over `queries`. `grace` is the hang reserve
+      * past its deadline: the RECLAIM fork runs with the smaller
+      * [[ReclaimGraceSec]] because the whole point of that pass is to
+      * spend the insurance the main forks never drew (round 11: 132 s
+      * left behind while 12 members stood shed). */
+    def runHeavyFork(heavyDir: String, queries: Seq[String], nRuns: Int,
                      warmPass: Boolean, reserveAfterSec: Double,
-                     graceOverride: Option[Double] = None): Seq[HeavyResult] = {
-      // graceOverride: the RECLAIM fork runs with a smaller hang
-      // reserve (worst fork overrun ever observed past its deadline is
-      // 17 s, round-7 receipt) — the whole point of that pass is to
-      // spend the insurance the main forks never drew (round-11: 132 s
-      // left behind while 12 members stood shed, and that leftover IS
-      // the grace+print reserve, which the default sizing refuses to
-      // touch).
-      val grace = graceOverride.getOrElse(graceSec)
+                     grace: Double): Seq[HeavyResult] = {
       val deadlineMs = System.currentTimeMillis() +
         (math.max(remainingSec - grace - 15.0 - reserveAfterSec, 1.0) * 1000).toLong
-      val cmd = Seq(javaBin) ++ tools.HeavyRunner.jdk17AddOpens ++ Seq(
-        s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "48g")}",
-        "-cp", cp, "graft.tools.HeavyRunner",
-        heavyDir, nRuns.toString) ++ queries
+      val cmd = forkCmd ++ Seq(heavyDir, nRuns.toString) ++ queries
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_HEAVY_DEADLINE_MS", deadlineMs.toString)
       // CANARY fork only: pre-warm each query with one untimed pass at
@@ -638,14 +619,7 @@ object Bench {
             val msg = f.lift(2).getOrElse("").replace("\\", "\\\\").replace("\"", "'")
             println(s"""{"q":"$q","heavy_failed":"$msg"}""")
             Console.out.flush()
-          } else if (line.startsWith("HEAVY\t")) {
-            val f = line.split("\t")
-            def series(i: Int) = f.lift(i)
-              .map(_.split(",").toSeq.filter(_.nonEmpty).map(_.toDouble))
-              .getOrElse(Seq.empty)
-            val r = HeavyResult(f(1), series(2), series(3), series(4),
-              series(5), series(6), series(7), series(8), series(9),
-              series(10), series(11), series(12), series(13))
+          } else tools.HeavyRunner.parseHeavyLine(line).foreach { r =>
             seen += r.name; out += r
             println(f"""{"q":"${r.name}","heavy_sec":${r.walls.min}%.3f,""" +
               s""""runs":${r.walls.mkString("[", ",", "]")}}""")
@@ -681,127 +655,66 @@ object Bench {
       out.toSeq
     }
 
-    val heavy: Seq[HeavyResult] = if (heavyCopies > 1) {
+    val heavy = if (heavyCopies > 1) {
       val heavyDir = sys.env.getOrElse("SPARK_GRAFT_HEAVY_DIR",
         s"/tmp/graft_heavy_x$heavyCopies")
       HeavyData.ensure(spark, sfDir, heavyDir, heavyCopies)
-      val classes = new java.io.File("target/scala-2.13/classes").getAbsoluteFile
-      if (classes.isDirectory) {
-        val javaBin = new java.io.File(
-          new java.io.File(sys.props("java.home"), "bin"), "java").getPath
-        val cp = classes.getPath + java.io.File.pathSeparator + "/opt/spark/jars/*"
-        // both tiers keep heavy_n runs: a single-run worst-case tier
-        // was tried (round-8) and covered 6/8 members — but the values
-        // it records are one-shot COLD numbers that co-tenant load
-        // inflates arbitrarily (e6 90.8 s against a 1.7 s warm
-        // receipt), which reads as a regression it isn't. A shed tail
-        // member with a standing BENCH_NOTES receipt beats a measured
-        // member with a misleading number.
-        val measured = lastMeasuredHeavy()
-        val ever = everMeasuredHeavy()
-        // round-16 item 6: the widest-spread member (d5 today) fronts
-        // its fork ahead of the rotation bands, so the known-amplified
-        // member is measured before the ~12-minute co-tenant arrival
-        val bandHistory = ledgerSamples(sys.env.getOrElse(
-          "SPARK_GRAFT_LEDGER", "BENCH_LEDGER.jsonl"))
-        val twoForks = Seq(
-          (frontWidestSpread(
-            rotateUnmeasuredFirst(heavyCanaries, measured, ever),
-            bandHistory), heavyN, true, fork2ReserveSec),
-          (frontWidestSpread(
-            rotateUnmeasuredFirst(heavyWorstCases, measured, ever),
-            bandHistory), heavyN, false, 0.0))
-          .flatMap { case (group, n, warm, reserveAfter) =>
-            if (remainingForkSec < 60) { skipped ++= group; Seq.empty }
-            else runHeavyFork(heavyDir, cp, javaBin, group, n, warm,
-              reserveAfter)
-          }
-        // RECLAIM PASS (round 12): the fork deadlines and sub-reserve
-        // are sized conservatively, and the round-11 driver run ended
-        // with 132 s of its 900 s budget UNUSED while 12 members stood
-        // shed — nothing ever claimed the leftover. One more fork
-        // re-launches every member both forks shed (roster order =
-        // each tier's cheapest-receipt-first order), single run each
-        // (coverage outranks precision here — the repeat convention
-        // already yields to coverage inside a fork), no warm pass
-        // (most shed members are the saturation-bound dedup family,
-        // which the warm pass measurably inflates), under the same
-        // per-run cap and the same absolute deadline. Members whose
-        // run 1 was CAP-cancelled are not retried: the cap firing IS
-        // their measurement ("pathological"), and a retry would burn
-        // the cap again. A member the reclaim fork lands leaves the
-        // skipped list; one it cannot reach just stays shed.
-        val measuredNow = twoForks.map(_.name).toSet
-        val reclaimable = (heavyCanaries ++ heavyWorstCases).filter(q =>
-          skipped.contains(q) && !measuredNow.contains(q) &&
-            !failed.contains(q) && !capped.contains(q))
-        // the reclaim fork's hang insurance: 30 s covers the worst
-        // observed fork overrun (17 s) with margin while leaving most
-        // of the main forks' undrawn 120 s grace spendable on shed
-        // members (JVM+session+firstTouch costs ~30 s, then quiet
-        // dedup-family members run 3-15 s each). 45 -> 30 and floor
-        // 40 -> 28 (round 13): the round-12 driver ended with 57.6 s
-        // unused because grace 45 + floor 40 refused to spend it —
-        // at 28 s usable the fork boots and lands at least the
-        // cheapest shed member, which beats leaving the minute on the
-        // table.
-        val reclaimGrace =
-          sys.env.getOrElse("SPARK_GRAFT_RECLAIM_GRACE", "30").toDouble
-        val reclaimUsable = remainingSec - reclaimGrace - 15.0
-        val reclaimed =
-          if (reclaimable.nonEmpty && reclaimUsable > 28) {
-            System.err.println(s"[bench] reclaim pass: " +
-              s"${reclaimable.size} shed members, " +
-              f"$reclaimUsable%.0f s usable")
-            runHeavyFork(heavyDir, cp, javaBin, reclaimable, 1,
-              warmPass = false, reserveAfterSec = 0.0,
-              graceOverride = Some(reclaimGrace))
-          } else Seq.empty
-        val reclaimedNames = reclaimed.map(_.name).toSet
-        skipped.filterInPlace(q => !reclaimedNames(q))
-        twoForks ++ reclaimed
-      } else {
-        System.err.println("[bench] no classes dir; heavy tier in-session")
-        SparkEntry.clearCaches(spark)
-        spark.catalog.clearCache()
-        System.gc()
-        Tables.load(spark, heavyDir, "lineitem").count()
-        (heavyCanaries ++ heavyWorstCases).flatMap { n =>
-          // same query semantics as the fork path: resolve() swaps in
-          // the heavy variants (persisted e3/e4 fixtures, production
-          // d16 config) — SparkEntry.queries here would time DIFFERENT
-          // work under the same JSON key
-          if (remainingSec < 60) { skipped += n; None }
-          else {
-            def one(): Option[Double] = {
-              // untimed, BETWEEN runs: let the ContextCleaner drop dead
-              // shuffle/broadcast state (the cleaner-starvation effect
-              // HeavyRunner documents — big heaps may never GC on their
-              // own and consecutive big-shuffle runs multiply in cost)
-              System.gc()
-              val t0 = System.nanoTime()
-              try {
-                tools.HeavyRunner.resolve(n)(spark, heavyDir)
-                  .write.format("noop").mode("overwrite").save()
-                Some((System.nanoTime() - t0) / 1e9)
-              } catch {
-                case e: Throwable =>
-                  System.err.println(s"[bench] heavy $n FAILED: ${e.getMessage}")
-                  failed += n
-                  None
-              }
-            }
-            val runs = Seq(one(), one()).flatten
-            if (runs.nonEmpty) {
-              println(f"""{"q":"$n","heavy_sec":${runs.min}%.3f}""")
-              Console.out.flush()
-              Some(HeavyResult(n, runs, Seq.empty, Seq.empty, Seq.empty,
-                Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-                Seq.empty, Seq.empty, Seq.empty))
-            } else None
-          }
+      // both tiers keep HeavyRuns runs: a single-run worst-case tier
+      // was tried (round-8) and covered 6/8 members — but the values
+      // it records are one-shot COLD numbers that co-tenant load
+      // inflates arbitrarily (e6 90.8 s against a 1.7 s warm
+      // receipt), which reads as a regression it isn't. A shed tail
+      // member with a standing BENCH_NOTES receipt beats a measured
+      // member with a misleading number.
+      val measured = lastMeasuredHeavy()
+      val ever = everMeasuredHeavy()
+      // round-16 item 6: the widest-spread member (d5 today) fronts
+      // its fork ahead of the rotation bands, so the known-amplified
+      // member is measured before the ~12-minute co-tenant arrival
+      val bandHistory = ledgerSamples(ledgerPath)
+      val twoForks = Seq(
+        (heavyCanaries, true, Fork2ReserveSec),
+        (heavyWorstCases, false, 0.0))
+        .flatMap { case (tier, warm, reserveAfter) =>
+          val group = frontWidestSpread(
+            rotateUnmeasuredFirst(tier, measured, ever), bandHistory)
+          if (remainingForkSec < 60) { skipped ++= group; Seq.empty }
+          else runHeavyFork(heavyDir, group, HeavyRuns, warm, reserveAfter,
+            GraceSec)
         }
-      }
+      // RECLAIM PASS (round 12): the fork deadlines and sub-reserve
+      // are sized conservatively, and the round-11 driver run ended
+      // with 132 s of its 900 s budget UNUSED while 12 members stood
+      // shed — nothing ever claimed the leftover. One more fork
+      // re-launches every member both forks shed (roster order =
+      // each tier's cheapest-receipt-first order), single run each
+      // (coverage outranks precision here — the repeat convention
+      // already yields to coverage inside a fork), no warm pass
+      // (most shed members are the saturation-bound dedup family,
+      // which the warm pass measurably inflates), under the same
+      // per-run cap and the same absolute deadline. Members whose
+      // run 1 was CAP-cancelled are not retried: the cap firing IS
+      // their measurement ("pathological"), and a retry would burn
+      // the cap again. A member the reclaim fork lands leaves the
+      // skipped list; one it cannot reach just stays shed.
+      val measuredNow = twoForks.map(_.name).toSet
+      val reclaimable = (heavyCanaries ++ heavyWorstCases).filter(q =>
+        skipped.contains(q) && !measuredNow.contains(q) &&
+          !failed.contains(q) && !capped.contains(q))
+      // at 28 s usable the fork boots and lands at least the cheapest
+      // shed member, which beats leaving the minute on the table
+      val reclaimUsable = remainingSec - ReclaimGraceSec - 15.0
+      val reclaimed =
+        if (reclaimable.nonEmpty && reclaimUsable > 28) {
+          System.err.println(s"[bench] reclaim pass: " +
+            s"${reclaimable.size} shed members, " +
+            f"$reclaimUsable%.0f s usable")
+          runHeavyFork(heavyDir, reclaimable, 1, warmPass = false,
+            reserveAfterSec = 0.0, grace = ReclaimGraceSec)
+        } else Seq.empty
+      val reclaimedNames = reclaimed.map(_.name).toSet
+      skipped.filterInPlace(q => !reclaimedNames(q))
+      twoForks ++ reclaimed
     } else Seq.empty
 
     // ---- tail outlier rerun: a light wall measured during a
@@ -823,7 +736,6 @@ object Bench {
     // ignored (the query already succeeded — the retry exists only to
     // refine its number; NonFatal only, so an OOM propagates instead
     // of being swallowed into a half-dead JVM — round-10 advice).
-    val rerunMin = sys.env.getOrElse("SPARK_GRAFT_RERUN_MIN", "3.0").toDouble
     val tailReruns = scala.collection.mutable.LinkedHashMap[String, Double]()
     def correctedBest(name: String, b: Double): Double =
       math.min(b, tailReruns.getOrElse(name, b))
@@ -833,7 +745,7 @@ object Bench {
       improvedThisPass = false
       pass += 1
       results.map { case (n, b) => n -> correctedBest(n, b) }
-        .filter(_._2 >= rerunMin).sortBy(_._2)
+        .filter(_._2 >= RerunMinSec).sortBy(_._2)
         .foreach { case (name, best) =>
           // reserve 10x the prior wall on top of the 90 s floor: a
           // rerun launched into a still-active load episode can itself
@@ -842,7 +754,7 @@ object Bench {
           // truncate the final artifact — the round-7 failure this
           // file guards against. The grace+30 floor additionally stops
           // ALL reruns once the final print's reserve is at risk.
-          if (remainingSec > math.max(90 + 10 * best, graceSec + 30)) {
+          if (remainingSec > math.max(90 + 10 * best, GraceSec + 30)) {
             val t0 = System.nanoTime()
             val t = try {
               SparkEntry.queries(name)(spark, sfDir).count()
@@ -863,12 +775,10 @@ object Bench {
     // ---- quiet-band ledger (round-15 item 6, extended round 16):
     // persist this run's heavy series AND its top-10 corrected light
     // walls, then publish per-member quiet bands (heavy: min/max
-    // cpu + minflt; light: min/max wall) in the detail line so a
+    // run-1 cpu; light: min/max wall) in the detail line so a
     // firing in EITHER tier is adjudicated against the artifact
     // itself. The append runs after the tail reruns so the light
     // samples are the run's most shielded numbers. ----
-    val ledgerPath = sys.env.getOrElse("SPARK_GRAFT_LEDGER",
-      "BENCH_LEDGER.jsonl")
     // Round-17 (verdict item 7): once a member has entered the light
     // ledger (any run's top-10), EVERY later run contributes its
     // corrected wall — so a member that spiked under co-tenant load
@@ -880,11 +790,7 @@ object Bench {
     val lightHistory = lightLedgerSamples(ledgerPath).keySet
     val lightForLedger = (corrected.sortBy(-_._2).take(10) ++
       corrected.filter(kv => lightHistory.contains(kv._1))).distinct
-    appendLedger(ledgerPath,
-      heavy.collect { case h if h.cpus.nonEmpty =>
-        (h.name, h.walls, h.cpus, h.minflts)
-      },
-      lightForLedger)
+    appendLedger(ledgerPath, heavy.filter(_.cpus.nonEmpty), lightForLedger)
     val quietBands = quietBandsJson(ledgerSamples(ledgerPath))
     val lightBands = lightBandsJson(lightLedgerSamples(ledgerPath))
 
@@ -899,9 +805,8 @@ object Bench {
       xs.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = corrected.map(_._2).sum
     // heavy value = min wall; heavy_gc = GC seconds of that same run;
-    // heavy_runs/heavy_gc_runs = the full series for variance checks;
-    // heavy_io_runs = per-run block-device MB read (/proc/self/io) —
-    // the cache-cold-vs-CPU-bound discriminator across environments.
+    // heavy_runs/heavy_gc_runs/heavy_cpu_runs = the full series for
+    // variance checks.
     val heavyMin = heavy.map(h => h.name -> h.walls.min)
     val heavyGc = heavy.collect { case h if h.gcs.nonEmpty =>
       h.name -> h.gcs(h.walls.indexOf(h.walls.min)) }
@@ -912,50 +817,25 @@ object Bench {
     // pinned RDD) flooded the tail. log4j2.properties additionally
     // silences that logger, but ordering must not depend on it.
     SparkEntry.clearCaches(spark)
-    // PENULTIMATE line: the full evidence — every light timing and all
-    // five heavy per-run series. Bulky (>5 KB) and therefore NOT the
-    // line the driver parses.
+    // PENULTIMATE line: the full evidence — every light timing and the
+    // heavy per-run series. Bulky (>5 KB) and therefore NOT the line
+    // the driver parses.
     println(s"""{"metric":"detail","queries":${obj(corrected)},""" +
       s""""tail_reruns":${obj(tailReruns.toSeq)},""" +
       s""""heavy_gc":${obj(heavyGc)},""" +
       s""""heavy_runs":${arrObj(heavy.map(h => h.name -> h.walls))},""" +
       s""""heavy_gc_runs":${arrObj(heavy.map(h => h.name -> h.gcs))},""" +
-      s""""heavy_load_runs":${arrObj(heavy.map(h => h.name -> h.loads))},""" +
       s""""heavy_cpu_runs":${arrObj(heavy.map(h => h.name -> h.cpus))},""" +
-      s""""heavy_io_runs":${arrObj(heavy.map(h => h.name -> h.ios))},""" +
-      // the round-12 contention adjudicators: loadavg at run START
-      // (heavy_load_runs already carries the END sample) and the
-      // involuntary context-switch delta — a ctxt delta scaling with
-      // an inflated cpu tail = contention; flat = real work
-      s""""heavy_load_start_runs":${arrObj(heavy.map(h => h.name -> h.loadStarts))},""" +
-      s""""heavy_ctxt_runs":${arrObj(heavy.map(h => h.name -> h.ctxts))},""" +
-      // cached-storage MB after each run: the eviction receipt (the
-      // round-12 stress experiment cleared scheduler contention as a
-      // cpu-time inflator — silent index re-execution after eviction
-      // is the live hypothesis for a cpu-inflated firing)
-      s""""heavy_cached_mb_runs":${arrObj(heavy.map(h => h.name -> h.cachedMb))},""" +
-      // the round-13 amplification instrument's always-on fields:
-      // per-run major-fault delta (co-tenant memory pressure forces
-      // our own pages back through the block device — the one
-      // mechanism left standing for the d5/e6 firings) and box-wide
-      // MemAvailable MB at run start
-      s""""heavy_majflt_runs":${arrObj(heavy.map(h => h.name -> h.majflts))},""" +
-      s""""heavy_memavail_mb_runs":${arrObj(heavy.map(h => h.name -> h.memAvailMb))},""" +
-      // minor faults: kernel anon-page work (THP compaction / direct
-      // reclaim) runs in OUR fault path on OUR cpu accounting — the
-      // round-14 discriminator for cpu-inflated firings that majflt
-      // and the synthetic co-tenant experiments cleared (BENCH_NOTES)
-      s""""heavy_minflt_runs":${arrObj(heavy.map(h => h.name -> h.minflts))},""" +
       // per-member quiet bands over ALL official history (the ledger):
-      // min/max cpu-s and minflt of in-band runs — a firing reads as
-      // "this run's cpu/minflt minus the band" with no archaeology
+      // min/max run-1 cpu-s of in-band runs — a firing reads as "this
+      // run's cpu minus the band" with no archaeology
       s""""heavy_quiet_band":$quietBands,""" +
       // round-16 item 7: light-tier bands for the members that have
       // appeared in any official run's top-10 walls — the w-tail's
       // co-tenant inflation (w11 5.1→14.0, w20 2.7→10.7 in r15)
       // becomes subtraction-readable like the heavy tier's
       s""""light_quiet_band":$lightBands,""" +
-      s""""heavy_warm":${arrObj(heavy.map(h => h.name -> h.warm))}}""")
+      s""""heavy_warm":${arrObj(heavy.map(h => h.name -> h.warm.toSeq))}}""")
     // FINAL line: a compact summary that must fit the driver's bounded
     // stdout tail window (~2.2 KB observed, which also has to hold
     // sbt's trailing "[success]" line) — rounds 1-7 all produced
@@ -970,7 +850,7 @@ object Bench {
       s""""light_n":${corrected.size},""" +
       s""""queries":${obj1(slowest)},""" +
       s""""heavy":${obj1(heavyMin)},""" +
-      s""""heavy_n":$heavyN,"heavy_copies":$heavyCopies,""" +
+      s""""heavy_n":$HeavyRuns,"heavy_copies":$heavyCopies,""" +
       f""""load":[$loadStart%.1f,$loadPostLight%.1f,$loadEnd%.1f],""" +
       s""""reruns_fixed":${tailReruns.size},""" +
       f""""budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,""" +

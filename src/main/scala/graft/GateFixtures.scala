@@ -1012,24 +1012,49 @@ object GateFixtures {
                  THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) phash
                FROM v JOIN sm ON v.doc_id = sm.doc_id GROUP BY v.doc_id)"""
 
-  /** Closed-form replay of the 64-bit difference hash (m13/w29): 8x8
-    * horizontal gradient bits of the fixture's pixel formula as an
-    * unsigned HUGEINT `s(doc_id, hs)`; [[signedDhash]] folds it into a
-    * signed BIGINT. */
-  private[graft] val imageDhashCtes: String =
-    s"""g AS (SELECT doc_id, CAST(8 + doc_id % 5 AS BIGINT) w,
+  /** Closed-form replay of the 64-bit difference hash (m13/w29/e22):
+    * 8x8 horizontal gradient bits of the fixture's pixel formula as an
+    * unsigned HUGEINT `${p}s(doc_id, hs)`, every CTE name prefixed by
+    * `p`; [[signedDhash]] folds it into a signed BIGINT. */
+  private[graft] def imageDhashCtes(p: String): String =
+    s"""${p}g AS (SELECT doc_id, CAST(8 + doc_id % 5 AS BIGINT) w,
                CAST(8 + doc_id % 3 AS BIGINT) h FROM documents),
-             rs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) r),
-             cs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) c),
-             cells AS (SELECT doc_id, r, c,
+             ${p}rs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) r),
+             ${p}cs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) c),
+             ${p}cells AS (SELECT doc_id, r, c,
                (doc_id + 11*((w*c)//9) + 17*((h*r)//8)) % 256 AS v0,
                (doc_id + 11*((w*(c+1))//9) + 17*((h*r)//8)) % 256 AS v1
-               FROM g, rs, cs),
-             s AS (SELECT doc_id,
+               FROM ${p}g, ${p}rs, ${p}cs),
+             ${p}s AS (SELECT doc_id,
                SUM(CASE WHEN v0 < v1
                  THEN CAST(1 AS HUGEINT) << CAST(r*8+c AS INT)
                  ELSE CAST(0 AS HUGEINT) END) AS hs
-               FROM cells GROUP BY doc_id)"""
+               FROM ${p}cells GROUP BY doc_id)"""
+
+  /** Closed-form replay of the audio envelope fingerprint (m16/e22):
+    * the PCM fixture plus its injected copies (every 97th doc re-added
+    * at `doc_id + idoff`, so the caller defines `mx(idoff)`), 32-sample
+    * frame energies, and one bit per rising frame transition, as
+    * `${p}fpt(doc_id, n_frames, fp)`; every CTE name is prefixed by
+    * `p`. */
+  private[graft] def audioFingerprintCtes(p: String): String =
+    s"""${p}a AS (SELECT doc_id, doc_id src FROM documents
+               UNION ALL SELECT doc_id + idoff, doc_id FROM documents, mx
+               WHERE doc_id % 97 = 0),
+             ${p}d AS (SELECT doc_id, src, 256*(2 + src % 3) n FROM ${p}a),
+             ${p}sm AS (SELECT doc_id, src,
+               UNNEST([i for i in generate_series(0, n::INT - 1)]) i FROM ${p}d),
+             ${p}v AS (SELECT doc_id, i // 32 f,
+               ABS(((src*7 + i*13) % 2048) - 1024) av FROM ${p}sm),
+             ${p}e AS (SELECT doc_id, f, SUM(av) sa FROM ${p}v GROUP BY 1, 2),
+             ${p}c AS (SELECT doc_id, f, sa,
+               lag(sa) OVER (PARTITION BY doc_id ORDER BY f) pv FROM ${p}e),
+             ${p}fpt AS (SELECT doc_id,
+               CAST(COUNT(*) + 1 AS BIGINT) n_frames,
+               CAST(SUM(CASE WHEN sa > pv
+                 THEN (CAST(1 AS BIGINT) << (f - 1)::INT) ELSE 0 END)
+                 AS BIGINT) fp
+               FROM ${p}c WHERE pv IS NOT NULL GROUP BY doc_id)"""
 
   /** `hs` as the two's-complement BIGINT `dhash`. */
   private[graft] val signedDhash: String =

@@ -32,10 +32,10 @@ import graft.SessionArtifact.{Kind, rmTree}
 object SparkEntry {
 
   import GateFixtures.{a5OracleSql, annLshChainCtes, annLshOracleSql,
-    avgHashBits, avgHashCellSum, bm25OracleCtes, bpeOracleCtes,
-    compactionOracleCtes, curationFunnelCtes, e3Activities, e3OracleSql,
-    e3Streams, e4OracleSql, epochAllocationSql, epochWeightRows, f1PpmCol,
-    hybridRrfCtes, imageDhashCtes, imagePhashCtes, keyframeCells,
+    audioFingerprintCtes, avgHashBits, avgHashCellSum, bm25OracleCtes,
+    bpeOracleCtes, compactionOracleCtes, curationFunnelCtes, e3Activities,
+    e3OracleSql, e3Streams, e4OracleSql, epochAllocationSql, epochWeightRows,
+    f1PpmCol, hybridRrfCtes, imageDhashCtes, imagePhashCtes, keyframeCells,
     kmeansMemberCtes, labelIvfOracleSql, lpaOracleCtes, oracleBigramCountCtes,
     oracleBruteRankCtes, oracleEmbedMomentCtes, oracleExactRankCtes,
     oracleExactTop5Ctes, oracleFunnelStageCtes, oracleHex32, oracleHitsCte,
@@ -68,8 +68,7 @@ object SparkEntry {
     s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Run a STREAMING gate body with the stateful-exchange width sized
-    * to the gate fixture — w7's inline discipline generalized (round
-    * 16). Every stateful operator (dedup state, windowed aggregation,
+    * to the gate fixture (round 16). Every stateful operator (dedup state, windowed aggregation,
     * stream-stream join buffers, flatMapGroupsWithState) keeps one
     * state-store instance PER SHUFFLE PARTITION and pays its
     * load+commit on EVERY micro-batch; at the fixtures' cardinality 32
@@ -2653,20 +2652,13 @@ object SparkEntry {
     // SET is arrival-order independent (matches emit when found; the
     // watermark only bounds buffered state), so it hash-gates against
     // the batch range join the oracle runs.
-    ("w7_stream_interval_join", (s, dir) => {
-      // A stream-stream join keeps FOUR state stores per shuffle
-      // partition; at the gate fixture's cardinality 32 partitions is
-      // pure per-batch commit overhead (128 store instances). Size the
-      // stateful exchange to the fixture — production sizes it to the
-      // cluster — and restore the session value after.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+    // A stream-stream join keeps FOUR state stores per shuffle
+    // partition, so its width comes from withStateParts.
+    ("w7_stream_interval_join", (s, dir) => withStateParts(s) {
       val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
       val purchases = eventsStream(s, dir).filter(col("event_type") === "purchase")
       drainToMemory(s, graft.streaming.EventStream.clickPurchaseJoin(clicks,
         purchases), "append")(_.orderBy("user_id", "click_id", "buy_id"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
       Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS buy_id
              FROM events c JOIN events p
@@ -2686,13 +2678,8 @@ object SparkEntry {
     // past the 1 h delay + 10 min window, so boundary eviction
     // semantics cannot flake the hash. The two max-ts scalars are
     // bounded driver values (documented-scalar family).
-    ("w11_stream_outer_join", (s, dir) => {
+    ("w11_stream_outer_join", (s, dir) => withStateParts(s) {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // w7's state-store sizing: 4 stores per shuffle partition on a
-      // stream-stream join; size the stateful exchange to the fixture
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
       val batch = Tables.normalizeTs(s.read.parquet(s"$dir/events.parquet"))
       def maxTs(tpe: String) = batch.filter(col("event_type") === tpe)
         .agg(max(col("ts"))).head().getTimestamp(0)
@@ -2711,7 +2698,6 @@ object SparkEntry {
         .filter(col("click_ts") <= lit(cutoff))
         .select(col("user_id"), col("click_id"), col("buy_id"))
         .orderBy("user_id", "click_id", "buy_id"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
       Some("""WITH c AS (SELECT user_id, event_id, ts FROM events
                WHERE event_type = 'click'),
@@ -2787,11 +2773,6 @@ object SparkEntry {
     // run, so the result hash-matches the batch oracle (w4's SQL) with
     // no watermark withholding.
     ("w8_stream_session", (s, dir) => withStateParts(s) {
-      // w7's state-store sizing rationale: the session-window merging
-      // store per partition is commit overhead at fixture cardinality
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
       val agg = eventsStream(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -2800,7 +2781,6 @@ object SparkEntry {
         .select(col("user_id"), hourStr(col("sw.start")).as("session_start"),
           col("n_events"))
         .orderBy("user_id", "session_start"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
       Some(sessionWindowOracleSql)),
 
@@ -8048,14 +8028,10 @@ object SparkEntry {
       // input batches staged (arrival fixtures note): the three arrival
       // files are the upstream writer's persisted output
       val in = w20Inputs(s, dir)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = stagedBatches(s, in)
-        val agg = stream.groupBy("event_type")
-          .agg(functions.LogHistogram.sketch(col("v_c"), 5).as("sk"))
-        drainToMemory(s, agg, "complete")(sketchQuantiles(_))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = stagedBatches(s, in)
+      val agg = stream.groupBy("event_type")
+        .agg(functions.LogHistogram.sketch(col("v_c"), 5).as("sk"))
+      drainToMemory(s, agg, "complete")(sketchQuantiles(_))
       // the staged input dir is session-owned (clearCaches deletes it)
     },
       Some(quantileSketchOracle)),
@@ -8909,24 +8885,20 @@ object SparkEntry {
       val ref = ev.filter(col("event_id") % 2 === 0)
       // input batches staged (arrival fixtures note)
       val in = w21Inputs(s, dir)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = stagedBatches(s, in)
-        val curBuckets = stream
-          .select(col("event_type"),
-            operators.Drift.bucketFloorExpr("v", 3).as("lo"))
-          .groupBy("event_type", "lo")
-          .agg(count(lit(1)).as("n_cur"))
-        drainToMemory(s, curBuckets, "complete") { sink =>
-          val refB = operators.Drift.bucketCounts(ref, Seq("event_type"), "v", 3, "ref")
-          operators.Drift
-            .psiFromBuckets(refB, sink, Seq("event_type"))
-            .select(col("event_type"), col("n_ref"), col("n_cur"),
-              col("n_buckets"), round(col("psi"), 6).as("psi"))
-            .orderBy("event_type")
-        }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = stagedBatches(s, in)
+      val curBuckets = stream
+        .select(col("event_type"),
+          operators.Drift.bucketFloorExpr("v", 3).as("lo"))
+        .groupBy("event_type", "lo")
+        .agg(count(lit(1)).as("n_cur"))
+      drainToMemory(s, curBuckets, "complete") { sink =>
+        val refB = operators.Drift.bucketCounts(ref, Seq("event_type"), "v", 3, "ref")
+        operators.Drift
+          .psiFromBuckets(refB, sink, Seq("event_type"))
+          .select(col("event_type"), col("n_ref"), col("n_cur"),
+            col("n_buckets"), round(col("psi"), 6).as("psi"))
+          .orderBy("event_type")
+      }
     },
       Some(corpusDriftOracleSql)),
 
@@ -9121,24 +9093,8 @@ object SparkEntry {
         .filter(col("n_docs") > 1)
         .orderBy("fp", "n_frames")
     },
-      Some("""WITH mx AS (SELECT MAX(doc_id) + 1 idoff FROM documents),
-             a AS (SELECT doc_id, doc_id src FROM documents
-               UNION ALL SELECT doc_id + idoff, doc_id FROM documents, mx
-               WHERE doc_id % 97 = 0),
-             d AS (SELECT doc_id, src, 256*(2 + src % 3) n FROM a),
-             sm AS (SELECT doc_id, src,
-               UNNEST([i for i in generate_series(0, n::INT - 1)]) i FROM d),
-             v AS (SELECT doc_id, i // 32 f,
-               ABS(((src*7 + i*13) % 2048) - 1024) av FROM sm),
-             e AS (SELECT doc_id, f, SUM(av) sa FROM v GROUP BY 1, 2),
-             c AS (SELECT doc_id, f, sa,
-               lag(sa) OVER (PARTITION BY doc_id ORDER BY f) pv FROM e),
-             fpt AS (SELECT doc_id,
-               CAST(COUNT(*) + 1 AS BIGINT) n_frames,
-               CAST(SUM(CASE WHEN sa > pv
-                 THEN (CAST(1 AS BIGINT) << (f - 1)::INT) ELSE 0 END)
-                 AS BIGINT) fp
-               FROM c WHERE pv IS NOT NULL GROUP BY doc_id)
+      Some(s"""WITH mx AS (SELECT MAX(doc_id) + 1 idoff FROM documents),
+             ${audioFingerprintCtes("")}
              SELECT fp, n_frames, CAST(COUNT(*) AS BIGINT) n_docs,
                MIN(doc_id) keep_doc_id
              FROM fpt GROUP BY 1, 2 HAVING COUNT(*) > 1
@@ -9164,7 +9120,7 @@ object SparkEntry {
         .withColumnRenamed("phash", "dhash")
         .orderBy("dhash")
     },
-      Some(s"""WITH $imageDhashCtes,
+      Some(s"""WITH ${imageDhashCtes("")},
              b AS (SELECT doc_id,
                $signedDhash
                FROM s)
@@ -9189,15 +9145,11 @@ object SparkEntry {
         "li_price_positive" -> (col("l_extendedprice") <= 0))
       // input batches staged (arrival fixtures note)
       val in = w22Inputs(s, dir)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = stagedBatches(s, in)
-        val aggs = DataQuality.auditAggs(rules)
-        val agg = stream.groupBy().agg(aggs.head, aggs.tail: _*)
-        drainToMemory(s, agg, "complete")(
-          DataQuality.report(_, rules).orderBy("rule"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = stagedBatches(s, in)
+      val aggs = DataQuality.auditAggs(rules)
+      val agg = stream.groupBy().agg(aggs.head, aggs.tail: _*)
+      drainToMemory(s, agg, "complete")(
+        DataQuality.report(_, rules).orderBy("rule"))
     },
       Some("""WITH li AS (SELECT COUNT(*) n,
                COUNT(*) FILTER (l_quantity > 45) v1,
@@ -10096,29 +10048,25 @@ object SparkEntry {
         .select(col("doc_id"), col("text"), col("n_chars"))
       // input batches staged (arrival fixtures note)
       val in = w23Inputs(s, dir)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = stagedBatches(s, in)
-        val sumW = expr(
-          """aggregate(split(text, ' '), CAST(0 AS BIGINT), (acc, tk) -> acc
-             + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 1, 1)) - 1) * 4096
-             + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 2, 1)) - 1) * 256
-             + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 3, 1)) - 1) * 16
-             + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 4, 1)) - 1)
-             - 32768)""")
-        val agg = stream
-          .withColumn("__sw", sumW)
-          .withColumn("__nt", size(split(col("text"), " ")).cast("long"))
-          .withColumn("bucket", expr("(__sw div __nt + 32768) div 4096"))
-          .withColumn("__l", col("n_chars") >= 300)
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("__l"), 1L).otherwise(0L)).as("n_pos"))
-        drainToMemory(s, agg, "complete")(_
-          .withColumn("pos_rate_ppm", expr("n_pos * 1000000 div n"))
-          .orderBy("bucket"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val stream = stagedBatches(s, in)
+      val sumW = expr(
+        """aggregate(split(text, ' '), CAST(0 AS BIGINT), (acc, tk) -> acc
+           + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 1, 1)) - 1) * 4096
+           + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 2, 1)) - 1) * 256
+           + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 3, 1)) - 1) * 16
+           + (instr('0123456789abcdef', substr(md5(concat('qc|', tk)), 4, 1)) - 1)
+           - 32768)""")
+      val agg = stream
+        .withColumn("__sw", sumW)
+        .withColumn("__nt", size(split(col("text"), " ")).cast("long"))
+        .withColumn("bucket", expr("(__sw div __nt + 32768) div 4096"))
+        .withColumn("__l", col("n_chars") >= 300)
+        .groupBy("bucket")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("__l"), 1L).otherwise(0L)).as("n_pos"))
+      drainToMemory(s, agg, "complete")(_
+        .withColumn("pos_rate_ppm", expr("n_pos * 1000000 div n"))
+        .orderBy("bucket"))
     },
       Some(calibrationOracleSql)),
 
@@ -10704,7 +10652,7 @@ object SparkEntry {
       drainToMemory(s, graft.multimodal.Multimodal.imageDifferenceHashes(stream)
         .toDF().withColumnRenamed("phash", "dhash"), "append")(_.orderBy("doc_id"))
     },
-      Some(s"""WITH $imageDhashCtes
+      Some(s"""WITH ${imageDhashCtes("")}
              SELECT doc_id,
                $signedDhash
              FROM s ORDER BY doc_id""")),
@@ -11929,43 +11877,15 @@ object SparkEntry {
            tkeep AS (SELECT d.doc_id FROM documents d
              WHERE d.doc_id NOT IN
                (SELECT doc_id FROM cl WHERE doc_id <> cluster)),
-           ig AS (SELECT doc_id, CAST(8 + doc_id % 5 AS BIGINT) w,
-             CAST(8 + doc_id % 3 AS BIGINT) h FROM documents),
-           irs AS (SELECT UNNEST([i for i in generate_series(0, 7)]) r),
-           ics AS (SELECT UNNEST([i for i in generate_series(0, 7)]) c),
-           icell AS (SELECT doc_id, r, c,
-             (doc_id + 11*((w*c)//9) + 17*((h*r)//8)) % 256 AS v0,
-             (doc_id + 11*((w*(c+1))//9) + 17*((h*r)//8)) % 256 AS v1
-             FROM ig, irs, ics),
-           ih AS (SELECT doc_id,
-             SUM(CASE WHEN v0 < v1
-               THEN CAST(1 AS HUGEINT) << CAST(r*8+c AS INT)
-               ELSE CAST(0 AS HUGEINT) END) AS hs
-             FROM icell GROUP BY doc_id),
+           ${imageDhashCtes("i_")},
            ikeep AS (SELECT doc_id FROM
-             (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY hs) k FROM ih)
+             (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY hs) k FROM i_s)
              WHERE doc_id = k),
            mx AS (SELECT MAX(doc_id) + 1 idoff FROM documents),
-           aa AS (SELECT doc_id, doc_id src FROM documents
-             UNION ALL SELECT doc_id + idoff, doc_id FROM documents, mx
-             WHERE doc_id % 97 = 0),
-           ad AS (SELECT doc_id, src, 256*(2 + src % 3) n FROM aa),
-           asamp AS (SELECT doc_id, src,
-             UNNEST([i for i in generate_series(0, n::INT - 1)]) i FROM ad),
-           av AS (SELECT doc_id, i // 32 f,
-             ABS(((src*7 + i*13) % 2048) - 1024) avv FROM asamp),
-           ae AS (SELECT doc_id, f, SUM(avv) sa FROM av GROUP BY 1, 2),
-           ac AS (SELECT doc_id, f, sa,
-             lag(sa) OVER (PARTITION BY doc_id ORDER BY f) pv FROM ae),
-           afpt AS (SELECT doc_id,
-             CAST(COUNT(*) + 1 AS BIGINT) n_frames,
-             CAST(SUM(CASE WHEN sa > pv
-               THEN (CAST(1 AS BIGINT) << (f - 1)::INT) ELSE 0 END)
-               AS BIGINT) fp
-             FROM ac WHERE pv IS NOT NULL GROUP BY doc_id),
+           ${audioFingerprintCtes("a_")},
            akeep AS (SELECT doc_id, n_frames FROM
              (SELECT doc_id, n_frames,
-                MIN(doc_id) OVER (PARTITION BY fp, n_frames) k FROM afpt)
+                MIN(doc_id) OVER (PARTITION BY fp, n_frames) k FROM a_fpt)
              WHERE doc_id = k),
            va AS (SELECT doc_id, text FROM documents
              UNION ALL SELECT doc_id + idoff, text FROM documents, mx

@@ -8,385 +8,173 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{HeavyData, SparkEntry, Tables}
 
 /** Heavy-tier measurement in a FRESH JVM: one process per query, `n`
-  * timed runs, wall AND GC seconds per run. Exists because in-session
-  * heavy numbers inherit 300+ queries of JVM/heap/JIT state — the
-  * round-4 flagship measured 18/56/101 s across three same-code runs,
-  * which made its scale story unfalsifiable. Bench forks this runner;
-  * it can also be launched by hand:
+  * timed runs, wall, GC and CPU seconds per run. Exists because
+  * in-session heavy numbers inherit 300+ queries of JVM/heap/JIT state
+  * — the round-4 flagship measured 18/56/101 s across three same-code
+  * runs, which made its scale story unfalsifiable. Bench forks this
+  * runner with its own JVM options and classpath; by hand, use the
+  * add-opens list and heap from build.sbt:
   *
   *   java --add-opens ... -Xmx48g \
   *     -cp target/scala-2.13/classes:/opt/spark/jars/'*' \
   *     graft.tools.HeavyRunner /tmp/graft_heavy_x10 3 e3_pipeline_streams
   *
+  * Environment (both set by Bench): SPARK_GRAFT_HEAVY_DEADLINE_MS, the
+  * absolute epoch-millis deadline after which no query starts;
+  * SPARK_GRAFT_WARM_DIR, the light-scale dir for an untimed warm pass
+  * before each query.
+  *
   * Timed work is forced with a noop WRITE, not count(): count() lets
   * Catalyst prune the maxima aggregates and the final sort out of the
   * flagship plan — it measures less than the query.
   *
-  * Output: one tab-separated line per query on stdout:
-  *   HEAVY\t<query>\t<wall,...>\t<gcSec,...>\t<loadAvg,...>\t<cpuSec,...>
-  *     \t<ioMB,...>\t<warmSec>\t<loadAtStart,...>\t<ctxtSwitchDelta,...>
-  *     \t<cachedMb,...>\t<majfltDelta,...>\t<memAvailMbAtStart,...>
-  *     \t<minfltDelta,...>
+  * Output: one tab-separated line per query on stdout ([[heavyLine]]):
+  *   HEAVY\t<query>\t<wall,...>\t<gcSec,...>\t<cpuSec,...>\t<warmSec>
   * or, when the query never produced a valid timing:
   *   HEAVYSKIP\t<query>   — not started by the budget deadline
   *   HEAVYCAP\t<query>    — run 1 cancelled at the per-run cap
   *   HEAVYFAIL\t<query>\t<error> — the query threw
   * — every query the fork was handed produces exactly one named line,
   * so failures are artifact-visible, not stderr-only. cpuSec/(wall*
-  * cores) is the run's CPU utilization — the co-tenant-starvation
-  * discriminator (see [[cpuSeconds]]); the per-run involuntary
-  * context-switch delta ([[invCtxtSwitches]]) plus the loadavg pair
-  * sampled at run START and END is the in-artifact adjudicator for an
-  * anomalous wall: a ctxt-switch delta that scales with the cpu-second
-  * tail says contended cores inflated cpu-time, a flat delta says the
-  * work itself grew (escalate to [[OneQuery]]'s stage receipts and
-  * final plan).
+  * cores) is the run's CPU utilization (see [[cpuSeconds]]).
   */
 object HeavyRunner {
 
-  /** Spark 4.x on JDK 17 outside spark-submit needs these (same list
-    * as build.sbt's javaOptions — keep in sync). */
-  val jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** One member's record: per-run wall, GC and CPU seconds, and the
+    * untimed light-scale warm pass when the fork ran one. */
+  final case class HeavyResult(name: String, walls: Seq[Double],
+                               gcs: Seq[Double], cpus: Seq[Double],
+                               warm: Option[Double])
 
-  /** Heavy variant of a registry query: e3/e4 run the pipeline from
-    * the PERSISTED fixture corpora (HeavyData writes them next to the
-    * tables) so the measurement starts at the pipeline inputs instead
-    * of re-deriving them through to_json -> clean -> groupBy on every
-    * run; everything else is the registry entry itself. */
-  /** Per-member UNTIMED index staging at HEAVY scale (round 13 — the
-    * e3/e4 persisted-fixture discipline applied to the dedup chain):
-    * the light tier's d5/e6 read the MEMOIZED signature/pair indexes
-    * that d2/d3 built, but a fresh fork pays the whole chain inside
-    * the first timed run — so heavy-d5 measured chain-build, not the
-    * verify that is its operator (and the one live cap firing plus
-    * the e6 amplification family both sat in exactly that cold
-    * build). Staging runs d3's dataflow once, untimed, so the timed
-    * member starts from the persisted indexes: d5 times the verify,
-    * e6 times verify→CC→keep — its documented production shape
-    * (chain build stays measured by d2/d3's own members). */
-  /** Round 14 addition to the d5/e6 stagers: ALSO run the VERIFY
-    * kernel once on a tiny pair slice. The round's amplification
-    * mechanism is now NAMED (BENCH_NOTES): the firings are
-    * INTERPRETED-EXECUTION phases — freshly generated per-plan
-    * codegen classes running un-JIT-compiled while co-tenant CPU
-    * pressure starves HotSpot's compiler threads (mid-flight stack
-    * dump: 24/33 task threads in SQLOpenHashSet /
-    * SpecializedGettersReader — array_intersect's interpreted path;
-    * magnitude bracket: C1-only 1.4x, observed firings 6-22x, full
-    * interpreter 55x). d5/e6 are the firing members precisely
-    * because the d3-dataflow staging pre-JITs the CHAIN but not
-    * their verify kernel — a 200-pair verify slice invokes exactly
-    * those code paths, untimed, for pennies. HONEST LIMIT (run-7
-    * receipt): under active compiler starvation the warm-up only
-    * ENQUEUES the compilations — the C2 threads still cannot run, so
-    * a firing can still occur (e6 58.6 s / 1591 cpu-s in run 7, the
-    * dump again showing the interpreted array path). The slice makes
-    * quiet-box runs immune; under starvation the per-run cap bounds
-    * the damage and min-of-history carries the true number. */
+  private def series(xs: Seq[Double], fmt: String): String =
+    xs.map(x => String.format(java.util.Locale.ROOT, fmt, Double.box(x)))
+      .mkString(",")
+
+  /** The `HEAVY` line for `r`: walls and GC seconds to the ms, CPU
+    * seconds to 0.1 s, an empty warm field when no warm pass ran. */
+  private[graft] def heavyLine(r: HeavyResult): String =
+    Seq("HEAVY", r.name, series(r.walls, "%.3f"), series(r.gcs, "%.3f"),
+      series(r.cpus, "%.1f"), series(r.warm.toSeq, "%.3f")).mkString("\t")
+
+  /** The record a [[heavyLine]] carries; None for any other line. */
+  private[graft] def parseHeavyLine(line: String): Option[HeavyResult] = {
+    val f = line.split("\t", -1)
+    if (f.length != 6 || f(0) != "HEAVY") None
+    else {
+      def nums(s: String) = s.split(",").toSeq.filter(_.nonEmpty).map(_.toDouble)
+      Some(HeavyResult(f(1), nums(f(2)), nums(f(3)), nums(f(4)),
+        nums(f(5)).headOption))
+    }
+  }
+
+  /** Per-run cap: a run still going after this long is cancelled and,
+    * on run 1, the member records as HEAVYCAP. 150 s is 5x the worst
+    * quiet cold receipt on any member (round 11: one 216 s e6 run
+    * starved all 7 remaining worst cases of its fork). */
+  private val QueryCapMs = 150000L
+
+  /** Per-member UNTIMED index staging at HEAVY scale: a fresh fork
+    * would otherwise pay d3's whole signature/pair chain inside d5's
+    * and e6's first timed run, so d5 would time chain build instead of
+    * the verify that is its operator (chain build stays measured by
+    * d2/d3's own members). Staging also runs the VERIFY kernel once on
+    * a 200-pair slice: the d5/e6 cpu firings were interpreted-execution
+    * phases of freshly generated codegen classes (BENCH_NOTES round
+    * 14), and the slice JIT-compiles exactly those paths, untimed —
+    * Spark's codegen cache keys on generated source, so the timed run
+    * reuses them. Under active compiler starvation a firing can still
+    * occur; the per-run cap bounds it and min-of-history carries the
+    * true number. */
   private def stageDedupChain(s: SparkSession, dir: String): Unit = {
     val pairs = SparkEntry.queries("d3_lsh_pairs")(s, dir)
     pairs.count()
-    // the verify-kernel pre-JIT: same expression shapes as the timed
-    // verify (Spark's codegen cache keys on generated source, so the
-    // compiled-and-JITted classes are REUSED by the timed run); 200
-    // pairs x ~2k grams of backedges is past the C1/C2 OSR thresholds
     graft.operators.Dedup.ngramJaccard(
       graft.Tables.load(s, dir, "documents"), pairs.limit(200))
       .write.format("noop").mode("overwrite").save()
     ()
   }
 
-  private val stagers: Map[String, (SparkSession, String) => Unit] = Map(
+  private[graft] val stagers: Map[String, (SparkSession, String) => Unit] = Map(
     "d5_ngram_jaccard" -> ((s, dir) => stageDedupChain(s, dir)),
     "e6_dedup_pipeline" -> ((s, dir) => stageDedupChain(s, dir)))
 
-  def resolve(name: String): (SparkSession, String) => DataFrame = {
-    def persisted(dir: String) =
-      new java.io.File(s"$dir/${HeavyData.e3ActsFile}").exists()
-    name match {
-      case "e3_pipeline_streams" => (s, dir) =>
-        if (!persisted(dir)) SparkEntry.queries(name)(s, dir)
-        else graft.GateFixtures.e3Select(graft.etl.ActivityPipeline.process(
-          s.read.parquet(s"$dir/${HeavyData.e3ActsFile}"),
-          s.read.parquet(s"$dir/${HeavyData.e3StreamsFile}"),
-          HeavyData.gateNow))
-      case "e4_legacy_poisoning" => (s, dir) =>
-        if (!persisted(dir)) SparkEntry.queries(name)(s, dir)
-        else graft.GateFixtures.e4Select(graft.etl.ActivityPipeline.process(
-          s.read.parquet(s"$dir/${HeavyData.e3ActsFile}"),
-          s.read.parquet(s"$dir/${HeavyData.e3PoisonFile}"),
-          HeavyData.gateNow, dualMaxs = true))
-      case "d16_semantic_dedup" => (s, dir) => {
-        // production configuration, not the gate's: the codebook GROWS
-        // with the corpus (25 cells at 10x vs the gate's 5 — bounds
-        // in-cell pairwise work) and is TRAINED ON A SAMPLE (k-means
-        // scoring is n·d·k rows per Lloyd round; the 10% deterministic
-        // sample keeps training from dominating what it feeds —
-        // kmeansCentroids scaladoc says exactly this). Measuring heavy
-        // d16 at gate settings would time the deliberately-wrong
-        // configuration.
-        import org.apache.spark.sql.functions.col
-        val em = Tables.load(s, dir, "embeddings")
-        val sample = em.filter(col("vec_id") % 10 === 0)
-        graft.operators.Dedup.semanticDedup(
-          em, graft.operators.Ann.kmeansCentroids(sample, 25, 2), 0.4)
-          .orderBy("drop_id")
-      }
-      case "d12_substring_runs" =>
-        // Half the saturated corpus (the first ~K/2 key-offset copies).
-        // d12 is the honest pair-verify worst case — cost grows with
-        // the SQUARE of each near-duplicate cluster's size, so at the
-        // full 10x it alone burned ~28 cpu-minutes of a 900 s budget
-        // (BENCH_r07: 1669 cpu-s, run 2 shed) measuring a shape whose
-        // production answer is d19/d20. At 5x the clusters halve and
-        // the pair work quarters — still far above the sf0.1 overhead
-        // floor, still a plan-regression detector. The full corpus is
-        // timed by `OneQuery d12_substring_runs <heavyDir>`.
-        (s, dir) => {
-          import org.apache.spark.sql.functions.{col, max}
-          val docs = Tables.load(s, dir, "documents")
-          val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-          graft.operators.Dedup.longestCommonRuns(
-            docs.filter(col("doc_id") <= maxId / 2), 8, 12, 100)
-            .orderBy("doc_a", "doc_b")
-        }
-      // d17 no longer needs a heavy override: contaminationBloom
-      // auto-sizes the filter from the benchmark gram count (~16
-      // bits/gram, FP ~0.1%), so the registry entry IS the production
-      // configuration at every scale. The round-5 override (2^22 bits
-      // vs the gate's saturating 2^17 fixed default) is superseded.
-      // Note the x10 key-offset corpus is contamination-saturated by
-      // construction (98% of train grams genuinely hit the benchmark),
-      // so heavy d17 still measures the verify join's worst case.
-      case _ => SparkEntry.queries(name)
-    }
-  }
+  private def persisted(dir: String) =
+    new java.io.File(s"$dir/${HeavyData.e3ActsFile}").exists()
+
+  /** Heavy variants of registry queries: e3/e4 run the pipeline from
+    * the PERSISTED fixture corpora (HeavyData writes them next to the
+    * tables) so the measurement starts at the pipeline inputs instead
+    * of re-deriving them through to_json -> clean -> groupBy on every
+    * run; d16/d12 run their production configurations. */
+  private[graft] val overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "e3_pipeline_streams" -> ((s, dir) =>
+      if (!persisted(dir)) SparkEntry.queries("e3_pipeline_streams")(s, dir)
+      else graft.GateFixtures.e3Select(graft.etl.ActivityPipeline.process(
+        s.read.parquet(s"$dir/${HeavyData.e3ActsFile}"),
+        s.read.parquet(s"$dir/${HeavyData.e3StreamsFile}"),
+        HeavyData.gateNow))),
+    "e4_legacy_poisoning" -> ((s, dir) =>
+      if (!persisted(dir)) SparkEntry.queries("e4_legacy_poisoning")(s, dir)
+      else graft.GateFixtures.e4Select(graft.etl.ActivityPipeline.process(
+        s.read.parquet(s"$dir/${HeavyData.e3ActsFile}"),
+        s.read.parquet(s"$dir/${HeavyData.e3PoisonFile}"),
+        HeavyData.gateNow, dualMaxs = true))),
+    // production configuration, not the gate's: the codebook GROWS
+    // with the corpus (25 cells at 10x vs the gate's 5 — bounds
+    // in-cell pairwise work) and is TRAINED ON A SAMPLE (k-means
+    // scoring is n·d·k rows per Lloyd round; the 10% deterministic
+    // sample keeps training from dominating what it feeds —
+    // kmeansCentroids scaladoc says exactly this). Measuring heavy
+    // d16 at gate settings would time the deliberately-wrong
+    // configuration.
+    "d16_semantic_dedup" -> ((s, dir) => {
+      import org.apache.spark.sql.functions.col
+      val em = Tables.load(s, dir, "embeddings")
+      val sample = em.filter(col("vec_id") % 10 === 0)
+      graft.operators.Dedup.semanticDedup(
+        em, graft.operators.Ann.kmeansCentroids(sample, 25, 2), 0.4)
+        .orderBy("drop_id")
+    }),
+    // Half the saturated corpus (the first ~K/2 key-offset copies).
+    // d12 is the honest pair-verify worst case — cost grows with the
+    // SQUARE of each near-duplicate cluster's size, so at the full 10x
+    // it alone burned ~28 cpu-minutes of a 900 s budget (BENCH_r07:
+    // 1669 cpu-s, run 2 shed) measuring a shape whose production
+    // answer is d19/d20. At 5x the clusters halve and the pair work
+    // quarters — still far above the sf0.1 overhead floor, still a
+    // plan-regression detector. The full corpus is timed by
+    // `OneQuery d12_substring_runs <heavyDir>`.
+    "d12_substring_runs" -> ((s, dir) => {
+      import org.apache.spark.sql.functions.{col, max}
+      val docs = Tables.load(s, dir, "documents")
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      graft.operators.Dedup.longestCommonRuns(
+        docs.filter(col("doc_id") <= maxId / 2), 8, 12, 100)
+        .orderBy("doc_a", "doc_b")
+    }))
+
+  /** A heavy member's query: its [[overrides]] entry, else the registry
+    * entry itself. d17 needs no override: contaminationBloom auto-sizes
+    * the filter from the benchmark gram count, so the registry entry IS
+    * the production configuration at every scale. */
+  private def resolve(name: String): (SparkSession, String) => DataFrame =
+    overrides.getOrElse(name, SparkEntry.queries(name))
 
   private def gcMillis: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).sum
 
-  /** 1-minute system load average at this instant — co-tenant load is
-    * the dominant confound on shared boxes (round-4/5 receipts: heavy
-    * d5 measured 245-692 s during a load spike vs 26/20 s idle, same
-    * code, same data). Sampled after each run, so it MIXES our own
-    * 32-thread load with neighbors' — corroborating signal only; the
-    * discriminating signal is [[cpuSeconds]] utilization. */
-  private def loadAvg: Double =
-    ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
   /** Cumulative CPU seconds of THIS process. The per-run delta divided
     * by (wall × cores) is the fork's CPU utilization — the signal that
-    * actually separates "genuinely expensive" (high utilization: we
-    * had the cores and used them) from "starved by co-tenants" (low
-    * utilization: the run waited, the work didn't grow). The 1-minute
-    * load average cannot make that distinction because a saturating
-    * run raises it by itself. */
+    * separates "genuinely expensive" (high utilization: we had the
+    * cores and used them) from "starved by co-tenants" (low
+    * utilization: the run waited, the work didn't grow). */
   private def cpuSeconds: Double =
     ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean =>
         os.getProcessCpuTime / 1e9 // nanoseconds on HotSpot
       case _ => -1.0
     }
-
-  /** Sum of `nonvoluntary_ctxt_switches` across every live thread of
-    * THIS process (/proc/self/task/<tid>/status — /proc/self/status
-    * alone reports only the MAIN thread, and Spark's work happens on
-    * executor-pool threads). The per-run delta is the round-12
-    * contention adjudicator the e6 anomaly lacked: an involuntary
-    * switch means the scheduler evicted a runnable thread — co-tenant
-    * core pressure — so a delta that scales with an inflated
-    * cpu-second tail is contention, a flat delta under the same
-    * inflation is real extra work. Caveat (documented, acceptable):
-    * counters of threads that EXIT between the two samples are lost,
-    * so a delta can under-count; Spark's executor pool is long-lived
-    * within a fork, and the signal is a ratio, not an audit. -1 when
-    * /proc is unavailable. */
-  private def invCtxtSwitches: Long =
-    try {
-      val tasks = new java.io.File("/proc/self/task").listFiles()
-      if (tasks == null) -1L
-      else tasks.map { t =>
-        try {
-          val src = scala.io.Source.fromFile(new java.io.File(t, "status"))
-          try src.getLines()
-            .collectFirst { case l if l.startsWith("nonvoluntary_ctxt_switches:") =>
-              l.substring(l.indexOf(':') + 1).trim.toLong }
-            .getOrElse(0L)
-          finally src.close()
-        } catch { case _: Throwable => 0L } // thread exited mid-walk
-      }.sum
-    } catch { case _: Throwable => -1L }
-
-  /** MB of block-manager storage currently holding cached/persisted
-    * RDD partitions. The round-12 stress experiment REFUTED the
-    * "contended cores inflate cpu-time" hypothesis (24 busy co-tenant
-    * processes: wall 1.7x, ctxt 4-10x, cpu FLAT), which leaves silent
-    * RE-EXECUTION as the live explanation for a cpu-inflated firing —
-    * and the one mechanism that re-executes without an error is
-    * storage EVICTION of the memoized dedup indexes (every downstream
-    * reference then silently rebuilds the whole chain). A run that
-    * starts with the expected cached MB and ends near zero has its
-    * verdict in the artifact. */
-  private def cachedStorageMb(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    try spark.sparkContext.getRDDStorageInfo
-      .map(i => i.memSize + i.diskSize).sum >> 20
-    catch { case _: Throwable => -1L }
-
-  /** Major page faults of THIS process so far (/proc/self/stat majflt
-    * — faults that had to hit the block device because the page was
-    * not in memory). The per-run delta is the round-13 amplification
-    * instrument's always-on half: every hypothesis except CO-TENANT
-    * MEMORY PRESSURE is refuted by receipts (contention via the r12
-    * stress test, GC/I-O/cold-build via the artifact fields), and the
-    * signature of that last candidate is precisely major faults —
-    * a neighbor's working set evicting our heap/page-cache pages makes
-    * task threads fault them back in, burning real cpu-time with
-    * caches "warm" and heavy_io flat (read_bytes counts OUR reads;
-    * majflt counts forced re-reads of OUR OWN pages). A firing with
-    * majflt_delta in the tens of thousands is NAMED; one with a flat
-    * delta kills the hypothesis. -1 when /proc is unavailable. */
-  private def statField(idxAfterComm: Int): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/stat")
-      val s = try src.mkString finally src.close()
-      // comm may contain spaces — fields resume after the last ')':
-      // state ppid pgrp session tty_nr tpgid flags minflt cminflt majflt
-      val rest = s.substring(s.lastIndexOf(')') + 2).trim.split("\\s+")
-      rest(idxAfterComm).toLong
-    } catch { case _: Throwable => -1L }
-
-  private def majorFaults: Long = statField(9)
-
-  /** Minor page faults of THIS process (/proc/self/stat minflt). The
-    * round-14 synthetic-co-tenant experiments ELIMINATED scheduler
-    * contention (24 spins: wall 1.7x, cpu FLAT), memory bandwidth
-    * (12 stream-sum hogs: cpu flat), and in-fork position (full
-    * roster quiet: cpu flat) as cpu-inflators — yet live episodes
-    * inflate cpu 3-5x with majflt 0 and MemAvailable flat. The
-    * remaining kernel-side candidate is ANON page work (THP direct
-    * compaction / reclaim on allocation) which runs in OUR fault path
-    * on OUR cpu accounting and surfaces as MINOR faults; a firing
-    * whose minflt delta scales with the cpu excess names it, one
-    * whose minflt is flat pushes toward JVM-internal spinning (the
-    * amp dump's stack groups then adjudicate). */
-  private def minorFaults: Long = statField(7)
-
-  /** Selected /proc/vmstat counters — box-wide kernel memory-work
-    * receipts for the amp dump: compact_stall (direct-compaction
-    * stalls: a process BURNING CPU IN THE KERNEL to make a huge page),
-    * thp_fault_alloc/fallback, pgsteal_direct (direct reclaim). */
-  private def vmstat(keys: Seq[String]): Map[String, Long] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/vmstat")
-      try src.getLines().flatMap { l =>
-        val p = l.split(" ")
-        if (p.length == 2 && keys.contains(p(0)))
-          scala.util.Try(p(0) -> p(1).toLong).toOption
-        else None
-      }.toMap
-      finally src.close()
-    } catch { case _: Throwable => Map.empty }
-
-  private val vmstatKeys = Seq("compact_stall", "compact_fail",
-    "thp_fault_alloc", "thp_fault_fallback", "pgsteal_direct",
-    "pgscan_direct")
-
-  /** Selected /proc/meminfo fields in MB (box-wide — the co-tenant
-    * context a per-process counter cannot see). */
-  private def meminfoMb(keys: Seq[String]): Map[String, Long] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/meminfo")
-      try src.getLines().flatMap { l =>
-        val i = l.indexOf(':')
-        if (i < 0) None
-        else {
-          val k = l.substring(0, i)
-          if (!keys.contains(k)) None
-          else scala.util.Try(
-            l.substring(i + 1).trim.split("\\s+")(0).toLong >> 10).toOption
-            .map(k -> _)
-        }
-      }.toMap
-      finally src.close()
-    } catch { case _: Throwable => Map.empty }
-
-  /** MemAvailable in MB right now, -1 if unreadable — the one box-wide
-    * number that rides every run's HEAVY line (sampled at run START):
-    * a firing that began at MemAvailable ~0 has its co-tenant receipt
-    * in the artifact itself. */
-  private def memAvailableMb: Long =
-    meminfoMb(Seq("MemAvailable")).getOrElse("MemAvailable", -1L)
-
-  /** The TRIGGERED half of the amplification instrument: called by a
-    * watchdog the moment a run crosses its trigger threshold (3x the
-    * member's in-fork quiet wall, or 45 s on run 1 where no band
-    * exists yet; override with SPARK_GRAFT_AMP_TRIGGER_MS). Dumps, to
-    * stderr, the box-wide memory state plus a grouped sample of every
-    * executor task thread's top stack frames — enough to adjudicate
-    * the firing by MECHANISM in the round artifact: major faults +
-    * collapsed MemAvailable = co-tenant memory pressure (threads will
-    * show ordinary compute frames, faulting invisibly); threads piled
-    * on one lock/shuffle frame = something else entirely. Runs in
-    * milliseconds, touches nothing, never cancels the run. */
-  private def dumpAmplification(tag: String, majfltAtStart: Long,
-                                minfltAtStart: Long,
-                                vmstatAtStart: Map[String, Long]): Unit =
-    try {
-      val mi = meminfoMb(Seq("MemTotal", "MemFree", "MemAvailable",
-        "Cached", "Dirty", "Writeback", "SwapFree", "PageTables"))
-      val mj = majorFaults
-      val mn = minorFaults
-      val delta = if (mj < 0 || majfltAtStart < 0) -1L else mj - majfltAtStart
-      val mdelta = if (mn < 0 || minfltAtStart < 0) -1L else mn - minfltAtStart
-      val vm = vmstat(vmstatKeys)
-      val vmDelta = vmstatKeys.flatMap(k =>
-        for (a <- vmstatAtStart.get(k); b <- vm.get(k)) yield s"$k=${b - a}")
-      System.err.println(s"[amp $tag] meminfo MB: " +
-        mi.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ") +
-        s" | majflt_delta=$delta minflt_delta=$mdelta " +
-        s"load=${f"$loadAvg%.1f"} | vmstat deltas: ${vmDelta.mkString(" ")}")
-      import scala.jdk.CollectionConverters._
-      val stacks = Thread.getAllStackTraces.asScala.toSeq
-        .filter(_._1.getName.startsWith("Executor task launch"))
-      val grouped = stacks
-        .map { case (t, fr) =>
-          (t.getState.toString,
-            fr.take(3).map(e => s"${e.getClassName}.${e.getMethodName}")
-              .mkString(" <- "))
-        }
-        .groupBy(identity).toSeq.sortBy(-_._2.size).take(6)
-      System.err.println(s"[amp $tag] ${stacks.size} executor threads; " +
-        "top stack groups:")
-      grouped.foreach { case ((st, sig), g) =>
-        System.err.println(s"[amp $tag]   x${g.size} [$st] $sig")
-      }
-    } catch { case scala.util.control.NonFatal(_) => }
-
-  /** Actual block-device bytes read by THIS process so far
-    * (`/proc/self/io` read_bytes — page-cache hits don't count). The
-    * per-run delta is the I/O receipt the cross-environment story
-    * needs: a warm run with MBs of read_bytes is cache-cold on that
-    * box, one with ~0 is CPU-bound, and the same query can honestly be
-    * both on different machines. -1 when /proc is unavailable. */
-  private def diskReadBytes: Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/io")
-      try src.getLines()
-        .collectFirst { case l if l.startsWith("read_bytes:") =>
-          l.substring(l.indexOf(':') + 1).trim.toLong }
-        .getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
 
   /** Untimed first-touch of every parquet byte under `dir`: stream the
     * raw files through a scratch buffer so the OS page cache is warm
@@ -476,12 +264,9 @@ object HeavyRunner {
         // while JIT warmth survives the drop.
         if (warmSec.nonEmpty) SparkEntry.clearCaches(spark)
         // HEAVY-scale index staging (see stagers): untimed, AFTER the
-        // light-scale cache drop above — these are the heavy-dir
-        // memoized indexes the timed run is meant to read
-        // a staging failure must be LOUD: the timed run then silently
-        // measures the cold chain build — exactly the artifact staging
-        // exists to remove — and without a named stderr line that run
-        // is indistinguishable from a staged one (round-13 advice)
+        // light-scale cache drop above. A staging failure must be LOUD:
+        // the timed run then silently measures the cold chain build —
+        // exactly what staging exists to remove.
         stagers.get(q).foreach { f =>
           try f(spark, dir)
           catch {
@@ -516,23 +301,14 @@ object HeavyRunner {
             math.max(priorMean, 3000.0)
           msLeft > firstWallMs + reserve
         }
-        // PER-RUN CAP (round 11): one pathological run must not eat
-        // the fork's roster — the round's official run 6 measured e6
-        // at 216 s SELF-cpu (3627 cpu-s, a cache-state-dependent plan
-        // flip; quiet band 1.4-31 s) and that single run starved all 7
-        // remaining worst cases. Each run executes in its own job
-        // group; a watchdog cancels the group at the cap (default
-        // 150 s — 5x the worst quiet cold receipt on any member) and
-        // the member records as a named cap skip, not a failure.
-        val capMs = sys.env.getOrElse("SPARK_GRAFT_HEAVY_QUERY_CAP_MS",
-          "150000").toLong
+        // Each run executes in its own job group; a watchdog cancels
+        // the group at QueryCapMs and the member records as a named cap
+        // skip, not a failure.
         @volatile var capped = false
         // true iff e's cause chain says the Spark job group was
         // cancelled — the ONLY failure class the per-run cap may
         // swallow. A genuine failure racing the watchdog (data drift
-        // surfacing near the 150 s mark) must keep its named HEAVYFAIL
-        // line; the old `if capped` catch-all attributed ANY exception
-        // to the cap once the watchdog had fired (round-11 advice).
+        // surfacing near the cap) must keep its named HEAVYFAIL line.
         def isCancellation(e: Throwable): Boolean =
           Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
             .exists { c =>
@@ -567,7 +343,7 @@ object HeavyRunner {
             @volatile var done = false
             val capper = new Thread(() => {
               try {
-                Thread.sleep(capMs)
+                Thread.sleep(QueryCapMs)
                 if (!done) {
                   capped = true
                   spark.sparkContext.cancelJobGroup(s"$q-run$i")
@@ -578,42 +354,12 @@ object HeavyRunner {
             capper.start()
             val g0 = gcMillis
             val c0 = cpuSeconds
-            val i0 = diskReadBytes
-            val x0 = invCtxtSwitches
-            val l0 = loadAvg
-            val mj0 = majorFaults
-            val mn0 = minorFaults
-            val vm0 = vmstat(vmstatKeys)
-            val ma0 = memAvailableMb
-            // amplification trigger (round-13 brief): 3x the member's
-            // in-fork quiet band — run 1 has no band yet, so a flat
-            // threshold. 45 -> 15 s (round 14): the observed firing
-            // class spans 17-35 s wall (e6 31.7/32.9 s at 6x cpu;
-            // d5 21.2 s at 4x cpu — all with the +~2M minflt
-            // correlate) and every firing sailed UNDER the 45 s
-            // trigger; at 15 s the dump catches the whole class, and
-            // a legitimately slow cold run costs only a few stderr
-            // lines (the dump never cancels anything).
-            val ampMs = sys.env.get("SPARK_GRAFT_AMP_TRIGGER_MS")
-              .map(_.toLong).getOrElse(
-                if (i == 1 || firstWallMs == 0) 15000L
-                else math.max(15000L, 3 * firstWallMs))
-            val amp = new Thread(() => {
-              try {
-                Thread.sleep(ampMs)
-                if (!done) dumpAmplification(s"$q run$i @${ampMs / 1000}s",
-                  mj0, mn0, vm0)
-              } catch { case _: InterruptedException => }
-            })
-            amp.setDaemon(true)
-            amp.start()
             val t0 = System.nanoTime()
             try {
               fn(spark, dir).write.format("noop").mode("overwrite").save()
             } finally {
               done = true
               capper.interrupt()
-              amp.interrupt()
               spark.sparkContext.clearJobGroup()
             }
             val wall = (System.nanoTime() - t0) / 1e9
@@ -621,23 +367,11 @@ object HeavyRunner {
               firstWallMs = (wall * 1000).toLong
               run1Walls += wall * 1000
             }
-            val x1 = invCtxtSwitches
-            // -1 is the 'unavailable' sentinel on either sample — a
-            // raw delta would mix it into a nonsense count (or read as
-            // a genuine 0 on a /proc-less platform), corrupting the
-            // adjudicator signal; preserve the sentinel instead
-            val ctxtDelta = if (x0 < 0 || x1 < 0) -1L else x1 - x0
-            val mj1 = majorFaults
-            val majfltDelta = if (mj0 < 0 || mj1 < 0) -1L else mj1 - mj0
-            val mn1 = minorFaults
-            val minfltDelta = if (mn0 < 0 || mn1 < 0) -1L else mn1 - mn0
-            Some((wall, (gcMillis - g0) / 1e3, loadAvg, cpuSeconds - c0,
-              (diskReadBytes - i0) / 1e6, l0, ctxtDelta,
-              cachedStorageMb(spark), majfltDelta, ma0, minfltDelta))
+            Some((wall, (gcMillis - g0) / 1e3, cpuSeconds - c0))
           } catch {
             case e: Throwable if capped && isCancellation(e) =>
               System.err.println(s"[heavy] $q run $i cancelled at the " +
-                s"${capMs / 1000} s per-run cap")
+                s"${QueryCapMs / 1000} s per-run cap")
               None
             case e: Throwable =>
               error = Some(Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -645,51 +379,36 @@ object HeavyRunner {
               None
           }
         }
-        def heavyLine(): String =
-          s"HEAVY\t$q\t${runs.map(r => f"${r._1}%.3f").mkString(",")}" +
-            s"\t${runs.map(r => f"${r._2}%.3f").mkString(",")}" +
-            s"\t${runs.map(r => f"${r._3}%.2f").mkString(",")}" +
-            s"\t${runs.map(r => f"${r._4}%.1f").mkString(",")}" +
-            s"\t${runs.map(r => f"${r._5}%.1f").mkString(",")}" +
-            s"\t${warmSec.map(w => f"$w%.3f").getOrElse("")}" +
-            s"\t${runs.map(r => f"${r._6}%.2f").mkString(",")}" +
-            s"\t${runs.map(r => r._7.toString).mkString(",")}" +
-            s"\t${runs.map(r => r._8.toString).mkString(",")}" +
-            s"\t${runs.map(r => r._9.toString).mkString(",")}" +
-            s"\t${runs.map(r => r._10.toString).mkString(",")}" +
-            s"\t${runs.map(r => r._11.toString).mkString(",")}"
+        val result = HeavyResult(q, runs.map(_._1), runs.map(_._2),
+          runs.map(_._3), warmSec)
         error match {
           case Some(msg) =>
             // A failure at run i>1 must not discard run 1..i-1's valid
-            // wall/gc/cpu measurements: emit the completed runs' HEAVY
-            // line first, THEN the named failure. Bench records both —
-            // the timings land in the heavy maps and the query still
-            // lands in "failed" (a short runs array < heavy_n flags
-            // the partial series, same convention as deadline shed).
-            if (runs.nonEmpty) println(heavyLine())
+            // measurements: emit the completed runs' HEAVY line first,
+            // THEN the named failure. Bench records both — the timings
+            // land in the heavy maps and the query still lands in
+            // "failed" (a short runs array < heavy_n flags the partial
+            // series, same convention as deadline shed).
+            if (runs.nonEmpty) println(heavyLine(result))
             println(s"HEAVYFAIL\t$q\t$msg")
           case None if runs.isEmpty && capped =>
             // run 1 hit the per-run cap: the member has no valid
             // timing — a budget-class outcome (rc stays 0), never a
-            // failure, and the fork moves on to the rest of the
-            // roster. HEAVYCAP, not HEAVYSKIP (round-11 advice): the
-            // artifact must distinguish "over budget, never started"
-            // from "started and pathological under the cap".
+            // failure, and the fork moves on to the rest of the roster.
             println(s"HEAVYCAP\t$q")
           case None =>
-            println(heavyLine())
+            println(heavyLine(result))
         }
         Console.out.flush()
         SparkEntry.clearCaches(spark)
         // cleaner settle BETWEEN members (round-12 position experiment:
         // e6 isolated-cold = 260 cpu-s; e6 run 7th after the dedup
-        // family = 584 cpu-s on a quiet box, same code/data/plans,
-        // cache intact — in-fork accumulated shuffle/broadcast state
-        // amplifies the next member's REAL cpu). clearCaches drops our
-        // references; the gc enqueues them; the pause gives the async
+        // family = 584 cpu-s on a quiet box, same code/data/plans —
+        // in-fork accumulated shuffle/broadcast state amplifies the
+        // next member's REAL cpu). clearCaches drops our references;
+        // the gc enqueues them; the pause gives the async
         // ContextCleaner a head start before the next member's timed
-        // run competes with it. Mitigation, not cure — the receipt
-        // fields adjudicate whatever remains.
+        // run competes with it.
         System.gc()
         Thread.sleep(250)
       }

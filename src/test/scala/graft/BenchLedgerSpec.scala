@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The quiet-band ledger (round-15 item 6): parse tolerance, the
+/** The quiet-band ledger (round-15 item 6): parse tolerance and the
   * 2x-min quiet filter (a firing sits 4-25x over band and must NOT
-  * widen the published band), and the per-run cpu/minflt alignment. */
+  * widen the published band). */
 class BenchLedgerSpec extends AnyFunSuite with TempDirs {
 
   private def tmpLedger(lines: String*): String = {
@@ -17,25 +17,21 @@ class BenchLedgerSpec extends AnyFunSuite with TempDirs {
   test("run-1 samples accumulate across lines (warm run-2 samples are " +
     "NOT band material); corrupt lines are skipped") {
     val p = tmpLedger(
-      // run-2 cpu 15.0 / minflt 20310 must be ignored: a warm sample
-      // in the band would anchor the 2x-min filter at the warm floor
-      // and misread every normal cold run as a firing
+      // run-2 cpu 15.0 must be ignored: a warm sample in the band
+      // would anchor the 2x-min filter at the warm floor and misread
+      // every normal cold run as a firing; the minflt series of older
+      // ledger lines is ignored
       """{"heavy":{"e6":{"wall":[12.0,1.6],"cpu":[148.1,15.0],"minflt":[2090000,20310]}}}""",
       """not json at all""",
       """{"heavy":{"e6":{"cpu":[156.5],"minflt":[3230000]},"d5":{"cpu":[137.4],"minflt":[2050000]}}}""")
     val s = Bench.ledgerSamples(p)
-    assert(s("e6")._1 == Seq(148.1, 156.5))
-    assert(s("e6")._2 == Seq(2090000.0, 3230000.0))
-    assert(s("d5")._1 == Seq(137.4))
+    assert(s("e6") == Seq(148.1, 156.5))
+    assert(s("d5") == Seq(137.4))
   }
 
-  test("a firing (cpu past 2x min) is excluded from the band AND its " +
-    "minflt sample goes with it") {
-    val s = Map("e6" -> (Seq(148.0, 156.0, 892.6), // run 3 fired
-                         Seq(2090000.0, 3230000.0, 4560000.0)))
-    val json = Bench.quietBandsJson(s)
-    assert(json ==
-      """{"e6":{"cpu":[148.0,156.0],"minflt":[2090000,3230000],"n":2}}""")
+  test("a firing (cpu past 2x min) is excluded from the band") {
+    val s = Map("e6" -> Seq(148.0, 156.0, 892.6)) // run 3 fired
+    assert(Bench.quietBandsJson(s) == """{"e6":{"cpu":[148.0,156.0],"n":2}}""")
   }
 
   test("missing ledger yields no bands, empty JSON object") {
@@ -66,17 +62,16 @@ class BenchLedgerSpec extends AnyFunSuite with TempDirs {
   test("frontWidestSpread moves the widest >=4x-spread member to the " +
     "fork head and leaves an un-amplified roster untouched") {
     val samples = Map(
-      "d5" -> (Seq(123.0, 1983.0, 616.0), Seq.empty[Double]), // 16.1x
-      "e6" -> (Seq(139.7, 1313.0), Seq.empty[Double]),        //  9.4x
-      "d16" -> (Seq(10.0, 12.0), Seq.empty[Double]))          //  1.2x
+      "d5" -> Seq(123.0, 1983.0, 616.0), // 16.1x
+      "e6" -> Seq(139.7, 1313.0),        //  9.4x
+      "d16" -> Seq(10.0, 12.0))          //  1.2x
     assert(Bench.frontWidestSpread(
       Seq("e6", "d16", "d5"), samples) == Seq("d5", "e6", "d16"))
     // below the 4x firing floor: order preserved
-    val quiet = Map("a" -> (Seq(10.0, 19.0), Seq.empty[Double]))
+    val quiet = Map("a" -> Seq(10.0, 19.0))
     assert(Bench.frontWidestSpread(Seq("b", "a"), quiet) == Seq("b", "a"))
     // no history at all: order preserved
-    assert(Bench.frontWidestSpread(Seq("x", "y"),
-      Map.empty[String, (Seq[Double], Seq[Double])]) == Seq("x", "y"))
+    assert(Bench.frontWidestSpread(Seq("x", "y"), Map.empty) == Seq("x", "y"))
   }
 
   test("the committed seed ledger parses and bands both amplification " +

@@ -28,4 +28,11 @@ class GateRegistrySpec extends AnyFunSuite {
     val blank = oracles.collect { case (n, sql) if sql.trim.isEmpty => n }
     assert(blank.isEmpty, s"blank oracles: ${blank.mkString(", ")}")
   }
+
+  test("every heavy roster, override and stager name is a registry gate") {
+    val heavy = Bench.heavyCanaries ++ Bench.heavyWorstCases ++
+      tools.HeavyRunner.overrides.keys ++ tools.HeavyRunner.stagers.keys
+    val unknown = heavy.filterNot(names.toSet)
+    assert(unknown.isEmpty, s"not registry gates: ${unknown.mkString(", ")}")
+  }
 }
